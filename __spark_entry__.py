@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from symtseries_spark.operators.rollup import (
     apply_retention,
-    rollup_cascade,
     rollup_raw,
     with_stddev,
 )
@@ -138,8 +137,7 @@ def q_rollup_1d(spark, sf_dir):
 
 def q_rollup_1m_salted(spark, sf_dir):
     ev = _events(spark, sf_dir)
-    r = salted_rollup(ev, "user_id", "ts", F.col("value"), "1m",
-                      hot_keys=None, salt_buckets=8)
+    r = salted_rollup(ev, "user_id", "ts", F.col("value"), "1m", salt_buckets=8)
     return _ROLLUP_PROJ(r)
 
 

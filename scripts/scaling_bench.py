@@ -12,7 +12,8 @@ fixed JVM/session overhead, mirroring a real cluster job where startup cost
 amortizes over hours.
 
 Usage: python scripts/scaling_bench.py [n_urls] [revisits]
-Writes BENCH/BASELINE.md and BENCH/scaling.json.
+Writes BENCH/scaling_{tag}.json and BENCH/scaling_{tag}.md, tag = $SCALING_TAG
+or a timestamp.
 """
 
 from __future__ import annotations
@@ -284,7 +285,7 @@ long-running cluster job amortizes to zero). The host is
 shared and noisy (±30% single-shot swings from external load), so the two
 levels are sampled alternately {os.environ.get('SCALING_REPEATS', '3')}×
 and each level's best (least-contended) sample is used; all samples are in
-`BENCH/scaling.json`.
+`BENCH/scaling_{tag}.json`.
 
 | parallelism | wall sec | rolled-up points | points/sec |
 |---|---|---|---|
@@ -309,7 +310,7 @@ Any data engine's work is a blend of the two (scans, shuffles and sorts
 are memory traffic), so its single-box N→4N efficiency is bounded between
 these ceilings — picking a level pair where the MEMORY ceiling is still
 near-linear is the honest proxy for adding whole executors. Raw ceiling
-measurements are recorded in `BENCH/scaling.json` under `hw_ceiling` /
+measurements are recorded in `BENCH/scaling_{tag}.json` under `hw_ceiling` /
 `hw_membw_ceiling`.
 
 The pipeline under test is `symtseries_spark.pipeline.run_pipeline`:

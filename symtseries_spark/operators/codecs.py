@@ -1,35 +1,31 @@
 """Gorilla XOR value compression + delta-of-delta timestamp compression.
 
 Implements the Facebook Gorilla scheme (Pelkonen et al., "Gorilla: A Fast,
-Scalable, In-Memory Time Series Database", VLDB 2015 — public paper):
+Scalable, In-Memory Time Series Database", VLDB 2015 — public paper) in a
+split layout: the paper's control bits, headers and payloads are the same
+codes, but each kind lives in its own section of the chunk, so every field
+offset is a prefix sum instead of a sequential cursor walk.
 
-Timestamps (delta-of-delta, µs-resolution variant):
-  header: first ts as raw 64b, first delta as raw 64b (signed).
-  per point: dod == 0            → '0'
-             dod in [-63, 64]    → '10'  + 7b  (zigzag-free, offset-coded)
-             dod in [-255, 256]  → '110' + 9b
-             dod in [-2047,2048] → '1110'+ 12b
-             else                → '1111'+ 64b raw signed
+Timestamps ("dod-s", delta-of-delta, µs resolution):
+  [ts0: 64b] [delta0: 64b, n ≥ 2 only] [ctrl: (n-2) × 3b class]
+  [payloads: class widths 0/7/9/12/64 bits]
+  classes: dod == 0 → 0; [-63, 64] → 1; [-255, 256] → 2;
+           [-2047, 2048] → 3; else → 4 (raw 64b signed);
+           classes 1-3 store dod minus the range's low end
 
-Values (XOR of consecutive float64 bit patterns):
-  first value raw 64b.
-  xor == 0 → '0'
-  leading/meaningful window fits the previous one → '10' + meaningful bits
-  else → '11' + 5b leading-zero count + 6b meaningful-bit count + bits
-  (6b length stores len-1 so 64 fits, per the paper's control-bit layout).
+Values ("gorilla-s", XOR of consecutive float64 bit patterns):
+  [u0: 64b] [ctrl: (n-1) × 1b nonzero-xor flags]
+  [headers: K × 11b (5b leading zeros | 6b meaningful bits - 1)]
+  [payloads: K × meaningful bits]
 
-ENCODING IS FULLY VECTORIZED: per chunk we compute every code's (bits,
-nbits) with numpy, then scatter them into a bit matrix with one loop over
-*bit positions* (≤ 77 iterations regardless of chunk size), never a loop
-over points.
+ENCODING IS FULLY VECTORIZED: every code's (bits, nbits) is computed with
+numpy over all chunks of an Arrow batch at once, then scattered into a bit
+matrix with one loop over *bit positions* (≤ 64 iterations regardless of
+chunk size), never a loop over points or chunks.
 
-DECODING IS ALSO VECTORIZED for the split-layout variants the Spark path
-writes ("gorilla-s"/"dod-s"): control bits, headers and payloads live in
-separate sections, so every field offset is a prefix sum and a whole Arrow
-batch of chunks decodes in one numpy pass (≤64 bit-position gathers + one
-np.bitwise_xor.accumulate / two segmented cumsums). The interleaved
-paper-faithful streams ("gorilla"/"dod") keep the sequential _BitReader
-decoder — they exist for format parity and tests.
+DECODING IS ALSO VECTORIZED: a whole Arrow batch of chunks decodes in one
+numpy pass (≤ 64 bit-position gathers + one np.bitwise_xor.accumulate /
+two segmented cumsums).
 
 Spark surface: encode_chunks() packs each (key, tier) bucket run into one
 BinaryType blob row via mapInArrow; decode_chunks() restores rows.
@@ -78,117 +74,8 @@ def _pack_codes(bits: np.ndarray, nbits: np.ndarray) -> bytes:
     return np.packbits(out).tobytes()
 
 
-class _BitReader:
-    """Sequential bit cursor over a packed byte string (decode path).
-
-    read(n ≤ 64) is O(1): it slices a 9-byte window around the cursor,
-    interprets it as a big-endian int, and masks — no per-bit Python loop.
-    """
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data + b"\x00" * 9  # pad so the window never runs short
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        self.pos = p + n
-        byte0 = p >> 3
-        window = int.from_bytes(self.data[byte0 : byte0 + 9], "big")
-        # window holds 72 bits starting at byte0*8; drop leading (p - byte0*8)
-        # bits and trailing bits after our n.
-        shift = 72 - (p - (byte0 << 3)) - n
-        return (window >> shift) & ((1 << n) - 1)
-
-
 # ---------------------------------------------------------------------------
-# delta-of-delta timestamps
-# ---------------------------------------------------------------------------
-
-_DOD_RANGES = ((-63, 64, 7), (-255, 256, 9), (-2047, 2048, 12))
-
-
-def _codes_timestamps(ts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized delta-of-delta code arrays: (bits, nbits).
-
-    Layout: [first ts 64b][first delta 64b][per-dod primary + optional 64b
-    secondary] — the secondary slot is used only by the '1111' escape, with
-    nbits 0 elsewhere (zero-length codes are skipped by the packer).
-    """
-    ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    head = ts[0:1].astype(np.uint64)
-    if n == 1:
-        return head.copy(), np.array([64], dtype=np.int64)
-    d = np.diff(ts)
-    first_delta = d[0:1].view(np.uint64)
-    dod = np.diff(d)
-
-    m = len(dod)
-    prim_bits = np.zeros(m, dtype=np.uint64)
-    prim_nbits = np.zeros(m, dtype=np.int64)
-    sec_bits = np.zeros(m, dtype=np.uint64)
-    sec_nbits = np.zeros(m, dtype=np.int64)
-    done = dod == 0
-    prim_nbits[done] = 1
-    for lo, hi, w in _DOD_RANGES:
-        sel = (~done) & (dod >= lo) & (dod <= hi)
-        prefix_len = {7: 2, 9: 3, 12: 4}[w]
-        prefix = {7: 0b10, 9: 0b110, 12: 0b1110}[w]
-        payload = (dod[sel] - lo).astype(np.uint64)
-        prim_bits[sel] = (np.uint64(prefix) << np.uint64(w)) | payload
-        prim_nbits[sel] = prefix_len + w
-        done |= sel
-    rest = ~done
-    if rest.any():
-        prim_bits[rest] = np.uint64(0b1111)
-        prim_nbits[rest] = 4
-        sec_bits[rest] = dod[rest].view(np.uint64)
-        sec_nbits[rest] = 64
-
-    bits = np.empty(2 + 2 * m, dtype=np.uint64)
-    nbits = np.empty(2 + 2 * m, dtype=np.int64)
-    bits[0], bits[1] = head[0], first_delta[0]
-    nbits[0] = nbits[1] = 64
-    bits[2::2] = prim_bits
-    nbits[2::2] = prim_nbits
-    bits[3::2] = sec_bits
-    nbits[3::2] = sec_nbits
-    return bits, nbits
-
-
-def encode_timestamps(ts: np.ndarray) -> bytes:
-    """ts: (N,) int64 (epoch µs or s). N ≥ 1."""
-    return _pack_codes(*_codes_timestamps(ts))
-
-
-def decode_timestamps(data: bytes, n: int) -> np.ndarray:
-    r = _BitReader(data)
-    first = np.int64(np.uint64(r.read(64)))
-    out = [int(first)]
-    if n == 1:
-        return np.array(out, dtype=np.int64)
-    delta = int(np.uint64(r.read(64)).astype(np.int64))
-    out.append(out[0] + delta)
-    for _ in range(n - 2):
-        if r.read(1) == 0:
-            dod = 0
-        elif r.read(1) == 0:
-            dod = r.read(7) - 63
-        elif r.read(1) == 0:
-            dod = r.read(9) - 255
-        elif r.read(1) == 0:
-            dod = r.read(12) - 2047
-        else:
-            dod = int(np.uint64(r.read(64)).astype(np.int64))
-        delta += dod
-        out.append(out[-1] + delta)
-    return np.array(out, dtype=np.int64)
-
-
-# ---------------------------------------------------------------------------
-# Gorilla XOR values
+# bit scans (vectorized over uint64 words)
 # ---------------------------------------------------------------------------
 
 
@@ -219,60 +106,14 @@ def _ctz64(x: np.ndarray) -> np.ndarray:
     return out
 
 
-def _codes_values_vec(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized Gorilla XOR code arrays (no '10' carry path): (bits, nbits)."""
-    u = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
-    n = len(u)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    if n == 1:
-        return u[:1].copy(), np.array([64], dtype=np.int64)
-    xor = u[1:] ^ u[:-1]
-    m = len(xor)
-    lz = np.minimum(_clz64(xor), 31)
-    tz = np.minimum(_ctz64(xor), 63)
-    mlen = np.maximum(64 - lz - tz, 1)
-    zero = xor == 0
-
-    header = (np.uint64(0b11) << np.uint64(11)) | (
-        lz.astype(np.uint64) << np.uint64(6)
-    ) | (mlen - 1).astype(np.uint64)
-    payload = xor >> tz.astype(np.uint64)
-
-    bits = np.empty(2 * m + 1, dtype=np.uint64)
-    nbits = np.empty(2 * m + 1, dtype=np.int64)
-    bits[0] = u[0]
-    nbits[0] = 64
-    bits[1::2] = np.where(zero, np.uint64(0), header)
-    nbits[1::2] = np.where(zero, 1, 13)
-    bits[2::2] = np.where(zero, np.uint64(0), payload)
-    nbits[2::2] = np.where(zero, 0, mlen)
-    return bits, nbits
-
-
-def encode_values_vec(vals: np.ndarray) -> bytes:
-    """Fully-vectorized Gorilla XOR encoder (no '10' carry path).
-
-    Emits '0' for xor==0 and '11'+5b lz+6b(mlen-1)+mlen bits otherwise —
-    a valid stream for decode_values (which supports both control paths).
-    Trades ~11 bits/point on window-stable series for the removal of the
-    sequential window-carry dependency: every code is computed with numpy
-    array ops, no per-point Python. This is the hot-path encoder used by
-    encode_chunks.
-    """
-    if len(np.asarray(vals)) == 0:
-        return b""
-    return _pack_codes(*_codes_values_vec(vals))
-
-
 def _pack_groups(code_pairs: list[tuple[np.ndarray, np.ndarray]]):
     """Pack MANY groups' code arrays in ONE _pack_codes call.
 
     Each group's stream is padded to a byte boundary with a 0-filled pad
     code so the packed buffer slices cleanly per group (the decoder reads
     exactly n points and ignores trailing pad bits). Returns a list of
-    bytes objects, one per group. This turns ~G·77 tiny numpy calls into
-    77 big ones — the difference between the encode stage scaling and not.
+    bytes objects, one per group. With the per-group _codes_*_split coders
+    this is the reference the batch encoders are checked against.
     """
     bits_parts, nbits_parts, byte_lens = [], [], []
     for bits, nbits in code_pairs:
@@ -294,82 +135,9 @@ def _pack_groups(code_pairs: list[tuple[np.ndarray, np.ndarray]]):
     return out
 
 
-def encode_values(vals: np.ndarray) -> bytes:
-    """vals: (N,) float64 → Gorilla XOR bit stream (paper-faithful variant
-    with the '10' previous-window carry path; sequential control flow, used
-    for format tests and single-series encoding)."""
-    u = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
-    n = len(u)
-    if n == 0:
-        return b""
-    if n == 1:
-        return _pack_codes(u[:1], np.array([64]))
-    xor = u[1:] ^ u[:-1]
-
-    lz = np.minimum(_clz64(xor), 31)  # 5-bit field
-    tz = _ctz64(xor)
-    mlen = 64 - lz - tz  # meaningful bits (xor==0 handled separately)
-
-    # previous window: carried forward while new xor fits inside it.
-    # This is a sequential dependency; resolve it with a compact loop over
-    # the (N-1,) control decisions — pure int ops on small arrays. To keep
-    # vectorization wins, precompute candidate fields first.
-    m = len(xor)
-    bits = np.zeros(2 * m, dtype=np.uint64)  # worst case two codes per point
-    nbits = np.zeros(2 * m, dtype=np.int64)
-    k = 0
-    prev_lz, prev_mlen = -1, -1
-    xs = xor  # local alias
-    for i in range(m):
-        x = int(xs[i])
-        if x == 0:
-            bits[k] = 0
-            nbits[k] = 1
-            k += 1
-            continue
-        li, mi = int(lz[i]), int(mlen[i])
-        if (
-            prev_lz >= 0
-            and li >= prev_lz
-            and (64 - li - int(tz[i])) + li <= prev_lz + prev_mlen
-        ):
-            # fits previous window: '10' + prev_mlen bits (two codes so the
-            # payload alone never exceeds 64 bits)
-            payload = (x >> (64 - prev_lz - prev_mlen)) & ((1 << prev_mlen) - 1)
-            bits[k] = np.uint64(0b10)
-            nbits[k] = 2
-            bits[k + 1] = np.uint64(payload)
-            nbits[k + 1] = prev_mlen
-            k += 2
-        else:
-            # new window: '11' + 5b lz + 6b (mlen-1), then mlen bits
-            payload = (x >> int(tz[i])) & ((1 << mi) - 1)
-            header = (0b11 << 11) | (li << 6) | (mi - 1)
-            bits[k] = np.uint64(header)
-            nbits[k] = 13
-            bits[k + 1] = np.uint64(payload)
-            nbits[k + 1] = mi
-            k += 2
-            prev_lz, prev_mlen = li, mi
-    all_bits = np.concatenate([u[:1], bits[:k]])
-    all_nbits = np.concatenate([[64], nbits[:k]])
-    return _pack_codes(all_bits, all_nbits)
-
-
 # ---------------------------------------------------------------------------
-# split-layout codecs ("gorilla-s" / "dod-s"): same code values as the
-# interleaved streams, but control bits, headers and payloads live in
-# SEPARATE sections, so decoding is data-parallel — every offset is a
-# prefix-sum away instead of a sequential cursor walk. This is what makes
-# the query-side read path fully vectorizable across a whole Arrow batch
-# of chunks (the interleaved Gorilla stream is inherently sequential).
-#
-# gorilla-s layout (bit-packed, no alignment between sections):
-#   [u0: 64b] [ctrl: (n-1) × 1b nonzero-xor flags]
-#   [headers: K × 11b (5b lz | 6b mlen-1)] [payloads: K × mlen bits]
-# dod-s layout:
-#   [ts0: 64b] [delta0: 64b, n ≥ 2 only] [ctrl: (n-2) × 3b class]
-#   [payloads: class widths 0/7/9/12/64 bits]
+# split-layout codecs ("gorilla-s" / "dod-s", layouts in the module
+# docstring; sections are bit-packed with no alignment between them)
 # ---------------------------------------------------------------------------
 
 _DOD_S_WIDTH = np.array([0, 7, 9, 12, 64], dtype=np.int64)
@@ -754,30 +522,6 @@ def decode_timestamps_split_batch(
     return ts + np.repeat(ts0, n_points)
 
 
-def decode_values(data: bytes, n: int) -> np.ndarray:
-    if n == 0:
-        return np.array([], dtype=np.float64)
-    r = _BitReader(data)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = r.read(64)
-    prev_lz, prev_mlen = -1, -1
-    for i in range(1, n):
-        if r.read(1) == 0:
-            out[i] = out[i - 1]
-            continue
-        if r.read(1) == 0:  # '10': previous window
-            payload = r.read(prev_mlen)
-            xor = payload << (64 - prev_lz - prev_mlen)
-        else:  # '11': new window
-            prev_lz = r.read(5)
-            prev_mlen = r.read(6) + 1
-            payload = r.read(prev_mlen)
-            tz = 64 - prev_lz - prev_mlen
-            xor = payload << tz
-        out[i] = out[i - 1] ^ np.uint64(xor)
-    return out.view(np.float64)
-
-
 # ---------------------------------------------------------------------------
 # Spark surface
 # ---------------------------------------------------------------------------
@@ -918,12 +662,11 @@ def decoded_schema(key_type) -> StructType:
 def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Inverse of encode_chunks: blob rows → (key, tier, bucket_ts, value).
 
-    Split-layout chunks ("gorilla-s"/"dod-s", the formats encode_chunks
-    writes) decode FULLY VECTORIZED: one numpy pass per Arrow batch covers
+    Chunks decode FULLY VECTORIZED: one numpy pass per Arrow batch covers
     every chunk in the batch (prefix-sum offsets + ≤64 bit-position gathers
     + one xor-scan), so the query-side read path has no per-point or
-    per-chunk Python. Legacy interleaved formats ("gorilla"/"dod") fall
-    back to the sequential reader row by row.
+    per-chunk Python. A row whose codecs are not "dod-s"/"gorilla-s" (the
+    formats encode_chunks writes) raises ValueError naming the codec.
     """
     schema = decoded_schema(chunks.schema["key"].dataType)
 
@@ -931,43 +674,28 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            outs = []
-            split = (pdf["val_codec"] == "gorilla-s") & (
-                pdf["ts_codec"] == "dod-s"
+            bad = (pdf["ts_codec"] != "dod-s") | (pdf["val_codec"] != "gorilla-s")
+            if bad.any():
+                row = pdf[bad].iloc[0]
+                raise ValueError(
+                    f"decode_chunks: unsupported codec ts_codec="
+                    f"{row['ts_codec']!r} val_codec={row['val_codec']!r} "
+                    "(only 'dod-s'/'gorilla-s' chunks decode)"
+                )
+            ns = pdf["n_points"].to_numpy().astype(np.int64)
+            vals = decode_values_split_batch(
+                [bytes(p) for p in pdf["val_payload"]], ns
             )
-            sp = pdf[split]
-            if len(sp):
-                ns = sp["n_points"].to_numpy().astype(np.int64)
-                vals = decode_values_split_batch(
-                    [bytes(p) for p in sp["val_payload"]], ns
-                )
-                ts = decode_timestamps_split_batch(
-                    [bytes(p) for p in sp["ts_payload"]], ns
-                )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "key": np.repeat(sp["key"].to_numpy(), ns),
-                            "tier": np.repeat(sp["tier"].to_numpy(), ns),
-                            "bucket_ts": pd.to_datetime(ts, unit="us"),
-                            "value": vals,
-                        }
-                    )
-                )
-            for row in pdf[~split].itertuples(index=False):
-                ts = decode_timestamps(row.ts_payload, row.n_points)
-                vals = decode_values(row.val_payload, row.n_points)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "key": row.key,
-                            "tier": row.tier,
-                            "bucket_ts": pd.to_datetime(ts, unit="us"),
-                            "value": vals,
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
+            ts = decode_timestamps_split_batch(
+                [bytes(p) for p in pdf["ts_payload"]], ns
+            )
+            yield pd.DataFrame(
+                {
+                    "key": np.repeat(pdf["key"].to_numpy(), ns),
+                    "tier": np.repeat(pdf["tier"].to_numpy(), ns),
+                    "bucket_ts": pd.to_datetime(ts, unit="us"),
+                    "value": vals,
+                }
+            )
 
     return chunks.mapInPandas(_decode, schema)

@@ -105,10 +105,13 @@ def gapfill(
 
     # dense spine by generation: each present bucket emits itself plus
     # the gap buckets strictly before the next present bucket (the last
-    # present bucket emits only itself) — union over keys = lo..hi grid
-    gen_hi = F.coalesce(
-        F.col("_lead_ts") - F.expr(f"INTERVAL {step} SECOND"),
+    # present bucket emits only itself) — union over keys = lo..hi grid.
+    # greatest() skips the null lead of the last row, and clamps a
+    # duplicate (key, bucket_ts) row, whose lead is its own bucket, to
+    # itself: F.sequence rejects an upper bound below its start
+    gen_hi = F.greatest(
         F.col("bucket_ts"),
+        F.col("_lead_ts") - F.expr(f"INTERVAL {step} SECOND"),
     )
     carry = ["_prev"] + (["_nxt", "_lead_nxt"] if need_linear else [])
     e = r.select(

@@ -1,4 +1,4 @@
-"""Skew handling: salted two-phase aggregation for hot keys.
+"""Skew handling: salted two-phase aggregation.
 
 AQE's skew-join splitting fixes skewed *joins*, not skewed aggregations.
 A zipf url distribution (one host with ~30% of rows) funnels those rows
@@ -7,12 +7,11 @@ kept *result-identical* by running the aggregation in two phases over the
 re-aggregable partials (cnt/sum/sumsq algebra — same trick as the tier
 cascade):
 
-  phase 1: groupBy(key, bucket, salt) with salt = crc32(row-unique) % S for
-           hot keys, 0 for cold keys → at most S partial rows per hot bucket
+  phase 1: groupBy(key, bucket, salt) with salt = spark_partition_id % S
+           for every key → a bucket's partials spread over S reducers
   phase 2: groupBy(key, bucket) summing the partials → exact results
 
-Hot keys are detected from a cheap sampled count (driver-side broadcast of
-a tiny set), or supplied explicitly.
+Salting every key needs no hot-key detection pass over the input.
 """
 
 from __future__ import annotations
@@ -23,40 +22,12 @@ from pyspark.sql import functions as F
 from symtseries_spark.operators.rollup import bucket_epoch
 
 
-def detect_hot_keys(
-    df: DataFrame, key_col: str, threshold: float = 0.02, sample: float = 0.01
-) -> list:
-    """Keys holding more than ``threshold`` share of rows (sampled estimate).
-
-    Needs two aggregates over the sampled counts (the hot filter depends on
-    the total, and a global window would funnel every distinct sampled key
-    through one task), so the per-key counts are persisted: the underlying
-    table — the full input at production scale — is scanned ONCE, and the
-    second job reads the tiny cached (key, count) partials instead of
-    rescanning it."""
-    s = (
-        df.sample(fraction=min(1.0, sample), seed=42)
-        .groupBy(key_col)
-        .count()
-        .persist()
-    )
-    try:
-        total = s.agg(F.sum("count")).first()[0] or 0
-        if not total:
-            return []
-        hot = s.filter(F.col("count") > threshold * total).select(key_col).collect()
-        return [r[0] for r in hot]
-    finally:
-        s.unpersist()
-
-
 def salted_rollup(
     df: DataFrame,
     key_col: str,
     ts_col: str,
     value_expr,
     tier: str = "1m",
-    hot_keys: list | None = None,
     salt_buckets: int = 16,
     cluster_by_key: bool = False,
 ) -> DataFrame:
@@ -71,18 +42,10 @@ def salted_rollup(
     that need key-clustered output (the tier writer) should use this and
     drop their own ``repartition("key")``.
 
-    ``hot_keys=None`` salts EVERY key (round 6): phase 2 merges the ≤S
-    partials per bucket exactly, so the result is identical whichever keys
-    are salted, and unconditional salting deletes the sampled hot-key
-    detection — two driver jobs and a full scan of the source per run
-    (~0.7 s of the warm pipeline wall; at corpus scale a whole extra pass).
-    The cost is bounded: a bucket with k rows emits min(k, S) phase-1
-    partials per map task instead of 1, i.e. map-side reduction is capped
-    at S× worse for genuinely heavy buckets and unchanged where buckets
-    are near-singleton (the base-tier shape). Pass an explicit list to
-    salt only known-hot keys, or [] to disable salting.
+    EVERY key is salted (per-task salt, see below): phase 2 merges the
+    ≤S partials per bucket exactly, so the result equals the unsalted
+    rollup whatever the key distribution.
     """
-    salt_all = hot_keys is None
     v = value_expr.cast("double")
     ts_type = df.schema[ts_col].dataType.simpleString()
     # keep window()'s implicit ts-not-null semantics + scan pushdown
@@ -98,13 +61,7 @@ def salted_rollup(
     # spread across S reducers instead of funneling into one. Retries of a
     # deterministic input split reproduce the same salt; phase 2 merges to
     # the same totals regardless.
-    seq_salt = F.pmod(F.spark_partition_id(), F.lit(salt_buckets))
-    if salt_all:
-        salt = seq_salt
-    elif hot_keys:
-        salt = F.when(F.col(key_col).isin(hot_keys), seq_salt).otherwise(F.lit(0))
-    else:
-        salt = F.lit(0)
+    salt = F.pmod(F.spark_partition_id(), F.lit(salt_buckets))
     phase1 = (
         df.withColumn("_salt", salt)
         .groupBy(

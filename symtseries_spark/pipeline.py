@@ -7,28 +7,18 @@ levels. Stage layout (one shuffle each, all else map-side):
 
   raw scan (column-pruned: url, warc_ts, text-length only)
     → salted 1m rollup  (shuffle on (url, bucket, salt))
-    → key-clustered, time-sorted 1m tier, materialized ONCE
-    → FOUR concurrent jobs over it (FAIR pools):
-        write 1m tier ∥ 1h→1d cascades ∥ symbolize+index ∥ Gorilla chunks
+    → key-clustered, time-sorted 1m tier, materialized ONCE by its write
+    → THREE concurrent jobs over it (FAIR pools):
+        1h→1d cascades ∥ symbolize+index ∥ Gorilla chunks
 
-Handoff between the producer and the consumers (``handoff=``):
-
-  * "memory" (default): the sorted 1m tier is persisted
-    (MEMORY_AND_DISK, pinned) and the 1m tier WRITE is the materializing
-    action — one pass computes the rollup, fills the cache, and commits
-    the tier files; then the three consumers run concurrently against the
-    cache. (Round 4 materialized via an eager count() and overlapped the
-    write with the consumers; that paid the rollup-compute pass AND a
-    whole extra compiled plan at cold — the write-materializes layout
-    deletes the count pass entirely, which is what clawed the cold wall
-    back.) The 1m tier of one ingest epoch is ~1/60 of the epoch's raw
-    rows × a few numeric columns, so it fits cluster storage memory by
-    construction; if it ever didn't, MEMORY_AND_DISK spills instead of
-    silently recomputing, and handoff="table" is the fully file-backed
-    fallback.
-  * "table": write the 1m tier first, then run the three consumers against
-    the written files (one-file-one-split pinned). This is the layout a
-    multi-job warehouse uses when stages are separate applications.
+Handoff between the producer and the consumers: the sorted 1m tier is
+persisted (MEMORY_AND_DISK, pinned) and the 1m tier WRITE is the
+materializing action — one pass computes the rollup, fills the cache, and
+commits the tier files; then the three consumers run concurrently against
+the cache. The 1m tier of one ingest epoch is ~1/60 of the epoch's raw
+rows × a few numeric columns, so it fits cluster storage memory by
+construction; if it ever didn't, MEMORY_AND_DISK spills instead of
+silently recomputing.
 
 Output-point counts for the metrics run as ONE metadata-only Spark job
 per store (zero-column parquet scans answer count(*) from footer row
@@ -87,8 +77,8 @@ def _store_counts(spark: SparkSession, path: str, by: str | None = None) -> dict
 
 
 def _warn_if_partial_cache(spark: SparkSession, df) -> None:
-    """After the materializing action, verify the handoff cache is fully
-    resident (memory or disk). A partially-cached handoff silently
+    """After the materializing action, verify the 1m tier cache is fully
+    resident (memory or disk). A partially-cached tier silently
     recomputes the salted rollup CONCURRENTLY in every consumer that
     first-touches an evicted partition — the exact duplicate-work failure
     the materializing write exists to prevent — so make it loud."""
@@ -96,7 +86,7 @@ def _warn_if_partial_cache(spark: SparkSession, df) -> None:
         # `df.rdd.id()` can NOT identify the cache entry: it builds a fresh
         # row-conversion RDD whose id never matches the InMemoryRelation's
         # internal cached RDD. Best-effort instead: at this point in the
-        # pipeline the handoff is the only persist in flight, so warn about
+        # pipeline the 1m tier is the only persist in flight, so warn about
         # ANY incompletely-cached RDD the session reports.
         sc = spark.sparkContext
         info = sc._jsc.sc().getRDDStorageInfo()
@@ -105,10 +95,10 @@ def _warn_if_partial_cache(spark: SparkSession, df) -> None:
                 import warnings
 
                 warnings.warn(
-                    f"pipeline memory handoff cache incomplete "
+                    f"pipeline 1m tier cache incomplete "
                     f"({r.numCachedPartitions()}/{r.numPartitions()} "
                     "partitions resident) — consumers may recompute the "
-                    "rollup; consider handoff='table'",
+                    "rollup; give the executors more storage memory",
                     RuntimeWarning,
                     stacklevel=2,
                 )
@@ -116,52 +106,18 @@ def _warn_if_partial_cache(spark: SparkSession, df) -> None:
         pass  # diagnostics only — never fail the pipeline for it
 
 
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Spawn + warm the per-core Python UDF workers (fork, numpy/pandas
-    import, Arrow serializer init) with one trivial task per core. A
-    long-running cluster amortizes this to zero, but a one-shot job pays
-    it inside its FIRST Arrow stage — which in this pipeline sits in the
-    consumer phase, after the serial JVM-only rollup-write phase. Kicked off concurrently at pipeline start in its own
-    FAIR pool, the spawn cost rides under those phases instead."""
-
-    def _w(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", "prewarm")
-    try:
-        n = sc.defaultParallelism
-        spark.range(n).repartition(n).mapInArrow(_w, "id long").count()
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
-
-
 def run_pipeline(
     spark: SparkSession,
     crawl: DataFrame,
     out_dir: str | None = None,
     cfg: EngineConfig | None = None,
-    hot_keys: list | None = None,
     checkpoint_path: str | None = None,
     run_id: str | None = None,
-    handoff: str | None = None,
 ) -> dict:
     """Run the full pipeline, persisting every stage output under out_dir
     (a TemporaryDirectory when not given). Returns metrics: rolled-up
     points per tier, words indexed, chunks written, wall sec, points/sec.
-
-    ``handoff`` defaults to $SYMT_PIPELINE_HANDOFF or "memory" (see module
-    docstring for the two strategies).
     """
-    import os as _os
-
-    if handoff is None:
-        handoff = _os.environ.get("SYMT_PIPELINE_HANDOFF", "memory")
-    if handoff not in ("memory", "table"):
-        raise ValueError(f"handoff must be 'memory' or 'table', got {handoff!r}")
     cfg = cfg or EngineConfig()
     tmp = None
     if out_dir is None:
@@ -174,14 +130,6 @@ def run_pipeline(
         now = time.time()
         timings[label] = round(now - since, 2)
         return now
-
-    # Python-worker prewarm rides under the JVM-only phases below (hot-key
-    # detection job, rollup write) in its own FAIR pool — by the time the
-    # consumer phase reaches its first Arrow stage, the workers exist
-    from concurrent.futures import ThreadPoolExecutor as _TPE0
-
-    _prewarm_pool = _TPE0(1)
-    _prewarm_fut = _prewarm_pool.submit(_prewarm_python_workers, spark)
 
     # column pruning happens here: only url, warc_ts, length(text) survive
     # into the shuffle; html bytes never leave the scan.
@@ -205,65 +153,24 @@ def run_pipeline(
         "warc_ts",
         F.col("text_len"),
         "1m",
-        hot_keys=hot_keys,
         salt_buckets=cfg.salt_buckets,
         cluster_by_key=True,
     ).sortWithinPartitions("key", "bucket_ts")
     _t = _mark("plan_rollup", t0)
 
-    _old_mpb = _old_oc = None
-    _conf_pinned = False
-    if handoff == "memory":
-        # The 1m tier WRITE is the materializing action: one pass computes
-        # the salted rollup, fills the cache (MEMORY_AND_DISK pinned —
-        # eviction must spill, not silently trigger concurrent recompute
-        # of the heaviest stage under the three consumers), and commits
-        # the tier files. The consumers below then share fully-cached
-        # partitions instead of racing to compute them (concurrent
-        # first-touch of an uncached RDD duplicates work).
-        from pyspark import StorageLevel
+    # The 1m tier WRITE is the materializing action: one pass computes the
+    # salted rollup, fills the cache (MEMORY_AND_DISK pinned — eviction
+    # must spill, not silently trigger concurrent recompute of the
+    # heaviest stage under the three consumers), and commits the tier
+    # files. The consumers below then share fully-cached partitions
+    # instead of racing to compute them (concurrent first-touch of an
+    # uncached RDD duplicates work).
+    from pyspark import StorageLevel
 
-        t1m.persist(StorageLevel.MEMORY_AND_DISK)
-        t1m_r = t1m
-        CP.write_partitioned(t1m_r, rollup_path, "1m",
-                             sort_within=("key", "bucket_ts"))
-        _t = _mark("write_materialize_1m", _t)
-        _warn_if_partial_cache(spark, t1m)
-        _write_1m = None
-    else:
-        CP.write_partitioned(t1m, rollup_path, "1m",
-                             sort_within=("key", "bucket_ts"))
-        _t = _mark("write_1m", _t)
-        # clustered=True contract for a FILE handoff: the writer put each
-        # key in exactly ONE file per date (hash repartition) with rows
-        # time-sorted, so a read split of exactly one whole file keeps
-        # every (key, window/chunk) run contiguous. Spark would happily
-        # SPLIT a large file at a row-group boundary mid-key, silently
-        # yielding partial windows (NaN frames → wrong '#' words) and
-        # duplicate chunk ids. Pin ONE FILE = ONE SPLIT: maxPartitionBytes
-        # just above the largest file prevents splitting, and
-        # openCostInBytes at the same value prevents Spark from COALESCING
-        # several files into one split. On a warehouse this is the
-        # bucketed-table property. (The memory handoff needs none of this —
-        # cached RDD partitions are exact.)
-        import glob as _glob
-        import os as _os
-
-        max_file = max(
-            (
-                _os.path.getsize(p)
-                for p in _glob.iglob(
-                    f"{rollup_path}/tier=1m/**/*.parquet", recursive=True
-                )
-            ),
-            default=128 << 20,
-        )
-        _old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        _old_oc = spark.conf.get("spark.sql.files.openCostInBytes", None)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20)))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(max_file + (1 << 20)))
-        _conf_pinned = True
-        t1m_r = spark.read.parquet(rollup_path).filter(F.col("tier") == "1m")
+    t1m.persist(StorageLevel.MEMORY_AND_DISK)
+    CP.write_partitioned(t1m, rollup_path, "1m", sort_within=("key", "bucket_ts"))
+    _t = _mark("write_materialize_1m", _t)
+    _warn_if_partial_cache(spark, t1m)
 
     # The cascade chain, symbolization, and chunk encoding are independent
     # consumers of the materialized 1m tier — submit them as CONCURRENT
@@ -282,7 +189,7 @@ def run_pipeline(
         # would race to compute it), then the 1h WRITE and the 1d
         # cascade+write overlap instead of running as four serial phases —
         # this chain is the pipeline's weighted straggler (r4 verdict #5)
-        t1h = rollup_cascade(t1m_r, "1h").localCheckpoint(eager=True)
+        t1h = rollup_cascade(t1m, "1h").localCheckpoint(eager=True)
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
         def _w1h():
@@ -306,7 +213,7 @@ def run_pipeline(
 
     def _index():
         sym = symbolize_windows(
-            t1m_r, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c, clustered=True
+            t1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c, clustered=True
         )
         build_index(sym, tier="1h").write.mode("overwrite").parquet(
             f"{out_dir}/index"
@@ -315,7 +222,7 @@ def run_pipeline(
 
     def _chunks():
         encode_chunks(
-            t1m_r, "1m", "text_len_avg", cfg.chunk_points, clustered=True
+            t1m, "1m", "text_len_avg", cfg.chunk_points, clustered=True
         ).write.mode("overwrite").parquet(f"{out_dir}/chunks")
         counts["chunks"] = _store_counts(spark, f"{out_dir}/chunks")[""]
 
@@ -345,28 +252,7 @@ def run_pipeline(
             for fut in futures:
                 fut.result()
     finally:
-        if handoff == "memory":
-            t1m.unpersist()
-        if _conf_pinned:
-            # always restore the pinned one-file-per-split confs, even when
-            # a consumer raises — they must not leak into the session
-            if _old_mpb is None:
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
-            else:
-                spark.conf.set("spark.sql.files.maxPartitionBytes", _old_mpb)
-            if _old_oc is None:
-                spark.conf.unset("spark.sql.files.openCostInBytes")
-            else:
-                spark.conf.set("spark.sql.files.openCostInBytes", _old_oc)
-    try:
-        # join AFTER the consumers: the prewarm job is tiny and had the
-        # whole pipeline to finish, so this never gates; joining earlier
-        # could stall small inputs behind the worker spawn itself
-        _prewarm_fut.result(timeout=60)
-    except Exception:
-        pass  # prewarm is an optimization only
-    finally:
-        _prewarm_pool.shutdown(wait=False)
+        t1m.unpersist()
     _t = _mark("consumers_concurrent", _t)
 
     # counts already ran inside the consumer threads (metadata-only Spark
@@ -383,7 +269,7 @@ def run_pipeline(
 
     if checkpoint_path:
         # read the watermark from the WRITTEN tier (column-pruned scan of
-        # one timestamp column) — t1m_r may be an already-unpersisted cache
+        # one timestamp column) — t1m may be an already-unpersisted cache
         # whose recompute would replay the whole rollup
         hw = (
             spark.read.parquet(rollup_path)

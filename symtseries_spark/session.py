@@ -14,36 +14,28 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-#: FAIR pool weights ∝ measured consumer work. Re-tuned for the round-4
-#: memory handoff (consumers read the cached 1m tier, not files): the
-#: cascade chain — two dependent shuffles + two partitioned writes — is
-#: now the longest critical path and straggled alone under the old
+#: FAIR pool weights ∝ measured consumer work. The cascade chain — two
+#: dependent shuffles + two partitioned writes — is the longest critical
+#: path of the pipeline's consumer phase and straggled alone under a
 #: 1:2:3 split (3.6 s vs 2.7 s peers at local[32]); cascades-heavy
-#: weights bring all four jobs' finishes within ~0.3 s of each other and
-#: cut the warm pipeline wall ~1.6×. write_1m (cache → parquet, no
-#: compute) stays light. Override with SYMT_POOL_WEIGHTS="c,i,ch,w" for
-#: A/B runs.
-POOL_WEIGHTS = {"cascades": 3, "index": 2, "chunks": 2, "write_1m": 1}
+#: weights bring the consumers' finishes within ~0.3 s of each other and
+#: cut the warm pipeline wall ~1.6×.
+POOL_WEIGHTS = {"cascades": 3, "index": 2, "chunks": 2}
 
 
 def _allocation_file() -> str:
-    env = os.environ.get("SYMT_POOL_WEIGHTS")  # e.g. "1,1,1" for an A/B
-    weights = dict(POOL_WEIGHTS)
-    if env:
-        for name, w in zip(POOL_WEIGHTS, env.split(",")):
-            weights[name] = int(w)
     pools = "\n".join(
         f'  <pool name="{name}">\n'
         f"    <schedulingMode>FIFO</schedulingMode>\n"
         f"    <weight>{w}</weight>\n"
         f"    <minShare>0</minShare>\n"
         f"  </pool>"
-        for name, w in weights.items()
+        for name, w in POOL_WEIGHTS.items()
     )
     xml = f'<?xml version="1.0"?>\n<allocations>\n{pools}\n</allocations>\n'
     path = os.path.join(
         tempfile.gettempdir(),
-        f"symtseries_fair_allocation_{'_'.join(map(str, weights.values()))}.xml",
+        f"symtseries_fair_allocation_{'_'.join(map(str, POOL_WEIGHTS.values()))}.xml",
     )
     with open(path, "w") as f:
         f.write(xml)

@@ -16,50 +16,116 @@ def test_clz_ctz():
     assert list(C._ctz64(xs)) == [64, 0, 1, 0, 63, 0, 32]
 
 
+def _split_ts_round_trip(chunks):
+    """dod-s bytes + decoded timestamps via the batch coders that
+    encode_chunks / decode_chunks run."""
+    chunks = [np.asarray(c, dtype=np.int64) for c in chunks]
+    lens = np.array([len(c) for c in chunks])
+    ends = np.cumsum(lens)
+    blobs = C._codes_timestamps_split_batch(np.concatenate(chunks), ends - lens, ends)
+    return blobs, C.decode_timestamps_split_batch(blobs, lens)
+
+
+def _split_values_round_trip(chunks):
+    """gorilla-s bytes + decoded values via the batch coders."""
+    chunks = [np.ascontiguousarray(c, dtype=np.float64) for c in chunks]
+    lens = np.array([len(c) for c in chunks])
+    ends = np.cumsum(lens)
+    blobs = C._codes_values_split_batch(np.concatenate(chunks), ends - lens, ends)
+    return blobs, C.decode_values_split_batch(blobs, lens)
+
+
 def test_timestamps_round_trip_regular():
     ts = np.arange(0, 1440) * 60_000_000 + 1_700_000_000_000_000
-    enc = C.encode_timestamps(ts)
-    assert np.array_equal(C.decode_timestamps(enc, len(ts)), ts)
-    # regular cadence → dod==0 → ~1 bit/point after the 16-byte header
-    assert len(enc) < 16 + 1440 // 8 + 8
+    (enc,), dec = _split_ts_round_trip([ts])
+    assert np.array_equal(dec, ts)
+    # regular cadence → dod==0 → 3 ctrl bits/point after the 16-byte header
+    assert len(enc) <= 556
 
 
 def test_timestamps_round_trip_irregular():
+    """Negative deltas and dods beyond every class range (raw 64b escape)."""
     rng = np.random.RandomState(3)
     deltas = rng.randint(-(10**12), 10**12, size=500)
     ts = np.cumsum(np.concatenate([[1_700_000_000_000_000], deltas]))
-    enc = C.encode_timestamps(ts)
-    assert np.array_equal(C.decode_timestamps(enc, len(ts)), ts)
+    assert (np.diff(ts) < 0).any()
+    _, dec = _split_ts_round_trip([ts])
+    assert np.array_equal(dec, ts)
 
 
 def test_timestamps_edge_sizes():
-    for ts in ([123], [123, 456], [0, 0, 0], [5, 4, 3, 100]):
-        a = np.array(ts, dtype=np.int64)
-        assert np.array_equal(C.decode_timestamps(C.encode_timestamps(a), len(a)), a)
+    chunks = [[123], [123, 456], [0, 0, 0], [5, 4, 3, 100], [9, 2, 7, -4]]
+    _, dec = _split_ts_round_trip(chunks)
+    assert np.array_equal(dec, np.concatenate(chunks))
 
 
 def test_values_round_trip_property():
-    rng = np.random.RandomState(7)
+    """NaN payloads, ±inf, −0.0, extremes and sizes 1–4 round-trip
+    bit-exactly through one batch."""
+    nan_bits = np.array(
+        [0x7FF8000000000000, 0x7FF8000000000123, 0xFFF8000000000000,
+         0x7FF0000000000001, 0xFFFFFFFFFFFFFFFF],
+        dtype=np.uint64,
+    )
     cases = [
+        nan_bits.view(np.float64),
+        np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1e-308, 1e308, 2.0]),
+        np.array([5e-324]),
+        np.array([-0.0, 0.0]),
+        np.array([np.inf, np.nan, -np.inf]),
+        np.array([1.0, 1.0, -1.0, 1.0]),
+    ]
+    rng = np.random.RandomState(7)
+    cases += [
         rng.normal(size=1000),
         np.repeat(3.14159, 500),  # constant → all-zero xors
         np.round(rng.normal(size=300), 1),  # repeated mantissa patterns
+        rng.normal(size=1) * 100,
+        np.arange(100, dtype=np.float64),
+    ]
+    _, dec = _split_values_round_trip(cases)
+    want = np.concatenate(cases)
+    assert np.array_equal(dec.view(np.uint64), want.view(np.uint64)), (
+        "bit-exact round trip required (NaN payloads included)"
+    )
+
+
+def test_values_vec_round_trip_property():
+    """Each case as its own single-group batch: the per-group start/end
+    offsets are exercised one chunk at a time, not only when concatenated."""
+    rng = np.random.RandomState(9)
+    cases = [
+        rng.normal(size=1000),
+        np.repeat(3.14159, 500),
+        np.round(rng.normal(size=300), 1),
         np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1e-308, 1e308, 2.0]),
         rng.normal(size=1) * 100,
         np.arange(100, dtype=np.float64),
     ]
     for vals in cases:
-        enc = C.encode_values(vals)
-        dec = C.decode_values(enc, len(vals))
+        _, dec = _split_values_round_trip([vals])
         assert np.array_equal(
             dec.view(np.uint64), np.ascontiguousarray(vals).view(np.uint64)
-        ), "bit-exact round trip required (NaN payloads included)"
+        )
 
 
 def test_values_compress_stable_series():
-    vals = np.repeat(42.5, 2000)
-    enc = C.encode_values(vals)
-    assert len(enc) < 8 + 2000 // 8 + 8  # ~1 bit per repeated point
+    (enc,), dec = _split_values_round_trip([np.repeat(42.5, 2000)])
+    assert np.array_equal(dec, np.repeat(42.5, 2000))
+    assert len(enc) <= 259  # 64b head + 1 ctrl bit per repeated point
+
+
+def test_decode_chunks_rejects_unknown_codec(spark):
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    rollup = spark.createDataFrame(
+        [Row(key="a", bucket_ts=base + dt.timedelta(minutes=m), text_len_avg=1.0 * m)
+         for m in range(5)]
+    )
+    chunks = C.encode_chunks(rollup, "1m").withColumn("val_codec", F.lit("gorilla"))
+    with pytest.raises(Exception, match=r"unsupported codec .*val_codec='gorilla'"):
+        C.decode_chunks(chunks).collect()
 
 
 def test_spark_chunk_round_trip(spark):
@@ -93,24 +159,6 @@ def test_spark_chunk_round_trip(spark):
     raw = 16 * len(rows)
     packed = sum(len(r.ts_payload) + len(r.val_payload) for r in cl)
     assert packed < raw
-
-
-def test_values_vec_round_trip_property():
-    rng = np.random.RandomState(9)
-    cases = [
-        rng.normal(size=1000),
-        np.repeat(3.14159, 500),
-        np.round(rng.normal(size=300), 1),
-        np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1e-308, 1e308, 2.0]),
-        rng.normal(size=1) * 100,
-        np.arange(100, dtype=np.float64),
-    ]
-    for vals in cases:
-        enc = C.encode_values_vec(vals)
-        dec = C.decode_values(enc, len(vals))
-        assert np.array_equal(
-            dec.view(np.uint64), np.ascontiguousarray(vals).view(np.uint64)
-        )
 
 
 def test_split_codecs_batch_round_trip_property():
@@ -156,8 +204,9 @@ def test_split_codecs_batch_round_trip_property():
 
 def test_split_codec_roundtrip_hypothesis():
     """Fuzz the split-layout codecs: decode∘encode must be the identity for
-    arbitrary float64 payloads (subnormals, ±0.0, huge magnitudes, long
-    equal runs) and arbitrary non-decreasing µs timestamps."""
+    arbitrary float64 bit patterns (NaN payloads, ±inf, subnormals, ±0.0,
+    huge magnitudes, long equal runs) and µs timestamps whose deltas may
+    be negative."""
     from hypothesis import given, settings, strategies as st
 
     from symtseries_spark.operators.codecs import (
@@ -169,16 +218,19 @@ def test_split_codec_roundtrip_hypothesis():
     )
 
     floats = st.one_of(
-        st.floats(allow_nan=False, width=64),
+        st.floats(width=64),
         st.just(0.0),
         st.just(-0.0),
         st.floats(min_value=-1e-300, max_value=1e-300, allow_nan=False),
+        st.integers(min_value=0, max_value=(1 << 64) - 1).map(
+            lambda b: float(np.array([b], dtype=np.uint64).view(np.float64)[0])
+        ),
     )
 
     @settings(max_examples=200, deadline=None)
     @given(st.lists(floats, min_size=1, max_size=130))
     def check_values(vals):
-        v = np.asarray(vals, dtype=np.float64)
+        v = np.array(vals, dtype=np.float64)
         blob = _pack_groups([_codes_values_split(v)])[0]
         out = decode_values_split_batch([blob], np.array([len(v)]))
         assert v.view(np.uint64).tolist() == np.asarray(out).view(np.uint64).tolist()
@@ -186,7 +238,9 @@ def test_split_codec_roundtrip_hypothesis():
     @settings(max_examples=200, deadline=None)
     @given(
         st.lists(
-            st.integers(min_value=0, max_value=1 << 40), min_size=1, max_size=130
+            st.integers(min_value=-(1 << 40), max_value=1 << 40),
+            min_size=1,
+            max_size=130,
         ),
         st.integers(min_value=0, max_value=1 << 50),
     )

@@ -47,9 +47,7 @@ def test_clustered_rollup_costs_two_exchanges(spark):
         [("a", "2024-01-01 00:00:05", 3.0), ("b", "2024-01-01 00:01:07", 4.0)],
         "url string, ts string, v double",
     ).select("url", F.to_timestamp("ts").alias("ts"), "v")
-    out = salted_rollup(
-        df, "url", "ts", F.col("v"), "1m", hot_keys=["a"], cluster_by_key=True
-    )
+    out = salted_rollup(df, "url", "ts", F.col("v"), "1m", cluster_by_key=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 2, plan
 

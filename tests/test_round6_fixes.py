@@ -123,8 +123,39 @@ def test_gapfill_spine_density_unchanged(spark):
     assert per_key["B"] == [base]
 
 
+def test_gapfill_duplicate_buckets(spark):
+    """Duplicate (key, bucket_ts) rows: no F.sequence boundary error, every
+    input row comes out as a present row, and the gap grid equals the one
+    of the de-duplicated input."""
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        Row(key="A", bucket_ts=base, v=0.0),
+        Row(key="A", bucket_ts=base + dt.timedelta(hours=3), v=3.0),
+        Row(key="A", bucket_ts=base + dt.timedelta(hours=3), v=30.0),
+        Row(key="A", bucket_ts=base + dt.timedelta(hours=6), v=6.0),
+        Row(key="B", bucket_ts=base, v=1.0),
+        Row(key="B", bucket_ts=base, v=2.0),
+    ]
+    schema = "key string, bucket_ts timestamp, v double"
+    df = spark.createDataFrame(rows, schema)
+    dedup = df.dropDuplicates(["key", "bucket_ts"])
+
+    def split(d):
+        got = gapfill(d, "1h", value_col="v").collect()
+        present = sorted((r.key, r.bucket_ts, r.value) for r in got if not r.is_gap)
+        gaps = sorted((r.key, r.bucket_ts) for r in got if r.is_gap)
+        return present, gaps
+
+    present, gaps = split(df)
+    assert present == sorted((r.key, r.bucket_ts, r.v) for r in rows)
+    assert gaps == split(dedup)[1]
+    assert gaps == [
+        ("A", base + dt.timedelta(hours=h)) for h in (1, 2, 4, 5)
+    ]
+
+
 # ---------------------------------------------------------------------------
-# salted_rollup: unconditional salting (hot_keys=None) == unsalted
+# salted_rollup: unconditional salting == unsalted
 # ---------------------------------------------------------------------------
 
 
@@ -143,8 +174,7 @@ def test_salt_all_keys_equals_unsalted(spark):
                 )
     df = spark.createDataFrame(rows, "url string, ts timestamp, v double")
     plain = rollup_raw(df, "url", "ts", F.col("v"), "1m")
-    salted = salted_rollup(df, "url", "ts", F.col("v"), "1m", hot_keys=None,
-                           salt_buckets=4)
+    salted = salted_rollup(df, "url", "ts", F.col("v"), "1m", salt_buckets=4)
 
     def canon(d):
         return {
@@ -156,13 +186,3 @@ def test_salt_all_keys_equals_unsalted(spark):
         }
 
     assert canon(plain) == canon(salted)
-
-
-def test_salt_disabled_with_empty_list(spark):
-    df = spark.createDataFrame(
-        [Row(url="a", ts=dt.datetime(2024, 1, 1), v=1.0)],
-        "url string, ts timestamp, v double",
-    )
-    out = salted_rollup(df, "url", "ts", F.col("v"), "1m", hot_keys=[])
-    r = out.first()
-    assert r.crawl_cnt == 1 and r.sum == 1.0
