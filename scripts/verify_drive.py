@@ -1,7 +1,9 @@
 """Drive the driver contract surface end-to-end, replicating the harness:
 run queries() on Spark and oracle_sql() on DuckDB at sf0.01, canonicalize
 with the SAME pandas sort the driver uses (which crashed on media_features
-in round 1), and compare value hashes."""
+in round 1), and compare value hashes.
+
+Usage: python scripts/verify_drive.py [query_name ...]  (default: all)"""
 import sys, os, math
 sys.path.insert(0, "/root/repo")
 import duckdb
@@ -36,11 +38,10 @@ df = E.entry(spark)
 rows = df.collect()
 print(f"entry(): {len(rows)} rows, schema {df.columns}")
 
-# ALL registered queries: the contract surface is everything in queries()
-targets = None  # filled from E.queries() below
+# the queries named on the command line, else the whole contract surface
 oracles = E.oracle_sql()
 qs = E.queries()
-targets = sorted(qs)
+targets = sys.argv[1:] or sorted(qs)
 for name in targets:
     sdf = qs[name](spark, SF).toPandas()
     if name in oracles:

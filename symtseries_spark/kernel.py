@@ -432,14 +432,22 @@ def mindist_pairs(
     return d
 
 
+def frame_full_batch(X: np.ndarray, w: int) -> np.ndarray:
+    """(B, n) raw series → (B,) int64 bitmask, bit f set ⇔ PAA frame f has
+    every raw slot finite: the per-row ``frame_full`` metadata that makes
+    :func:`mindist_lb_batch` a valid bound. Words wider than 63 frames do
+    not fit a long and get 0, so every frame contributes 0 to the bound."""
+    X = np.asarray(X, dtype=np.float64)
+    B, n = X.shape
+    if w > 63:
+        return np.zeros(B, dtype=np.int64)
+    fin = np.isfinite(X[:, : n // w * w]).reshape(B, w, n // w).all(axis=2)
+    return fin @ (np.int64(1) << np.arange(w, dtype=np.int64))
+
+
 def frame_full_mask(series: np.ndarray, w: int) -> int:
-    """Bitmask (bit f set ⇔ PAA frame f has every raw slot finite) for a
-    single raw series — the query-side twin of the per-row ``frame_full``
-    column that symbolize_windows emits."""
-    q = np.asarray(series, dtype=np.float64)
-    fs = len(q) // w
-    fin = np.isfinite(q[: fs * w]).reshape(w, fs).all(axis=1)
-    return int((fin.astype(np.int64) << np.arange(w, dtype=np.int64)).sum())
+    """:func:`frame_full_batch` of a single raw series (the query side)."""
+    return int(frame_full_batch(np.asarray(series)[None, :], w)[0])
 
 
 def mindist_lb_batch(
@@ -472,9 +480,9 @@ def mindist_lb_batch(
     qa: (w,) query symbols. cands: (B, w). frame_full: (B,) int64 bitmask,
     bit f = candidate frame f fully finite. q_frame_full: scalar bitmask
     for the query series (kernel.frame_full_mask). fs = n // w.
-    Requires the refine metric to share the symbolizer's STAT_EPS
-    stationary guard (z := 0 when std < STAT_EPS) so word symbols always
-    encode the sector of the refine-space PAA mean.
+    Requires the refine metric (:func:`euclid_batch`) to share the
+    symbolizer's STAT_EPS stationary guard (z := 0 when std < STAT_EPS) so
+    word symbols always encode the sector of the refine-space PAA mean.
     """
     qa = np.asarray(qa, dtype=np.int64)
     cands = np.asarray(cands, dtype=np.int64)
@@ -491,6 +499,41 @@ def mindist_lb_batch(
     cells = dist[a_safe, b_safe]
     sq = np.where(ok, cells * cells, 0.0)
     return np.sqrt(float(fs) * sq.sum(axis=1))
+
+
+def znorm(series: np.ndarray) -> np.ndarray:
+    """z-normalize one series (the query side of :func:`euclid_batch`):
+    population std over finite values, STAT_EPS stationary guard → zeros."""
+    q = np.asarray(series, dtype=np.float64)
+    qz = q.copy()
+    fin = np.isfinite(qz)
+    if fin.any():
+        sd = qz[fin].std()
+        if sd < STAT_EPS:
+            qz[fin] = 0.0
+        else:
+            qz[fin] = (qz[fin] - qz[fin].mean()) / sd
+    return qz
+
+
+def euclid_batch(X: np.ndarray, qz: np.ndarray) -> np.ndarray:
+    """(B, n) raw series → z-normalized Euclidean distance of each row to
+    the z-normalized query ``qz``: the one refine metric of every query.
+
+    Mirrors the symbolizer's semantics exactly (population std over finite
+    values, STAT_EPS stationary guard → zero vector, non-finite positions
+    contribute 0) so :func:`mindist_lb_batch` is a valid lower bound of it.
+    Each row's result depends on that row alone, so refining a subset of
+    rows gives bit-identical distances to refining all of them.
+    """
+    Xf = np.where(np.isfinite(X), X, np.nan)
+    mu = np.nanmean(Xf, axis=1, keepdims=True)
+    sd = np.nanstd(Xf, axis=1, keepdims=True)
+    stationary = sd < STAT_EPS
+    sd = np.where(stationary, 1.0, sd)
+    Z = np.where(np.isfinite(X), np.where(stationary, 0.0, (X - mu) / sd), np.nan)
+    diff = np.where(np.isfinite(Z) & np.isfinite(qz), Z - qz, 0.0)
+    return np.sqrt((diff * diff).sum(axis=1))
 
 
 def mindist(a: Word, b: Word) -> tuple[float, float, float]:

@@ -34,7 +34,6 @@ BinaryType blob row via mapInArrow; decode_chunks() restores rows.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -406,23 +405,37 @@ def _seg_cumsum(a: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarr
     return c - base
 
 
-def decode_values_split_batch(
-    payloads: list[bytes], n_points: np.ndarray
-) -> np.ndarray:
+def _payload_bits(payloads) -> tuple[np.ndarray, np.ndarray]:
+    """(bit array, per-chunk start bit) of a batch of chunk payloads.
+
+    ``payloads`` is an Arrow binary array (read straight from its offsets
+    and data buffers, no per-chunk Python object) or a list of bytes.
+    """
+    import pyarrow as pa
+
+    if not isinstance(payloads, pa.Array):
+        payloads = pa.array(payloads, pa.binary())
+    otype = np.int64 if pa.types.is_large_binary(payloads.type) else np.int32
+    lo = payloads.offset
+    offs = np.frombuffer(payloads.buffers()[1], dtype=otype)[lo : lo + len(payloads) + 1]
+    blob = np.frombuffer(payloads.buffers()[2] or b"", dtype=np.uint8)
+    bits = np.unpackbits(blob[offs[0] : offs[-1]])
+    return bits, (offs[:-1] - offs[0]).astype(np.int64) * 8
+
+
+def decode_values_split_batch(payloads, n_points: np.ndarray) -> np.ndarray:
     """Decode MANY gorilla-s chunks in one vectorized pass.
 
-    Returns the concatenated float64 values (Σ n_points long). All offsets
-    are prefix sums over the ctrl sections; the XOR-prefix undo is one
-    np.bitwise_xor.accumulate with per-chunk base correction.
+    ``payloads``: see :func:`_payload_bits`. Returns the concatenated
+    float64 values (Σ n_points long). All offsets are prefix sums over the
+    ctrl sections; the XOR-prefix undo is one np.bitwise_xor.accumulate
+    with per-chunk base correction.
     """
     n_points = np.asarray(n_points, dtype=np.int64)
     nchunks = len(payloads)
     if nchunks == 0:
         return np.empty(0, dtype=np.float64)
-    byte_lens = np.array([len(p) for p in payloads], dtype=np.int64)
-    bit_off = np.concatenate([[0], np.cumsum(byte_lens)[:-1]]) * 8
-    blob = np.frombuffer(b"".join(payloads), dtype=np.uint8)
-    bits = np.unpackbits(blob)
+    bits, bit_off = _payload_bits(payloads)
 
     u0 = _gather_bits(bits, bit_off, np.full(nchunks, 64, dtype=np.int64))
 
@@ -470,18 +483,14 @@ def decode_values_split_batch(
     return (acc ^ base).view(np.float64)
 
 
-def decode_timestamps_split_batch(
-    payloads: list[bytes], n_points: np.ndarray
-) -> np.ndarray:
-    """Decode MANY dod-s chunks in one vectorized pass → int64 µs array."""
+def decode_timestamps_split_batch(payloads, n_points: np.ndarray) -> np.ndarray:
+    """Decode MANY dod-s chunks in one vectorized pass → int64 µs array.
+    ``payloads``: see :func:`_payload_bits`."""
     n_points = np.asarray(n_points, dtype=np.int64)
     nchunks = len(payloads)
     if nchunks == 0:
         return np.empty(0, dtype=np.int64)
-    byte_lens = np.array([len(p) for p in payloads], dtype=np.int64)
-    bit_off = np.concatenate([[0], np.cumsum(byte_lens)[:-1]]) * 8
-    blob = np.frombuffer(b"".join(payloads), dtype=np.uint8)
-    bits = np.unpackbits(blob)
+    bits, bit_off = _payload_bits(payloads)
 
     W64 = np.full(nchunks, 64, dtype=np.int64)
     ts0 = _gather_bits(bits, bit_off, W64).view(np.int64)
@@ -662,40 +671,43 @@ def decoded_schema(key_type) -> StructType:
 def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Inverse of encode_chunks: blob rows → (key, tier, bucket_ts, value).
 
-    Chunks decode FULLY VECTORIZED: one numpy pass per Arrow batch covers
-    every chunk in the batch (prefix-sum offsets + ≤64 bit-position gathers
-    + one xor-scan), so the query-side read path has no per-point or
-    per-chunk Python. A row whose codecs are not "dod-s"/"gorilla-s" (the
+    One mapInArrow pass: each Arrow batch's payload columns feed their
+    offsets and data buffers straight to the split decoders, which decode
+    every chunk of the batch in one numpy pass (prefix-sum offsets + ≤64
+    bit-position gathers + one xor-scan). No per-chunk Python object and no
+    pandas frame. A row whose codecs are not "dod-s"/"gorilla-s" (the
     formats encode_chunks writes) raises ValueError naming the codec.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     schema = decoded_schema(chunks.schema["key"].dataType)
 
-    def _decode(it):
-        for pdf in it:
-            if len(pdf) == 0:
+    def _decode(batches):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            bad = (pdf["ts_codec"] != "dod-s") | (pdf["val_codec"] != "gorilla-s")
-            if bad.any():
-                row = pdf[bad].iloc[0]
+            ts_codec, val_codec = b.column("ts_codec"), b.column("val_codec")
+            ok = pc.and_(pc.equal(ts_codec, "dod-s"), pc.equal(val_codec, "gorilla-s"))
+            bad = np.flatnonzero(~pc.fill_null(ok, False).to_numpy(zero_copy_only=False))
+            if len(bad):
+                i = int(bad[0])
                 raise ValueError(
                     f"decode_chunks: unsupported codec ts_codec="
-                    f"{row['ts_codec']!r} val_codec={row['val_codec']!r} "
+                    f"{ts_codec[i].as_py()!r} val_codec={val_codec[i].as_py()!r} "
                     "(only 'dod-s'/'gorilla-s' chunks decode)"
                 )
-            ns = pdf["n_points"].to_numpy().astype(np.int64)
-            vals = decode_values_split_batch(
-                [bytes(p) for p in pdf["val_payload"]], ns
-            )
-            ts = decode_timestamps_split_batch(
-                [bytes(p) for p in pdf["ts_payload"]], ns
-            )
-            yield pd.DataFrame(
-                {
-                    "key": np.repeat(pdf["key"].to_numpy(), ns),
-                    "tier": np.repeat(pdf["tier"].to_numpy(), ns),
-                    "bucket_ts": pd.to_datetime(ts, unit="us"),
-                    "value": vals,
-                }
+            ns = b.column("n_points").to_numpy(zero_copy_only=False).astype(np.int64)
+            rows = pa.array(np.repeat(np.arange(b.num_rows), ns))
+            ts = decode_timestamps_split_batch(b.column("ts_payload"), ns)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("key").take(rows),
+                    b.column("tier").take(rows),
+                    pa.array(ts, pa.timestamp("us")),
+                    pa.array(decode_values_split_batch(b.column("val_payload"), ns)),
+                ],
+                names=schema.fieldNames(),
             )
 
-    return chunks.mapInPandas(_decode, schema)
+    return chunks.mapInArrow(_decode, schema)

@@ -1,17 +1,16 @@
 """iSAX-word inverted index + similarity queries (ANN / mindist range).
 
 Index model: a DataFrame ``(word, w, c, n, tier, key, window_ts)`` — one row
-per symbolized window — written out partitioned/bucketed by ``word`` so both
-query modes prune:
+per symbolized window, so both query modes prune:
 
   * exact-word candidates (the iSAX "approximate search" step) is an
-    equi-join on (word, w, c) → with bucketing, a shuffle-free lookup; the
-    tiny query set is always broadcast.
-  * mindist range/k-NN search exploits the *lower-bound* property (the whole
-    point of SAX): compute mindist(query, word) per index row with one
-    vectorized Arrow pass, prune rows whose lower bound exceeds the radius /
-    running k-th best, and only then (optionally) refine survivors against
-    their raw series.
+    equi-join on (word, w, c); the tiny query set is always broadcast.
+  * approximate mindist range/k-NN run the mindist UDF over the DISTINCT
+    vocabulary and broadcast-join it back.
+  * exact range/k-NN exploit the *lower-bound* property (the whole point of
+    SAX) in ONE mapInArrow pass over the word table, which stores each
+    window's series: prune rows whose bound exceeds the radius / running
+    k-th best and refine only the survivors, with no join or collect.
 
 Per-segment cardinality promotion (iSAX 2.0, Camerra et al. 2010 — the
 feature the reference marks TODO at /root/reference/include/symtseries.h:32)
@@ -29,10 +28,8 @@ from pyspark.sql import functions as F
 
 from symtseries_spark import kernel as K
 from symtseries_spark.operators.symbolize import (
-    MINDIST_SCHEMA,
     _strings_from_symbols,
     _symbols_from_strings,
-    mindist_lb_udf,
     mindist_udf,
 )
 
@@ -56,16 +53,6 @@ def build_index(symbolized: DataFrame, tier: str = "1h") -> DataFrame:
         "window_ts",
     ]
     return symbolized.select(*cols)
-
-
-def write_index(index: DataFrame, path: str, buckets: int = 64) -> None:
-    """Persist the index partitioned by word hash.
-
-    `repartition(word)` co-locates equal words so exact-match lookups touch
-    few files; at cluster scale this would be a bucketed/Iceberg table with
-    a sort order on word.
-    """
-    index.repartition(buckets, "word").write.mode("overwrite").parquet(path)
 
 
 def exact_candidates(index: DataFrame, query_word: str, w: int, c: int) -> DataFrame:
@@ -131,29 +118,9 @@ def knn_query(
     )
 
 
-def znorm_query(query_series: np.ndarray) -> np.ndarray:
-    """z-normalize the query with the kernel's semantics: population std
-    over finite values, STAT_EPS stationary guard → all-zero vector."""
-    q = np.asarray(query_series, dtype=np.float64)
-    qz = q.copy()
-    fin = np.isfinite(qz)
-    if fin.any():
-        sd = qz[fin].std()
-        if sd < K.STAT_EPS:
-            qz[fin] = 0.0
-        else:
-            qz[fin] = (qz[fin] - qz[fin].mean()) / sd
-    return qz
-
-
 def euclid_udf(query_series: np.ndarray):
-    """pandas UDF: series → z-normalized Euclidean distance to the query.
-
-    Mirrors the symbolizer's semantics exactly (population std over finite
-    values, STAT_EPS stationary guard → zero vector, non-finite positions
-    contribute 0) so kernel.mindist_lb_batch is a valid lower bound of it.
-    """
-    qz = znorm_query(query_series)
+    """pandas UDF: series → kernel.euclid_batch distance to the query."""
+    qz = K.znorm(query_series)
 
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
@@ -163,16 +130,7 @@ def euclid_udf(query_series: np.ndarray):
         if len(series) == 0:
             return pd.Series([], dtype=np.float64)
         X = np.stack(series.to_numpy()).astype(np.float64, copy=False)
-        Xf = np.where(np.isfinite(X), X, np.nan)
-        mu = np.nanmean(Xf, axis=1, keepdims=True)
-        sd = np.nanstd(Xf, axis=1, keepdims=True)
-        stationary = sd < K.STAT_EPS
-        sd = np.where(stationary, 1.0, sd)
-        Z = np.where(
-            np.isfinite(X), np.where(stationary, 0.0, (X - mu) / sd), np.nan
-        )
-        diff = np.where(np.isfinite(Z) & np.isfinite(qz), Z - qz, 0.0)
-        return pd.Series(np.sqrt((diff * diff).sum(axis=1)))
+        return pd.Series(K.euclid_batch(X, qz))
 
     return _euclid
 
@@ -196,56 +154,116 @@ def refine_knn(
     )
 
 
-def with_frame_full(df: DataFrame, w: int, n: int) -> DataFrame:
-    """Ensure a ``frame_full`` bitmask column exists.
+def _series_matrix(series, n: int) -> np.ndarray:
+    """Arrow list<double> column → (B, n) float64 matrix (null slots → NaN)."""
+    import pyarrow.compute as pc
 
-    symbolize_windows emits it natively; for ad-hoc word tables it is
-    derived JVM-side from the series column (w forall-expressions), or 0
-    when no series is stored (lower bound degrades to 0 — still valid).
+    lens = pc.list_value_length(series).to_numpy(zero_copy_only=False)
+    if series.null_count or (lens != n).any():
+        raise ValueError(f"every series must hold n={n} values, the query's length")
+    return series.flatten().to_numpy(zero_copy_only=False).reshape(len(series), n)
+
+
+def _word_table_pass(
+    index: DataFrame,
+    query_series: np.ndarray,
+    w: int,
+    c: int,
+    mode: str,
+    k: int = 0,
+    radius: float = 0.0,
+    probe_factor: int = 4,
+) -> DataFrame:
+    """One mapInArrow pass over the (w, c) slice of a word table: the SAX
+    multi-step search with no join, distinct or driver round-trip.
+
+    Per Arrow batch: word → symbol codes, ``frame_full`` (derived from
+    ``series`` when the column is absent), kernel.mindist_lb_batch, then
+    kernel.euclid_batch on only the rows the bound cannot prune. ``mode``
+    "lb" annotates every row with ``mindist_lb``; "range" emits the rows
+    with euclid ≤ radius (euclid ≤ r ⇒ lb ≤ r); "knn" keeps a local top-k
+    under a running τ, the k-th best distance so far (lb > τ ⇒ euclid > τ),
+    and emits the partition's top-k in (euclid, key, window_ts) order.
+    Output columns are the input columns plus ``mindist_lb`` or ``euclid``.
     """
-    if "frame_full" in df.columns:
-        return df
-    if "series" not in df.columns or w > 63:
-        return df.withColumn("frame_full", F.lit(0).cast("long"))
-    fs = n // w
-    bits = [
-        F.when(
-            F.forall(
-                F.slice("series", f * fs + 1, fs), lambda x: ~F.isnan(x)
-            ),
-            F.lit(1 << f).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for f in range(w)
-    ]
-    mask = bits[0]
-    for b in bits[1:]:
-        mask = mask + b
-    return df.withColumn("frame_full", mask)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    q = np.asarray(query_series, dtype=np.float64)
+    qsym = K.symbolize(q, w, c)  # rejects a non-1-D q, runs K.validate_nwc
+    n, fs, qff, qz = len(q), len(q) // w, K.frame_full_mask(q, w), K.znorm(q)
+    compat = index.filter((F.col("w") == w) & (F.col("c") == c))
+    if "series" not in compat.columns:
+        raise ValueError("the word table needs its series column")
+    has_ff = "frame_full" in compat.columns
+    col = "mindist_lb" if mode == "lb" else "euclid"
+    schema = StructType(compat.schema.fields + [StructField(col, DoubleType())])
+
+    def bound(b):
+        """(lower bounds, (B, n) series) of one batch."""
+        X = _series_matrix(b.column("series"), n)
+        if has_ff:
+            ff = pc.fill_null(b.column("frame_full"), 0).to_numpy()
+        else:
+            ff = K.frame_full_batch(X, w)
+        syms = _symbols_from_strings(b.column("word").to_numpy(zero_copy_only=False), c)
+        return K.mindist_lb_batch(qsym, syms, c, fs, ff, qff), X
+
+    def with_col(b, rows, values):
+        return b.take(pa.array(rows, pa.int64())).append_column(
+            col, pa.array(values, pa.float64())
+        )
+
+    def kth(d):
+        return np.partition(d, k - 1)[k - 1] if len(d) >= k else np.inf
+
+    def _pass(batches):
+        kept, kept_d, tau = None, np.empty(0), np.inf
+        for b in batches:
+            if not b.num_rows:
+                continue
+            lb, X = bound(b)
+            if mode == "lb":
+                yield with_col(b, np.arange(b.num_rows), lb)
+                continue
+            if mode == "range":
+                rows = np.flatnonzero(lb <= radius)
+                d = K.euclid_batch(X[rows], qz)
+                if (d <= radius).any():
+                    yield with_col(b, rows[d <= radius], d[d <= radius])
+                continue
+            # refine in lowest-bound-first blocks of probe_factor·k rows,
+            # tightening τ after each, until the next bound exceeds τ
+            order, step = np.argsort(lb, kind="stable"), max(k * probe_factor, k)
+            rows, d = np.empty(0, np.int64), np.empty(0)
+            for lo in range(0, len(order), step):
+                blk = order[lo : lo + step]
+                blk = blk[lb[blk] <= tau]
+                if not len(blk):
+                    break
+                rows = np.concatenate([rows, blk])
+                d = np.concatenate([d, K.euclid_batch(X[blk], qz)])
+                tau = min(tau, kth(np.concatenate([kept_d, d])))
+            new = pa.Table.from_batches([with_col(b, rows[d <= tau], d[d <= tau])])
+            kept = new if kept is None else pa.concat_tables([kept, new])
+            kept_d = kept.column(col).to_numpy()
+            kept, kept_d = kept.filter(pa.array(kept_d <= tau)), kept_d[kept_d <= tau]
+        if kept is not None and kept.num_rows:
+            order = [(col, "ascending"), ("key", "ascending"), ("window_ts", "ascending")]
+            top = pc.sort_indices(kept, sort_keys=order, null_placement="at_start")
+            yield from kept.take(top[:k]).to_batches()
+
+    return compat.mapInArrow(_pass, schema)
 
 
 def lower_bound_scan(
     index: DataFrame, query_series: np.ndarray, w: int, c: int
 ) -> DataFrame:
-    """Annotate every (w, c)-compatible index row with ``mindist_lb`` — the
-    bound-safe lower bound of the refine distance.
-
-    The bound is a function of (word, frame_full) alone, so the Arrow UDF
-    runs over the DISTINCT pairs and broadcast-joins back: per-query UDF
-    cost scales with the vocabulary, not the corpus."""
-    q = np.asarray(query_series, dtype=np.float64)
-    qword = K.symbols_to_string(K.symbolize(q, w, c), c)
-    fs = len(q) // w
-    q_frame_full = K.frame_full_mask(q, w)
-    compat = with_frame_full(
-        index.filter((F.col("w") == w) & (F.col("c") == c)), w, len(q)
-    )
-    lb = mindist_lb_udf(qword, c, fs, q_frame_full)(
-        F.col("word"), F.col("frame_full")
-    )
-    per_pair = (
-        compat.select("word", "frame_full").distinct().withColumn("mindist_lb", lb)
-    )
-    return compat.join(F.broadcast(per_pair), ["word", "frame_full"])
+    """Annotate every (w, c)-compatible index row with ``mindist_lb``, the
+    bound-safe lower bound of the refine distance: the exact queries' own
+    pass in annotate mode, so this is the very bound they prune with."""
+    return _word_table_pass(index, query_series, w, c, "lb")
 
 
 def exact_knn(
@@ -256,34 +274,26 @@ def exact_knn(
     k: int,
     probe_factor: int = 4,
 ) -> DataFrame:
-    """Exact k-NN with no false dismissals (the classic SAX multi-step
-    search, but pruned with a VALID lower bound — the reference-parity
-    mindist over-estimates whenever '#' sentinels appear and must not
-    prune; see kernel.mindist_lb_batch):
+    """Exact k-NN with no false dismissals: the classic SAX multi-step
+    search, pruned with a VALID lower bound (the reference-parity mindist
+    over-estimates whenever '#' sentinels appear and must not prune; see
+    kernel.mindist_lb_batch).
 
-      1. one vectorized lower-bound pass over the index,
-      2. refine the best ``probe_factor·k`` candidates to exact distance,
-      3. τ = k-th best exact distance (∞ if fewer than k refined); every
-         row with lb > τ is provably farther than the current answer set,
-         so the final refine touches only rows with lb ≤ τ — a set that
-         provably contains the true top-k (euclid ≤ τ ⇒ lb ≤ τ).
-
-    Two Arrow refine passes worst case; the second touches only rows the
-    lower bound could not prune.
+    One Arrow pass keeps a per-partition top-k under a running τ
+    (:func:`_word_table_pass`); the driver merges at most partitions × k
+    rows with orderBy(euclid, key, window_ts).limit(k), which runs as a
+    TakeOrderedAndProject.
     """
-    q = np.asarray(query_series, dtype=np.float64)
-    scan = lower_bound_scan(index_with_series, q, w, c).persist()
-    try:
-        nprobe = max(k * probe_factor, k)
-        probe = scan.orderBy(
-            F.col("mindist_lb").asc(), F.col("key").asc(), F.col("window_ts").asc()
-        ).limit(nprobe)
-        top = refine_knn(probe, index_with_series, q, k).collect()
-        tau = max(r.euclid for r in top) if len(top) >= k else float("inf")
-        survivors = scan.filter(F.col("mindist_lb") <= tau)
-        return refine_knn(survivors, index_with_series, q, k)
-    finally:
-        scan.unpersist()
+    if not isinstance(k, (int, np.integer)) or k < 1:
+        raise ValueError(f"k must be an integer >= 1, got {k!r}")
+    return (
+        _word_table_pass(
+            index_with_series, query_series, w, c, "knn",
+            k=int(k), probe_factor=probe_factor,
+        )
+        .orderBy(F.col("euclid").asc(), F.col("key").asc(), F.col("window_ts").asc())
+        .limit(int(k))
+    )
 
 
 def range_query_exact(
@@ -293,21 +303,15 @@ def range_query_exact(
     c: int,
     radius: float,
 ) -> DataFrame:
-    """ALL windows whose true z-normalized Euclidean distance ≤ radius.
-
-    lower-bound prune (no false dismissals: euclid ≤ r ⇒ lb ≤ r) + exact
-    refine of the survivors. Equals the brute-force scan by construction —
-    pinned by tests/test_index.py.
+    """ALL windows whose true z-normalized Euclidean distance ≤ radius, in
+    one Arrow pass (:func:`_word_table_pass`): the lower bound prunes, with
+    no false dismissals, and only the survivors are refined. Equals the
+    brute-force scan by construction, pinned by tests/test_index.py.
     """
-    q = np.asarray(query_series, dtype=np.float64)
-    survivors = lower_bound_scan(index_with_series, q, w, c).filter(
-        F.col("mindist_lb") <= radius
-    )
-    joined = index_with_series.join(
-        survivors.select("key", "window_ts"), ["key", "window_ts"], "left_semi"
-    )
-    return joined.withColumn("euclid", euclid_udf(q)("series")).filter(
-        F.col("euclid") <= radius
+    if not float(radius) >= 0.0:  # also rejects NaN
+        raise ValueError(f"radius must be a number >= 0, got {radius!r}")
+    return _word_table_pass(
+        index_with_series, query_series, w, c, "range", radius=float(radius)
     )
 
 
@@ -376,12 +380,19 @@ def build_promoted_index(
     extras, e.g. a stored probe) land in ``_promoted_meta.json`` inside the
     index dir (the ``_`` prefix hides it from the parquet reader).
     """
-    import json
-    import os
-
     promoted = promote_words(
         symbolized, segment, threshold=threshold, w=w, c=c, n=n
     )
+    meta = {"segment": segment, "threshold": threshold, "w": w, "c": c, "n": n}
+    _write_promoted(promoted, path, {**meta, **(extra_meta or {})})
+
+
+def _write_promoted(promoted: DataFrame, path: str, meta: dict) -> None:
+    """Write a promoted index partitioned by the base word's 2-symbol
+    prefix, with its build parameters in ``_promoted_meta.json``."""
+    import json
+    import os
+
     idx = promoted.select(
         "key",
         "window_ts",
@@ -393,8 +404,6 @@ def build_promoted_index(
     idx.repartition("prefix").write.mode("overwrite").partitionBy(
         "prefix"
     ).parquet(path)
-    meta = {"segment": segment, "threshold": threshold, "w": w, "c": c, "n": n}
-    meta.update(extra_meta or {})
     with open(os.path.join(path, "_promoted_meta.json"), "w") as f:
         json.dump(meta, f)
 
@@ -626,22 +635,9 @@ def build_promoted_index_iter(
     per window, partitioned by the base word's 2-symbol prefix — so a
     lookup stays partition pruning + word equality; the descent depth only
     changes the word_promoted values, never the layout."""
-    import json
-    import os
-
     promoted = promote_words_iter(
         symbolized, threshold, w=w, c=c, n=n, segments=tuple(segments)
     )
-    idx = promoted.select(
-        "key",
-        "window_ts",
-        "word",
-        "word_promoted",
-        F.substring("word", 1, 2).alias("prefix"),
-    )
-    idx.repartition("prefix").write.mode("overwrite").partitionBy(
-        "prefix"
-    ).parquet(path)
     meta = {
         "segments": [int(s) for s in segments],
         "threshold": threshold,
@@ -649,9 +645,7 @@ def build_promoted_index_iter(
         "c": c,
         "n": n,
     }
-    meta.update(extra_meta or {})
-    with open(os.path.join(path, "_promoted_meta.json"), "w") as f:
-        json.dump(meta, f)
+    _write_promoted(promoted, path, {**meta, **(extra_meta or {})})
 
 
 def promoted_lookup_iter_indexed(

@@ -119,31 +119,6 @@ def mindist_udf(query_word: str, c: int, n_query: int = 0, n_cand: int | None = 
     return _mind
 
 
-def mindist_lb_udf(query_word: str, c: int, fs: int, q_frame_full: int):
-    """pandas UDF: (word, frame_full) → bound-safe lower bound vs the query.
-
-    Unlike the reference-parity mindist (farthest-extreme sentinel
-    substitution = over-estimate), this is a TRUE lower bound of the
-    z-normalized Euclidean refine distance — see kernel.mindist_lb_batch.
-    q_frame_full is the QUERY's own fullness bitmask
-    (kernel.frame_full_mask): partially-missing query frames must
-    contribute 0 or the bound over-estimates. Used by exact kNN / exact
-    range pruning; never by the compat surface.
-    """
-    q = K.string_to_symbols(query_word, c)
-    qff = int(q_frame_full)
-
-    @pandas_udf(DoubleType())
-    def _lb(words: pd.Series, frame_full: pd.Series) -> pd.Series:
-        if len(words) == 0:
-            return pd.Series([], dtype=np.float64)
-        cands = _symbols_from_strings(words.to_numpy(), c)
-        ff = frame_full.to_numpy().astype(np.int64)
-        return pd.Series(K.mindist_lb_batch(q, cands, c, fs, ff, qff))
-
-    return _lb
-
-
 def assemble_series(
     rollup: DataFrame,
     tier: str,
@@ -284,11 +259,6 @@ def symbolize_windows(
         M[widx, offs] = vals
         syms = K.symbolize_batch(M, w, c)
         words = _strings_from_symbols(syms, c)
-        if w <= 63:
-            fullf = np.isfinite(M).reshape(G, w, n // w).all(axis=2)
-            fmask = fullf @ (np.int64(1) << np.arange(w, dtype=np.int64))
-        else:
-            fmask = np.zeros(G, dtype=np.int64)
         series = pa.ListArray.from_arrays(
             pa.array(np.arange(G + 1, dtype=np.int32) * n), pa.array(M.ravel())
         )
@@ -301,7 +271,7 @@ def symbolize_windows(
                 pa.array(np.full(G, n, dtype=np.int32)),
                 pa.array(np.full(G, w, dtype=np.int32)),
                 pa.array(np.full(G, c, dtype=np.int32)),
-                pa.array(fmask.astype(np.int64)),
+                pa.array(K.frame_full_batch(M, w)),
             ],
             schema=pa_out,
         )

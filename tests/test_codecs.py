@@ -286,3 +286,39 @@ def test_batch_split_encoders_match_per_group():
             [_codes_timestamps_split(ts[s:e]) for s, e in zip(starts, ends)]
         )
         assert ref_t == _codes_timestamps_split_batch(ts, starts, ends)
+
+
+def test_decode_chunks_zero_rows(spark):
+    import datetime as dt
+
+    rollup = spark.createDataFrame(
+        [Row(key="a", bucket_ts=dt.datetime(2024, 1, 1), text_len_avg=1.0)]
+    )
+    chunks = C.encode_chunks(rollup, "1m").filter(F.lit(False))
+    out = C.decode_chunks(chunks)
+    assert out.columns == ["key", "tier", "bucket_ts", "value"]
+    assert out.collect() == []
+
+
+def test_decode_chunks_batch_of_keys_and_tiers(spark):
+    """One Arrow batch holding chunks of several keys and two tiers (with
+    1-point chunks) decodes every point back to its own key and tier."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    rng = np.random.RandomState(8)
+    want, parts = {}, []
+    for tier, step, npts in (("1m", dt.timedelta(minutes=1), 150),
+                             ("1h", dt.timedelta(hours=1), 30)):
+        rows = []
+        for key in ("a", "bb", "c", "d"):
+            for m in sorted(rng.choice(npts, size=rng.randint(1, 30), replace=False)):
+                v = float(np.round(rng.normal(50, 20), 3))
+                rows.append(Row(key=key, bucket_ts=base + int(m) * step, text_len_avg=v))
+                want[(key, tier, base + int(m) * step)] = v
+        rollup = spark.createDataFrame(rows)
+        parts.append(C.encode_chunks(rollup, tier, chunk_points=16))
+    chunks = parts[0].unionByName(parts[1]).coalesce(1)
+    got = C.decode_chunks(chunks).collect()
+    assert len(got) == len(want)
+    assert {(r.key, r.tier, r.bucket_ts): r.value for r in got} == want

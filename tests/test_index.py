@@ -556,3 +556,161 @@ def test_stored_iter_promoted_index_matches_adhoc_and_prunes(spark, tmp_path):
     # the scan must prune on the prefix partition column
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "prefix" in plan
+
+
+# ---------------------------------------------------------------------------
+# exact queries: input validation and the per-partition merge
+# ---------------------------------------------------------------------------
+
+
+def _word_row(key, wts, s, w, c, **extra):
+    return Row(key=key, window_ts=wts, word=K.symbols_to_string(K.symbolize(s, w, c), c),
+               w=w, c=c, n=len(s), series=[float(x) for x in s], **extra)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_exact_knn_rejects_k_below_one(spark, nan_corpus, k):
+    from symtseries_spark.operators.index import exact_knn
+
+    df, _ = nan_corpus
+    with pytest.raises(ValueError, match="k must be an integer >= 1"):
+        exact_knn(df, np.zeros(24), w=12, c=8, k=k)
+
+
+@pytest.mark.parametrize("radius", [float("nan"), -0.5])
+def test_range_query_exact_rejects_bad_radius(spark, nan_corpus, radius):
+    from symtseries_spark.operators.index import range_query_exact
+
+    df, _ = nan_corpus
+    with pytest.raises(ValueError, match="radius must be a number >= 0"):
+        range_query_exact(df, np.zeros(24), w=12, c=8, radius=radius)
+
+
+@pytest.mark.parametrize("n, w, c", [(25, 12, 8), (24, 12, 1), (24, 1, 8)])
+def test_exact_queries_validate_nwc(spark, nan_corpus, n, w, c):
+    from symtseries_spark.operators.index import exact_knn, range_query_exact
+
+    df, _ = nan_corpus
+    q = np.random.RandomState(2).normal(size=n)
+    with pytest.raises(ValueError, match=r"must (be an integer|divide n)"):
+        exact_knn(df, q, w=w, c=c, k=3)
+    with pytest.raises(ValueError, match=r"must (be an integer|divide n)"):
+        range_query_exact(df, q, w=w, c=c, radius=1.0)
+
+
+def test_exact_knn_names_series_length_mismatch(spark, nan_corpus):
+    """A query whose length differs from the stored series (24 values) is a
+    valid (n, w, c) on its own; the pass must name the mismatch instead of
+    failing inside numpy broadcasting."""
+    from symtseries_spark.operators.index import exact_knn
+
+    df, _ = nan_corpus
+    q = np.random.RandomState(3).normal(size=12)
+    with pytest.raises(Exception, match="every series must hold n=12 values"):
+        exact_knn(df, q, w=12, c=8, k=3).collect()
+
+
+def _brute_order(series, q, k=None):
+    """(key, window_ts) answers in (euclid, key, window_ts) order + dists."""
+    td = _true_dist(q)
+    ranked = sorted((td(s), key, wts) for (key, wts), s in series.items())
+    ranked = ranked if k is None else ranked[:k]
+    return [(key, wts) for _, key, wts in ranked], [d for d, _, _ in ranked]
+
+
+def test_exact_knn_multi_partition_ties(spark):
+    """Copies of one series spread over 4 partitions tie at the k-th
+    distance; the per-partition top-k + driver merge must still return the
+    brute-force answer in (euclid, key, window_ts) order."""
+    from symtseries_spark.operators.index import exact_knn
+
+    n, w, c = 24, 12, 8
+    rng = np.random.RandomState(17)
+    base = dt.datetime(2024, 1, 1)
+    q = rng.normal(size=n)
+    pool = [rng.normal(size=n) for _ in range(120)]
+    td = _true_dist(q)
+    second = sorted(range(len(pool)), key=lambda i: td(pool[i]))[1]
+    series = {(f"k{i:03d}", base + dt.timedelta(hours=i)): s for i, s in enumerate(pool)}
+    # six exact copies of the 2nd-nearest series: keys that sort before and
+    # after its own, one key twice with an earlier window_ts
+    dups = [("a0", 0), ("k000", -5), ("zz", 0), ("a1", 0), ("a0", -3), ("m", 0)]
+    rows = [_word_row(key, wts, s, w, c) for (key, wts), s in series.items()]
+    for j, (key, h) in enumerate(dups):
+        wts = base + dt.timedelta(hours=h)
+        series[(key, wts)] = pool[second].copy()
+        rows.insert(j * 25, _word_row(key, wts, pool[second], w, c))
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4))
+    assert df.rdd.getNumPartitions() >= 4
+    for k in (1, 3, 5, 8):
+        want, want_d = _brute_order(series, q, k)
+        got = exact_knn(df, q, w=w, c=c, k=k, probe_factor=1).collect()
+        assert [(r.key, r.window_ts) for r in got] == want, k
+        assert [r.euclid for r in got] == pytest.approx(want_d, abs=1e-12)
+    # the tie really sits at the k-th answer
+    _, d5 = _brute_order(series, q, 5)
+    assert d5[1] == d5[4]
+
+
+def test_exact_queries_on_mixed_table_without_frame_full(spark):
+    """Rows of another (w, c), NaN holes and no frame_full column: the pass
+    derives frame_full from the series and answers exactly as on the same
+    table with the column."""
+    from symtseries_spark.operators.index import exact_knn, range_query_exact
+
+    n, w, c = 24, 12, 8
+    rng = np.random.RandomState(23)
+    base = dt.datetime(2024, 1, 1)
+    rows, series = [], {}
+    for i in range(150):
+        s = rng.normal(size=n)
+        if i % 3:
+            s[rng.choice(n, size=rng.randint(1, 8), replace=False)] = np.nan
+        key, wts = f"k{i}", base + dt.timedelta(hours=i)
+        series[(key, wts)] = s
+        rows.append(_word_row(key, wts, s, w, c, frame_full=K.frame_full_mask(s, w)))
+    # another (w, c) and series length: filtered out before the pass
+    for i in range(40):
+        s = rng.normal(size=18)
+        rows.append(_word_row(f"o{i}", base + dt.timedelta(hours=i), s, 6, 4,
+                              frame_full=K.frame_full_mask(s, 6)))
+    with_ff = spark.createDataFrame(rows).repartition(3)
+    no_ff = with_ff.drop("frame_full")
+    q = rng.normal(size=n)
+    q[[1, 2, 9]] = np.nan
+
+    def knn(df):
+        return [(r.key, r.window_ts, r.euclid)
+                for r in exact_knn(df, q, w=w, c=c, k=7).collect()]
+
+    want, want_d = _brute_order(series, q, 7)
+    assert knn(no_ff) == knn(with_ff)
+    assert [(key, wts) for key, wts, _ in knn(no_ff)] == want
+    assert [d for _, _, d in knn(no_ff)] == pytest.approx(want_d, abs=1e-12)
+
+    radius = float(np.percentile([_true_dist(q)(s) for s in series.values()], 15))
+
+    def rng_q(df):
+        return sorted((r.key, r.window_ts, r.euclid) for r in
+                      range_query_exact(df, q, w=w, c=c, radius=radius).collect())
+
+    assert rng_q(no_ff) == rng_q(with_ff)
+    assert {(key, wts) for key, wts, _ in rng_q(no_ff)} == {
+        kw for kw, s in series.items() if _true_dist(q)(s) <= radius
+    }
+
+
+def test_exact_and_udf_refine_distances_are_bit_identical(spark, nan_corpus):
+    """euclid_udf (the approximate path's refine) and the exact queries'
+    Arrow pass share kernel.euclid_batch: the same row gets the same
+    distance bit for bit, however the pass batches or prunes it."""
+    from symtseries_spark.operators.index import euclid_udf, exact_knn, range_query_exact
+
+    df, series = nan_corpus
+    q = np.random.RandomState(31).normal(size=24)
+    udf = {(r.key, r.window_ts): r.euclid
+           for r in df.withColumn("euclid", euclid_udf(q)("series")).collect()}
+    everything = range_query_exact(df, q, w=12, c=8, radius=float("inf")).collect()
+    assert len(everything) == len(series)
+    for r in everything + exact_knn(df, q, w=12, c=8, k=15).collect():
+        assert r.euclid == udf[(r.key, r.window_ts)]

@@ -130,3 +130,50 @@ def test_daily_discords_fused_plan(spark, sf_dir):
     import re
 
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2, plan
+
+
+def test_exact_queries_are_one_arrow_pass(spark, tmp_path):
+    """exact_knn and range_query_exact read the word table in ONE Arrow map
+    pass: no broadcast join, no aggregate (distinct), no exchange. kNN ends
+    in TakeOrderedAndProject, merging the per-partition top-k rows."""
+    import datetime as dt
+    import re
+
+    import numpy as np
+    from pyspark.sql import Row
+
+    from symtseries_spark import kernel as K
+    from symtseries_spark.operators.index import exact_knn, range_query_exact
+
+    n, w, c = 24, 12, 8
+    rng = np.random.RandomState(4)
+    rows = []
+    for i in range(120):
+        s = rng.normal(size=n)
+        rows.append(
+            Row(key=f"k{i}", window_ts=dt.datetime(2024, 1, 1) + dt.timedelta(hours=i),
+                word=K.symbols_to_string(K.symbolize(s, w, c), c), w=w, c=c, n=n,
+                series=[float(x) for x in s])
+        )
+    path = str(tmp_path / "words")
+    spark.createDataFrame(rows).repartition(4).write.parquet(path)
+    words = spark.read.parquet(path)
+    q = rng.normal(size=n)
+
+    def final_plan(df):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    for out in (exact_knn(words, q, w, c, k=5), range_query_exact(words, q, w, c, 4.0)):
+        plan = final_plan(out)
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+        for node in ("BroadcastHashJoin", "HashAggregate", "Exchange"):
+            assert node not in plan, plan
+    nodes = [
+        re.sub(r"^[\s+\-:*()\d]*", "", line)
+        for line in final_plan(exact_knn(words, q, w, c, k=5)).splitlines()
+    ]
+    wrappers = ("AdaptiveSparkPlan", "== ", "ResultQueryStage")
+    root = next(line for line in nodes if line and not line.startswith(wrappers))
+    assert root.startswith("TakeOrderedAndProject"), nodes
