@@ -363,7 +363,7 @@ def q_isax_range_daily(spark, sf_dir):
 
 def q_promote_hot_words(spark, sf_dir):
     words = _daily_words(spark, sf_dir)
-    return promote_words(words, segment=0, threshold=20, w=12, c=8, n=24).select(
+    return promote_words(words, segments=(0,), threshold=20, w=12, c=8).select(
         "key", "window_ts", "word", "word_promoted"
     )
 
@@ -378,11 +378,9 @@ def q_promote_iter_daily(spark, sf_dir):
     (not promote_hot_words' 20) so sub-buckets genuinely reach depth 2 at
     the driver's sf0.01 check scale — the recursion is exercised, not
     vacuous."""
-    from symtseries_spark.operators.index import promote_words_iter
-
     words = _daily_words(spark, sf_dir)
-    return promote_words_iter(
-        words, threshold=5, w=12, c=8, n=24, segments=(0, 1)
+    return promote_words(
+        words, segments=(0, 1), threshold=5, w=12, c=8
     ).select("key", "window_ts", "word", "word_promoted")
 
 
@@ -402,7 +400,7 @@ def q_promoted_lookup(spark, sf_dir):
         read_promoted_meta,
     )
 
-    path = _ann_index_dir(sf_dir, "promoted", "s-auto_t20_w12c8n24", src="events.parquet")
+    path = _ann_index_dir(sf_dir, "promoted", "segs-auto_t20_w12c8", src="events.parquet")
     if not _index_is_built(path):
         words = _daily_words(spark, sf_dir).persist()
         try:
@@ -425,7 +423,7 @@ def q_promoted_lookup(spark, sf_dir):
             # '#' (all-missing) frame at 2c yields '#' again (no subdivide)
             seg = next((i for i, ch in enumerate(hot.word) if ch != "#"), 0)
             build_promoted_index(
-                words, path, segment=seg, threshold=20, w=12, c=8, n=24,
+                words, path, segments=(seg,), threshold=20, w=12, c=8,
                 extra_meta={"probe": [float(x) for x in probe.series]},
             )
         finally:
@@ -1282,9 +1280,9 @@ def _fine_letters_cte() -> str:
 
 
 def _promote_hot_words_sql(threshold: int = 20) -> str:
-    """DuckDB replica of promote_words(segment=0): buckets over the
-    threshold get segment 0 re-symbolized at 2c (lowercase), cold rows keep
-    their word."""
+    """DuckDB replica of promote_words(segments=(0,)): one descent round,
+    so buckets over the threshold get segment 0 re-symbolized at 2c
+    (lowercase) and cold rows keep their word."""
     return (
         _words_cte()
         + _fine_letters_cte()
@@ -1303,7 +1301,7 @@ def _promote_hot_words_sql(threshold: int = 20) -> str:
 
 
 def _promote_iter_sql(threshold: int = 20) -> str:
-    """DuckDB replica of promote_words_iter(segments=(0, 1)): round 1
+    """DuckDB replica of promote_words(segments=(0, 1)): round 1
     splits segment 0 of buckets over the threshold; round 2 re-counts the
     ROUND-1 buckets (word_promoted) and splits segment 1 of those still
     over it. Cold buckets can never re-enter (their counts are unchanged),

@@ -257,9 +257,9 @@ def bench_promoted_iter_probe(spark) -> dict:
     import numpy as np
 
     from symtseries_spark.operators.index import (
-        build_promoted_index_iter,
-        promoted_lookup_iter,
-        promoted_lookup_iter_indexed,
+        build_promoted_index,
+        promoted_lookup,
+        promoted_lookup_indexed,
         read_promoted_meta,
     )
 
@@ -282,8 +282,8 @@ def bench_promoted_iter_probe(spark) -> dict:
         )
         seg0 = next((i for i, ch in enumerate(hot.word) if ch != "#"), 0)
         segs = (seg0, seg0 + 1) if seg0 + 1 < len(hot.word) else (seg0,)
-        build_promoted_index_iter(
-            words, path, segs, threshold=20, w=12, c=8, n=24,
+        build_promoted_index(
+            words, path, segs, threshold=20, w=12, c=8,
             extra_meta={"probe": [float(x) for x in probe.series]},
         )
         build = round(time.time() - t0, 3)
@@ -294,15 +294,15 @@ def bench_promoted_iter_probe(spark) -> dict:
     runs = []
     for _ in range(3):
         t0 = time.time()
-        promoted_lookup_iter_indexed(spark, path, qs_arr).write.format(
+        promoted_lookup_indexed(spark, path, qs_arr).write.format(
             "noop"
         ).mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
 
     # ad-hoc comparison: same lookup with per-call derivation + promotion
     t0 = time.time()
-    promoted_lookup_iter(
-        E._daily_words(spark, SF_DIR), qs_arr, w=12, c=8, n=24,
+    promoted_lookup(
+        E._daily_words(spark, SF_DIR), qs_arr, w=12, c=8,
         segments=segs, threshold=20,
     ).write.format("noop").mode("overwrite").save()
     adhoc = round(time.time() - t0, 3)

@@ -15,9 +15,6 @@ TIERS = {
     "1d": 86400,
 }
 
-#: Which lower tier each tier re-aggregates from (1m reads raw input).
-TIER_PARENT = {"1h": "1m", "1d": "1h"}
-
 DEFAULT_RETENTION = {
     "1m": 7 * 86400,
     "1h": 90 * 86400,
@@ -44,11 +41,6 @@ class SaxConfig:
 @dataclass(frozen=True)
 class EngineConfig:
     sax: SaxConfig = field(default_factory=SaxConfig)
-    #: table format: 'iceberg' when the runtime jar is present, else parquet
-    table_format: str = "parquet"
-    shuffle_partitions: int = 32
-    #: keys with more than this share of rows in a sample get salted
-    skew_threshold: float = 0.02
     salt_buckets: int = 16
     #: points per compressed chunk (one day of 1m buckets)
     chunk_points: int = 1440

@@ -13,10 +13,12 @@ per symbolized window, so both query modes prune:
     k-th best and refine only the survivors, with no join or collect.
 
 Per-segment cardinality promotion (iSAX 2.0, Camerra et al. 2010 — the
-feature the reference marks TODO at /root/reference/include/symtseries.h:32)
-is provided by ``promote_words``: hot words are split by re-symbolizing one
-segment at doubled cardinality, which subdivides an overfull bucket without
-touching the rest of the index.
+feature the reference marks TODO at include/symtseries.h:32) is provided by
+``promote_words``: a hot bucket is split by re-symbolizing one segment at
+doubled cardinality, and a sub-bucket still hot splits the next segment of
+``segments``, so an overfull bucket is subdivided without touching the rest
+of the index. ``segments=(s,)`` is the single split. ``build_promoted_index``
+stores the result; ``promoted_lookup_indexed`` probes it.
 """
 
 from __future__ import annotations
@@ -315,205 +317,8 @@ def range_query_exact(
     )
 
 
-def promoted_query_word(
-    query_series: np.ndarray, w: int, c: int, segment: int
-) -> tuple[str, str]:
-    """(base word, promoted word) for a query series: the promoted form has
-    ``segment`` re-symbolized at cardinality 2c (lowercase-tagged), matching
-    promote_words' split convention."""
-    q = np.asarray(query_series, dtype=np.float64)
-    base = K.symbols_to_string(K.symbolize(q, w, c), c)
-    fine = K.symbols_to_string(
-        K.symbolize(q, w, 2 * c)[segment : segment + 1], 2 * c
-    ).lower()
-    return base, base[:segment] + fine + base[segment + 1 :]
-
-
-def promoted_lookup(
-    symbolized: DataFrame,
-    query_series: np.ndarray,
-    w: int,
-    c: int,
-    n: int,
-    segment: int = 0,
-    threshold: int = 20,
-) -> DataFrame:
-    """Exact-word lookup that DESCENDS into promoted sub-buckets (the point
-    of iSAX 2.0 splitting, reference TODO symtseries.h:32): cold buckets
-    match on the base word; hot (split) buckets additionally require the
-    query's finer 2c segment letter — so a hot bucket's lookup touches only
-    ~1/2 of its rows instead of the whole overfull bucket.
-
-    This is the AD-HOC form (promotion recomputed over the input). The
-    scale path is build_promoted_index + promoted_lookup_indexed: promotion
-    is index maintenance, not query work.
-    """
-    qword, qprom = promoted_query_word(query_series, w, c, segment)
-    promoted = promote_words(
-        symbolized, segment, threshold=threshold, w=w, c=c, n=n
-    )
-    in_bucket = promoted.filter(F.col("word") == qword)
-    return in_bucket.filter(
-        (F.col("word_promoted") == F.col("word"))  # cold: whole bucket
-        | (F.col("word_promoted") == qprom)  # hot: matching sub-bucket
-    )
-
-
-def build_promoted_index(
-    symbolized: DataFrame,
-    path: str,
-    segment: int,
-    threshold: int,
-    w: int,
-    c: int,
-    n: int,
-    extra_meta: dict | None = None,
-) -> None:
-    """Materialize the iSAX-2.0-promoted inverted index (the index-
-    maintenance step the reference marks TODO at symtseries.h:32).
-
-    Promotion (groupBy-count to find hot words + the 2c re-symbolization
-    UDF over hot rows) runs ONCE here; the table is written partitioned by
-    the base word's 2-symbol prefix — an iSAX-tree-style top split with at
-    most (c+1)² directories, so a lookup is partition pruning + a word
-    equality filter, never a corpus scan. Build parameters (and any caller
-    extras, e.g. a stored probe) land in ``_promoted_meta.json`` inside the
-    index dir (the ``_`` prefix hides it from the parquet reader).
-    """
-    promoted = promote_words(
-        symbolized, segment, threshold=threshold, w=w, c=c, n=n
-    )
-    meta = {"segment": segment, "threshold": threshold, "w": w, "c": c, "n": n}
-    _write_promoted(promoted, path, {**meta, **(extra_meta or {})})
-
-
-def _write_promoted(promoted: DataFrame, path: str, meta: dict) -> None:
-    """Write a promoted index partitioned by the base word's 2-symbol
-    prefix, with its build parameters in ``_promoted_meta.json``."""
-    import json
-    import os
-
-    idx = promoted.select(
-        "key",
-        "window_ts",
-        "word",
-        "word_promoted",
-        F.substring("word", 1, 2).alias("prefix"),
-    )
-    # shuffle onto the partition column first: one file per prefix dir
-    idx.repartition("prefix").write.mode("overwrite").partitionBy(
-        "prefix"
-    ).parquet(path)
-    with open(os.path.join(path, "_promoted_meta.json"), "w") as f:
-        json.dump(meta, f)
-
-
-def read_promoted_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, "_promoted_meta.json")) as f:
-        return json.load(f)
-
-
-def promoted_lookup_indexed(
-    spark, path: str, query_series: np.ndarray
-) -> DataFrame:
-    """Sub-bucket descent against a STORED promoted index: the probe words
-    are pure driver-side kernel math (no Spark jobs), the scan filter hits
-    the ``prefix`` partition column (pruned directory read, plan shows
-    PartitionFilters), and hot buckets return only the matching 2c
-    sub-bucket — same semantics as :func:`promoted_lookup`, none of its
-    per-query recompute."""
-    meta = read_promoted_meta(path)
-    qword, qprom = promoted_query_word(
-        query_series, meta["w"], meta["c"], meta["segment"]
-    )
-    idx = spark.read.parquet(path)
-    return idx.filter(
-        (F.col("prefix") == qword[:2])
-        & (F.col("word") == qword)
-        & (
-            (F.col("word_promoted") == F.col("word"))
-            | (F.col("word_promoted") == qprom)
-        )
-    ).drop("prefix")
-
-
 # ---------------------------------------------------------------------------
-# iSAX 2.0 per-segment cardinality promotion
-# ---------------------------------------------------------------------------
-
-
-def promote_words(
-    symbolized: DataFrame,
-    segment: int,
-    hot_words: DataFrame | None = None,
-    threshold: int | None = None,
-    w: int | None = None,
-    c: int | None = None,
-    n: int | None = None,
-) -> DataFrame:
-    """Split overfull word buckets by doubling one segment's cardinality.
-
-    For rows whose word is 'hot' (bucket size > threshold), re-symbolize
-    PAA segment ``segment`` from the stored raw series at cardinality 2c and
-    append ``word_promoted`` = word with that segment's letter replaced by
-    the finer 2c letter (lowercase-tagged to keep cardinalities
-    distinguishable in one string column). Cold rows keep their word.
-
-    This reproduces the iSAX 2.0 node-split idea as a pure DataFrame
-    transform: no global rebuild, only hot buckets are rewritten.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    if hot_words is None:
-        counts = symbolized.groupBy("word", "w", "c").count()
-        threshold = threshold or 0
-        hot_words = counts.filter(F.col("count") > threshold).select("word", "w", "c")
-
-    tagged = symbolized.join(
-        F.broadcast(hot_words.withColumn("_hot", F.lit(True))),
-        ["word", "w", "c"],
-        "left",
-    ).withColumn("_hot", F.coalesce("_hot", F.lit(False)))
-
-    def make_udf(w: int, c: int, n: int):
-        @pandas_udf(StringType())
-        def _promote(series: pd.Series, words: pd.Series) -> pd.Series:
-            if len(series) == 0:
-                return pd.Series([], dtype=object)
-            X = np.stack(series.to_numpy()).astype(np.float64, copy=False)
-            syms2c = K.symbolize_batch(X, w, 2 * c)  # same PAA, finer alphabet
-            seg_letters = _strings_from_symbols(
-                syms2c[:, segment : segment + 1], 2 * c
-            )
-            out = []
-            for word, fine in zip(words.to_numpy(), seg_letters):
-                out.append(
-                    word[:segment] + fine.lower() + word[segment + 1 :]
-                )
-            return pd.Series(out)
-
-        return _promote
-
-    # w, c, n are constant per call in our engine (fixed SaxConfig); callers
-    # MUST pass them explicitly — inferring them would run a driver-side
-    # .first() job mid-plan.
-    if w is None or c is None or n is None:
-        raise ValueError("promote_words requires explicit (w, c, n)")
-    udf = make_udf(int(w), int(c), int(n))
-    return tagged.withColumn(
-        "word_promoted",
-        F.when(F.col("_hot"), udf(F.col("series"), F.col("word"))).otherwise(
-            F.col("word")
-        ),
-    ).drop("_hot")
-
-
-# ---------------------------------------------------------------------------
-# iterative multi-segment promotion (recursive iSAX-2.0 descent)
+# iSAX 2.0 per-segment cardinality promotion (recursive descent)
 # ---------------------------------------------------------------------------
 
 
@@ -521,8 +326,8 @@ def fine_word_udf(w: int, c: int):
     """pandas UDF: series → the FULL cardinality-2c word, lowercase-tagged.
 
     One vectorized symbolization yields every segment's fine letter at
-    once, so the iterative splitter below is pure column string surgery —
-    the UDF runs exactly once regardless of descent depth."""
+    once, so the splitter below is pure column string surgery — the UDF
+    runs exactly once regardless of descent depth."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
 
@@ -537,18 +342,35 @@ def fine_word_udf(w: int, c: int):
     return _fine
 
 
-def promote_words_iter(
-    symbolized: DataFrame,
-    threshold: int,
-    w: int,
-    c: int,
-    n: int,
-    segments: tuple = (0, 1),
+def _check_promotion(w: int, c: int, segments) -> tuple:
+    """Driver-side checks shared by every promotion entry point: the 2c
+    re-symbolization must stay within K.MAX_CARDINALITY, and ``segments``
+    must name distinct positions of the w-letter word. Returns the
+    segments as a tuple of ints."""
+    if 2 * c > K.MAX_CARDINALITY:
+        raise ValueError(
+            f"promotion re-symbolizes at 2c, so c must be <= "
+            f"{K.MAX_CARDINALITY // 2}, got c={c!r}"
+        )
+    segments = tuple(int(s) for s in segments)
+    if not segments:
+        raise ValueError("segments must name at least one split level")
+    if len(set(segments)) != len(segments):
+        raise ValueError(f"segments must be distinct, got {segments!r}")
+    for s in segments:
+        if not (0 <= s < w):
+            raise ValueError(f"segment {s} out of range for w={w}")
+    return segments
+
+
+def promote_words(
+    symbolized: DataFrame, segments: tuple, threshold: int, w: int, c: int
 ) -> DataFrame:
-    """RECURSIVE iSAX-2.0 promotion (reference TODO symtseries.h:32,
-    extended past promote_words' single split): when a promoted sub-bucket
-    is still over ``threshold``, split the NEXT segment — one descent round
-    per entry of ``segments``, in order.
+    """iSAX-2.0 node split (reference TODO symtseries.h:32) as a DataFrame
+    transform: buckets over ``threshold`` are split by refining one segment
+    to its cardinality-2c letter, and a sub-bucket still over it splits the
+    NEXT segment — one descent round per entry of ``segments``, in order.
+    ``segments=(s,)`` is the single split.
 
     Round r groups rows by their current ``word_promoted``; buckets with
     count > threshold get segment ``segments[r]`` refined to its 2c
@@ -560,15 +382,16 @@ def promote_words_iter(
     most #hot-buckets rows), the refinement is JVM string surgery, and the
     only Python is the single fine-word UDF pass. Each round adds one
     hash-aggregate over the rows — keep ``segments`` to the few levels a
-    real skew profile needs (depth 2-3), not all w.
+    real skew profile needs (depth 2-3), not all w. w and c are explicit:
+    inferring them would run a driver-side job mid-plan.
     """
-    if not segments:
-        raise ValueError("segments must name at least one split level")
-    if len(set(segments)) != len(segments):
-        raise ValueError(f"segments must be distinct, got {segments!r}")
-    for s in segments:
-        if not (0 <= int(s) < w):
-            raise ValueError(f"segment {s} out of range for w={w}")
+    segments = _check_promotion(w, c, segments)
+    if (
+        isinstance(threshold, bool)
+        or not isinstance(threshold, (int, np.integer))
+        or threshold < 0
+    ):
+        raise ValueError(f"threshold must be an integer >= 0, got {threshold!r}")
     cur = symbolized.withColumn(
         "_fine", fine_word_udf(int(w), int(c))(F.col("series"))
     ).withColumn("word_promoted", F.col("word"))
@@ -576,7 +399,6 @@ def promote_words_iter(
     # would re-run once per descent level's aggregate
     cur = cur.localCheckpoint(eager=False)
     for seg in segments:
-        seg = int(seg)
         hot = (
             cur.groupBy("word_promoted")
             .count()
@@ -601,64 +423,117 @@ def promote_words_iter(
     return cur.drop("_fine")
 
 
-def promoted_query_words_iter(
-    query_series: np.ndarray, w: int, c: int, segments: tuple = (0, 1)
+def promoted_query_words(
+    query_series: np.ndarray, w: int, c: int, segments: tuple
 ) -> list:
     """The query's refinement chain [base, depth-1 word, depth-2 word, …]
-    matching promote_words_iter's split convention. A bucket split to
-    depth d matches the query iff its word_promoted equals chain[d]."""
+    matching promote_words' split convention. A bucket split to depth d
+    matches the query iff its word_promoted equals chain[d]."""
+    segments = _check_promotion(w, c, segments)
     q = np.asarray(query_series, dtype=np.float64)
     base = K.symbols_to_string(K.symbolize(q, w, c), c)
     fine = K.symbols_to_string(K.symbolize(q, w, 2 * c), 2 * c).lower()
     words = [base]
     cur = base
     for seg in segments:
-        seg = int(seg)
         cur = cur[:seg] + fine[seg] + cur[seg + 1 :]
         words.append(cur)
     return words
 
 
-def build_promoted_index_iter(
+def promoted_lookup(
+    symbolized: DataFrame,
+    query_series: np.ndarray,
+    w: int,
+    c: int,
+    segments: tuple,
+    threshold: int,
+) -> DataFrame:
+    """Exact-word lookup that DESCENDS into promoted sub-buckets to any
+    depth: a bucket split d times matches iff its word_promoted equals the
+    query's depth-d refinement, so the filter is one IN over the
+    (depth+1)-element refinement chain. Cold buckets match on the base word
+    (chain[0]); each extra split halves (in expectation) the rows a hot
+    bucket's lookup touches.
+
+    This is the AD-HOC form (promotion recomputed over the input). The
+    scale path is build_promoted_index + promoted_lookup_indexed: promotion
+    is index maintenance, not query work.
+    """
+    chain = promoted_query_words(query_series, w, c, segments)
+    promoted = promote_words(symbolized, segments, threshold, w, c)
+    return promoted.filter(F.col("word") == chain[0]).filter(
+        F.col("word_promoted").isin(chain)
+    )
+
+
+def build_promoted_index(
     symbolized: DataFrame,
     path: str,
     segments: tuple,
     threshold: int,
     w: int,
     c: int,
-    n: int,
     extra_meta: dict | None = None,
 ) -> None:
-    """Materialize the RECURSIVELY promoted inverted index: like
-    build_promoted_index, but buckets still hot after a split descend into
-    the next segment (promote_words_iter). Same storage layout — one row
-    per window, partitioned by the base word's 2-symbol prefix — so a
-    lookup stays partition pruning + word equality; the descent depth only
-    changes the word_promoted values, never the layout."""
-    promoted = promote_words_iter(
-        symbolized, threshold, w=w, c=c, n=n, segments=tuple(segments)
+    """Materialize the promoted inverted index (the index-maintenance step
+    the reference marks TODO at symtseries.h:32).
+
+    Promotion (per-round bucket counts + the one 2c fine-word UDF pass)
+    runs ONCE here; the table is written one row per window, partitioned
+    by the base word's 2-symbol prefix — an iSAX-tree-style top split with
+    at most (c+1)² directories, so a lookup is partition pruning + a word
+    equality filter, never a corpus scan. The descent depth only changes
+    the word_promoted values, never the layout. Build parameters (and any
+    caller extras, e.g. a stored probe) land in ``_promoted_meta.json``
+    inside the index dir (the ``_`` prefix hides it from the parquet
+    reader).
+    """
+    import json
+    import os
+
+    promoted = promote_words(symbolized, segments, threshold, w, c)
+    idx = promoted.select(
+        "key",
+        "window_ts",
+        "word",
+        "word_promoted",
+        F.substring("word", 1, 2).alias("prefix"),
     )
+    # shuffle onto the partition column first: one file per prefix dir
+    idx.repartition("prefix").write.mode("overwrite").partitionBy(
+        "prefix"
+    ).parquet(path)
     meta = {
         "segments": [int(s) for s in segments],
         "threshold": threshold,
         "w": w,
         "c": c,
-        "n": n,
     }
-    _write_promoted(promoted, path, {**meta, **(extra_meta or {})})
+    with open(os.path.join(path, "_promoted_meta.json"), "w") as f:
+        json.dump({**meta, **(extra_meta or {})}, f)
 
 
-def promoted_lookup_iter_indexed(
+def read_promoted_meta(path: str) -> dict:
+    import json
+    import os
+
+    with open(os.path.join(path, "_promoted_meta.json")) as f:
+        return json.load(f)
+
+
+def promoted_lookup_indexed(
     spark, path: str, query_series: np.ndarray
 ) -> DataFrame:
-    """Multi-level descent against a STORED recursively-promoted index:
-    probe words are driver-side kernel math, the scan prunes on the
-    ``prefix`` partition column, and a bucket split to depth d matches iff
-    its word_promoted equals the query's depth-d refinement — one IN over
-    the refinement chain."""
+    """Sub-bucket descent against a STORED promoted index: the probe words
+    are pure driver-side kernel math (no Spark jobs), the scan filter hits
+    the ``prefix`` partition column (pruned directory read, plan shows
+    PartitionFilters), and a bucket split to depth d matches iff its
+    word_promoted equals the query's depth-d refinement — same semantics
+    as :func:`promoted_lookup`, none of its per-query recompute."""
     meta = read_promoted_meta(path)
-    chain = promoted_query_words_iter(
-        query_series, meta["w"], meta["c"], tuple(meta["segments"])
+    chain = promoted_query_words(
+        query_series, meta["w"], meta["c"], meta["segments"]
     )
     idx = spark.read.parquet(path)
     return idx.filter(
@@ -666,25 +541,3 @@ def promoted_lookup_iter_indexed(
         & (F.col("word") == chain[0])
         & F.col("word_promoted").isin(chain)
     ).drop("prefix")
-
-
-def promoted_lookup_iter(
-    symbolized: DataFrame,
-    query_series: np.ndarray,
-    w: int,
-    c: int,
-    n: int,
-    segments: tuple = (0, 1),
-    threshold: int = 20,
-) -> DataFrame:
-    """Exact-word lookup that descends promoted sub-buckets to ANY depth:
-    a bucket split d times matches iff its word_promoted equals the
-    query's depth-d refinement — so the filter is one IN over the (depth+1)-
-    element refinement chain. Cold buckets match on the base word
-    (chain[0]); each extra split halves (in expectation) the rows a hot
-    bucket's lookup touches."""
-    chain = promoted_query_words_iter(query_series, w, c, segments)
-    promoted = promote_words_iter(symbolized, threshold, w, c, n, segments)
-    return promoted.filter(F.col("word") == chain[0]).filter(
-        F.col("word_promoted").isin(chain)
-    )

@@ -279,68 +279,6 @@ def symbolize_windows(
     return df.mapInArrow(_symbolize_partition, out_schema)
 
 
-def pair_cellsq_table(c: int) -> list:
-    """Flat (c+1)×(c+1) table of SQUARED per-position mindist cells for an
-    arbitrary letter pair under the reference's pair semantics
-    (sts_mindist_ab, /root/reference/src/symtseries.c:578-636): a '#' on
-    one side substitutes the extreme farthest from the other side's real
-    symbol; both-'#' positions contribute 0. Indexed by
-    ``(ia-1)*(c+1) + ib`` where ia/ib are the 1-based positions of the
-    letters in ``'ABCDEFGH…#'`` — the layout :func:`mindist_pair_expr`
-    and the DuckDB oracle CASE both consume. Letter→value remap of the
-    value-indexed :func:`kernel.pair_cellsq_matrix` (single source of
-    truth for the substitution semantics)."""
-    m = K.pair_cellsq_matrix(c)
-
-    def val(i):  # letter index 0..c → symbol value (A = c-1, '#' = c)
-        return c if i == c else c - 1 - i
-
-    return [
-        float(m[val(ia), val(ib)])
-        for ia in range(c + 1)
-        for ib in range(c + 1)
-    ]
-
-
-def mindist_pair_expr(wa, wb, na, nb, c: int = 8, w: int | None = None):
-    """Pairwise mindist as a pure BUILT-IN Column expression — the
-    JVM/codegen twin of :func:`mindist_pair_udf` for the hot path where
-    BOTH sides vary per row (discord discovery runs it over ~|vocab_k|²
-    rows per key). Per-position squared cells come from a broadcast
-    (c+1)² literal LUT (:func:`pair_cellsq_table`, float64 — the same
-    values the DuckDB oracle CASE carries); the word strings are zipped
-    character-wise, so no Arrow transfer, no Python worker, and the whole
-    pair pass stays inside whole-stage codegen.
-
-    Width rule (reference sts_mindist_ab): different-length words are
-    incomparable → NULL (the UDF's NaN, already null-ed by callers).
-    n-compat rule: mismatched positive n → NULL; n==0 on one side adopts
-    the other side's n, both 0 → w (kernel.mindist_pairs:411-417)."""
-    wa, wb = F.col(wa) if isinstance(wa, str) else wa, (
-        F.col(wb) if isinstance(wb, str) else wb
-    )
-    na, nb = F.col(na) if isinstance(na, str) else na, (
-        F.col(nb) if isinstance(nb, str) else nb
-    )
-    letters = "".join(chr(ord("A") + i) for i in range(c)) + "#"
-    lut = F.array(*[F.lit(v) for v in pair_cellsq_table(c)])
-    idx = lambda ch: F.instr(F.lit(letters), ch)  # noqa: E731 — 1-based
-    cells = F.zip_with(
-        F.split(wa, ""),
-        F.split(wb, ""),
-        lambda a, b: F.element_at(lut, (idx(a) - F.lit(1)) * (c + 1) + idx(b)),
-    )
-    sq = F.aggregate(cells, F.lit(0.0), lambda acc, x: acc + x)
-    wlen = F.length(wa).cast("double") if w is None else F.lit(float(w))
-    n_eff = F.when(na > 0, na.cast("double")).otherwise(nb.cast("double"))
-    n_eff = F.when(n_eff == 0, wlen).otherwise(n_eff)
-    compat = (na == nb) | (na == 0) | (nb == 0)
-    return F.when(
-        (F.length(wa) == F.length(wb)) & compat,
-        F.sqrt(n_eff / wlen) * F.sqrt(sq),
-    )
-
-
 def pair_sums_by_key(hist: DataFrame, c: int) -> DataFrame:
     """Discord partner sums straight from a per-key word histogram: for
     each (key, word, n) row i return

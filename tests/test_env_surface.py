@@ -1,8 +1,10 @@
-"""The engine's environment surface: it reads only deployment settings.
+"""The engine's configuration surface: it reads only deployment settings
+from the environment, and every EngineConfig field it declares.
 
 Experiment switches read from the environment (A/B knobs, alternative
 execution paths) multiply the configurations tests and benchmarks must
-cover; this scan makes a new one fail loudly instead of landing unnoticed.
+cover, and a config field nothing reads is a knob that does nothing; these
+scans make either fail loudly instead of landing unnoticed.
 """
 
 import ast
@@ -40,16 +42,40 @@ def _env_reads(tree):
             yield arg.value if isinstance(arg, ast.Constant) else None
 
 
-def test_engine_reads_only_deployment_settings():
-    found = {}
+def _engine_trees():
+    """Yield (path relative to the package, parsed AST) per engine module."""
     for root, _, files in os.walk(ENGINE):
         for name in files:
             if name.endswith(".py"):
                 path = os.path.join(root, name)
                 with open(path) as f:
-                    tree = ast.parse(f.read(), path)
-                for var in _env_reads(tree):
-                    found.setdefault(var, []).append(os.path.relpath(path, ENGINE))
+                    yield os.path.relpath(path, ENGINE), ast.parse(f.read(), path)
+
+
+def test_engine_reads_only_deployment_settings():
+    found = {}
+    for rel, tree in _engine_trees():
+        for var in _env_reads(tree):
+            found.setdefault(var, []).append(rel)
     assert found, "scan found no environment reads; is ENGINE the package?"
     extra = {k: v for k, v in found.items() if k not in DEPLOYMENT_SETTINGS}
     assert not extra, f"engine reads non-deployment environment variables: {extra}"
+
+
+def test_every_engine_config_field_is_read():
+    """Every EngineConfig field must be read as ``cfg.<field>`` in the
+    engine."""
+    from dataclasses import fields
+
+    from symtseries_spark.config import EngineConfig
+
+    read = {
+        node.attr
+        for _, tree in _engine_trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "cfg"
+    }
+    unread = {f.name for f in fields(EngineConfig)} - read
+    assert not unread, f"EngineConfig fields nothing reads: {sorted(unread)}"

@@ -15,6 +15,7 @@ from symtseries_spark.operators.index import (
     knn_query,
     mindist_scan,
     promote_words,
+    promoted_query_words,
     range_query,
     refine_knn,
 )
@@ -269,10 +270,7 @@ def test_promoted_lookup_descends_into_subbucket(spark):
     """Lookup law: result ⊆ base-word bucket; for hot buckets only rows
     whose finer 2c segment letter matches the query's survive; cold-bucket
     rows pass through untouched."""
-    from symtseries_spark.operators.index import (
-        promoted_lookup,
-        promoted_query_word,
-    )
+    from symtseries_spark.operators.index import promoted_lookup
 
     n, w, c = 16, 4, 2
     rng = np.random.RandomState(3)
@@ -291,8 +289,8 @@ def test_promoted_lookup_descends_into_subbucket(spark):
 
     hot_word = Counter(r.word for r in rows).most_common(1)[0][0]
     q = np.array(next(r.series for r in rows if r.word == hot_word))
-    qword, qprom = promoted_query_word(q, w, c, segment=0)
-    got = promoted_lookup(df, q, w, c, n, segment=0, threshold=10).collect()
+    qword, qprom = promoted_query_words(q, w, c, segments=(0,))
+    got = promoted_lookup(df, q, w, c, segments=(0,), threshold=10).collect()
     bucket = df.filter(F.col("word") == qword)
     nbucket = bucket.count()
     assert got, "query word should hit a populated coarse bucket"
@@ -341,11 +339,12 @@ def test_stored_promoted_index_matches_adhoc_and_prunes(spark, tmp_path):
     q = np.array(next(r.series for r in rows if r.word == hot_word))
 
     path = str(tmp_path / "promoted")
-    build_promoted_index(df, path, segment=0, threshold=10, w=w, c=c, n=n)
-    assert read_promoted_meta(path)["w"] == w
+    build_promoted_index(df, path, segments=(0,), threshold=10, w=w, c=c)
+    meta = read_promoted_meta(path)
+    assert meta["w"] == w and meta["segments"] == [0]
 
     got = promoted_lookup_indexed(spark, path, q)
-    want = promoted_lookup(df, q, w, c, n, segment=0, threshold=10)
+    want = promoted_lookup(df, q, w, c, segments=(0,), threshold=10)
     key = lambda r: (r.key, r.window_ts)  # noqa: E731
     got_rows = sorted(got.collect(), key=key)
     want_rows = sorted(
@@ -368,8 +367,44 @@ def test_promote_words_requires_explicit_wcn(spark):
         [Row(key="k", window_ts=dt.datetime(2024, 1, 1), word="AB",
              w=2, c=2, n=4, series=[1.0, 2.0, 3.0, 4.0])]
     )
-    with _pt.raises(ValueError, match="explicit"):
-        promote_words(df, segment=0, threshold=1)
+    # w and c are required: no driver-side inference from the data
+    with _pt.raises(TypeError, match="'w' and 'c'"):
+        promote_words(df, segments=(0,), threshold=1)
+
+
+@pytest.fixture
+def one_word_table(spark):
+    s = np.sin(np.arange(8.0))
+    return spark.createDataFrame(
+        [Row(key="k", window_ts=dt.datetime(2024, 1, 1),
+             word=K.symbols_to_string(K.symbolize(s, 4, 2), 2),
+             w=4, c=2, n=8, series=[float(x) for x in s])]
+    )
+
+
+def test_promote_words_rejects_cardinality_past_max(one_word_table):
+    """Promotion re-symbolizes at 2c, so c > MAX_CARDINALITY / 2 must fail
+    on the driver, not at the first action as an executor error."""
+    with pytest.raises(ValueError, match="c must be <= 8"):
+        promote_words(one_word_table, segments=(0,), threshold=1, w=4, c=9)
+    with pytest.raises(ValueError, match="c must be <= 8"):
+        promoted_query_words(np.sin(np.arange(8.0)), 4, 9, segments=(0,))
+
+
+@pytest.mark.parametrize("segments", [(4,), (-1,), (0, 0), ()])
+def test_promote_words_rejects_bad_segments(one_word_table, segments):
+    """Every split segment must be a distinct position in [0, w), checked
+    on the driver (a segment >= w used to fail inside the executor)."""
+    with pytest.raises(ValueError, match="segment"):
+        promote_words(one_word_table, segments=segments, threshold=1, w=4, c=2)
+    with pytest.raises(ValueError, match="segment"):
+        promoted_query_words(np.sin(np.arange(8.0)), 4, 2, segments=segments)
+
+
+@pytest.mark.parametrize("threshold", [-1, 2.5, None, True])
+def test_promote_words_rejects_bad_threshold(one_word_table, threshold):
+    with pytest.raises(ValueError, match="threshold must be an integer"):
+        promote_words(one_word_table, segments=(0,), threshold=threshold, w=4, c=2)
 
 
 def test_promote_words_splits_hot_bucket(spark):
@@ -387,9 +422,9 @@ def test_promote_words_splits_hot_bucket(spark):
                 series=[float(x) for x in s])
         )
     df = spark.createDataFrame(rows)
-    promoted = promote_words(df, segment=0, threshold=10, w=w, c=c, n=n)
+    got = promote_words(df, segments=(0,), threshold=10, w=w, c=c).collect()
     variants = {}
-    for r in promoted.collect():
+    for r in got:
         variants.setdefault(r.word, set()).add(r.word_promoted)
     split = {wd: v for wd, v in variants.items() if len(v) > 1}
     assert split, "expected at least one promoted (split) word bucket"
@@ -401,10 +436,16 @@ def test_promote_words_splits_hot_bucket(spark):
     # cold buckets keep their word untouched
     cold = [wd for wd, v in variants.items() if v == {wd}]
     assert cold
+    # one split is the recursive splitter's first round, row for row
+    by_key = {r.key: r.word_promoted for r in got}
+    _, want = _iter_replay(
+        [np.array(r.series) for r in rows], 10, w, c, segments=(0,)
+    )
+    assert by_key == {r.key: wd for r, wd in zip(rows, want)}
 
 
 def _iter_replay(series_list, threshold, w, c, segments):
-    """Pure-python replay of promote_words_iter: per round, buckets over
+    """Pure-python replay of promote_words: per round, buckets over
     threshold refine that round's segment to the 2c lowercase letter."""
     from collections import Counter
 
@@ -431,8 +472,6 @@ def test_promote_words_iter_depth2_matches_replay(spark):
     buckets stop being hot)."""
     from collections import Counter
 
-    from symtseries_spark.operators.index import promote_words_iter
-
     n, w, c = 8, 4, 4
     threshold = 10
     rng = np.random.RandomState(5)
@@ -454,7 +493,7 @@ def test_promote_words_iter_depth2_matches_replay(spark):
     df = spark.createDataFrame(rows)
     got = {
         r["id"]: r["word_promoted"]
-        for r in promote_words_iter(df, threshold, w, c, n, segments).collect()
+        for r in promote_words(df, segments, threshold, w, c).collect()
     }
     base, want = _iter_replay(series, threshold, w, c, segments)
     assert got == {i: wd for i, wd in enumerate(want)}
@@ -475,11 +514,7 @@ def test_promoted_lookup_iter_descends_to_depth2(spark):
     """Multi-level descent lookup: returns exactly the rows whose bucket
     (at the bucket's own split depth) matches the query's refinement
     chain — verified against the python replay."""
-    from symtseries_spark.operators.index import (
-        promote_words_iter,
-        promoted_lookup_iter,
-        promoted_query_words_iter,
-    )
+    from symtseries_spark.operators.index import promoted_lookup
 
     n, w, c = 8, 4, 4
     threshold = 10
@@ -497,13 +532,13 @@ def test_promoted_lookup_iter_descends_to_depth2(spark):
     df = spark.createDataFrame(rows)
 
     q = hot  # query the replicated series: its bucket is split to depth 2
-    chain = promoted_query_words_iter(q, w, c, segments)
+    chain = promoted_query_words(q, w, c, segments)
     assert len(chain) == 3 and sum(ch.islower() for ch in chain[2]) == 2
 
     got_ids = {
         r["id"]
-        for r in promoted_lookup_iter(
-            df, q, w, c, n, segments=segments, threshold=threshold
+        for r in promoted_lookup(
+            df, q, w, c, segments=segments, threshold=threshold
         ).collect()
     }
     base, promoted = _iter_replay(series, threshold, w, c, segments)
@@ -518,11 +553,11 @@ def test_promoted_lookup_iter_descends_to_depth2(spark):
 
 def test_stored_iter_promoted_index_matches_adhoc_and_prunes(spark, tmp_path):
     """The stored recursively-promoted index must return the same rows as
-    the ad-hoc promoted_lookup_iter and read a partition-pruned scan."""
+    the ad-hoc promoted_lookup and read a partition-pruned scan."""
     from symtseries_spark.operators.index import (
-        build_promoted_index_iter,
-        promoted_lookup_iter,
-        promoted_lookup_iter_indexed,
+        build_promoted_index,
+        promoted_lookup,
+        promoted_lookup_indexed,
         read_promoted_meta,
     )
 
@@ -542,12 +577,12 @@ def test_stored_iter_promoted_index_matches_adhoc_and_prunes(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows)
     path = str(tmp_path / "iter_promoted")
-    build_promoted_index_iter(df, path, segments, threshold, w=w, c=c, n=n)
+    build_promoted_index(df, path, segments, threshold, w=w, c=c)
     assert read_promoted_meta(path)["segments"] == [0, 1]
 
-    got = promoted_lookup_iter_indexed(spark, path, hot)
-    want = promoted_lookup_iter(
-        df, hot, w, c, n, segments=segments, threshold=threshold
+    got = promoted_lookup_indexed(spark, path, hot)
+    want = promoted_lookup(
+        df, hot, w, c, segments=segments, threshold=threshold
     )
     cols = ["key", "window_ts", "word", "word_promoted"]
     assert sorted(map(tuple, got.select(*cols).collect())) == sorted(

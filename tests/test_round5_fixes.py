@@ -95,38 +95,6 @@ def test_pair_sums_by_key_empty(spark):
 
 
 # ---------------------------------------------------------------------------
-# mindist_pair_expr (builtin) == mindist_pair_udf (numpy) on the same pairs
-# ---------------------------------------------------------------------------
-
-
-def test_mindist_pair_expr_matches_udf(spark):
-    from symtseries_spark.operators.symbolize import (
-        mindist_pair_expr,
-        mindist_pair_udf,
-    )
-
-    pairs = [
-        ("ABCDABCD", "HGFEHGFE", 24, 24),
-        ("A#CD##GH", "HH##AA##", 24, 24),
-        ("####ABCD", "ABCDABCD", 0, 24),
-        ("ABCD", "ABCDEFGH", 8, 8),      # width mismatch → NULL/NaN
-        ("AAAAHHHH", "AAAAHHHH", 24, 12),  # n mismatch → NULL/NaN
-        ("########", "########", 0, 0),
-    ]
-    df = spark.createDataFrame(pairs, "wa string, wb string, na int, nb int")
-    d_udf = mindist_pair_udf(8)("wa", "wb", "na", "nb")
-    out = df.select(
-        mindist_pair_expr("wa", "wb", "na", "nb", c=8).alias("e"),
-        F.when(F.isnan(d_udf), None).otherwise(d_udf).alias("u"),
-    ).collect()
-    for r in out:
-        if r["u"] is None:
-            assert r["e"] is None
-        else:
-            assert r["e"] == pytest.approx(r["u"], abs=1e-9)
-
-
-# ---------------------------------------------------------------------------
 # gapfill linear: DESC running frame == unbounded-following frame
 # ---------------------------------------------------------------------------
 
