@@ -41,7 +41,6 @@ from symtseries_spark.operators.index import (
     build_index,
     knn_query,
     promote_words,
-    range_query,
 )
 from symtseries_spark.operators.codecs import decode_chunks, encode_chunks
 from symtseries_spark.operators import dedup as D
@@ -332,13 +331,7 @@ def q_sax_words_daily(spark, sf_dir):
 
 
 def q_mindist_topk_daily(spark, sf_dir):
-    # localCheckpoint: the knn plan consumes the index TWICE (the distinct-
-    # vocabulary UDF branch + the broadcast-join-back left side); without a
-    # pin each branch replays the whole rollup+symbolize derivation.
-    # Materializing the NARROW index rows (no series column) runs the
-    # derivation once — an execution detail only, recomputed from parquet
-    # on every call.
-    idx = build_index(_daily_words(spark, sf_dir), "1d").localCheckpoint()
+    idx = build_index(_daily_words(spark, sf_dir), "1d")
     return knn_query(idx, "DDDDAAAADDDD", 8, k=20, n_query=24).select(
         "key", "window_ts", "word", F.round("mindist", 6).alias("mindist")
     )
@@ -819,7 +812,7 @@ _DAILY_WELFORD_CTE = (
 
 def _euclid_cte() -> str:
     """+ e: z-normalized Euclid distance of every daily window to the probe
-    (DuckDB replica of index.euclid_udf: population std over present hours,
+    (DuckDB replica of kernel.euclid_batch: population std over present hours,
     STAT_EPS stationary guard, missing slots contribute 0)."""
     qs = _probe_series()
     qz = (qs - qs.mean()) / qs.std()

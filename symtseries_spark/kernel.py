@@ -232,36 +232,49 @@ def symbolize(series, w: int, c: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def symbols_to_string_batch(syms: np.ndarray, c: int) -> np.ndarray:
+    """(B, w) symbols → (B,) w-letter words: 'A' = lowest sector, sentinel
+    c → '#'. Unvalidated: every symbol must lie in [0, c]."""
+    B, w = syms.shape
+    letters = np.array(
+        [chr(ord("A") + (c - s - 1)) for s in range(c)] + [SENTINEL_CHAR], dtype="U1"
+    )
+    return np.ascontiguousarray(letters[syms]).view(f"U{w}").reshape(B)
+
+
+def string_to_symbols_batch(words, c: int) -> np.ndarray:
+    """(B,) words of one length w → (B, w) uint8 symbols; '#' → sentinel c.
+    Unvalidated: every letter must be '#' or one of the first c letters."""
+    w = len(words[0])
+    codes = np.asarray(words, dtype=f"U{w}").view(np.uint32).reshape(len(words), w)
+    syms = (c - 1 - (codes - ord("A"))).astype(np.int64)
+    syms[codes == ord(SENTINEL_CHAR)] = c
+    return syms.astype(np.uint8)
+
+
 def symbols_to_string(symbols: np.ndarray, c: int) -> str:
-    """Symbols → letters: 'A' = lowest sector; sentinel c → '#'."""
-    out = []
-    for s in np.asarray(symbols):
-        s = int(s)
-        if s == c:
-            out.append(SENTINEL_CHAR)
-        elif 0 <= s < c:
-            out.append(chr(ord("A") + (c - s - 1)))
-        else:
-            raise ValueError(f"corrupt symbol {s} for cardinality {c}")
-    return "".join(out)
+    """One word's symbols → letters (:func:`symbols_to_string_batch`),
+    rejecting symbols outside [0, c]."""
+    syms = np.asarray(symbols).astype(np.int64).reshape(1, -1)
+    bad = (syms < 0) | (syms > c)
+    if bad.any():
+        raise ValueError(f"corrupt symbol {syms[bad][0]} for cardinality {c}")
+    return str(symbols_to_string_batch(syms, c)[0]) if syms.size else ""
 
 
 def string_to_symbols(word: str, c: int) -> np.ndarray:
-    """Letters → symbols; '#' → sentinel c. Rejects out-of-range letters."""
+    """One word's letters → symbols (:func:`string_to_symbols_batch`),
+    rejecting short words, a bad c and out-of-range letters."""
     if not isinstance(word, str) or len(word) <= 1:
         raise ValueError("SAX string must have length > 1")
     if not (MIN_CARDINALITY <= c <= MAX_CARDINALITY):
         raise ValueError(f"cardinality out of range: {c}")
-    syms = np.empty(len(word), dtype=np.uint8)
-    for i, ch in enumerate(word):
-        if ch == SENTINEL_CHAR:
-            syms[i] = c
-            continue
-        v = ord(ch) - ord("A")
-        if not (0 <= v < c):
-            raise ValueError(f"symbol {ch!r} out of range for cardinality {c}")
-        syms[i] = c - v - 1
-    return syms
+    codes = np.array([word]).view(np.uint32).astype(np.int64)
+    bad = (codes != ord(SENTINEL_CHAR)) & ((codes < ord("A")) | (codes >= ord("A") + c))
+    if bad.any():
+        ch = word[int(np.argmax(bad))]
+        raise ValueError(f"symbol {ch!r} out of range for cardinality {c}")
+    return string_to_symbols_batch([word], c)[0]
 
 
 class Word:

@@ -1,16 +1,18 @@
-"""Spark-side iSAX symbolization: series assembly + Arrow-vectorized UDFs.
+"""Spark-side iSAX symbolization and the word-level mindist UDFs.
 
 Pipeline shape (batch engine):
   rollup tier rows (key, bucket_ts, value)
-    → assemble_series: fixed-length array<double> per (key, coarse window),
-      missing buckets become NaN (pure built-in map/sequence/transform —
-      no shuffle beyond the one groupBy, no Python)
-    → sax_word udf: one Arrow batch → one numpy (B, n) matrix →
-      kernel.symbolize_batch → SAX strings. No per-row Python anywhere;
-      the only Python cost is one vectorized numpy pass per Arrow batch.
+    → symbolize_windows: one key repartition + in-partition sort, then one
+      mapInArrow pass per partition. Window assembly is one numpy scatter
+      into a (windows, n) matrix, so missing buckets stay NaN and the
+      kernel's '#' semantics apply exactly as the reference's unfilled ring
+      slots do; kernel.symbolize_batch then turns every window of the
+      partition into a word at once. No per-row Python anywhere.
 
 The word column is the canonical index key; the symbols stay recoverable
-from the string (kernel.string_to_symbols), so we don't store both.
+from the string (kernel.string_to_symbols_batch), so we don't store both.
+mindist_udf scores words against a query word; pair_sums_by_key,
+daily_discords and mindist_pair_udf score words against each other.
 
 Reference semantics reproduced bit-for-bit: sts_from_double_array
 (/root/reference/src/symtseries.c:515-532) — see kernel.py.
@@ -28,65 +30,20 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from symtseries_spark import kernel as K
 from symtseries_spark.config import TIERS
 
+
 def _window_exprs(tier: str, window_tier: str):
     """(window-start epoch-seconds, slot offset) as pure long arithmetic.
 
     Same values as ``date_trunc`` + ``unix_timestamp`` diffs (UTC-aligned
     tiers, epoch origin) but with no per-row timezone logic or object
-    allocation — the columns feed a 30M+-row select ahead of the window
-    aggregate/mapInArrow pass, where per-row cost dominates scaling.
+    allocation — the columns feed a 30M+-row select ahead of the
+    mapInArrow pass, where per-row cost dominates scaling.
     """
     wsec = TIERS[window_tier]
     epoch = F.unix_timestamp(F.col("bucket_ts"))
     wnd_sec = (F.floor(epoch / wsec) * wsec).cast("long")
     off = ((epoch - wnd_sec) / TIERS[tier]).cast("int")
     return wnd_sec, off
-
-
-def _letters_lut(c: int) -> np.ndarray:
-    """uint8 symbol → unicode letter lookup ('A' lowest … sentinel '#')."""
-    lut = np.array([chr(ord("A") + (c - s - 1)) for s in range(c)] + ["#"], dtype="U1")
-    return lut
-
-
-def _strings_from_symbols(syms: np.ndarray, c: int) -> np.ndarray:
-    """(B, w) uint8 → (B,) U-w strings, fully vectorized."""
-    B, w = syms.shape
-    chars = _letters_lut(c)[syms]
-    return np.ascontiguousarray(chars).view(f"U{w}").reshape(B)
-
-
-def _symbols_from_strings(words: np.ndarray, c: int) -> np.ndarray:
-    """(B,) strings of equal length w → (B, w) uint8 symbols, vectorized."""
-    w = len(words[0])
-    codes = np.asarray(words, dtype=f"U{w}").view(np.uint32).reshape(len(words), w)
-    syms = (c - 1 - (codes - ord("A"))).astype(np.int64)
-    syms[codes == ord("#")] = c
-    return syms.astype(np.uint8)
-
-
-def sax_word_udf(n: int, w: int, c: int):
-    """pandas UDF: array<double> (length ≤ n, NaN-padded on the left) → word."""
-    K.validate_nwc(n, w, c)
-
-    @pandas_udf(StringType())
-    def _sax(series: pd.Series) -> pd.Series:
-        if len(series) == 0:
-            return pd.Series([], dtype=object)
-        vals = series.to_numpy()
-        try:  # fast path: uniform length-n arrays stack without copying rows
-            X = np.stack(vals).astype(np.float64, copy=False)
-            if X.ndim != 2 or X.shape[1] != n:
-                raise ValueError
-        except ValueError:  # ragged: NaN-pad on the left (trailing-n rule)
-            X = np.full((len(vals), n), np.nan)
-            for i, s in enumerate(vals):
-                a = np.asarray(s, dtype=np.float64)
-                X[i, n - min(len(a), n):] = a[-n:] if len(a) > n else a
-        syms = K.symbolize_batch(X, w, c)
-        return pd.Series(_strings_from_symbols(syms, c))
-
-    return _sax
 
 
 MINDIST_SCHEMA = StructType(
@@ -111,50 +68,12 @@ def mindist_udf(query_word: str, c: int, n_query: int = 0, n_cand: int | None = 
     def _mind(words: pd.Series) -> pd.DataFrame:
         if len(words) == 0:
             return pd.DataFrame({"d": [], "above": [], "below": []})
-        cands = _symbols_from_strings(words.to_numpy(), c)
+        cands = K.string_to_symbols_batch(words.to_numpy(), c)
         nb = np.full(len(words), n_cand if n_cand is not None else 0, dtype=np.int64)
         d, above, below = K.mindist_batch(q, cands, c, n_query, nb)
         return pd.DataFrame({"d": d, "above": above, "below": below})
 
     return _mind
-
-
-def assemble_series(
-    rollup: DataFrame,
-    tier: str,
-    window_tier: str,
-    value_col: str = "text_len_avg",
-) -> DataFrame:
-    """Fixed-length series per (key, window): (key, window_ts, series).
-
-    n = window/bucket ratio (e.g. 1m buckets over 1h windows → n=60).
-    Missing buckets surface as NaN so the kernel's '#' semantics apply
-    exactly as the reference's unfilled ring slots do.
-
-    Implementation: n conditional max() aggregates (one per slot) instead
-    of collect_list + map building — a plain whole-stage-codegen hash
-    aggregate with map-side partials, no per-row object allocation; the
-    slot columns fold into one array afterwards. Benchmarks ~2× faster and
-    scales linearly where the map-based variant was allocation-bound.
-    """
-    n = TIERS[window_tier] // TIERS[tier]
-    ts_type = rollup.schema["bucket_ts"].dataType.simpleString()
-    wnd_sec, off = _window_exprs(tier, window_tier)
-    entries = rollup.select(
-        "key",
-        F.timestamp_seconds(wnd_sec).cast(ts_type).alias("window_ts"),
-        off.alias("off"),
-        F.col(value_col).cast("double").alias("v"),
-    )
-    slots = [
-        F.max(F.when(F.col("off") == i, F.col("v"))).alias(f"_s{i}")
-        for i in range(n)
-    ]
-    g = entries.groupBy("key", "window_ts").agg(*slots)
-    series = F.array(
-        *[F.coalesce(F.col(f"_s{i}"), F.lit(float("nan"))) for i in range(n)]
-    )
-    return g.select("key", "window_ts", series.alias("series"))
 
 
 def symbolize_windows(
@@ -258,7 +177,7 @@ def symbolize_windows(
         M = np.full((G, n), np.nan)
         M[widx, offs] = vals
         syms = K.symbolize_batch(M, w, c)
-        words = _strings_from_symbols(syms, c)
+        words = K.symbols_to_string_batch(syms, c)
         series = pa.ListArray.from_arrays(
             pa.array(np.arange(G + 1, dtype=np.int32) * n), pa.array(M.ravel())
         )
@@ -352,7 +271,7 @@ def pair_sums_by_key(hist: DataFrame, c: int) -> DataFrame:
                 continue
             si, sj = ii[sel], jj[sel]
             uniq, inv = np.unique(np.concatenate([si, sj]), return_inverse=True)
-            A = _symbols_from_strings(words[uniq], c)
+            A = K.string_to_symbols_batch(words[uniq], c)
             ai = A[inv[: len(si)]]
             bj = A[inv[len(si):]]
             d[sel] = K.mindist_pairs(ai, bj, c, n[si], n[sj])
@@ -467,7 +386,7 @@ def daily_discords(words: DataFrame, c: int) -> DataFrame:
                 if not sel.any():
                     continue
                 grp = np.where(lens == wlen)[0]
-                A = _symbols_from_strings(vw[grp], c)
+                A = K.string_to_symbols_batch(vw[grp], c)
                 pos = np.full(V, -1, dtype=np.int64)
                 pos[grp] = np.arange(len(grp))
                 si, sj = ii[sel], jj[sel]
@@ -562,8 +481,8 @@ def mindist_pair_udf(c: int):
         eq = (la == lb) & (la > 0)
         for wlen in np.unique(la[eq]):
             m = eq & (la == wlen)
-            A = _symbols_from_strings(A_raw[m], c)
-            B = _symbols_from_strings(B_raw[m], c)
+            A = K.string_to_symbols_batch(A_raw[m], c)
+            B = K.string_to_symbols_batch(B_raw[m], c)
             out[m] = K.mindist_pairs(A, B, c, na_arr[m], nb_arr[m])
         return pd.Series(out)
 

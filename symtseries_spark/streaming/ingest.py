@@ -39,7 +39,6 @@ from pyspark.sql.types import (
 
 from symtseries_spark import kernel as K
 from symtseries_spark.config import TIER_INTERVAL
-from symtseries_spark.operators.symbolize import _strings_from_symbols
 
 
 def streaming_rollup(
@@ -139,7 +138,7 @@ def make_word_updater(
                     1 : len(vals) + 1
                 ]
                 syms = K.symbolize_batch(np.ascontiguousarray(rings), w, c)
-                words = _strings_from_symbols(syms, c)
+                words = K.symbols_to_string_batch(syms, c)
                 frames.append(
                     pd.DataFrame(
                         {
@@ -164,8 +163,7 @@ def make_word_updater(
             if frames:
                 yield pd.concat(frames)
             return
-        syms = K.symbolize(ring, w, c)
-        word = _strings_from_symbols(syms[None, :], c)[0]
+        word = K.symbols_to_string(K.symbolize(ring, w, c), c)
         yield pd.DataFrame(
             {
                 "key": [key[0]],

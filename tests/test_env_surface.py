@@ -1,16 +1,20 @@
-"""The engine's configuration surface: it reads only deployment settings
-from the environment, and every EngineConfig field it declares.
+"""The engine's configuration and import surface: it reads only deployment
+settings from the environment, every EngineConfig field it declares, and
+every name it imports.
 
 Experiment switches read from the environment (A/B knobs, alternative
 execution paths) multiply the configurations tests and benchmarks must
-cover, and a config field nothing reads is a knob that does nothing; these
-scans make either fail loudly instead of landing unnoticed.
+cover, a config field nothing reads is a knob that does nothing, and an
+import nothing uses outlives the code it served; these scans make each
+fail loudly instead of landing unnoticed.
 """
 
 import ast
 import os
 
-ENGINE = os.path.join(os.path.dirname(os.path.dirname(__file__)), "symtseries_spark")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENGINE = os.path.join(REPO, "symtseries_spark")
+ENTRY = os.path.join(REPO, "__spark_entry__.py")
 DEPLOYMENT_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM"}
 
 
@@ -79,3 +83,33 @@ def test_every_engine_config_field_is_read():
     }
     unread = {f.name for f in fields(EngineConfig)} - read
     assert not unread, f"EngineConfig fields nothing reads: {sorted(unread)}"
+
+
+def _unused_imports(tree, reexports: bool):
+    """Yield each name the module binds by import but never reads, except
+    ``from __future__`` imports and, when ``reexports``, the engine names a
+    package ``__init__`` imports to re-export them."""
+    used = {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.asname or a.name.split(".")[0] for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            if node.module == "__future__" or (
+                reexports and (node.module or "").startswith("symtseries_spark")
+            ):
+                continue
+            names = [a.asname or a.name for a in node.names]
+        else:
+            continue
+        yield from (f"{name} (line {node.lineno})" for name in names if name not in used)
+
+
+def test_engine_imports_only_names_it_uses():
+    with open(ENTRY) as f:
+        entry = ("__spark_entry__.py", ast.parse(f.read(), ENTRY))
+    unused = {}
+    for rel, tree in [*_engine_trees(), entry]:
+        names = list(_unused_imports(tree, os.path.basename(rel) == "__init__.py"))
+        if names:
+            unused[rel] = names
+    assert not unused, f"imports nothing uses: {unused}"

@@ -17,7 +17,6 @@ from symtseries_spark.operators.index import (
     promote_words,
     promoted_query_words,
     range_query,
-    refine_knn,
 )
 
 N, W, C = 32, 8, 8
@@ -85,16 +84,17 @@ def test_range_and_knn_no_false_dismissals(spark, corpus):
             assert key in got, f"false dismissal for {key}"
 
     k = 10
-    cands = knn_query(idx, qword, C, k * 5, N)
-    refined = refine_knn(cands, df.select("key", "window_ts", "series"), qs, k)
-    rows = refined.collect()
+    cands = [(r.key, r.window_ts) for r in knn_query(idx, qword, C, k * 5, N).collect()]
+    # refine the candidates in numpy, ranked by (euclid, key, window_ts)
+    d = K.euclid_batch(np.stack([series[kw] for kw in cands]), K.znorm(qs))
+    rows = sorted(zip(d.tolist(), cands))[:k]
     assert len(rows) == k
     # approximate answers are candidate-optimal: each returned euclid matches
     # the true distance of its series, and results are sorted
-    got_d = [r.euclid for r in rows]
+    got_d = [e for e, _ in rows]
     assert got_d == sorted(got_d)
-    for r in rows:
-        assert r.euclid == pytest.approx(true_dist(series[(r.key, r.window_ts)]), abs=1e-9)
+    for e, kw in rows:
+        assert e == pytest.approx(true_dist(series[kw]), abs=1e-9)
     # all within the best brute-force 20% (the sin cluster dominates)
     dists = sorted(true_dist(s) for s in series.values())
     cutoff = dists[len(dists) // 5]
@@ -200,18 +200,17 @@ def test_range_query_exact_no_false_dismissals(spark, nan_corpus):
 
 def test_lower_bound_is_valid(spark, nan_corpus):
     """mindist_lb ≤ true euclid for EVERY row (the pruning guarantee)."""
-    from symtseries_spark.operators.index import euclid_udf, lower_bound_scan
+    from symtseries_spark.operators.index import lower_bound_scan
 
     df, series = nan_corpus
     rng = np.random.RandomState(13)
     q = rng.normal(size=24)
-    scan = lower_bound_scan(df, q, 12, 8).withColumn(
-        "euclid", euclid_udf(q)("series")
-    )
-    for r in scan.collect():
-        assert r.mindist_lb <= r.euclid + 1e-9, (
-            f"{r.key}: lb {r.mindist_lb} > euclid {r.euclid}"
-        )
+    td = _true_dist(q)
+    rows = lower_bound_scan(df, q, 12, 8).collect()
+    assert len(rows) == len(series)
+    for r in rows:
+        d = td(series[(r.key, r.window_ts)])
+        assert r.mindist_lb <= d + 1e-9, f"{r.key}: lb {r.mindist_lb} > euclid {d}"
 
 
 def test_lb_partial_query_frame_contributes_zero():
@@ -621,6 +620,20 @@ def test_range_query_exact_rejects_bad_radius(spark, nan_corpus, radius):
         range_query_exact(df, np.zeros(24), w=12, c=8, radius=radius)
 
 
+@pytest.mark.parametrize("k", [0, -1, 2.5, "3"])
+def test_knn_query_rejects_bad_k(spark, corpus, k):
+    df, _ = corpus
+    with pytest.raises(ValueError, match="k must be an integer >= 1"):
+        knn_query(build_index(df, "1h"), "ABCDEFGH", C, k, N)
+
+
+@pytest.mark.parametrize("radius", [float("nan"), -0.5])
+def test_range_query_rejects_bad_radius(spark, corpus, radius):
+    df, _ = corpus
+    with pytest.raises(ValueError, match="radius must be a number >= 0"):
+        range_query(build_index(df, "1h"), "ABCDEFGH", C, radius, N)
+
+
 @pytest.mark.parametrize("n, w, c", [(25, 12, 8), (24, 12, 1), (24, 1, 8)])
 def test_exact_queries_validate_nwc(spark, nan_corpus, n, w, c):
     from symtseries_spark.operators.index import exact_knn, range_query_exact
@@ -736,16 +749,17 @@ def test_exact_queries_on_mixed_table_without_frame_full(spark):
 
 
 def test_exact_and_udf_refine_distances_are_bit_identical(spark, nan_corpus):
-    """euclid_udf (the approximate path's refine) and the exact queries'
-    Arrow pass share kernel.euclid_batch: the same row gets the same
-    distance bit for bit, however the pass batches or prunes it."""
-    from symtseries_spark.operators.index import euclid_udf, exact_knn, range_query_exact
+    """The exact queries' Arrow pass computes each row's distance with
+    kernel.euclid_batch: the same row gets the distance one euclid_batch
+    call over every series gives, bit for bit, however the pass batches
+    or prunes it."""
+    from symtseries_spark.operators.index import exact_knn, range_query_exact
 
     df, series = nan_corpus
     q = np.random.RandomState(31).normal(size=24)
-    udf = {(r.key, r.window_ts): r.euclid
-           for r in df.withColumn("euclid", euclid_udf(q)("series")).collect()}
+    keys = list(series)
+    ref = dict(zip(keys, K.euclid_batch(np.stack([series[kw] for kw in keys]), K.znorm(q))))
     everything = range_query_exact(df, q, w=12, c=8, radius=float("inf")).collect()
     assert len(everything) == len(series)
     for r in everything + exact_knn(df, q, w=12, c=8, k=15).collect():
-        assert r.euclid == udf[(r.key, r.window_ts)]
+        assert r.euclid == ref[(r.key, r.window_ts)]

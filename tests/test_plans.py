@@ -1,9 +1,16 @@
 """Plan-property regression tests: the physical plans the engine depends on
 at scale must not silently regress (docs/PLANS.md is the audit record)."""
 
+import datetime as dt
+import re
+
+import numpy as np
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
+from symtseries_spark import kernel as K
 from symtseries_spark.plans import assert_plan
 
 
@@ -50,18 +57,6 @@ def test_clustered_rollup_costs_two_exchanges(spark):
     out = salted_rollup(df, "url", "ts", F.col("v"), "1m", cluster_by_key=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 2, plan
-
-
-def test_mindist_scan_udf_runs_per_distinct_word(spark, sf_dir):
-    """The mindist Arrow UDF must be evaluated on the DISTINCT vocabulary
-    and broadcast-joined back — not once per index row."""
-    plan = assert_plan(
-        E.q_mindist_topk_daily(spark, sf_dir),
-        contains=("BroadcastHashJoin",),
-    )
-    # the UDF eval sits above an aggregate (the distinct), i.e. in the
-    # small per-word branch, and the join brings it back to the index rows
-    assert "ArrowEvalPython" in plan or "BatchEvalPython" in plan
 
 
 def test_asof_join_is_single_window_shuffle(spark):
@@ -127,24 +122,13 @@ def test_daily_discords_fused_plan(spark, sf_dir):
     # exchanges: collect_list shuffle + explicit key repartition, nothing
     # else (formatted explain mentions each node twice — tree line +
     # detail header — so count the numbered detail headers only)
-    import re
-
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2, plan
 
 
-def test_exact_queries_are_one_arrow_pass(spark, tmp_path):
-    """exact_knn and range_query_exact read the word table in ONE Arrow map
-    pass: no broadcast join, no aggregate (distinct), no exchange. kNN ends
-    in TakeOrderedAndProject, merging the per-partition top-k rows."""
-    import datetime as dt
-    import re
-
-    import numpy as np
-    from pyspark.sql import Row
-
-    from symtseries_spark import kernel as K
-    from symtseries_spark.operators.index import exact_knn, range_query_exact
-
+@pytest.fixture(scope="module")
+def stored_words(spark, tmp_path_factory):
+    """A stored word table (4 parquet files, 120 random windows) and a
+    query series: (words, q, w, c)."""
     n, w, c = 24, 12, 8
     rng = np.random.RandomState(4)
     rows = []
@@ -155,25 +139,58 @@ def test_exact_queries_are_one_arrow_pass(spark, tmp_path):
                 word=K.symbols_to_string(K.symbolize(s, w, c), c), w=w, c=c, n=n,
                 series=[float(x) for x in s])
         )
-    path = str(tmp_path / "words")
+    path = str(tmp_path_factory.mktemp("plans") / "words")
     spark.createDataFrame(rows).repartition(4).write.parquet(path)
-    words = spark.read.parquet(path)
-    q = rng.normal(size=n)
+    return spark.read.parquet(path), rng.normal(size=n), w, c
 
-    def final_plan(df):
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.split("== Initial Plan ==")[0]
 
+def _final_plan(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _root(plan: str) -> str:
+    """The first operator of an executed plan below the AQE wrappers."""
+    nodes = [re.sub(r"^[\s+\-:*()\d]*", "", line) for line in plan.splitlines()]
+    wrappers = ("AdaptiveSparkPlan", "== ", "ResultQueryStage")
+    return next(line for line in nodes if line and not line.startswith(wrappers))
+
+
+def test_exact_queries_are_one_arrow_pass(stored_words):
+    """exact_knn and range_query_exact read the word table in ONE Arrow map
+    pass: no broadcast join, no aggregate (distinct), no exchange. kNN ends
+    in TakeOrderedAndProject, merging the per-partition top-k rows."""
+    from symtseries_spark.operators.index import exact_knn, range_query_exact
+
+    words, q, w, c = stored_words
     for out in (exact_knn(words, q, w, c, k=5), range_query_exact(words, q, w, c, 4.0)):
-        plan = final_plan(out)
+        plan = _final_plan(out)
         assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
         for node in ("BroadcastHashJoin", "HashAggregate", "Exchange"):
             assert node not in plan, plan
-    nodes = [
-        re.sub(r"^[\s+\-:*()\d]*", "", line)
-        for line in final_plan(exact_knn(words, q, w, c, k=5)).splitlines()
-    ]
-    wrappers = ("AdaptiveSparkPlan", "== ", "ResultQueryStage")
-    root = next(line for line in nodes if line and not line.startswith(wrappers))
-    assert root.startswith("TakeOrderedAndProject"), nodes
+    root = _root(_final_plan(exact_knn(words, q, w, c, k=5)))
+    assert root.startswith("TakeOrderedAndProject"), root
+
+
+def test_approx_queries_are_one_arrow_eval(stored_words):
+    """mindist_scan, range_query and knn_query score every (w, c)-compatible
+    row of the word table with ONE ArrowEvalPython over one scan: no
+    distinct (aggregate), exchange or broadcast join back. kNN ends in
+    TakeOrderedAndProject."""
+    from symtseries_spark.operators.index import knn_query, mindist_scan, range_query
+
+    words, q, w, c = stored_words
+    qword = K.symbols_to_string(K.symbolize(q, w, c), c)
+    for out in (
+        mindist_scan(words, qword, c, 24),
+        range_query(words, qword, c, 6.0, 24),
+        knn_query(words, qword, c, 5, 24),
+    ):
+        plan = _final_plan(out)
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+        assert plan.count("_mind(word") == 1, plan  # one UDF call per row
+        for node in ("BroadcastHashJoin", "HashAggregate", "Exchange"):
+            assert node not in plan, plan
+    root = _root(_final_plan(knn_query(words, qword, c, 5, 24)))
+    assert root.startswith("TakeOrderedAndProject"), root

@@ -68,10 +68,7 @@ def test_connected_components_endpoints_outside_nodes(spark):
 
 
 def test_mindist_pair_udf_mixed_width_nan(spark):
-    from symtseries_spark.operators.symbolize import (
-        _symbols_from_strings,
-        mindist_pair_udf,
-    )
+    from symtseries_spark.operators.symbolize import mindist_pair_udf
 
     c = 4
     rows = [
@@ -92,8 +89,8 @@ def test_mindist_pair_udf_mixed_width_nan(spark):
     assert got[1] is None or np.isnan(got[1])
     assert got[3] is None or np.isnan(got[3])
     for i, wa, wb in ((0, "ABCD", "DCBA"), (2, "AB", "CD")):
-        A = _symbols_from_strings(np.array([wa]), c)
-        B = _symbols_from_strings(np.array([wb]), c)
+        A = K.string_to_symbols_batch(np.array([wa]), c)
+        B = K.string_to_symbols_batch(np.array([wb]), c)
         want = K.mindist_pairs(A, B, c, np.array([8]), np.array([8]))[0]
         assert got[i] == pytest.approx(want, rel=1e-12)
 

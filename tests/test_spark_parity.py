@@ -1,6 +1,6 @@
-"""Spark-path parity: the pandas-UDF pipeline reproduces the kernel (and so
-the reference fixtures) bit-for-bit, and the rollup/gap-fill/assembly
-operators behave per spec on small synthetic data."""
+"""Spark-path parity: the Arrow symbolization pass and the mindist UDF
+reproduce the kernel (and so the reference fixtures) bit-for-bit, and the
+rollup/gap-fill/assembly operators behave per spec on small synthetic data."""
 
 import datetime as dt
 import math
@@ -18,57 +18,38 @@ from symtseries_spark.operators.rollup import (
     rollup_raw,
     with_stddev,
 )
-from symtseries_spark.operators.symbolize import (
-    assemble_series,
-    mindist_udf,
-    sax_word_udf,
-    symbolize_windows,
-)
+from symtseries_spark.operators.symbolize import mindist_udf, symbolize_windows
 
 NAN = float("nan")
 INF = float("inf")
 
 
-def test_sax_udf_matches_kernel_fixtures(spark):
-    cases = [
-        ([5, 6, 7, -5, -6, -7, 0.25, 0.17, 0.04, -0.04, -0.17, -0.25], 12, 4, 8, "HAED"),
-        ([10.3, 7, 1, -5, -5, 7.2], 6, 2, 8, "FC"),
-        ([NAN, NAN, INF, -INF, INF, 1, -INF, -1, NAN, -5, 5, NAN], 12, 6, 8, "##HAAH"),
-        ([NAN] * 9, 9, 3, 5, "###"),
-        ([1, 2, 3, 10.1], 4, 2, 4, "AD"),
-    ]
-    for series, n, w, c, expect in cases:
-        df = spark.createDataFrame([Row(series=[float(x) for x in series])])
-        got = df.select(sax_word_udf(n, w, c)("series").alias("word")).first().word
-        assert got == expect, (series, expect, got)
-
-
-def test_sax_udf_ragged_trailing_n(spark):
-    # >n values → last n kept; <n values → NaN-padded on the left
-    df = spark.createDataFrame(
-        [Row(series=[99.0, -99.0, 1.0, 2.0, 3.0, 10.1]), Row(series=[10.1])]
-    )
-    words = [r.word for r in df.select(sax_word_udf(4, 2, 4)("series").alias("word")).collect()]
-    assert words == ["AD", "#C"]
-
-
 def test_sax_udf_random_parity_with_kernel(spark):
+    """symbolize_windows on random 1m values with about 5% of minutes
+    missing: each window's series holds its minutes' values (NaN where a
+    minute is missing), and its word is the kernel's word of that series."""
     rng = np.random.RandomState(5)
-    n, w, c = 32, 8, 8
-    mats = rng.normal(size=(200, n))
-    mats[rng.uniform(size=mats.shape) < 0.05] = np.nan
-    expected = [
-        "".join(row)
-        for row in np.array(
-            [list(str(K.Word.from_series(m, w, c))) for m in mats]
-        )
-    ]
-    df = spark.createDataFrame([Row(i=i, series=[float(x) for x in m]) for i, m in enumerate(mats)])
-    got = {
-        r.i: r.word
-        for r in df.select("i", sax_word_udf(n, w, c)("series").alias("word")).collect()
-    }
-    assert [got[i] for i in range(len(mats))] == expected
+    n, w, c = 60, 12, 8
+    base = dt.datetime(2024, 1, 1)
+    rows, expect = [], {}
+    for k in range(40):
+        for h in range(5):
+            wts = base + dt.timedelta(hours=h)
+            s = rng.normal(size=n)
+            s[rng.uniform(size=n) < 0.05] = np.nan
+            expect[(f"k{k}", wts)] = s
+            rows += [
+                (f"k{k}", wts + dt.timedelta(minutes=m), float(v))
+                for m, v in enumerate(s)
+                if not np.isnan(v)
+            ]
+    t1m = spark.createDataFrame(rows, "key string, bucket_ts timestamp, text_len_avg double")
+    got = symbolize_windows(t1m, "1m", "1h", w=w, c=c).collect()
+    assert {(r.key, r.window_ts) for r in got} == set(expect)
+    for r in got:
+        series = np.array(r.series)
+        np.testing.assert_array_equal(series, expect[(r.key, r.window_ts)])
+        assert r.word == K.symbols_to_string(K.symbolize(series, w, c), c)
 
 
 def test_mindist_udf_golden(spark):
@@ -131,18 +112,6 @@ def test_gapfill_locf_linear(spark):
     assert not rows[5].is_gap and rows[5].value_linear == 15.0
 
 
-def test_assemble_series_nan_for_gaps(spark):
-    df = spark.createDataFrame(_toy_rows())
-    t1m = rollup_raw(df, "key", "ts", F.length("text"), "1m")
-    ser = assemble_series(t1m, "1m", "1h", "text_len_avg")
-    row = ser.filter(F.col("key") == "a").first()
-    s = row.series
-    assert len(s) == 60
-    assert s[0] == 10.0 and s[2] == 12.0
-    assert math.isnan(s[3]) and math.isnan(s[4])
-    assert all(math.isnan(x) for x in s[10:])
-
-
 def test_symbolize_windows_end_to_end(spark):
     df = spark.createDataFrame(_toy_rows())
     t1m = rollup_raw(df, "key", "ts", F.length("text"), "1m")
@@ -157,6 +126,12 @@ def test_symbolize_windows_end_to_end(spark):
         assert r.word == str(
             K.Word(K.symbolize(np.array(r.series), 12, 8), 60, 8)
         )
+    # missing minutes surface as NaN in the assembled series
+    s = rows["a"].series
+    assert len(s) == 60
+    assert s[0] == 10.0 and s[2] == 12.0
+    assert math.isnan(s[3]) and math.isnan(s[4])
+    assert all(math.isnan(x) for x in s[10:])
 
 
 def test_datagen_deterministic_and_text_identity(spark):
