@@ -15,6 +15,7 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENGINE = os.path.join(REPO, "symtseries_spark")
 ENTRY = os.path.join(REPO, "__spark_entry__.py")
+WORKER = os.path.join(REPO, "pyspark_symtseries_worker.py")
 DEPLOYMENT_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM"}
 
 
@@ -104,11 +105,17 @@ def _unused_imports(tree, reexports: bool):
         yield from (f"{name} (line {node.lineno})" for name in names if name not in used)
 
 
+def _root_trees():
+    """Yield (file name, parsed AST) per root-level module: the driver
+    contract and the Python worker entry point."""
+    for path in (ENTRY, WORKER):
+        with open(path) as f:
+            yield os.path.basename(path), ast.parse(f.read(), path)
+
+
 def test_engine_imports_only_names_it_uses():
-    with open(ENTRY) as f:
-        entry = ("__spark_entry__.py", ast.parse(f.read(), ENTRY))
     unused = {}
-    for rel, tree in [*_engine_trees(), entry]:
+    for rel, tree in [*_engine_trees(), *_root_trees()]:
         names = list(_unused_imports(tree, os.path.basename(rel) == "__init__.py"))
         if names:
             unused[rel] = names
