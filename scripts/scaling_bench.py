@@ -317,7 +317,7 @@ The pipeline under test is `symtseries_spark.pipeline.run_pipeline`:
 scan (column-pruned) → salted 1m rollup (unconditional two-phase salt) → 1h/1d
 cascades from re-aggregable partials → window assembly → iSAX
 symbolization (Arrow-vectorized UDF) → inverted index → Gorilla +
-delta-of-delta chunk encoding (partition-batched vectorized bit packing),
+grid-bitmap chunk encoding (partition-batched vectorized bit packing),
 driven by count actions (measures compute + shuffle, not sink disk).
 
 Measured {summary['measured_at']}.

@@ -1,31 +1,30 @@
-"""Gorilla XOR value compression + delta-of-delta timestamp compression.
+"""Gorilla XOR value compression + grid-bitmap timestamp compression.
 
-Implements the Facebook Gorilla scheme (Pelkonen et al., "Gorilla: A Fast,
-Scalable, In-Memory Time Series Database", VLDB 2015 — public paper) in a
-split layout: the paper's control bits, headers and payloads are the same
-codes, but each kind lives in its own section of the chunk, so every field
-offset is a prefix sum instead of a sequential cursor walk.
+Values follow the Facebook Gorilla scheme (Pelkonen et al., "Gorilla: A
+Fast, Scalable, In-Memory Time Series Database", VLDB 2015 — public paper)
+in a split layout: the paper's control bits, headers and payloads are the
+same codes, but each kind lives in its own section of the chunk, so every
+field offset is a prefix sum instead of a sequential cursor walk.
 
-Timestamps ("dod-s", delta-of-delta, µs resolution):
-  [ts0: 64b] [delta0: 64b, n ≥ 2 only] [ctrl: (n-2) × 3b class]
-  [payloads: class widths 0/7/9/12/64 bits]
-  classes: dod == 0 → 0; [-63, 64] → 1; [-255, 256] → 2;
-           [-2047, 2048] → 3; else → 4 (raw 64b signed);
-           classes 1-3 store dod minus the range's low end
+Timestamps ("bitmap", one presence bit per step of the tier's grid):
+  bit i (MSB-first) is set when the chunk has a point at chunk_start_ts +
+  i · TIERS[tier] seconds; the payload ends at the byte holding the last
+  point and has no header (tier and chunk_start_ts are chunk columns).
+  Like Gorilla, it codes timestamps at the grain of the data, not the
+  clock: a regular series costs 1 bit per point. A bitmap costs span/8
+  bytes whatever the density: the sf0.01 events 1m tier (2.5 points per
+  day chunk; no caller encodes it) would cost 24.8 B/pt.
 
 Values ("gorilla-s", XOR of consecutive float64 bit patterns):
   [u0: 64b] [ctrl: (n-1) × 1b nonzero-xor flags]
   [headers: K × 11b (5b leading zeros | 6b meaningful bits - 1)]
   [payloads: K × meaningful bits]
 
-ENCODING IS FULLY VECTORIZED: every code's (bits, nbits) is computed with
-numpy over all chunks of an Arrow batch at once, then scattered into a bit
-matrix with one loop over *bit positions* (≤ 64 iterations regardless of
-chunk size), never a loop over points or chunks.
-
-DECODING IS ALSO VECTORIZED: a whole Arrow batch of chunks decodes in one
-numpy pass (≤ 64 bit-position gathers + one np.bitwise_xor.accumulate /
-two segmented cumsums).
+Both codecs are vectorized over every chunk of an Arrow batch at once.
+Encoding scatters all codes into one bit array (values: one loop over
+≤ 64 bit positions, never over points or chunks). Decoding is one numpy
+pass (timestamps: one flatnonzero; values: ≤ 64 bit-position gathers, one
+np.bitwise_xor.accumulate and two segmented cumsums).
 
 Spark surface: encode_chunks() packs each (key, tier) bucket run into one
 BinaryType blob row via mapInArrow; decode_chunks() restores rows.
@@ -45,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from symtseries_spark.config import TIERS
 
 # ---------------------------------------------------------------------------
 # bit packing helpers (numpy, vectorized over codes)
@@ -111,8 +112,8 @@ def _pack_groups(code_pairs: list[tuple[np.ndarray, np.ndarray]]):
     Each group's stream is padded to a byte boundary with a 0-filled pad
     code so the packed buffer slices cleanly per group (the decoder reads
     exactly n points and ignores trailing pad bits). Returns a list of
-    bytes objects, one per group. With the per-group _codes_*_split coders
-    this is the reference the batch encoders are checked against.
+    bytes objects, one per group. With the per-group _codes_values_split
+    coder this is the reference the batch value encoder is checked against.
     """
     bits_parts, nbits_parts, byte_lens = [], [], []
     for bits, nbits in code_pairs:
@@ -135,12 +136,9 @@ def _pack_groups(code_pairs: list[tuple[np.ndarray, np.ndarray]]):
 
 
 # ---------------------------------------------------------------------------
-# split-layout codecs ("gorilla-s" / "dod-s", layouts in the module
-# docstring; sections are bit-packed with no alignment between them)
+# codecs ("gorilla-s" / "bitmap", layouts in the module docstring; value
+# sections are bit-packed with no alignment between them)
 # ---------------------------------------------------------------------------
-
-_DOD_S_WIDTH = np.array([0, 7, 9, 12, 64], dtype=np.int64)
-_DOD_S_LO = np.array([0, -63, -255, -2047, 0], dtype=np.int64)
 
 
 def _codes_values_split(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -169,35 +167,6 @@ def _codes_values_split(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     nbits[1 + m : 1 + m + K] = 11
     bits[1 + m + K :] = payload
     nbits[1 + m + K :] = mlen
-    return bits, nbits
-
-
-def _codes_timestamps_split(ts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """dod-s code arrays (bits, nbits) for ONE chunk."""
-    ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    head = ts[0:1].astype(np.uint64)
-    if n == 1:
-        return head.copy(), np.array([64], dtype=np.int64)
-    d = np.diff(ts)
-    dod = np.diff(d)
-    m = len(dod)
-    cls = np.full(m, 4, dtype=np.int64)
-    cls[(dod >= -2047) & (dod <= 2048)] = 3
-    cls[(dod >= -255) & (dod <= 256)] = 2
-    cls[(dod >= -63) & (dod <= 64)] = 1
-    cls[dod == 0] = 0
-    width = _DOD_S_WIDTH[cls]
-    payload = np.where(
-        cls == 4, dod.view(np.uint64), (dod - _DOD_S_LO[cls]).astype(np.uint64)
-    )
-    hasp = width > 0
-    bits = np.concatenate(
-        [head, d[0:1].view(np.uint64), cls.astype(np.uint64), payload[hasp]]
-    )
-    nbits = np.concatenate(
-        [[64, 64], np.full(m, 3, dtype=np.int64), width[hasp]]
-    )
     return bits, nbits
 
 
@@ -299,75 +268,34 @@ def _codes_values_split_batch(
     return _pack_sliced_groups(bits, nbits, counts)
 
 
-def _codes_timestamps_split_batch(
-    ts_all: np.ndarray, starts: np.ndarray, ends: np.ndarray
-) -> list[bytes]:
-    """dod-s payload bytes for MANY chunks in one vectorized pass (twin of
-    per-group _codes_timestamps_split + _pack_groups; equality-pinned)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    ends = np.asarray(ends, dtype=np.int64)
-    ts = np.asarray(ts_all, dtype=np.int64)
-    G = len(starts)
+def _codes_timestamps_bitmap_batch(
+    ts_all: np.ndarray, starts: np.ndarray, ends: np.ndarray, step_us: int
+):
+    """bitmap ts_payload column for MANY chunks in one vectorized pass: every
+    point's slot (ts − its chunk's first ts) / step_us is scattered into one
+    bit array, and the ``pa.binary()`` column is one offsets buffer plus one
+    packbits buffer. Raises ValueError when a chunk's timestamps are off its
+    step grid or not strictly increasing (duplicates included)."""
+    import pyarrow as pa
+
     lens = ends - starts
-    m1 = lens - 1  # delta count per group
-    m2 = np.maximum(lens - 2, 0)  # dod count per group
-
-    first_mask = np.zeros(len(ts), dtype=bool)
-    first_mask[starts] = True
-    dr = np.empty(len(ts), dtype=np.int64)
-    dr[1:] = ts[1:] - ts[:-1]
-    dr[0] = 0
-    d = dr[~first_mask]  # compact deltas, Σm1 long, group-contiguous
-
-    d1off = np.concatenate([[0], np.cumsum(m1)])
-    dstart_mask = np.zeros(len(d) + 1, dtype=bool)
-    dstart_mask[d1off] = True
-    dstart_mask = dstart_mask[: len(d)]
-    ddr = np.empty(len(d), dtype=np.int64)
-    if len(d):
-        ddr[1:] = d[1:] - d[:-1]
-        ddr[0] = 0
-    dod = ddr[~dstart_mask]  # Σm2 long
-
-    cls = np.full(len(dod), 4, dtype=np.int64)
-    cls[(dod >= -2047) & (dod <= 2048)] = 3
-    cls[(dod >= -255) & (dod <= 256)] = 2
-    cls[(dod >= -63) & (dod <= 64)] = 1
-    cls[dod == 0] = 0
-    width = _DOD_S_WIDTH[cls]
-    pay = np.where(cls == 4, dod.view(np.uint64), (dod - _DOD_S_LO[cls]).astype(np.uint64))
-    hasp = width > 0
-
-    hc = np.concatenate([[0], np.cumsum(hasp.astype(np.int64))])
-    d2off = np.concatenate([[0], np.cumsum(m2)])
-    H = hc[d2off[1:]] - hc[d2off[:-1]]  # payload count per group
-
-    multi = (lens >= 2).astype(np.int64)  # head + d0 only when n >= 2
-    counts = 1 + multi + m2 + H
-    off = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    T = int(counts.sum())
-    bits = np.empty(T, dtype=np.uint64)
-    nbits = np.empty(T, dtype=np.int64)
-
-    bits[off] = ts[starts].astype(np.uint64)
-    nbits[off] = 64
-    mg = multi.astype(bool)
-    bits[off[mg] + 1] = d[d1off[:-1][mg]].view(np.uint64) if len(d) else 0
-    nbits[off[mg] + 1] = 64
-
-    gid = np.repeat(np.arange(G, dtype=np.int64), m2)
-    wi = _seg_arange(m2)
-    idx_cls = off[gid] + 2 + wi
-    bits[idx_cls] = cls.astype(np.uint64)
-    nbits[idx_cls] = 3
-
-    gid_h = gid[hasp]
-    rank = (hc[1:][hasp] - hc[d2off[gid_h]]) - 1
-    idx_pay = off[gid_h] + 2 + m2[gid_h] + rank
-    bits[idx_pay] = pay[hasp]
-    nbits[idx_pay] = width[hasp]
-
-    return _pack_sliced_groups(bits, nbits, counts)
+    slot, rem = np.divmod(ts_all - np.repeat(ts_all[starts], lens), step_us)
+    interior = np.ones(len(ts_all), dtype=bool)
+    interior[starts] = False
+    bad = rem != 0
+    bad[1:] |= interior[1:] & (slot[1:] <= slot[:-1])
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"bitmap timestamps must be strictly increasing on a {step_us} µs grid "
+            f"from each chunk's first point; got {ts_all[i]} after {ts_all[i - 1]}"
+        )
+    offs = np.zeros(len(starts) + 1, dtype=np.int32)
+    np.cumsum(slot[ends - 1] // 8 + 1, out=offs[1:])
+    bits = np.zeros(8 * int(offs[-1]), dtype=np.uint8)
+    bits[np.repeat(8 * offs[:-1].astype(np.int64), lens) + slot] = 1
+    buffers = [None, pa.py_buffer(offs), pa.py_buffer(np.packbits(bits))]
+    return pa.Array.from_buffers(pa.binary(), len(starts), buffers)
 
 
 def _seg_arange(lens: np.ndarray) -> np.ndarray:
@@ -444,17 +372,10 @@ def decode_values_split_batch(payloads, n_points: np.ndarray) -> np.ndarray:
     ctrl_idx = np.repeat(ctrl_starts, m) + _seg_arange(m)
     flags = bits[ctrl_idx].astype(np.int64)
     seg_heads = np.concatenate([[0], np.cumsum(m)[:-1]])
-    K = np.zeros(nchunks, dtype=np.int64)
-    ne = m > 0
-    if ne.any():
-        # reduceat needs valid starts; compute on the nonempty segments
-        K[ne] = np.add.reduceat(flags, seg_heads[ne]) if flags.size else 0
-        # reduceat folds an empty trailing segment into the previous one only
-        # when starts repeat — seg_heads of empty segments equal the next
-        # head; restricting to nonempty segments avoids that entirely.
+    chunk_of_flag = np.repeat(np.arange(nchunks), m)
+    K = np.bincount(chunk_of_flag, weights=flags, minlength=nchunks).astype(np.int64)
 
     hdr_base = bit_off + 64 + m  # header section start per chunk
-    chunk_of_flag = np.repeat(np.arange(nchunks), m)
     nz = flags == 1
     j_in_chunk = (_seg_cumsum(flags, seg_heads, m) - 1)[nz]
     chunk_nz = chunk_of_flag[nz]
@@ -483,52 +404,22 @@ def decode_values_split_batch(payloads, n_points: np.ndarray) -> np.ndarray:
     return (acc ^ base).view(np.float64)
 
 
-def decode_timestamps_split_batch(payloads, n_points: np.ndarray) -> np.ndarray:
-    """Decode MANY dod-s chunks in one vectorized pass → int64 µs array.
-    ``payloads``: see :func:`_payload_bits`."""
-    n_points = np.asarray(n_points, dtype=np.int64)
-    nchunks = len(payloads)
-    if nchunks == 0:
-        return np.empty(0, dtype=np.int64)
+def decode_timestamps_bitmap_batch(
+    payloads, n_points: np.ndarray, start_us: np.ndarray, step_us: np.ndarray
+) -> np.ndarray:
+    """Decode MANY bitmap chunks in one pass → int64 µs array (Σ n_points).
+    ``payloads``: see :func:`_payload_bits`; ``start_us``/``step_us``: each
+    chunk's chunk_start_ts and tier step. Each set bit maps back to its chunk
+    by the chunk's bit offset. Raises ValueError when a chunk's set-bit
+    count differs from its ``n_points``."""
     bits, bit_off = _payload_bits(payloads)
-
-    W64 = np.full(nchunks, 64, dtype=np.int64)
-    ts0 = _gather_bits(bits, bit_off, W64).view(np.int64)
-    multi = n_points >= 2
-    d0 = np.zeros(nchunks, dtype=np.int64)
-    if multi.any():
-        d0[multi] = _gather_bits(
-            bits, (bit_off + 64)[multi], W64[multi]
-        ).view(np.int64)
-
-    m = np.maximum(n_points - 2, 0)  # dod entries per chunk
-    ctrl_starts = bit_off + np.where(multi, 128, 64)
-    ctrl_idx = np.repeat(ctrl_starts, m) + 3 * _seg_arange(m)
-    cls = np.zeros(len(ctrl_idx), dtype=np.int64)
-    for b in range(3):
-        cls = (cls << 1) | bits[ctrl_idx + b]
-    width = _DOD_S_WIDTH[cls]
-    seg_heads = np.concatenate([[0], np.cumsum(m)[:-1]])
-    pay_base = ctrl_starts + 3 * m
-    chunk_of = np.repeat(np.arange(nchunks), m)
-    pay_off = _seg_cumsum(width, seg_heads, m) - width
-    payload = _gather_bits(bits, pay_base[chunk_of] + pay_off, width)
-    dod = np.where(
-        cls == 4, payload.view(np.int64), payload.astype(np.int64) + _DOD_S_LO[cls]
-    )
-
-    # deltas: per chunk [d0, d0+dod1, ...]; timestamps: ts0 + cumsum(deltas)
-    total = int(n_points.sum())
-    out_starts = np.concatenate([[0], np.cumsum(n_points)[:-1]])
-    deltas = np.zeros(total, dtype=np.int64)
-    second = (out_starts + 1)[multi]
-    deltas[second] = d0[multi]
-    dod_idx = np.repeat(out_starts + 2, m) + _seg_arange(m)
-    deltas[dod_idx] = dod
-    deltas = _seg_cumsum(deltas, out_starts, n_points)
-    # now deltas[i] = delta at point i (0 at the chunk head)
-    ts = _seg_cumsum(deltas, out_starts, n_points)
-    return ts + np.repeat(ts0, n_points)
+    pos = np.flatnonzero(bits)
+    chunk = np.searchsorted(bit_off, pos, side="right") - 1
+    got = np.bincount(chunk, minlength=len(n_points))
+    if not np.array_equal(got, n_points):
+        g = int(np.argmax(got != n_points))
+        raise ValueError(f"bitmap chunk {g} has {got[g]} points set but n_points={n_points[g]}")
+    return start_us[chunk] + (pos - bit_off[chunk]) * step_us[chunk]
 
 
 # ---------------------------------------------------------------------------
@@ -560,15 +451,25 @@ def encode_chunks(
     """Pack each (key, tier, chunk) run of rollup points into one blob row.
 
     Execution shape (scale-critical): one hash repartition on key + an
-    in-partition sort, then ONE mapInPandas pass per partition — Spark never
+    in-partition sort, then ONE mapInArrow pass per partition — Spark never
     dispatches per group (a (key, chunk) group is ~10²-10³ rows; per-group
-    applyInPandas dispatch costs more than the encoding). Inside the pass,
-    group boundaries come from a factorize over the sorted (key, chunk_id)
-    columns and each group's codes are emitted by the fully-vectorized
-    packers above.
-    """
-    from symtseries_spark.config import TIERS
+    dispatch costs more than the encoding). Inside the pass, group
+    boundaries come from the sorted (key, chunk_id) columns and every
+    group is encoded by the batch coders above.
 
+    ``tier`` must be a key of ``TIERS`` and ``chunk_points`` an integer
+    ≥ 1 (ValueError otherwise). Each chunk's ``bucket_ts`` must lie
+    strictly increasing on the tier's step grid, as every rollup tier's
+    do; a chunk that does not raises ValueError on the executor.
+    """
+    if tier not in TIERS:
+        raise ValueError(
+            f"encode_chunks: unknown tier {tier!r}; valid tiers: {sorted(TIERS)}"
+        )
+    if not isinstance(chunk_points, (int, np.integer)) or chunk_points < 1:
+        raise ValueError(
+            f"encode_chunks: chunk_points must be an integer >= 1, got {chunk_points!r}"
+        )
     step = TIERS[tier]
     df = rollup.select(
         "key",
@@ -633,11 +534,12 @@ def encode_chunks(
         change[1:] = key_neq | (chunks[1:] != chunks[:-1])
         starts = np.nonzero(change)[0]
         ends = np.append(starts[1:], n_rows)
-        # cross-group batch encode: every section computed globally and
-        # scatter-assembled (bit-identical to the per-group path, which
-        # cost one Python-level call per chunk — the encode stage's former
-        # scaling ceiling)
-        ts_blobs = _codes_timestamps_split_batch(ts_all, starts, ends)
+        # cross-group batch encode: each codec runs once over every chunk
+        # of the partition (a per-group path costs one Python-level call
+        # per chunk — the encode stage's former scaling ceiling)
+        ts_blobs = _codes_timestamps_bitmap_batch(
+            ts_all, starts, ends, step * 1_000_000
+        )
         val_blobs = _codes_values_split_batch(v_all, starts, ends)
         g = len(starts)
         yield pa.RecordBatch.from_arrays(
@@ -646,9 +548,9 @@ def encode_chunks(
                 pa.array([tier] * g, pa.string()),
                 pa.array(ts_all[starts], pa.timestamp("us")),
                 pa.array((ends - starts).astype(np.int32), pa.int32()),
-                pa.array(["dod-s"] * g, pa.string()),
+                pa.array(["bitmap"] * g, pa.string()),
                 pa.array(["gorilla-s"] * g, pa.string()),
-                pa.array(ts_blobs, pa.binary()),
+                ts_blobs,
                 pa.array(val_blobs, pa.binary()),
             ],
             schema=pa_out,
@@ -672,34 +574,50 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Inverse of encode_chunks: blob rows → (key, tier, bucket_ts, value).
 
     One mapInArrow pass: each Arrow batch's payload columns feed their
-    offsets and data buffers straight to the split decoders, which decode
-    every chunk of the batch in one numpy pass (prefix-sum offsets + ≤64
-    bit-position gathers + one xor-scan). No per-chunk Python object and no
-    pandas frame. A row whose codecs are not "dod-s"/"gorilla-s" (the
-    formats encode_chunks writes) raises ValueError naming the codec.
+    offsets and data buffers straight to the batch decoders, which decode
+    every chunk of the batch in one numpy pass (one flatnonzero for the
+    timestamps; prefix-sum offsets + ≤64 bit-position gathers + one
+    xor-scan for the values). No per-chunk Python object and no pandas
+    frame. A row whose codecs are not "bitmap"/"gorilla-s" (the formats
+    encode_chunks writes) raises ValueError naming the codec, as does a
+    row whose tier is not in ``TIERS`` or whose ``n_points`` disagrees
+    with its timestamp bitmap.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
     schema = decoded_schema(chunks.schema["key"].dataType)
+    tier_names = pa.array(list(TIERS))
+    tier_step_us = np.array(list(TIERS.values()), dtype=np.int64) * 1_000_000
 
     def _decode(batches):
         for b in batches:
             if not b.num_rows:
                 continue
             ts_codec, val_codec = b.column("ts_codec"), b.column("val_codec")
-            ok = pc.and_(pc.equal(ts_codec, "dod-s"), pc.equal(val_codec, "gorilla-s"))
+            ok = pc.and_(pc.equal(ts_codec, "bitmap"), pc.equal(val_codec, "gorilla-s"))
             bad = np.flatnonzero(~pc.fill_null(ok, False).to_numpy(zero_copy_only=False))
             if len(bad):
                 i = int(bad[0])
                 raise ValueError(
                     f"decode_chunks: unsupported codec ts_codec="
                     f"{ts_codec[i].as_py()!r} val_codec={val_codec[i].as_py()!r} "
-                    "(only 'dod-s'/'gorilla-s' chunks decode)"
+                    "(only 'bitmap'/'gorilla-s' chunks decode)"
+                )
+            tier_idx = pc.index_in(b.column("tier"), value_set=tier_names)
+            if tier_idx.null_count:
+                unknown = pc.filter(b.column("tier"), tier_idx.is_null())[0].as_py()
+                raise ValueError(
+                    f"decode_chunks: unknown tier {unknown!r}; valid tiers: {sorted(TIERS)}"
                 )
             ns = b.column("n_points").to_numpy(zero_copy_only=False).astype(np.int64)
+            start_us = (
+                b.column("chunk_start_ts").to_numpy(zero_copy_only=False)
+                .astype("datetime64[us]").astype(np.int64)
+            )
+            step_us = tier_step_us[tier_idx.to_numpy()]
+            ts = decode_timestamps_bitmap_batch(b.column("ts_payload"), ns, start_us, step_us)
             rows = pa.array(np.repeat(np.arange(b.num_rows), ns))
-            ts = decode_timestamps_split_batch(b.column("ts_payload"), ns)
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column("key").take(rows),

@@ -238,71 +238,6 @@ def stateful_words(
     )
 
 
-def streaming_sessions(
-    stream: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_expr,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked SESSION-window aggregate — the streaming twin of
-    operators.joins.sessionize + session_stats, built on Spark's native
-    ``session_window`` (gap-merged event-time windows; state is bounded
-    by the watermark horizon, sessions close and emit once the watermark
-    passes their gap).
-
-    Boundary semantics: session_window merges two events iff their gap is
-    STRICTLY LESS than ``gap``; the batch sessionize keeps a gap equal to
-    the threshold in the same session. With real (microsecond) event
-    times an exactly-equal gap has measure zero; the batch==streaming law
-    test pins equivalence on such input.
-    """
-    v = value_expr.cast("double")
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col(key_col).alias("key"),
-            F.session_window(F.col(ts_col), gap).alias("wnd"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(v).alias("sum_v"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-        )
-        .select(
-            "key", "session_start", "session_end", "n_events", "sum_v",
-            (
-                F.col("session_end").cast("timestamp").cast("double")
-                - F.col("session_start").cast("timestamp").cast("double")
-            ).alias("duration_s"),
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    id_cols: tuple = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """At-least-once ingest → effectively-once rows: drop redelivered
-    duplicates by id within the watermark horizon
-    (``dropDuplicatesWithinWatermark``) — the streaming twin of the batch
-    exact-dedup operator for event streams where redeliveries arrive
-    within a bounded delay (Kafka replays, task retries).
-
-    State is one entry per id seen inside the horizon and is evicted as
-    the watermark advances — bounded by arrival rate × horizon, never by
-    stream lifetime (the plain ``dropDuplicates`` on a stream keeps ids
-    FOREVER, which is the scale trap this wrapper exists to avoid).
-    """
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(id_cols)
-    )
-
-
 def streaming_tiers(
     stream: DataFrame,
     store_path: str,

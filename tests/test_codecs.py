@@ -1,4 +1,4 @@
-"""Gorilla + delta-of-delta codec round-trip tests (property + known vectors
+"""Gorilla + grid-bitmap codec round-trip tests (property + known vectors
 + the Spark encode_chunks/decode_chunks surface)."""
 
 import numpy as np
@@ -8,6 +8,9 @@ from pyspark.sql import functions as F
 
 from symtseries_spark.operators import codecs as C
 
+MINUTE_US = 60_000_000
+T0 = 1_700_000_040_000_000  # on the 1m grid
+
 
 def test_clz_ctz():
     xs = np.array([0, 1, 2, 3, 0x8000000000000000, 0xFFFFFFFFFFFFFFFF, 1 << 32],
@@ -16,14 +19,16 @@ def test_clz_ctz():
     assert list(C._ctz64(xs)) == [64, 0, 1, 0, 63, 0, 32]
 
 
-def _split_ts_round_trip(chunks):
-    """dod-s bytes + decoded timestamps via the batch coders that
+def _ts_round_trip(chunks, step_us=MINUTE_US):
+    """bitmap payloads + decoded timestamps via the batch coders that
     encode_chunks / decode_chunks run."""
     chunks = [np.asarray(c, dtype=np.int64) for c in chunks]
     lens = np.array([len(c) for c in chunks])
     ends = np.cumsum(lens)
-    blobs = C._codes_timestamps_split_batch(np.concatenate(chunks), ends - lens, ends)
-    return blobs, C.decode_timestamps_split_batch(blobs, lens)
+    ts = np.concatenate(chunks)
+    payloads = C._codes_timestamps_bitmap_batch(ts, ends - lens, ends, step_us)
+    steps = np.full(len(chunks), step_us, dtype=np.int64)
+    return payloads, C.decode_timestamps_bitmap_batch(payloads, lens, ts[ends - lens], steps)
 
 
 def _split_values_round_trip(chunks):
@@ -36,27 +41,30 @@ def _split_values_round_trip(chunks):
 
 
 def test_timestamps_round_trip_regular():
-    ts = np.arange(0, 1440) * 60_000_000 + 1_700_000_000_000_000
-    (enc,), dec = _split_ts_round_trip([ts])
+    ts = np.arange(0, 1440) * MINUTE_US + T0
+    (enc,), dec = _ts_round_trip([ts])
     assert np.array_equal(dec, ts)
-    # regular cadence → dod==0 → 3 ctrl bits/point after the 16-byte header
-    assert len(enc) <= 556
+    # regular cadence → one presence bit per point, no header
+    assert len(enc.as_py()) <= 180
 
 
 def test_timestamps_round_trip_irregular():
-    """Negative deltas and dods beyond every class range (raw 64b escape)."""
+    """Irregular on-grid gaps (1 to 49 steps) round-trip exactly."""
     rng = np.random.RandomState(3)
-    deltas = rng.randint(-(10**12), 10**12, size=500)
-    ts = np.cumsum(np.concatenate([[1_700_000_000_000_000], deltas]))
-    assert (np.diff(ts) < 0).any()
-    _, dec = _split_ts_round_trip([ts])
+    hour_us = 3600 * 1_000_000
+    ts = T0 + hour_us * np.cumsum(np.concatenate([[0], rng.randint(1, 50, size=500)]))
+    _, dec = _ts_round_trip([ts], hour_us)
     assert np.array_equal(dec, ts)
 
 
 def test_timestamps_edge_sizes():
-    chunks = [[123], [123, 456], [0, 0, 0], [5, 4, 3, 100], [9, 2, 7, -4]]
-    _, dec = _split_ts_round_trip(chunks)
+    """Chunk sizes 1-4 mixed in one batch, with last points on both sides
+    of a byte boundary (slots 7 and 8)."""
+    slots = [[0], [0, 1], [0, 3, 7], [0, 1, 5, 8], [0, 2, 4, 6]]
+    chunks = [T0 + 86_400_000_000 * i + MINUTE_US * np.array(s) for i, s in enumerate(slots)]
+    payloads, dec = _ts_round_trip(chunks)
     assert np.array_equal(dec, np.concatenate(chunks))
+    assert [len(p) for p in payloads.to_pylist()] == [1, 1, 1, 2, 1]
 
 
 def test_values_round_trip_property():
@@ -128,6 +136,55 @@ def test_decode_chunks_rejects_unknown_codec(spark):
         C.decode_chunks(chunks).collect()
 
 
+@pytest.mark.parametrize(
+    "column, value, match",
+    [("n_points", "n_points + 1", r"has 5 points set but n_points=6"),
+     ("tier", "'5m'", r"unknown tier '5m'")],
+)
+def test_decode_chunks_rejects_tampered_rows(spark, column, value, match):
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    rollup = spark.createDataFrame(
+        [Row(key="a", bucket_ts=base + dt.timedelta(minutes=m), text_len_avg=1.0 * m)
+         for m in range(5)]
+    )
+    chunks = C.encode_chunks(rollup, "1m").withColumn(column, F.expr(value))
+    with pytest.raises(Exception, match=match):
+        C.decode_chunks(chunks).collect()
+
+
+@pytest.mark.parametrize(
+    "offsets_s", [[0, 60, 90, 120], [0, 60, 60, 120]], ids=["off_grid", "duplicate"]
+)
+def test_encode_chunks_rejects_off_grid_and_duplicate_ts(spark, offsets_s):
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    rollup = spark.createDataFrame(
+        [Row(key="a", bucket_ts=base + dt.timedelta(seconds=s), text_len_avg=1.0)
+         for s in offsets_s]
+    )
+    with pytest.raises(Exception, match=r"strictly increasing on a 60000000 µs grid"):
+        C.encode_chunks(rollup, "1m").collect()
+
+
+@pytest.mark.parametrize(
+    "tier, chunk_points, match",
+    [("5m", 1440, r"unknown tier '5m'; valid tiers: \['1d', '1h', '1m'\]"),
+     ("1m", 0, r"chunk_points must be an integer >= 1, got 0"),
+     ("1m", -3, r"chunk_points must be an integer >= 1, got -3")],
+)
+def test_encode_chunks_rejects_bad_arguments(spark, tier, chunk_points, match):
+    import datetime as dt
+
+    rollup = spark.createDataFrame(
+        [Row(key="a", bucket_ts=dt.datetime(2024, 1, 1), text_len_avg=1.0)]
+    )
+    with pytest.raises(ValueError, match=match):
+        C.encode_chunks(rollup, tier, chunk_points=chunk_points)
+
+
 def test_spark_chunk_round_trip(spark):
     import datetime as dt
 
@@ -147,7 +204,7 @@ def test_spark_chunk_round_trip(spark):
     rollup = spark.createDataFrame(rows)
     chunks = C.encode_chunks(rollup, "1m", "text_len_avg", chunk_points=64)
     cl = chunks.collect()
-    assert all(r.ts_codec == "dod-s" and r.val_codec == "gorilla-s" for r in cl)
+    assert all(r.ts_codec == "bitmap" and r.val_codec == "gorilla-s" for r in cl)
     assert sum(r.n_points for r in cl) == len(rows)
     decoded = C.decode_chunks(chunks)
     got = {
@@ -162,13 +219,11 @@ def test_spark_chunk_round_trip(spark):
 
 
 def test_split_codecs_batch_round_trip_property():
-    """gorilla-s / dod-s: many mixed-shape chunks decode in ONE vectorized
-    pass and round-trip exactly (incl. single-point, constant, huge-jump)."""
+    """gorilla-s / bitmap: many mixed-shape chunks decode in ONE vectorized
+    pass and round-trip exactly (incl. single-point, constant, huge-gap)."""
     from symtseries_spark.operators.codecs import (
-        _codes_timestamps_split,
         _codes_values_split,
         _pack_groups,
-        decode_timestamps_split_batch,
         decode_values_split_batch,
     )
 
@@ -185,35 +240,26 @@ def test_split_codecs_batch_round_trip_property():
     got = decode_values_split_batch(vp, ns)
     assert np.array_equal(got, np.concatenate(vchunks))
 
-    base = 1_700_000_000_000_000
     tchunks = []
     for n in [1, 2, 5, 500]:
-        deltas = rng.choice(
-            [60_000_000] * 8 + [120_000_000, 3_600_000_000, 61_234_567],
-            size=max(n - 1, 0),
-        )
-        tchunks.append(
-            (base + np.concatenate([[0], np.cumsum(deltas)]))[:n].astype(np.int64)
-        )
-    tchunks.append(np.array([0, 10**15, 10**15 + 1, 2 * 10**15], dtype=np.int64))
-    tp = _pack_groups([_codes_timestamps_split(t) for t in tchunks])
-    tn = np.array([len(t) for t in tchunks])
-    tgot = decode_timestamps_split_batch(tp, tn)
+        gaps = rng.choice([1] * 8 + [2, 60, 7], size=max(n - 1, 0))
+        tchunks.append(T0 + MINUTE_US * np.concatenate([[0], np.cumsum(gaps)]))
+    tchunks.append(T0 + MINUTE_US * np.array([0, 10**4, 10**4 + 1, 2 * 10**4]))
+    _, tgot = _ts_round_trip(tchunks)
     assert np.array_equal(tgot, np.concatenate(tchunks))
 
 
 def test_split_codec_roundtrip_hypothesis():
-    """Fuzz the split-layout codecs: decode∘encode must be the identity for
-    arbitrary float64 bit patterns (NaN payloads, ±inf, subnormals, ±0.0,
-    huge magnitudes, long equal runs) and µs timestamps whose deltas may
-    be negative."""
+    """Fuzz the codecs: decode∘encode must be the identity for arbitrary
+    float64 bit patterns (NaN payloads, ±inf, subnormals, ±0.0, huge
+    magnitudes, long equal runs) and for any sorted set of unique grid
+    slots of any tier."""
     from hypothesis import given, settings, strategies as st
 
+    from symtseries_spark.config import TIERS
     from symtseries_spark.operators.codecs import (
-        _codes_timestamps_split,
         _codes_values_split,
         _pack_groups,
-        decode_timestamps_split_batch,
         decode_values_split_batch,
     )
 
@@ -237,30 +283,26 @@ def test_split_codec_roundtrip_hypothesis():
 
     @settings(max_examples=200, deadline=None)
     @given(
-        st.lists(
-            st.integers(min_value=-(1 << 40), max_value=1 << 40),
-            min_size=1,
-            max_size=130,
-        ),
-        st.integers(min_value=0, max_value=1 << 50),
+        st.sets(st.integers(min_value=0, max_value=1 << 12), min_size=1, max_size=130),
+        st.integers(min_value=0, max_value=1 << 30),
+        st.sampled_from(sorted(TIERS.values())),
     )
-    def check_ts(deltas, t0):
-        ts = t0 + np.cumsum(np.asarray(deltas, dtype=np.int64))
-        blob = _pack_groups([_codes_timestamps_split(ts)])[0]
-        out = decode_timestamps_split_batch([blob], np.array([len(ts)]))
-        assert ts.tolist() == list(out)
+    def check_ts(slots, t0_steps, step_s):
+        step_us = step_s * 1_000_000
+        ts = (t0_steps + np.array(sorted(slots), dtype=np.int64)) * step_us
+        (blob,), out = _ts_round_trip([ts], step_us)
+        assert ts.tolist() == out.tolist()
+        assert len(blob.as_py()) == (ts[-1] - ts[0]) // step_us // 8 + 1
 
     check_values()
     check_ts()
 
 
 def test_batch_split_encoders_match_per_group():
-    """The cross-group batch encoders must be BIT-IDENTICAL to mapping the
-    per-group encoders over every (start, end) slice — randomized group
-    layouts, equal-run-heavy values, irregular timestamps."""
+    """The cross-group batch value encoder must be BIT-IDENTICAL to mapping
+    the per-group encoder over every (start, end) slice — randomized group
+    layouts, equal-run-heavy values."""
     from symtseries_spark.operators.codecs import (
-        _codes_timestamps_split,
-        _codes_timestamps_split_batch,
         _codes_values_split,
         _codes_values_split_batch,
         _pack_groups,
@@ -275,17 +317,10 @@ def test_batch_split_encoders_match_per_group():
         n = int(ends[-1])
         v = rng.randn(n)
         v[rng.rand(n) < 0.3] = 1.5
-        ts = np.cumsum(
-            rng.choice([60_000_000, 60_000_000, 61_000_000, 120_000_000, 1], size=n)
-        ).astype(np.int64)
         ref_v = _pack_groups(
             [_codes_values_split(v[s:e]) for s, e in zip(starts, ends)]
         )
         assert ref_v == _codes_values_split_batch(v, starts, ends)
-        ref_t = _pack_groups(
-            [_codes_timestamps_split(ts[s:e]) for s, e in zip(starts, ends)]
-        )
-        assert ref_t == _codes_timestamps_split_batch(ts, starts, ends)
 
 
 def test_decode_chunks_zero_rows(spark):
@@ -322,3 +357,25 @@ def test_decode_chunks_batch_of_keys_and_tiers(spark):
     got = C.decode_chunks(chunks).collect()
     assert len(got) == len(want)
     assert {(r.key, r.tier, r.bucket_ts): r.value for r in got} == want
+
+
+def test_perfbench_1m_tier_timestamps_cost_under_a_quarter_byte(monkeypatch):
+    """Size guard without Spark: perfbench's seed-1 1m tier, chunked one
+    (url, day) per chunk as run_pipeline does, costs at most 0.25 timestamp
+    bytes per point and round-trips exactly through the batch coders."""
+    import os
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+    import gen
+    import ingest
+
+    from symtseries_spark.config import EngineConfig
+
+    crawl = gen.Crawl(1, ingest.SIZE)
+    tier = gen.Reference(crawl, crawl.mask([-1])).tiers["1m"]
+    minute = tier["bucket"]  # sorted by (url, minute)
+    ts = (gen.BASE_EPOCH_S + 60 * minute) * 1_000_000
+    chunk = tier["url_idx"] * (1 << 32) + minute // EngineConfig().chunk_points
+    payloads, dec = _ts_round_trip(np.split(ts, np.flatnonzero(np.diff(chunk)) + 1))
+    assert np.array_equal(dec, ts)
+    assert len(payloads.buffers()[2]) / len(ts) <= 0.25

@@ -235,102 +235,6 @@ def test_stateful_words_per_append_emission(spark, tmp_path):
     assert len(got) == sum(len(v) for v in seq.values())
 
 
-def test_streaming_sessions_equals_batch_sessionize(spark, tmp_path):
-    """One availableNow epoch of streaming_sessions (native session_window)
-    over a file source must produce the same session set as the batch
-    sessionize + session_stats path on the same rows — same per-key
-    session bounds, counts, sums, durations."""
-    from symtseries_spark.operators.joins import session_stats, sessionize
-    from symtseries_spark.streaming.ingest import streaming_sessions
-
-    src = str(tmp_path / "sess_src")
-    base = dt.datetime(2024, 1, 1)
-    rng = np.random.RandomState(3)
-    rows = []
-    for key in ("a", "b"):
-        t = 0.0
-        for _ in range(60):
-            # a mix of intra-session (< 30 min) and session-breaking gaps;
-            # fractional seconds keep gaps off the exact 1800 s boundary
-            t += float(rng.choice([5.5, 120.25, 900.125, 2500.75]))
-            rows.append(
-                Row(key=key, ts=base + dt.timedelta(seconds=t),
-                    value=float(rng.randint(0, 10)))
-            )
-    _write_batches(spark, src, [rows[:70], rows[70:]])
-
-    stream = spark.readStream.schema(
-        "key string, ts timestamp, value double"
-    ).parquet(src)
-    agg = streaming_sessions(stream, "key", "ts", F.col("value"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sess_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["key"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["sum_v"], r["duration_s"]
-        )
-        for r in spark.sql("SELECT * FROM sess_sink").collect()
-    }
-
-    batch = session_stats(
-        sessionize(spark.read.parquet(src), "key", "ts", 1800.0), "key"
-    )
-    want = {
-        (r["key"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["sum_v"], r["duration_s"]
-        )
-        for r in batch.collect()
-    }
-    assert got == want
-    assert len(want) > 10  # the gap mix actually split sessions
-
-
-def test_streaming_dedup_drops_redeliveries(spark, tmp_path):
-    """Redelivered ids within the watermark horizon are dropped: the
-    deduped stream over files containing duplicates equals the batch
-    distinct-by-id set."""
-    from symtseries_spark.streaming.ingest import streaming_dedup
-
-    src = str(tmp_path / "dedup_src")
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        Row(event_id=i, ts=base + dt.timedelta(seconds=10 * i),
-            value=float(i))
-        for i in range(40)
-    ]
-    # second batch redelivers half of the first plus 10 new events
-    redelivered = rows[20:40] + [
-        Row(event_id=i, ts=base + dt.timedelta(seconds=10 * i),
-            value=float(i))
-        for i in range(40, 50)
-    ]
-    _write_batches(spark, src, [rows, redelivered])
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, value double"
-    ).parquet(src)
-    q = (
-        streaming_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = [
-        (r["event_id"], r["value"])
-        for r in spark.sql("SELECT * FROM dedup_sink").collect()
-    ]
-    assert len(got) == len(set(got)) == 50  # every id exactly once
-
-
 def test_streaming_tiers_converge_to_batch_rollup(spark, tmp_path):
     """Continuous-aggregate law: after each availableNow epoch (including
     a restart from checkpoint and late data revising an earlier bucket),
