@@ -27,8 +27,10 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -39,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from symtseries_spark.operators.rollup import rollup_cascade
 
 CHECKPOINT_SCHEMA = StructType(
     [
@@ -155,13 +159,15 @@ def _merge_tier(spark, updates: DataFrame, path: str, tier: str):
 
     ``updates`` is checkpointed FIRST, before anything else touches it:
     the updates plan is the expensive side (in a streaming epoch it is
-    the stateful aggregation itself), and the naive layout evaluated it
-    three times per epoch — an emptiness probe, the touched-dates
-    distinct, and the merged-rows checkpoint. One eager checkpoint up
-    front means the dates scan, the anti-join and the merged checkpoint
-    all read pinned rows, so the agg runs exactly once; the empty-epoch
-    case falls out of the (now-cheap) dates collect, no separate
-    isEmpty job needed."""
+    the stateful aggregation itself), so the touched-dates scan, the
+    anti-join and the merged checkpoint all read pinned rows and the agg
+    runs exactly once; the empty-epoch case falls out of the (now-cheap)
+    dates collect, no separate isEmpty job needed.
+
+    A store path that does not exist means "first write": the merged rows
+    are the updates alone. Any error reading an existing store (schema
+    drift, corrupt footer, ...) raises — merging ``updates`` alone would
+    silently drop every surviving old row in the touched partitions."""
     up = updates.localCheckpoint(eager=True)
     dates = [
         r["bucket_date"]
@@ -169,42 +175,21 @@ def _merge_tier(spark, updates: DataFrame, path: str, tier: str):
         .distinct()
         .collect()
     ]
-    if not dates:
-        return dates, None
-    from pyspark.errors import AnalysisException
-
-    try:
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col("tier") == tier)
-            .filter(F.col("bucket_date").isin(dates))  # partition prune
-            .drop("bucket_date")
-        )
-        survivors = existing.join(
-            up.select("key", "bucket_ts"), ["key", "bucket_ts"], "left_anti"
-        )
-        # checkpoint the merged rows too: the dynamic overwrite below must
-        # never read from the store path it is rewriting (the survivors
-        # side), and the re-cascade re-consumes them
-        merged = survivors.unionByName(up).localCheckpoint(eager=True)
-    except AnalysisException as e:
-        # ONLY a missing store means "first write". Any other analysis
-        # error (schema drift, corrupt footer, ...) must surface — merging
-        # `up` alone would silently drop every surviving old row in the
-        # touched partitions. The error-class/message match is belt; the
-        # filesystem existence probe is suspenders for Spark versions /
-        # locales whose missing-path error carries neither marker.
-        get_cls = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", lambda: None
-        )
-        err_cls = get_cls() or ""
-        missing = "PATH_NOT_FOUND" in str(err_cls) or "PATH_NOT_FOUND" in str(e)
-        if not missing and not err_cls:
-            missing = not _path_exists(spark, path)
-        if not missing:
-            raise
-        merged = up  # already checkpointed — first write is updates-only
-    return dates, merged
+    if not dates or not _path_exists(spark, path):
+        return dates, up
+    existing = (
+        spark.read.parquet(path)
+        .filter(F.col("tier") == tier)
+        .filter(F.col("bucket_date").isin(dates))  # partition prune
+        .drop("bucket_date")
+    )
+    survivors = existing.join(
+        up.select("key", "bucket_ts"), ["key", "bucket_ts"], "left_anti"
+    )
+    # checkpoint the merged rows too: the dynamic overwrite must never read
+    # from the store path it is rewriting (the survivors side), and the
+    # re-cascade re-consumes them
+    return dates, survivors.unionByName(up).localCheckpoint(eager=True)
 
 
 def upsert_tier(spark, updates: DataFrame, path: str, tier: str) -> list:
@@ -223,9 +208,42 @@ def upsert_tier(spark, updates: DataFrame, path: str, tier: str) -> list:
     by the watermark horizon — an epoch can only touch dates within it).
     """
     dates, merged = _merge_tier(spark, updates, path, tier)
-    if merged is not None:
+    if dates:
         write_partitioned(merged, path, tier)
     return dates
+
+
+def _mark(timings: dict | None, label: str, since: float) -> float:
+    now = time.time()
+    if timings is not None:
+        timings[label] = round(now - since, 3)
+    return now
+
+
+def write_coarse_tiers(
+    t1m: DataFrame, path: str, timings: dict | None = None
+) -> None:
+    """Derive the 1h and 1d tiers from pinned 1m rows and write them —
+    the one coarse-tier writer of the batch pipeline and the streaming
+    upsert.
+
+    1h reads 1m and 1d reads 1h (rollup.py), so only the 1h tier needs a
+    cache: it is persisted MEMORY_AND_DISK, its write fills the cache,
+    and the 1d cascade reads the cached rows. A lost cached block is
+    recomputed from lineage instead of failing the job.
+
+    ``timings``: optional dict; ``cascade_1h`` and ``cascade_1d`` get the
+    wall seconds of deriving plus writing that tier.
+    """
+    t1h = rollup_cascade(t1m, "1h").persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        t = time.time()
+        write_partitioned(t1h, path, "1h")
+        t = _mark(timings, "cascade_1h", t)
+        write_partitioned(rollup_cascade(t1h, "1d"), path, "1d")
+        _mark(timings, "cascade_1d", t)
+    finally:
+        t1h.unpersist()
 
 
 def upsert_tiers_increment(
@@ -239,56 +257,23 @@ def upsert_tiers_increment(
     1h/1d bucket spans a date boundary, rewriting whole affected date
     partitions is both correct and exactly partition-aligned.
 
-    Per-epoch job layout (the number that sets streaming throughput):
-    the merged 1m rows are localCheckpoint-ed ONCE and feed both the 1m
-    write and the 1h cascade — the store is never re-read within an
-    epoch — and each tier's write overlaps the next tier's cascade
-    compute (checkpointed inputs make concurrent consumption free):
+    Per-epoch job layout, in sequence: merge (the merged 1m rows are
+    localCheckpoint-ed once, so the store is never re-read within an
+    epoch) → write 1m → write_coarse_tiers (write 1h, filling its cache
+    → write 1d from the cache). A failure after the 1m write leaves
+    stale 1h/1d rows for the touched dates; replaying the increment
+    rewrites all three tiers.
 
-        merge(ckpt) → [write 1m ∥ cascade 1h(ckpt) → [write 1h ∥
-                       cascade 1d → write 1d]]
-
-    ``timings``: optional dict filled with per-phase wall seconds.
+    ``timings``: optional dict filled with per-phase wall seconds:
+    ``merge_1m``, ``writes_drain`` (the 1m write), ``cascade_1h`` and
+    ``cascade_1d`` (derive plus write of that tier) and ``total``.
     """
-    import time
-    from concurrent.futures import ThreadPoolExecutor
-
-    from symtseries_spark.operators.rollup import rollup_cascade
-
-    def _mark(label, since):
-        now = time.time()
-        if timings is not None:
-            timings[label] = round(now - since, 3)
-        return now
-
     t0 = time.time()
     dates, merged_1m = _merge_tier(spark, updates_1m, path, "1m")
-    t = _mark("merge_1m", t0)
+    t = _mark(timings, "merge_1m", t0)
     if not dates:
         return
-
-    sc = spark.sparkContext
-
-    def _write(df, tier):
-        # distinct FAIR pools let the overlapped write/cascade pairs
-        # interleave instead of queueing FIFO behind each other
-        sc.setLocalProperty("spark.scheduler.pool", f"upsert_{tier}")
-        try:
-            write_partitioned(df, path, tier)
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-
-    with ThreadPoolExecutor(2) as pool:
-        w1m = pool.submit(_write, merged_1m, "1m")
-        t1h = rollup_cascade(merged_1m, "1h").localCheckpoint(eager=True)
-        t = _mark("cascade_1h", t)
-        w1h = pool.submit(_write, t1h, "1h")
-        t1d = rollup_cascade(t1h, "1d").localCheckpoint(eager=True)
-        t = _mark("cascade_1d", t)
-        _write(t1d, "1d")
-        t = _mark("write_1d", t)
-        w1m.result()
-        w1h.result()
-    _mark("writes_drain", t)
-    if timings is not None:
-        timings["total"] = round(time.time() - t0, 3)
+    write_partitioned(merged_1m, path, "1m")
+    _mark(timings, "writes_drain", t)
+    write_coarse_tiers(merged_1m, path, timings)
+    _mark(timings, "total", t0)

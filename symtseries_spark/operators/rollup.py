@@ -38,18 +38,6 @@ def bucket_epoch(ts_col, tier: str):
     # under the engine's pinned UTC session both are the same µs→s division
     return (F.floor(F.unix_timestamp(col) / isec) * isec).cast("long")
 
-#: canonical rollup schema (FIXTURES.md §2) minus the key column
-ROLLUP_COLS = [
-    "tier",
-    "bucket_ts",
-    "crawl_cnt",
-    "text_len_sum",
-    "text_len_avg",
-    "cnt",
-    "sum",
-    "sumsq",
-]
-
 
 def rollup_raw(
     df: DataFrame,

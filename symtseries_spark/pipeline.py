@@ -11,6 +11,11 @@ levels. Stage layout (one shuffle each, all else map-side):
     → THREE concurrent jobs over it (FAIR pools):
         1h→1d cascades ∥ symbolize+index ∥ Gorilla chunks
 
+The cascades consumer is ``checkpoint.write_coarse_tiers``, the same
+coarse-tier writer the streaming upsert uses: the 1h write fills a
+MEMORY_AND_DISK cache of the 1h tier and the 1d tier is derived from it,
+in sequence within that one consumer thread.
+
 Handoff between the producer and the consumers: the sorted 1m tier is
 persisted (MEMORY_AND_DISK, pinned) and the 1m tier WRITE is the
 materializing action — one pass computes the rollup, fills the cache, and
@@ -39,7 +44,6 @@ from symtseries_spark import checkpoint as CP
 from symtseries_spark.config import EngineConfig
 from symtseries_spark.operators.codecs import encode_chunks
 from symtseries_spark.operators.index import build_index
-from symtseries_spark.operators.rollup import rollup_cascade
 from symtseries_spark.operators.skew import salted_rollup
 from symtseries_spark.operators.symbolize import symbolize_windows
 
@@ -172,7 +176,7 @@ def run_pipeline(
     _t = _mark("write_materialize_1m", _t)
     _warn_if_partial_cache(spark, t1m)
 
-    # The cascade chain, symbolization, and chunk encoding are independent
+    # The 1h→1d cascades, symbolization, and chunk encoding are independent
     # consumers of the materialized 1m tier — submit them as CONCURRENT
     # Spark jobs (threads share the SparkSession; the scheduler
     # interleaves their stages). This overlaps each job's serial phases
@@ -184,32 +188,10 @@ def run_pipeline(
     counts: dict[str, int] = {}
 
     def _cascades():
-        # the 1h tier is ~1/60 of 1m — materialize it ONCE (localCheckpoint
-        # pins the rows; concurrent consumers of a merely-persisted RDD
-        # would race to compute it), then the 1h WRITE and the 1d
-        # cascade+write overlap instead of running as four serial phases —
-        # this chain is the pipeline's weighted straggler (r4 verdict #5)
-        t1h = rollup_cascade(t1m, "1h").localCheckpoint(eager=True)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        def _w1h():
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "cascades_w1h"
-            )
-            try:
-                CP.write_partitioned(t1h, rollup_path, "1h")
-            finally:
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-
-        with _TPE(1) as _p:
-            fut = _p.submit(_w1h)
-            t1d = rollup_cascade(t1h, "1d")
-            CP.write_partitioned(t1d, rollup_path, "1d")
-            fut.result()
+        CP.write_coarse_tiers(t1m, rollup_path)
         # the 1m tier was written before the consumers started, so the
         # store holds all three tiers by the time this thread counts
-        for tier, n in _store_counts(spark, rollup_path, by="tier").items():
-            counts[tier] = n
+        counts.update(_store_counts(spark, rollup_path, by="tier"))
 
     def _index():
         sym = symbolize_windows(

@@ -32,12 +32,13 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-#: FAIR pool weights ∝ measured consumer work. The cascade chain — two
-#: dependent shuffles + two partitioned writes — is the longest critical
-#: path of the pipeline's consumer phase and straggled alone under a
-#: 1:2:3 split (3.6 s vs 2.7 s peers at local[32]); cascades-heavy
-#: weights bring the consumers' finishes within ~0.3 s of each other and
-#: cut the warm pipeline wall ~1.6×.
+#: FAIR pool weights ∝ measured consumer work. The cascades consumer
+#: (``checkpoint.write_coarse_tiers``: derive and write 1h, then derive
+#: and write 1d from the cached 1h rows, one after the other) is the
+#: longest dependent chain of the pipeline's consumer phase. An earlier
+#: layout of it straggled alone under a 1:2:3 split (3.6 s vs 2.7 s peers
+#: at local[32]); cascades-heavy weights brought the consumers' finishes
+#: within ~0.3 s of each other and cut the warm pipeline wall ~1.6×.
 POOL_WEIGHTS = {"cascades": 3, "index": 2, "chunks": 2}
 
 #: The directory holding the ``symtseries_spark`` package and the worker module.

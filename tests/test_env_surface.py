@@ -120,3 +120,26 @@ def test_engine_imports_only_names_it_uses():
         if names:
             unused[rel] = names
     assert not unused, f"imports nothing uses: {unused}"
+
+
+def test_local_checkpoint_only_at_allowed_sites():
+    """``localCheckpoint`` cuts lineage, so losing an executor that holds a
+    checkpointed block fails the job instead of recomputing it. Each
+    remaining call is listed here by (module, top-level function) with its
+    count; a cache that can be recomputed (``persist``) is the default."""
+    allowed = {
+        ("checkpoint.py", "_merge_tier"): 2,
+        (os.path.join("operators", "index.py"), "promote_words"): 1,
+    }
+    found = {}
+    for rel, tree in _engine_trees():
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    found[(rel, owner)] = found.get((rel, owner), 0) + 1
+    assert found == allowed

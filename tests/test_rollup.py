@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from symtseries_spark import checkpoint as CP
 from symtseries_spark.datagen import gen_crawl
-from symtseries_spark.operators.rollup import apply_retention, rollup_raw
+from symtseries_spark.operators.rollup import apply_retention, rollup_all_tiers, rollup_raw
 from symtseries_spark.operators.skew import salted_rollup
 from symtseries_spark.pipeline import run_pipeline
 from symtseries_spark.config import DEFAULT_RETENTION
@@ -77,6 +77,27 @@ def test_pipeline_end_to_end(spark, crawl, tmp_path):
         src, "warc_ts", CP.latest_watermarks(CP.read_checkpoints(spark, cp)), "1m"
     )
     assert filt.count() == 0
+
+
+def test_pipeline_coarse_tiers_equal_rollup_all_tiers(spark, crawl, tmp_path):
+    """run_pipeline's stored 1h and 1d rows equal rollup_all_tiers on the
+    same crawl: counts exactly, sum and sumsq within 1e-9 relative."""
+    out = str(tmp_path / "out_coarse")
+    run_pipeline(spark, crawl, out_dir=out)
+    stored = spark.read.parquet(f"{out}/rollup")
+    want = rollup_all_tiers(crawl, "url", "warc_ts", F.length("text"))
+    for tier in ("1h", "1d"):
+        got = {
+            (r.key, r.bucket_ts): r
+            for r in stored.filter(F.col("tier") == tier).collect()
+        }
+        exp = {(r.key, r.bucket_ts): r for r in want[tier].collect()}
+        assert exp and got.keys() == exp.keys(), tier
+        for k, e in exp.items():
+            g = got[k]
+            assert (g.crawl_cnt, g.cnt) == (e.crawl_cnt, e.cnt), (tier, k)
+            assert g.sum == pytest.approx(e.sum, rel=1e-9), (tier, k)
+            assert g.sumsq == pytest.approx(e.sumsq, rel=1e-9), (tier, k)
 
 
 def test_pipeline_rerun_idempotent(spark, crawl, tmp_path):

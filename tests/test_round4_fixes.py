@@ -123,7 +123,7 @@ def test_train_centroids_sample_capped(spark):
 
 
 # ---------------------------------------------------------------------------
-# upsert_tier: only PATH_NOT_FOUND means "first write"; schema drift raises
+# upsert_tier: only a missing store path means "first write"; schema drift raises
 # ---------------------------------------------------------------------------
 
 

@@ -312,3 +312,78 @@ def test_streaming_tiers_converge_to_batch_rollup(spark, tmp_path):
     _write_batches(spark, src, [batch2])
     _run_epoch()  # restart from checkpoint, processes only batch2 files
     assert _store_state() == _batch_state(batch1 + batch2)
+
+
+def test_upsert_replay_after_failed_1h_write_converges(spark, tmp_path, monkeypatch):
+    """Replay law for a failure between the 1m and the 1h write: the
+    increment's 1m rows are stored, its 1h/1d rows are stale, and replaying
+    the same increment converges the store to rollup_all_tiers over every
+    input. The 1h tier handed to the writer is cached (not checkpointed),
+    and the failure releases the cache."""
+    from pyspark import StorageLevel
+
+    from symtseries_spark import checkpoint as CP
+    from symtseries_spark.operators.rollup import rollup_all_tiers, rollup_raw
+
+    store = str(tmp_path / "store")
+    base = dt.datetime(2024, 1, 1)
+    inc_a = [("a", 10, 1.0), ("a", 3700, 3.0), ("b", 20, 5.0)]
+    # new minutes in A's hours, a second date and a new key
+    inc_b = [("a", 70, 2.0), ("a", 3760, 4.0), ("b", 90000, 7.0), ("c", 30, 9.0)]
+
+    def _raw(spec):
+        return spark.createDataFrame(
+            [Row(key=k, ts=base + dt.timedelta(seconds=s), value=v) for k, s, v in spec]
+        )
+
+    def _increment(spec):
+        return rollup_raw(_raw(spec), "key", "ts", F.col("value"), "1m")
+
+    def _state(tiers):
+        return {
+            (tier, r["key"], r["bucket_ts"]): (r["crawl_cnt"], r["cnt"], r["sum"], r["sumsq"])
+            for tier, df in tiers.items()
+            for r in df.collect()
+        }
+
+    def _stored():
+        got = spark.read.parquet(store)
+        return _state({t: got.filter(F.col("tier") == t) for t in ("1m", "1h", "1d")})
+
+    def _want(spec):
+        return _state(rollup_all_tiers(_raw(spec), "key", "ts", F.col("value")))
+
+    def _assert_equal(got, want):
+        assert got.keys() == want.keys()
+        for k, (crawl_cnt, cnt, s, ss) in want.items():
+            g = got[k]
+            assert (g[0], g[1]) == (crawl_cnt, cnt), k
+            assert g[2] == pytest.approx(s, rel=1e-9) and g[3] == pytest.approx(ss, rel=1e-9), k
+
+    CP.upsert_tiers_increment(spark, _increment(inc_a), store)
+
+    real = CP.write_partitioned
+    failed = []
+
+    def fail_1h_once(df, path, tier, *args, **kwargs):
+        if tier == "1h" and not failed:
+            failed.append(df)
+            assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
+            raise RuntimeError("injected 1h write failure")
+        return real(df, path, tier, *args, **kwargs)
+
+    monkeypatch.setattr(CP, "write_partitioned", fail_1h_once)
+    with pytest.raises(RuntimeError, match="injected 1h write failure"):
+        CP.upsert_tiers_increment(spark, _increment(inc_b), store)
+    assert failed[0].storageLevel == StorageLevel.NONE
+
+    # the failure point is deterministic: 1m holds both increments, 1h/1d
+    # still hold only the first
+    stored, both, first = _stored(), _want(inc_a + inc_b), _want(inc_a)
+    _assert_equal({k: v for k, v in stored.items() if k[0] == "1m"},
+                  {k: v for k, v in both.items() if k[0] == "1m"})
+    _assert_equal({k: v for k, v in stored.items() if k[0] != "1m"},
+                  {k: v for k, v in first.items() if k[0] != "1m"})
+
+    CP.upsert_tiers_increment(spark, _increment(inc_b), store)
+    _assert_equal(_stored(), both)
