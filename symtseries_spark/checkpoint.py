@@ -151,11 +151,13 @@ def _path_exists(spark, path: str) -> bool:
 
 
 def _merge_tier(spark, updates: DataFrame, path: str, tier: str):
-    """The merge half of upsert_tier: returns (dates, merged) where
-    ``merged`` is the FULL post-merge content of the touched partitions,
-    localCheckpoint-ed (eager) so it can be written AND re-consumed (the
-    1h/1d re-cascade) without re-reading the store or replaying the
-    epoch's aggregation.
+    """Merge changed (key, bucket) rows into a tier: returns (dates,
+    merged) where ``merged`` is the FULL post-merge content of the touched
+    (tier, bucket_date) partitions — surviving old rows (anti-join on
+    (key, bucket_ts)) ∪ updates — localCheckpoint-ed (eager) so it can
+    be written AND re-consumed (the 1h/1d re-cascade) without re-reading
+    the store or replaying the epoch's aggregation. ``dates`` is bounded
+    by the watermark horizon: an epoch only touches dates within it.
 
     ``updates`` is checkpointed FIRST, before anything else touches it:
     the updates plan is the expensive side (in a streaming epoch it is
@@ -190,27 +192,6 @@ def _merge_tier(spark, updates: DataFrame, path: str, tier: str):
     # from the store path it is rewriting (the survivors side), and the
     # re-cascade re-consumes them
     return dates, survivors.unionByName(up).localCheckpoint(eager=True)
-
-
-def upsert_tier(spark, updates: DataFrame, path: str, tier: str) -> list:
-    """Merge changed (key, bucket) rows into the partitioned tier store —
-    the write half of CONTINUOUS-aggregate maintenance: ``updates``
-    carries the current aggregate rows for the buckets an increment
-    touched (e.g. one streaming epoch in update mode), and only the
-    affected (tier, bucket_date) partitions are rewritten.
-
-    New partition content = surviving old rows (anti-join on
-    (key, bucket_ts)) ∪ updates; dynamic partition overwrite leaves every
-    untouched date alone. The merged rows are localCheckpoint-ed first so
-    the overwrite never reads from the path it is rewriting.
-
-    Returns the list of affected bucket_date values (driver-side, bounded
-    by the watermark horizon — an epoch can only touch dates within it).
-    """
-    dates, merged = _merge_tier(spark, updates, path, tier)
-    if dates:
-        write_partitioned(merged, path, tier)
-    return dates
 
 
 def _mark(timings: dict | None, label: str, since: float) -> float:

@@ -19,7 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from symtseries_spark.operators.rollup import bucket_epoch
+from symtseries_spark.operators.rollup import (
+    bucket_epoch,
+    bucket_start,
+    merged_partials,
+    partials,
+    tier_rows,
+)
 
 
 def salted_rollup(
@@ -46,8 +52,6 @@ def salted_rollup(
     ≤S partials per bucket exactly, so the result equals the unsalted
     rollup whatever the key distribution.
     """
-    v = value_expr.cast("double")
-    ts_type = df.schema[ts_col].dataType.simpleString()
     # keep window()'s implicit ts-not-null semantics + scan pushdown
     df = df.filter(F.col(ts_col).isNotNull())
     # per-TASK-constant salt: every row in a map task shares one salt, so
@@ -71,32 +75,9 @@ def salted_rollup(
             bucket_epoch(ts_col, tier).alias("_bsec"),
             "_salt",
         )
-        .agg(
-            F.count(F.lit(1)).alias("crawl_cnt"),
-            F.sum(v).alias("sum"),
-            F.count(v).alias("cnt"),
-            F.sum(v * v).alias("sumsq"),
-        )
+        .agg(*partials(value_expr.cast("double")))
     )
     if cluster_by_key:
         phase1 = phase1.repartition("key")
-    return (
-        phase1.groupBy("key", "_bsec")
-        .agg(
-            F.sum("crawl_cnt").alias("crawl_cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("cnt").alias("cnt"),
-            F.sum("sumsq").alias("sumsq"),
-        )
-        .select(
-            "key",
-            F.lit(tier).alias("tier"),
-            F.timestamp_seconds(F.col("_bsec")).cast(ts_type).alias("bucket_ts"),
-            "crawl_cnt",
-            F.col("sum").cast("long").alias("text_len_sum"),
-            (F.col("sum") / F.col("cnt")).alias("text_len_avg"),
-            "cnt",
-            "sum",
-            "sumsq",
-        )
-    )
+    phase2 = phase1.groupBy("key", "_bsec").agg(*merged_partials())
+    return tier_rows(phase2, tier, bucket_start(df.schema[ts_col].dataType))

@@ -1,12 +1,14 @@
 """The engine's configuration and import surface: it reads only deployment
 settings from the environment, every EngineConfig field it declares, and
-every name it imports.
+every name it imports, and every function or class it defines has a
+caller outside the tests.
 
 Experiment switches read from the environment (A/B knobs, alternative
 execution paths) multiply the configurations tests and benchmarks must
-cover, a config field nothing reads is a knob that does nothing, and an
-import nothing uses outlives the code it served; these scans make each
-fail loudly instead of landing unnoticed.
+cover, a config field nothing reads is a knob that does nothing, an
+import nothing uses outlives the code it served, and a definition only
+tests call is code nothing runs; these scans make each fail loudly
+instead of landing unnoticed.
 """
 
 import ast
@@ -143,3 +145,70 @@ def test_local_checkpoint_only_at_allowed_sites():
                 ):
                     found[(rel, owner)] = found.get((rel, owner), 0) + 1
     assert found == allowed
+
+
+# Top-level engine definitions that no Python file outside tests/ names,
+# with the reason each stays. The list may only shrink: a name leaves it
+# when it gains a caller or is deleted.
+UNREFERENCED_ALLOWED = {
+    "_pack_groups": "codec building block the codec round-trip tests call",
+    "_codes_values_split": "codec building block the codec round-trip tests call",
+    "pair_sums_by_key": "pair-sum operator, called by test_round5_fixes",
+    "mindist_pair_udf": "pairwise mindist UDF, called by test_round4/5_fixes",
+    "lsh_topk": "LSH similarity search, called by test_textops",
+    "ivf_topk": "IVF similarity search, called by test_textops",
+    "train_centroids": "IVF centroid training, called by test_textops/round4_fixes",
+    "TableIO": "public table I/O API, covered by test_io",
+    "assert_plan": "public plan-shape assertion, used by test_plans",
+    "exact_candidates": "public exact-candidate API, covered by test_index",
+    "range_query": "public approximate range API, covered by test_index/test_plans",
+    "lower_bound_scan": "public lower-bound scan API, covered by test_index",
+    "analyze_documents": "public text-analysis API, covered by test_textops",
+    "middle_symbol": "public kernel helper, covered by test_kernel",
+    "write_crawl": "called from code held in a string in scripts/scaling_bench.py",
+}
+
+
+def _top_level_definitions():
+    """Yield (module, name) per top-level function or class of the engine."""
+    for rel, tree in _engine_trees():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                yield rel, node.name
+
+
+def _names_referenced_outside_tests():
+    """Every name read, attribute accessed or name imported in a Python
+    file of the repository that is not under tests/ (the defining module
+    included)."""
+    names = set()
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if d != "tests" and not d.startswith(".")]
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name):
+                    names.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    names.add(node.attr)
+                elif isinstance(node, ast.alias):
+                    names.add(node.name.rsplit(".", 1)[-1])
+    return names
+
+
+def test_engine_definitions_are_referenced_outside_tests():
+    """A top-level engine function or class that only tests name is code
+    nothing runs; it must be deleted or listed, with its reason, in
+    ``UNREFERENCED_ALLOWED``."""
+    referenced = _names_referenced_outside_tests()
+    unreferenced = {
+        name: rel for rel, name in _top_level_definitions() if name not in referenced
+    }
+    assert set(unreferenced) == set(UNREFERENCED_ALLOWED), {
+        "not referenced outside tests": sorted(set(unreferenced) - set(UNREFERENCED_ALLOWED)),
+        "allowed but now referenced or gone": sorted(set(UNREFERENCED_ALLOWED) - set(unreferenced)),
+    }

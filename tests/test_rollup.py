@@ -1,6 +1,7 @@
 """Rollup pipeline tests: salted == unsalted (exactness under skew),
-retention, checkpoint resume idempotence, text byte-identity, pipeline
-end-to-end metrics."""
+cascade == direct rollup, one tier-row schema for every rollup, retention,
+checkpoint resume idempotence, text byte-identity, pipeline end-to-end
+metrics."""
 
 import datetime as dt
 
@@ -9,7 +10,12 @@ from pyspark.sql import functions as F
 
 from symtseries_spark import checkpoint as CP
 from symtseries_spark.datagen import gen_crawl
-from symtseries_spark.operators.rollup import apply_retention, rollup_all_tiers, rollup_raw
+from symtseries_spark.operators.rollup import (
+    apply_retention,
+    rollup_all_tiers,
+    rollup_cascade,
+    rollup_raw,
+)
 from symtseries_spark.operators.skew import salted_rollup
 from symtseries_spark.pipeline import run_pipeline
 from symtseries_spark.config import DEFAULT_RETENTION
@@ -34,6 +40,86 @@ def test_salted_equals_unsalted(spark, crawl):
     plain = rollup_raw(crawl, "url", "warc_ts", F.length("text"), "1m")
     salted = salted_rollup(crawl, "url", "warc_ts", F.length("text"), "1m")
     assert _canon(plain) == _canon(salted)
+
+
+def test_cascade_equals_direct_rollup_law(spark):
+    """The 1m → 1h → 1d cascade equals the direct rollup at 1h and 1d on
+    all 9 tier-row columns, exactly. Values are multiples of 1/4 or null,
+    so every double sum is exact in any order; ``text_len_sum`` must
+    truncate the merged sum, not sum the finer tier's truncated sums."""
+    from hypothesis import Phase, example, given, seed, settings, strategies as st
+
+    base = dt.datetime(2024, 1, 1)
+    row = st.tuples(
+        st.sampled_from("ab"),
+        # seconds into four hours over two dates, so buckets share hours
+        st.tuples(
+            st.sampled_from([0, 1, 23, 24]), st.integers(min_value=0, max_value=3599)
+        ).map(lambda hs: hs[0] * 3600 + hs[1]),
+        st.one_of(
+            st.none(), st.integers(min_value=-400, max_value=400).map(lambda k: k / 4)
+        ),
+    )
+
+    def by_bucket(df):
+        return {(r.key, r.bucket_ts): tuple(r) for r in df.collect()}
+
+    @seed(1)
+    @settings(
+        max_examples=10,
+        deadline=None,
+        database=None,
+        phases=(Phase.explicit, Phase.generate),  # no shrinking: examples run Spark jobs
+    )
+    @given(st.lists(row, min_size=10, max_size=300))
+    # two 1m buckets of 0.5: each truncates to 0, their 1h bucket to 1
+    @example([("a", 0, 0.5), ("a", 60, 0.5)])
+    def check(spec):
+        df = spark.createDataFrame(
+            [(k, base + dt.timedelta(seconds=s), v) for k, s, v in spec],
+            "key string, ts timestamp, value double",
+        )
+        cascaded = rollup_all_tiers(df, "key", "ts", F.col("value"))
+        for tier in ("1h", "1d"):
+            direct = rollup_raw(df, "key", "ts", F.col("value"), tier)
+            assert by_bucket(cascaded[tier]) == by_bucket(direct), tier
+
+    check()
+
+
+def test_every_rollup_emits_one_tier_row_schema(spark, tmp_path):
+    """rollup_raw, salted_rollup (with and without cluster_by_key),
+    rollup_cascade and streaming_rollup return the same column names and
+    types: the tier row of operators.rollup.tier_rows."""
+    from symtseries_spark.streaming.ingest import streaming_rollup
+
+    df = spark.createDataFrame(
+        [("a", dt.datetime(2024, 1, 1, 0, 0, 5), 1.0)],
+        "key string, ts timestamp, value double",
+    )
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    v = F.col("value")
+    t1m = rollup_raw(df, "key", "ts", v)
+    outs = {
+        "rollup_raw": t1m,
+        "salted_rollup": salted_rollup(df, "key", "ts", v),
+        "salted_rollup(cluster_by_key)": salted_rollup(df, "key", "ts", v, cluster_by_key=True),
+        "rollup_cascade": rollup_cascade(t1m, "1h"),
+        "streaming_rollup": streaming_rollup(stream, "key", "ts", v),
+    }
+    schemas = {
+        name: [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
+        for name, out in outs.items()
+    }
+    assert schemas["rollup_raw"] == [
+        ("key", "string"), ("tier", "string"), ("bucket_ts", "timestamp"),
+        ("crawl_cnt", "bigint"), ("text_len_sum", "bigint"),
+        ("text_len_avg", "double"), ("cnt", "bigint"), ("sum", "double"),
+        ("sumsq", "double"),
+    ]
+    assert {n: s for n, s in schemas.items() if s != schemas["rollup_raw"]} == {}
 
 
 def test_retention(spark, crawl):

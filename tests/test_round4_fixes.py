@@ -1,12 +1,10 @@
 """Round-4 regression tests: ADVICE fixes (as-of NULL keys, connected-
 components endpoint coverage, mixed-width pair mindist, checkpoint
-exception narrowing) and VERDICT items (bounded centroid sample,
-stateful-words idle-key eviction law)."""
+exception narrowing) and VERDICT items (bounded centroid sample)."""
 
 import datetime as dt
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -123,120 +121,36 @@ def test_train_centroids_sample_capped(spark):
 
 
 # ---------------------------------------------------------------------------
-# upsert_tier: only a missing store path means "first write"; schema drift raises
+# tier upsert: only a missing store path means "first write"; schema drift raises
 # ---------------------------------------------------------------------------
 
 
 def _updates(spark):
-    return spark.createDataFrame(
-        [
-            Row(
-                key="k1",
-                tier="1m",
-                bucket_ts=dt.datetime(2024, 1, 1, 0, 0),
-                value_avg=1.0,
-            )
-        ]
+    """One full 1m tier row."""
+    from symtseries_spark.operators.rollup import rollup_raw
+
+    raw = spark.createDataFrame(
+        [Row(key="k1", ts=dt.datetime(2024, 1, 1, 0, 0, 5), value=1.0)]
     )
+    return rollup_raw(raw, "key", "ts", F.col("value"), "1m")
 
 
 def test_upsert_tier_first_write_then_schema_drift(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
-    from symtseries_spark.checkpoint import upsert_tier
+    from symtseries_spark.checkpoint import upsert_tiers_increment
 
     store = str(tmp_path / "tier_store")
-    # missing store → first write succeeds
-    dates = upsert_tier(spark, _updates(spark), store, "1m")
-    assert dates == [dt.date(2024, 1, 1)]
-    assert spark.read.parquet(store).count() == 1
+    # missing store → first write of every tier succeeds
+    upsert_tiers_increment(spark, _updates(spark), store)
+    got = spark.read.parquet(store)
+    assert {(r.tier, r.bucket_date, r.cnt) for r in got.collect()} == {
+        (tier, dt.date(2024, 1, 1), 1) for tier in ("1m", "1h", "1d")
+    }
 
     # a store whose schema lacks the contract columns must RAISE, not be
     # silently treated as first-write (that would drop surviving rows)
     drifted = str(tmp_path / "drifted_store")
     spark.createDataFrame([Row(x=1)]).write.parquet(drifted)
     with pytest.raises(AnalysisException):
-        upsert_tier(spark, _updates(spark), drifted, "1m")
-
-
-# ---------------------------------------------------------------------------
-# stateful_words idle-key eviction law (sts_reset_window semantics)
-# ---------------------------------------------------------------------------
-
-
-class FakeGroupState:
-    """Minimal stand-in for pyspark GroupState: just the surface
-    make_word_updater touches."""
-
-    def __init__(self):
-        self._val = None
-        self.hasTimedOut = False
-        self.timeout_ms = None
-
-    @property
-    def exists(self):
-        return self._val is not None
-
-    @property
-    def get(self):
-        if self._val is None:
-            raise ValueError("state does not exist")
-        return self._val
-
-    def update(self, v):
-        self._val = v
-
-    def remove(self):
-        self._val = None
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
-
-def _batch(vals, start_s=0):
-    return pd.DataFrame(
-        {
-            "ts": pd.to_datetime(
-                [dt.datetime(2024, 1, 1, 0, 0, start_s + i) for i in range(len(vals))]
-            ),
-            "value": [float(v) for v in vals],
-        }
-    )
-
-
-def test_stateful_words_eviction_reenters_fresh(spark):
-    from symtseries_spark.streaming.ingest import make_word_updater
-
-    n, w, c = 4, 2, 4
-    upd = make_word_updater(n, w, c, idle_timeout_ms=60_000)
-
-    st = FakeGroupState()
-    out1 = list(upd(("k",), iter([_batch([1.0, 2.0, 3.0, 4.0])]), st))
-    assert st.exists and st.timeout_ms == 60_000
-    assert out1[0]["n_seen"].iloc[0] == 4
-
-    # timeout fires: state removed, nothing emitted
-    st.hasTimedOut = True
-    out2 = list(upd(("k",), iter([]), st))
-    assert out2 == [] and not st.exists
-
-    # the key re-enters as a FRESH all-NaN window: identical output to a
-    # never-seen key fed the same batch
-    st.hasTimedOut = False
-    out3 = list(upd(("k",), iter([_batch([5.0, 6.0], start_s=10)]), st))
-    fresh = FakeGroupState()
-    out4 = list(upd(("x",), iter([_batch([5.0, 6.0], start_s=10)]), fresh))
-    assert out3[0]["word"].iloc[0] == out4[0]["word"].iloc[0]
-    assert out3[0]["n_seen"].iloc[0] == 2  # counter restarted
-    # and the ring matches symbolize([NaN, NaN, 5, 6])
-    ring = np.array(st.get[0])
-    assert np.isnan(ring[:2]).all() and list(ring[2:]) == [5.0, 6.0]
-
-
-def test_stateful_words_no_timeout_keeps_state(spark):
-    from symtseries_spark.streaming.ingest import make_word_updater
-
-    upd = make_word_updater(4, 2, 4, idle_timeout_ms=None)
-    st = FakeGroupState()
-    list(upd(("k",), iter([_batch([1.0, 2.0])]), st))
-    assert st.exists and st.timeout_ms is None
+        upsert_tiers_increment(spark, _updates(spark), drifted)

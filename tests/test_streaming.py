@@ -1,16 +1,14 @@
-"""Structured Streaming tests: watermarked rollup and per-key stateful SAX
-words, driven by a file source in micro-batches."""
+"""Structured Streaming tests: the watermarked rollup and the streamed tier
+store, driven by a file source in micro-batches."""
 
 import datetime as dt
-import math
 
 import numpy as np
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from symtseries_spark import kernel as K
-from symtseries_spark.streaming.ingest import stateful_words, streaming_rollup
+from symtseries_spark.streaming.ingest import streaming_rollup
 
 
 def _write_batches(spark, path, batches):
@@ -118,121 +116,6 @@ def test_streaming_rollup_equals_batch_rollup(spark, tmp_path):
                 assert gg is None
             else:
                 assert gg == pytest.approx(ee, rel=1e-12), k
-
-
-def test_stateful_words_matches_batch_law(spark, tmp_path):
-    """Streaming per-key ring words == batch symbolization of the trailing n
-    values (the reference's window==batch equivalence law), across multiple
-    micro-batches."""
-    src = str(tmp_path / "word_src")
-    n, w, c = 8, 4, 4
-    base = dt.datetime(2024, 1, 1)
-    rng = np.random.RandomState(2)
-    all_vals = {"a": [], "b": []}
-
-    batches = []
-    for b in range(3):
-        rows = []
-        for key in ("a", "b"):
-            for j in range(3):  # 3 values per key per batch
-                v = float(np.round(rng.normal(), 3))
-                all_vals[key].append(v)
-                rows.append(
-                    Row(
-                        key=key,
-                        ts=base + dt.timedelta(minutes=b * 10 + j),
-                        value=v,
-                    )
-                )
-        batches.append(rows)
-
-    _write_batches(spark, src, batches[:1])
-    stream = spark.readStream.schema(
-        "key string, ts timestamp, value double"
-    ).parquet(src)
-    words = stateful_words(stream, n, w, c)
-    q = (
-        words.writeStream.format("memory")
-        .queryName("words_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    _write_batches(spark, src, batches[1:])
-    q2 = (
-        words.writeStream.format("memory")
-        .queryName("words_sink_final")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-
-    final = {
-        r.key: r
-        for r in spark.sql(
-            "select * from words_sink_final"
-        ).collect()
-    }
-    for key in ("a", "b"):
-        vals = all_vals[key]
-        # trailing-n with NaN left-padding (ring started all-NaN)
-        tail = np.full(n, np.nan)
-        take = vals[-n:]
-        tail[n - len(take):] = take
-        expect = K.symbols_to_string(K.symbolize(tail, w, c), c)
-        assert final[key].word == expect
-        assert final[key].n_seen == 9
-
-
-def test_stateful_words_per_append_emission(spark, tmp_path):
-    """emit='append' returns the word after EVERY appended value — the
-    reference's sts_append_value return contract (symtseries.c:481-492) —
-    matching a sequential reference replay across micro-batches."""
-    src = str(tmp_path / "word_src_append")
-    n, w, c = 8, 4, 4
-    base = dt.datetime(2024, 1, 1)
-    rng = np.random.RandomState(6)
-    seq = {"a": [], "b": []}
-    batches = []
-    for b in range(3):
-        rows = []
-        for key in ("a", "b"):
-            for j in range(3):
-                v = float(np.round(rng.normal(), 3))
-                seq[key].append(v)
-                rows.append(
-                    Row(key=key, ts=base + dt.timedelta(minutes=b * 10 + j),
-                        value=v)
-                )
-        batches.append(rows)
-    _write_batches(spark, src, batches)
-
-    stream = spark.readStream.schema(
-        "key string, ts timestamp, value double"
-    ).parquet(src)
-    words = stateful_words(stream, n, w, c, emit="append")
-    q = (
-        words.writeStream.format("memory")
-        .queryName("append_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.key, r.n_seen): r.word
-        for r in spark.sql("select * from append_sink").collect()
-    }
-    # sequential reference replay: ring starts all-NaN, word after each append
-    for key, vals in seq.items():
-        ring = np.full(n, np.nan)
-        for i, v in enumerate(vals):
-            ring = np.concatenate([ring[1:], [v]])
-            expect = K.symbols_to_string(K.symbolize(ring, w, c), c)
-            assert got[(key, i + 1)] == expect, (key, i + 1)
-    assert len(got) == sum(len(v) for v in seq.values())
 
 
 def test_streaming_tiers_converge_to_batch_rollup(spark, tmp_path):
