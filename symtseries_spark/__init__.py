@@ -3,7 +3,7 @@
 A from-scratch Spark-first engine with the query and data-processing
 capabilities of trink/symtseries v0.5.0 (SAX/iSAX symbolization + mindist),
 extended per the north rule with continuous-aggregate rollup tiers
-(1m/1h/1d), gap-fill, Gorilla/grid-bitmap compression, an iSAX-word
+(1m/1h/1d), gap-fill, decimal/grid-bitmap compression, an iSAX-word
 inverted index, checkpoint/lineage, and web-scale text-pipeline operators
 (dedup, similarity search, text analysis, multimodal plumbing).
 """

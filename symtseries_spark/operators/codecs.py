@@ -1,30 +1,35 @@
-"""Gorilla XOR value compression + grid-bitmap timestamp compression.
-
-Values follow the Facebook Gorilla scheme (Pelkonen et al., "Gorilla: A
-Fast, Scalable, In-Memory Time Series Database", VLDB 2015 — public paper)
-in a split layout: the paper's control bits, headers and payloads are the
-same codes, but each kind lives in its own section of the chunk, so every
-field offset is a prefix sum instead of a sequential cursor walk.
+"""Decimal frame-of-reference value compression + grid-bitmap timestamp
+compression.
 
 Timestamps ("bitmap", one presence bit per step of the tier's grid):
   bit i (MSB-first) is set when the chunk has a point at chunk_start_ts +
   i · TIERS[tier] seconds; the payload ends at the byte holding the last
   point and has no header (tier and chunk_start_ts are chunk columns).
-  Like Gorilla, it codes timestamps at the grain of the data, not the
-  clock: a regular series costs 1 bit per point. A bitmap costs span/8
-  bytes whatever the density: the sf0.01 events 1m tier (2.5 points per
-  day chunk; no caller encodes it) would cost 24.8 B/pt.
+  It codes timestamps at the grain of the data, not the clock: a regular
+  series costs 1 bit per point. A bitmap costs span/8 bytes whatever the
+  density: the sf0.01 events 1m tier (2.5 points per day chunk; no caller
+  encodes it) would cost 24.8 B/pt.
 
-Values ("gorilla-s", XOR of consecutive float64 bit patterns):
-  [u0: 64b] [ctrl: (n-1) × 1b nonzero-xor flags]
-  [headers: K × 11b (5b leading zeros | 6b meaningful bits - 1)]
-  [payloads: K × meaningful bits]
+Values ("decimal-for", one layout, zero-padded to a byte):
+  [e: 5b] [w: 7b] [base: 64b two's complement] [n_points × w-bit offsets]
+  value i = float64(base + offset_i) / 10.0**e  (a division: 10**-e is
+  inexact, 10**e is exact for e ≤ 22). The encoder picks the smallest e in
+  0..E_MAX for which every value of the chunk round-trips bit for bit
+  through that formula, with q = rint(v·10^e) and |q| < 2^62; base is
+  min q and w the bit length of max q − min q. A chunk with no such e
+  (NaN, ±Inf, −0.0, subnormals, arbitrary doubles) stores e = RAW_E,
+  base = 0, w = 64 and the IEEE-754 bit patterns as offsets. This is the
+  decimal scheme of ALP (Afroozeh et al., "ALP: Adaptive Lossless
+  floating-Point Compression", SIGMOD 2023) without its second scheme:
+  rollup averages of integer lengths are mostly whole numbers or halves,
+  which cost a few bits each.
 
 Both codecs are vectorized over every chunk of an Arrow batch at once.
-Encoding scatters all codes into one bit array (values: one loop over
-≤ 64 bit positions, never over points or chunks). Decoding is one numpy
-pass (timestamps: one flatnonzero; values: ≤ 64 bit-position gathers, one
-np.bitwise_xor.accumulate and two segmented cumsums).
+Encoding scatters all codes into one bit array (one loop over ≤ 64 bit
+positions, after ≤ E_MAX + 1 exponent trials; never a loop over points or
+chunks). Decoding is one numpy pass (timestamps: one flatnonzero; values:
+one header gather, then ≤ 64 bit-position gathers of the fixed-width
+offsets).
 
 Spark surface: encode_chunks() packs each (key, tier) bucket run into one
 BinaryType blob row via mapInArrow; decode_chunks() restores rows.
@@ -47,6 +52,15 @@ from pyspark.sql.types import (
 
 from symtseries_spark.config import TIERS
 
+#: largest decimal exponent: 10**18 < 2**62 and is exact in float64
+E_MAX = 18
+#: exponent field of a chunk stored as raw IEEE-754 bit patterns
+RAW_E = 31
+#: bits of the decimal-for header: e, w, base
+_HEADER_BITS = 5 + 7 + 64
+_POW10 = np.array([float(10**e) for e in range(E_MAX + 1)])
+
+
 # ---------------------------------------------------------------------------
 # bit packing helpers (numpy, vectorized over codes)
 # ---------------------------------------------------------------------------
@@ -56,7 +70,7 @@ def _pack_codes(bits: np.ndarray, nbits: np.ndarray) -> bytes:
     """Pack variable-length big-endian codes into a byte string.
 
     bits:  (N,) uint64 — right-aligned code values.
-    nbits: (N,) int64  — code lengths in bits (1..64+ handled by splitting).
+    nbits: (N,) int64  — code lengths in bits (0..64).
     Loop is over bit positions (max(nbits)), not over codes.
     """
     nbits = nbits.astype(np.int64)
@@ -74,100 +88,11 @@ def _pack_codes(bits: np.ndarray, nbits: np.ndarray) -> bytes:
     return np.packbits(out).tobytes()
 
 
-# ---------------------------------------------------------------------------
-# bit scans (vectorized over uint64 words)
-# ---------------------------------------------------------------------------
-
-
-def _clz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-leading-zeros for uint64 (clz(0) = 64)."""
-    x = x.astype(np.uint64)
-    n = len(x)
-    res = np.full(n, 64, dtype=np.int64)
-    cur = x.copy()
-    width = np.zeros(n, dtype=np.int64)
-    for shift in (32, 16, 8, 4, 2, 1):
-        hi = cur >> np.uint64(shift)
-        has = hi != 0
-        width[has] += shift
-        cur = np.where(has, hi, cur)
-    nz = x != 0
-    res[nz] = 63 - width[nz]
-    return res
-
-
-def _ctz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-trailing-zeros for uint64 (ctz(0) = 64)."""
-    x = x.astype(np.uint64)
-    low = (x & (~x + np.uint64(1))).astype(np.uint64)  # isolate lowest set bit
-    out = np.full(len(x), 64, dtype=np.int64)
-    nz = x != 0
-    out[nz] = 63 - _clz64(low[nz])
-    return out
-
-
-def _pack_groups(code_pairs: list[tuple[np.ndarray, np.ndarray]]):
-    """Pack MANY groups' code arrays in ONE _pack_codes call.
-
-    Each group's stream is padded to a byte boundary with a 0-filled pad
-    code so the packed buffer slices cleanly per group (the decoder reads
-    exactly n points and ignores trailing pad bits). Returns a list of
-    bytes objects, one per group. With the per-group _codes_values_split
-    coder this is the reference the batch value encoder is checked against.
-    """
-    bits_parts, nbits_parts, byte_lens = [], [], []
-    for bits, nbits in code_pairs:
-        total = int(nbits.sum())
-        pad = (-total) % 8
-        if pad:
-            bits = np.append(bits, np.uint64(0))
-            nbits = np.append(nbits, pad)
-        bits_parts.append(bits)
-        nbits_parts.append(nbits)
-        byte_lens.append((total + pad) // 8)
-    packed = _pack_codes(
-        np.concatenate(bits_parts), np.concatenate(nbits_parts)
-    )
-    out, off = [], 0
-    for blen in byte_lens:
-        out.append(packed[off : off + blen])
-        off += blen
-    return out
-
-
-# ---------------------------------------------------------------------------
-# codecs ("gorilla-s" / "bitmap", layouts in the module docstring; value
-# sections are bit-packed with no alignment between them)
-# ---------------------------------------------------------------------------
-
-
-def _codes_values_split(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """gorilla-s code arrays (bits, nbits) for ONE chunk."""
-    u = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
-    n = len(u)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    if n == 1:
-        return u[:1].copy(), np.array([64], dtype=np.int64)
-    xor = u[1:] ^ u[:-1]
-    nz = xor != 0
-    lznz = np.minimum(_clz64(xor[nz]), 31)
-    tznz = np.minimum(_ctz64(xor[nz]), 63)
-    mlen = np.maximum(64 - lznz - tznz, 1)
-    header = (lznz.astype(np.uint64) << np.uint64(6)) | (mlen - 1).astype(np.uint64)
-    payload = xor[nz] >> tznz.astype(np.uint64)
-    K = int(nz.sum())
-    m = n - 1
-    bits = np.empty(1 + m + 2 * K, dtype=np.uint64)
-    nbits = np.empty(1 + m + 2 * K, dtype=np.int64)
-    bits[0], nbits[0] = u[0], 64
-    bits[1 : 1 + m] = nz.astype(np.uint64)
-    nbits[1 : 1 + m] = 1
-    bits[1 + m : 1 + m + K] = header
-    nbits[1 + m : 1 + m + K] = 11
-    bits[1 + m + K :] = payload
-    nbits[1 + m + K :] = mlen
-    return bits, nbits
+def _bit_length(x: np.ndarray) -> np.ndarray:
+    """Bit length of each non-negative int64 (0 → 0)."""
+    n = np.frexp(x.astype(np.float64))[1].astype(np.int64)
+    # the float conversion can round up to the next power of two
+    return n - ((n > 0) & ((x >> np.maximum(n - 1, 0)) == 0))
 
 
 def _pack_sliced_groups(
@@ -177,8 +102,8 @@ def _pack_sliced_groups(
     pack EVERYTHING in one _pack_codes call, slice per group.
 
     ``code_counts`` gives each group's code count inside the concatenated
-    (bits, nbits); this is the fully-array-driven twin of _pack_groups
-    (no per-group Python at all — pad codes are scatter-inserted)."""
+    (bits, nbits); no per-group Python at all — pad codes are
+    scatter-inserted."""
     G = len(code_counts)
     if G == 0:
         return []
@@ -205,66 +130,58 @@ def _pack_sliced_groups(
     return [packed[offs[g] : offs[g + 1]] for g in range(G)]
 
 
-def _codes_values_split_batch(
+def _codes_values_decimal_batch(
     v_all: np.ndarray, starts: np.ndarray, ends: np.ndarray
 ) -> list[bytes]:
-    """gorilla-s payload bytes for MANY chunks in one vectorized pass.
-
-    Identical output to [_pack_groups([_codes_values_split(v[s:e])])[0] per
-    group] (equality-pinned in tests), but every section — controls,
-    headers, payloads — is computed globally and scatter-assembled into the
-    per-group [first | ctrl bits | headers | payloads] layout, so the
-    encode stage costs O(sections) numpy calls instead of O(groups)."""
+    """decimal-for payload bytes for MANY chunks (tiling ``v_all`` in
+    order) in one vectorized pass: each exponent trial tests every point of
+    the chunks still without one, and all codes go through one
+    _pack_sliced_groups call. A chunk's bytes do not depend on the other
+    chunks of the batch."""
+    v = np.ascontiguousarray(v_all, dtype=np.float64)
     starts = np.asarray(starts, dtype=np.int64)
-    ends = np.asarray(ends, dtype=np.int64)
-    u = np.ascontiguousarray(np.asarray(v_all, dtype=np.float64)).view(np.uint64)
+    lens = np.asarray(ends, dtype=np.int64) - starts
     G = len(starts)
-    lens = ends - starts
-    m = lens - 1  # xor positions per group (>= 0)
+    if G == 0:
+        return []
+    e = np.full(G, RAW_E, dtype=np.int64)
+    off = v.view(np.uint64).copy()  # raw chunks keep their bit patterns
+    q = np.zeros(len(v), dtype=np.int64)
+    todo = np.arange(G)
+    for k in range(E_MAX + 1):
+        lt = lens[todo]
+        pt = np.repeat(starts[todo], lt) + _seg_arange(lt)
+        with np.errstate(over="ignore", invalid="ignore"):
+            s = np.rint(v[pt] * _POW10[k])
+            fits = np.abs(s) < 2.0**62
+            qk = np.where(fits, s, 0).astype(np.int64)
+            # the decoder's own formula: a lossy exponent cannot pass
+            ok = fits & ((qk / _POW10[k]).view(np.uint64) == off[pt])
+        done = np.logical_and.reduceat(ok, np.cumsum(lt) - lt)
+        e[todo[done]] = k
+        q[pt] = qk
+        todo = todo[~done]
+        if not len(todo):
+            break
+    dec = e != RAW_E
+    base = np.zeros(G, dtype=np.int64)
+    w = np.full(G, 64, dtype=np.int64)
+    qmin = np.minimum.reduceat(q, starts)
+    base[dec] = qmin[dec]
+    w[dec] = _bit_length(np.maximum.reduceat(q, starts)[dec] - qmin[dec])
+    pdec = np.repeat(dec, lens)
+    off[pdec] = (q - np.repeat(base, lens))[pdec].view(np.uint64)
 
-    first_mask = np.zeros(len(u), dtype=bool)
-    first_mask[starts] = True
-    xr = np.empty(len(u), dtype=np.uint64)
-    xr[1:] = u[1:] ^ u[:-1]
-    xr[0] = 0
-    xor = xr[~first_mask]  # compact, group-contiguous, Σm long
-
-    ctrl = xor != 0
-    nzv = xor[ctrl]
-    lznz = np.minimum(_clz64(nzv), 31)
-    tznz = np.minimum(_ctz64(nzv), 63)
-    mlen = np.maximum(64 - lznz - tznz, 1)
-    header = (lznz.astype(np.uint64) << np.uint64(6)) | (mlen - 1).astype(np.uint64)
-    payload = nzv >> tznz.astype(np.uint64)
-
-    cc = np.concatenate([[0], np.cumsum(ctrl.astype(np.int64))])
-    xoff = np.concatenate([[0], np.cumsum(m)])
-    K = cc[xoff[1:]] - cc[xoff[:-1]]  # nz count per group
-
-    counts = 1 + m + 2 * K
-    off = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    T = int(counts.sum())
-    bits = np.empty(T, dtype=np.uint64)
-    nbits = np.empty(T, dtype=np.int64)
-
-    bits[off] = u[starts]
-    nbits[off] = 64
-
-    gid = np.repeat(np.arange(G, dtype=np.int64), m)
-    wi = _seg_arange(m)
-    idx_ctrl = off[gid] + 1 + wi
-    bits[idx_ctrl] = ctrl.astype(np.uint64)
-    nbits[idx_ctrl] = 1
-
-    gid_nz = gid[ctrl]
-    rank = (cc[1:][ctrl] - cc[xoff[gid_nz]]) - 1
-    idx_hdr = off[gid_nz] + 1 + m[gid_nz] + rank
-    bits[idx_hdr] = header
-    nbits[idx_hdr] = 11
-    idx_pay = idx_hdr + K[gid_nz]
-    bits[idx_pay] = payload
-    nbits[idx_pay] = mlen
-
+    counts = 3 + lens
+    first = np.cumsum(counts) - counts
+    bits = np.empty(int(counts.sum()), dtype=np.uint64)
+    nbits = np.empty(len(bits), dtype=np.int64)
+    for j, (field, width) in enumerate(((e, 5), (w, 7), (base, 64))):
+        bits[first + j] = field.view(np.uint64)
+        nbits[first + j] = width
+    pt = np.repeat(first + 3, lens) + _seg_arange(lens)
+    bits[pt] = off
+    nbits[pt] = np.repeat(w, lens)
     return _pack_sliced_groups(bits, nbits, counts)
 
 
@@ -302,8 +219,7 @@ def _seg_arange(lens: np.ndarray) -> np.ndarray:
     """[0..lens[0]) ++ [0..lens[1]) ... as one array (no Python loop)."""
     lens = np.asarray(lens, dtype=np.int64)
     total = int(lens.sum())
-    heads = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    return np.arange(total, dtype=np.int64) - np.repeat(heads, lens)
+    return np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens)
 
 
 def _gather_bits(bits: np.ndarray, starts: np.ndarray, nbits: np.ndarray) -> np.ndarray:
@@ -317,20 +233,6 @@ def _gather_bits(bits: np.ndarray, starts: np.ndarray, nbits: np.ndarray) -> np.
             nbits[m] - 1 - b
         ).astype(np.uint64)
     return out
-
-
-def _seg_cumsum(a: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Per-segment inclusive cumsum via one global cumsum + base subtraction.
-
-    Empty segments are fine: their (possibly out-of-range) start index is
-    clipped and contributes zero repeats.
-    """
-    if len(a) == 0:
-        return np.asarray(a).copy()
-    c = np.cumsum(a)
-    s = np.minimum(np.asarray(starts, dtype=np.int64), len(a) - 1)
-    base = np.repeat(c[s] - a[s], lens)
-    return c - base
 
 
 def _payload_bits(payloads) -> tuple[np.ndarray, np.ndarray]:
@@ -351,57 +253,47 @@ def _payload_bits(payloads) -> tuple[np.ndarray, np.ndarray]:
     return bits, (offs[:-1] - offs[0]).astype(np.int64) * 8
 
 
-def decode_values_split_batch(payloads, n_points: np.ndarray) -> np.ndarray:
-    """Decode MANY gorilla-s chunks in one vectorized pass.
-
-    ``payloads``: see :func:`_payload_bits`. Returns the concatenated
-    float64 values (Σ n_points long). All offsets are prefix sums over the
-    ctrl sections; the XOR-prefix undo is one np.bitwise_xor.accumulate
-    with per-chunk base correction.
-    """
-    n_points = np.asarray(n_points, dtype=np.int64)
-    nchunks = len(payloads)
-    if nchunks == 0:
-        return np.empty(0, dtype=np.float64)
+def decode_values_decimal_batch(payloads, n_points: np.ndarray) -> np.ndarray:
+    """Decode MANY decimal-for chunks in one vectorized pass → float64
+    (Σ n_points). ``payloads``: see :func:`_payload_bits`. Raises
+    ValueError naming the chunk (its index in ``payloads``) whose length
+    is not ceil((76 + n_points·w) / 8) bytes, whose e is neither in
+    0..E_MAX nor RAW_E, or whose w exceeds 64."""
+    n = np.asarray(n_points, dtype=np.int64)
+    G = len(n)
     bits, bit_off = _payload_bits(payloads)
-
-    u0 = _gather_bits(bits, bit_off, np.full(nchunks, 64, dtype=np.int64))
-
-    m = n_points - 1  # ctrl flags per chunk
-    ctrl_starts = bit_off + 64
-    ctrl_idx = np.repeat(ctrl_starts, m) + _seg_arange(m)
-    flags = bits[ctrl_idx].astype(np.int64)
-    seg_heads = np.concatenate([[0], np.cumsum(m)[:-1]])
-    chunk_of_flag = np.repeat(np.arange(nchunks), m)
-    K = np.bincount(chunk_of_flag, weights=flags, minlength=nchunks).astype(np.int64)
-
-    hdr_base = bit_off + 64 + m  # header section start per chunk
-    nz = flags == 1
-    j_in_chunk = (_seg_cumsum(flags, seg_heads, m) - 1)[nz]
-    chunk_nz = chunk_of_flag[nz]
-    hdr_pos = hdr_base[chunk_nz] + 11 * j_in_chunk
-    hdr = _gather_bits(bits, hdr_pos, np.full(len(hdr_pos), 11, dtype=np.int64))
-    lz = (hdr >> np.uint64(6)).astype(np.int64)
-    mlen = (hdr & np.uint64(63)).astype(np.int64) + 1
-    tz = 64 - lz - mlen
-
-    pay_base = hdr_base + 11 * K
-    nz_heads = np.concatenate([[0], np.cumsum(K)[:-1]])
-    pay_off = _seg_cumsum(mlen, nz_heads, K) - mlen  # exclusive per chunk
-    pay_pos = pay_base[chunk_nz] + pay_off
-    payload = _gather_bits(bits, pay_pos, mlen)
-    xor = payload << tz.astype(np.uint64)
-
-    total = int(n_points.sum())
-    arr = np.zeros(total, dtype=np.uint64)
-    out_starts = np.concatenate([[0], np.cumsum(n_points)[:-1]])
-    arr[out_starts] = u0
-    point_idx = np.repeat(out_starts + 1, m) + _seg_arange(m)
-    arr[point_idx[nz]] = xor
-    acc = np.bitwise_xor.accumulate(arr)
-    prev = np.concatenate([[np.uint64(0)], acc[:-1]])
-    base = np.repeat(prev[out_starts], n_points)
-    return (acc ^ base).view(np.float64)
+    nbytes = np.diff(np.append(bit_off, len(bits))) // 8
+    # each chunk's first 10 bytes (the header + 4 offset bits) as big-endian
+    # words; the zero tail keeps a truncated payload's read in range, and
+    # the length check below reports it
+    bits = np.append(bits, np.zeros(80, dtype=np.uint8))
+    head = np.packbits(bits[bit_off[:, None] + np.arange(80)], axis=1)
+    hi = np.ascontiguousarray(head[:, :8]).view(">u8")[:, 0].astype(np.uint64)
+    lo = np.ascontiguousarray(head[:, 8:]).view(">u2")[:, 0].astype(np.uint64)
+    e = (hi >> np.uint64(59)).astype(np.int64)
+    w = ((hi >> np.uint64(52)) & np.uint64(0x7F)).astype(np.int64)
+    base = (hi << np.uint64(12)) | (lo >> np.uint64(4))
+    want = (_HEADER_BITS + n * w + 7) // 8
+    bad = np.flatnonzero(nbytes != want)
+    if len(bad):
+        g = int(bad[0])
+        raise ValueError(
+            f"decimal-for chunk {g}: val_payload is {nbytes[g]} bytes but "
+            f"n_points={n[g]} at w={w[g]} needs {want[g]}"
+        )
+    bad = np.flatnonzero(((e > E_MAX) & (e != RAW_E)) | (w > 64))
+    if len(bad):
+        g = int(bad[0])
+        raise ValueError(
+            f"decimal-for chunk {g}: header e={e[g]} w={w[g]} is out of range "
+            f"(e in 0..{E_MAX} or {RAW_E}, w at most 64)"
+        )
+    wp = np.repeat(w, n)
+    off = _gather_bits(bits, np.repeat(bit_off + _HEADER_BITS, n) + _seg_arange(n) * wp, wp)
+    raw = e == RAW_E
+    q = (off + np.repeat(base, n)).view(np.int64)
+    vals = q / _POW10[np.repeat(np.where(raw, 0, e), n)]
+    return np.where(np.repeat(raw, n), off.view(np.float64), vals)
 
 
 def decode_timestamps_bitmap_batch(
@@ -540,7 +432,7 @@ def encode_chunks(
         ts_blobs = _codes_timestamps_bitmap_batch(
             ts_all, starts, ends, step * 1_000_000
         )
-        val_blobs = _codes_values_split_batch(v_all, starts, ends)
+        val_blobs = _codes_values_decimal_batch(v_all, starts, ends)
         g = len(starts)
         yield pa.RecordBatch.from_arrays(
             [
@@ -549,7 +441,7 @@ def encode_chunks(
                 pa.array(ts_all[starts], pa.timestamp("us")),
                 pa.array((ends - starts).astype(np.int32), pa.int32()),
                 pa.array(["bitmap"] * g, pa.string()),
-                pa.array(["gorilla-s"] * g, pa.string()),
+                pa.array(["decimal-for"] * g, pa.string()),
                 ts_blobs,
                 pa.array(val_blobs, pa.binary()),
             ],
@@ -576,12 +468,13 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     One mapInArrow pass: each Arrow batch's payload columns feed their
     offsets and data buffers straight to the batch decoders, which decode
     every chunk of the batch in one numpy pass (one flatnonzero for the
-    timestamps; prefix-sum offsets + ≤64 bit-position gathers + one
-    xor-scan for the values). No per-chunk Python object and no pandas
-    frame. A row whose codecs are not "bitmap"/"gorilla-s" (the formats
-    encode_chunks writes) raises ValueError naming the codec, as does a
-    row whose tier is not in ``TIERS`` or whose ``n_points`` disagrees
-    with its timestamp bitmap.
+    timestamps; one header gather + ≤64 bit-position gathers of the
+    fixed-width offsets for the values). No per-chunk Python object and
+    no pandas frame. A row whose codecs are not "bitmap"/"decimal-for"
+    (the formats encode_chunks writes) raises ValueError naming the
+    codec, as does a row whose tier is not in ``TIERS``, whose
+    ``n_points`` disagrees with its timestamp bitmap, or whose
+    ``val_payload`` header or length is malformed.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -595,14 +488,14 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
             if not b.num_rows:
                 continue
             ts_codec, val_codec = b.column("ts_codec"), b.column("val_codec")
-            ok = pc.and_(pc.equal(ts_codec, "bitmap"), pc.equal(val_codec, "gorilla-s"))
+            ok = pc.and_(pc.equal(ts_codec, "bitmap"), pc.equal(val_codec, "decimal-for"))
             bad = np.flatnonzero(~pc.fill_null(ok, False).to_numpy(zero_copy_only=False))
             if len(bad):
                 i = int(bad[0])
                 raise ValueError(
                     f"decode_chunks: unsupported codec ts_codec="
                     f"{ts_codec[i].as_py()!r} val_codec={val_codec[i].as_py()!r} "
-                    "(only 'bitmap'/'gorilla-s' chunks decode)"
+                    "(only 'bitmap'/'decimal-for' chunks decode)"
                 )
             tier_idx = pc.index_in(b.column("tier"), value_set=tier_names)
             if tier_idx.null_count:
@@ -623,7 +516,7 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
                     b.column("key").take(rows),
                     b.column("tier").take(rows),
                     pa.array(ts, pa.timestamp("us")),
-                    pa.array(decode_values_split_batch(b.column("val_payload"), ns)),
+                    pa.array(decode_values_decimal_batch(b.column("val_payload"), ns)),
                 ],
                 names=schema.fieldNames(),
             )

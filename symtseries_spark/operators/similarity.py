@@ -1,17 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
+Three paths:
   * brute_force_topk — exact cosine top-k. The query vector lives in the
     UDF closure (broadcast); per Arrow batch the candidate matrix is one
     numpy matmul. orderBy+limit compiles to TakeOrderedAndProject (per-
     partition heaps, no global sort shuffle).
-  * lsh_topk — random-hyperplane LSH (SRP): bucketed candidates via
-    equi-join on the hash prefix, then exact rerank of the bucket. The
-    scale path: at 10^12 rows the bucket join touches ~1/2^bits of the
-    corpus per probe.
-  * ivf_topk — IVF-style coarse quantizer: k-means-ish centroids chosen
-    deterministically from a sample, vectors assigned to nearest centroid
-    (one matmul per batch), query probes the nprobe nearest centroids only.
+  * build_srp_index + lsh_topk_indexed — random-hyperplane LSH (SRP): each
+    vector's per-table buckets are computed once at build and the index is
+    written partitioned by (table, bucket); a query reads only the probed
+    bucket directories and exactly reranks them.
+  * build_ivf_index + ivf_topk_indexed — IVF-style coarse quantizer:
+    vectors are written partitioned by their nearest centroid (centroids
+    from train_centroids_np); a query reads only the nprobe nearest cells.
 
 Also: pairwise embedding near-dup (embedding_dupes) for the dedup ladder.
 """
@@ -99,28 +99,6 @@ def srp_buckets_of(query_vec, bits: int = 16, seed: int = 7,
     return out
 
 
-def lsh_topk(
-    emb: DataFrame, query_vec, k: int, vec_col: str = "embedding",
-    id_col: str = "vec_id", bits: int = 8, seed: int = 7, tables: int = 4,
-) -> DataFrame:
-    """ANN top-k: multi-table SRP bucket probe + exact rerank of the union.
-
-    A candidate survives if any table's bucket matches a probe for that
-    table — an OR over per-table equality on an array column, pushed down
-    as one boolean expression (no explode, no join)."""
-    dim = len(query_vec)
-    bucketed = emb.withColumn(
-        "_buckets", srp_udf(dim, bits, seed, tables)(F.col(vec_col))
-    )
-    probes = srp_buckets_of(query_vec, bits, seed, tables)
-    cond = None
-    for t in range(tables):
-        c = F.element_at("_buckets", t + 1).isin(probes[t])
-        cond = c if cond is None else (cond | c)
-    cand = bucketed.filter(cond)
-    return brute_force_topk(cand, query_vec, k, vec_col, id_col)
-
-
 # ---------------------------------------------------------------------------
 # IVF coarse quantizer
 # ---------------------------------------------------------------------------
@@ -128,9 +106,11 @@ def lsh_topk(
 
 def train_centroids_np(X: np.ndarray, n_centroids: int = 16,
                        iters: int = 5, seed: int = 13) -> np.ndarray:
-    """Deterministic mini k-means on an in-memory sample — the single
-    source of truth for centroid math (the Spark trainer and the DuckDB
-    oracle literal generator both call this, so they can never drift)."""
+    """Deterministic mini k-means on in-memory vectors (a sample of the
+    corpus: the train step is tiny, assignment stays distributed in
+    build_ivf_index) — the single source of truth for centroid math (the
+    IVF query and the DuckDB oracle literal generator both call this, so
+    they can never drift)."""
     X = _normalize(np.asarray(X, dtype=np.float64))
     rng = np.random.RandomState(seed)
     C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
@@ -144,40 +124,6 @@ def train_centroids_np(X: np.ndarray, n_centroids: int = 16,
     return C
 
 
-def train_centroids(emb: DataFrame, n_centroids: int = 16,
-                    vec_col: str = "embedding", sample: float = 0.2,
-                    iters: int = 5, seed: int = 13,
-                    max_rows: int = 100_000) -> np.ndarray:
-    """Deterministic mini k-means on a driver-side sample (the train step
-    is tiny; assignment stays distributed).
-
-    The collected sample is HARD-CAPPED at ``max_rows`` regardless of
-    ``sample``: a fraction-only sample of a 10^12-row corpus would pull
-    the corpus to the driver. The cap is enforced by SHRINKING the sample
-    fraction to target ~max_rows (count() is metadata-cheap on columnar
-    stores), not by limit() alone — limit() takes rows from the first
-    partitions, which on key/time-clustered corpora yields a biased
-    training sample. limit() remains only as a hard safety stop for the
-    sampler's statistical overage. k-means quality saturates long before
-    100k points for a coarse quantizer of ≤ a few thousand cells; corpora
-    where ``sample`` already lands under the cap are unaffected (bit-
-    identical centroids to the uncapped path)."""
-    frac = min(1.0, sample)
-    n = emb.count()
-    if n * frac > max_rows:
-        # aim 5% over the cap so the Bernoulli sampler rarely undershoots;
-        # the limit() below trims only that small deliberate overage
-        frac = min(frac, 1.05 * max_rows / n)
-    rows = (
-        emb.select(vec_col)
-        .sample(fraction=frac, seed=seed)
-        .limit(int(max_rows))
-        .collect()
-    )
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    return train_centroids_np(X, n_centroids, iters, seed)
-
-
 def assign_udf(centroids: np.ndarray):
     C = np.asarray(centroids, dtype=np.float64)
 
@@ -189,22 +135,6 @@ def assign_udf(centroids: np.ndarray):
         return pd.Series((X @ C.T).argmax(axis=1).astype(np.int32))
 
     return _assign
-
-
-def ivf_topk(
-    emb: DataFrame, query_vec, k: int, centroids: np.ndarray,
-    nprobe: int = 3, vec_col: str = "embedding", id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF ANN: probe the nprobe centroid cells nearest the query, exact
-    rerank inside them. At scale the assignment column is precomputed and
-    the table is partitioned by cell → probing is partition pruning."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / (np.linalg.norm(q) or 1.0)
-    order = np.argsort(-(centroids @ q))[:nprobe]
-    cells = [int(x) for x in order]
-    assigned = emb.withColumn("_cell", assign_udf(centroids)(F.col(vec_col)))
-    cand = assigned.filter(F.col("_cell").isin(cells))
-    return brute_force_topk(cand, query_vec, k, vec_col, id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,8 @@ Pipeline shape (batch engine):
 
 The word column is the canonical index key; the symbols stay recoverable
 from the string (kernel.string_to_symbols_batch), so we don't store both.
-mindist_udf scores words against a query word; pair_sums_by_key,
-daily_discords and mindist_pair_udf score words against each other.
+mindist_udf scores words against a query word; pair_sums_by_key and
+daily_discords score words against each other.
 
 Reference semantics reproduced bit-for-bit: sts_from_double_array
 (/root/reference/src/symtseries.c:515-532) — see kernel.py.
@@ -450,40 +450,3 @@ def daily_discords(words: DataFrame, c: int) -> DataFrame:
         )
     )
 
-
-def mindist_pair_udf(c: int):
-    """pandas UDF: (word_a, word_b, n_a, n_b) → pairwise mindist.
-
-    Both sides vary per row (discord discovery), unlike mindist_udf's
-    one-query-many-candidates closure. Run it over DISTINCT word pairs
-    and broadcast-join back (same vocabulary-bounded-UDF plan rule as the
-    query-side mindist).
-
-    Width rule (reference sts_mindist_ab, symtseries.c:582-586): words of
-    different w are incomparable → NaN. Rows are grouped by word length so
-    each vectorized kernel call sees a uniform (B, w) matrix — no silent
-    truncation to the first row's width."""
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _pair(
-        wa: pd.Series, wb: pd.Series, na: pd.Series, nb: pd.Series
-    ) -> pd.Series:
-        if len(wa) == 0:
-            return pd.Series([], dtype=np.float64)
-        A_raw = wa.to_numpy().astype("U")
-        B_raw = wb.to_numpy().astype("U")
-        la = np.char.str_len(A_raw)
-        lb = np.char.str_len(B_raw)
-        out = np.full(len(wa), np.nan)
-        na_arr = na.to_numpy().astype(np.int64)
-        nb_arr = nb.to_numpy().astype(np.int64)
-        eq = (la == lb) & (la > 0)
-        for wlen in np.unique(la[eq]):
-            m = eq & (la == wlen)
-            A = K.string_to_symbols_batch(A_raw[m], c)
-            B = K.string_to_symbols_batch(B_raw[m], c)
-            out[m] = K.mindist_pairs(A, B, c, na_arr[m], nb_arr[m])
-        return pd.Series(out)
-
-    return _pair

@@ -1,5 +1,5 @@
 """The flagship end-to-end job: crawl pages → rollup tiers → iSAX index →
-Gorilla-compressed chunks, with per-partition checkpointing.
+compressed chunks, with per-partition checkpointing.
 
 This is the job the benchmark measures (rolled-up points/sec across all
 three tiers) and the scaling-efficiency evidence runs at two parallelism
@@ -9,7 +9,7 @@ levels. Stage layout (one shuffle each, all else map-side):
     → salted 1m rollup  (shuffle on (url, bucket, salt))
     → key-clustered, time-sorted 1m tier, materialized ONCE by its write
     → THREE concurrent jobs over it (FAIR pools):
-        1h→1d cascades ∥ symbolize+index ∥ Gorilla chunks
+        1h→1d cascades ∥ symbolize+index ∥ compressed chunks
 
 The cascades consumer is ``checkpoint.write_coarse_tiers``, the same
 coarse-tier writer the streaming upsert uses: the 1h write fills a

@@ -1,5 +1,5 @@
-"""Gorilla + grid-bitmap codec round-trip tests (property + known vectors
-+ the Spark encode_chunks/decode_chunks surface)."""
+"""decimal-for + grid-bitmap codec round-trip tests (property + known
+vectors + the Spark encode_chunks/decode_chunks surface)."""
 
 import numpy as np
 import pytest
@@ -10,13 +10,6 @@ from symtseries_spark.operators import codecs as C
 
 MINUTE_US = 60_000_000
 T0 = 1_700_000_040_000_000  # on the 1m grid
-
-
-def test_clz_ctz():
-    xs = np.array([0, 1, 2, 3, 0x8000000000000000, 0xFFFFFFFFFFFFFFFF, 1 << 32],
-                  dtype=np.uint64)
-    assert list(C._clz64(xs)) == [64, 63, 62, 62, 0, 0, 31]
-    assert list(C._ctz64(xs)) == [64, 0, 1, 0, 63, 0, 32]
 
 
 def _ts_round_trip(chunks, step_us=MINUTE_US):
@@ -31,13 +24,19 @@ def _ts_round_trip(chunks, step_us=MINUTE_US):
     return payloads, C.decode_timestamps_bitmap_batch(payloads, lens, ts[ends - lens], steps)
 
 
-def _split_values_round_trip(chunks):
-    """gorilla-s bytes + decoded values via the batch coders."""
+def _values_round_trip(chunks):
+    """decimal-for bytes + decoded values via the batch coders."""
     chunks = [np.ascontiguousarray(c, dtype=np.float64) for c in chunks]
     lens = np.array([len(c) for c in chunks])
     ends = np.cumsum(lens)
-    blobs = C._codes_values_split_batch(np.concatenate(chunks), ends - lens, ends)
-    return blobs, C.decode_values_split_batch(blobs, lens)
+    blobs = C._codes_values_decimal_batch(np.concatenate(chunks), ends - lens, ends)
+    return blobs, C.decode_values_decimal_batch(blobs, lens)
+
+
+def _header(blob):
+    """(e, w) of one decimal-for payload."""
+    b = int.from_bytes(blob[:2], "big")
+    return b >> 11, (b >> 4) & 0x7F
 
 
 def test_timestamps_round_trip_regular():
@@ -86,12 +85,15 @@ def test_values_round_trip_property():
     rng = np.random.RandomState(7)
     cases += [
         rng.normal(size=1000),
-        np.repeat(3.14159, 500),  # constant → all-zero xors
-        np.round(rng.normal(size=300), 1),  # repeated mantissa patterns
+        np.repeat(3.14159, 500),  # constant → w = 0
+        np.round(rng.normal(size=300), 1),  # e = 1, but one −0.0 → raw
         rng.normal(size=1) * 100,
         np.arange(100, dtype=np.float64),
+        np.array([4e18, -4e18]),  # |q| just under 2^62 at e = 0
+        np.array([0.1, 0.25, 1e-18]),  # e = E_MAX
+        np.array([1.0, 0.5, 0.25, 0.125, 1.5]),  # mixed exponents → e = 3
     ]
-    _, dec = _split_values_round_trip(cases)
+    _, dec = _values_round_trip(cases)
     want = np.concatenate(cases)
     assert np.array_equal(dec.view(np.uint64), want.view(np.uint64)), (
         "bit-exact round trip required (NaN payloads included)"
@@ -111,16 +113,35 @@ def test_values_vec_round_trip_property():
         np.arange(100, dtype=np.float64),
     ]
     for vals in cases:
-        _, dec = _split_values_round_trip([vals])
+        _, dec = _values_round_trip([vals])
         assert np.array_equal(
             dec.view(np.uint64), np.ascontiguousarray(vals).view(np.uint64)
         )
 
 
 def test_values_compress_stable_series():
-    (enc,), dec = _split_values_round_trip([np.repeat(42.5, 2000)])
+    (enc,), dec = _values_round_trip([np.repeat(42.5, 2000)])
     assert np.array_equal(dec, np.repeat(42.5, 2000))
-    assert len(enc) <= 259  # 64b head + 1 ctrl bit per repeated point
+    assert _header(enc) == (1, 0)
+    assert len(enc) == 10  # the 76-bit header; 0-bit offsets
+
+
+def test_values_exponent_choice():
+    """The smallest lossless exponent is chosen, offsets are as wide as the
+    chunk's q range, and what no e ≤ E_MAX can carry is stored raw."""
+    cases = [
+        (np.array([3.0, 10.0]), (0, 3)),
+        (np.array([2.5, 3.0]), (1, 3)),
+        (np.array([0.01, -0.02]), (2, 2)),
+        (np.array([1.0, np.nan]), (C.RAW_E, 64)),
+        (np.array([1.0, 4.7e18]), (C.RAW_E, 64)),  # q ≥ 2^62
+        (np.array([-0.0]), (C.RAW_E, 64)),
+        (np.array([5e-324]), (C.RAW_E, 64)),
+    ]
+    blobs, dec = _values_round_trip([v for v, _ in cases])
+    assert [_header(b) for b in blobs] == [h for _, h in cases]
+    want = np.concatenate([v for v, _ in cases])
+    assert np.array_equal(dec.view(np.uint64), want.view(np.uint64))
 
 
 def test_decode_chunks_rejects_unknown_codec(spark):
@@ -139,7 +160,12 @@ def test_decode_chunks_rejects_unknown_codec(spark):
 @pytest.mark.parametrize(
     "column, value, match",
     [("n_points", "n_points + 1", r"has 5 points set but n_points=6"),
-     ("tier", "'5m'", r"unknown tier '5m'")],
+     ("tier", "'5m'", r"unknown tier '5m'"),
+     ("val_payload", "substring(val_payload, 1, 2)",
+      r"val_payload is 2 bytes but n_points=5 at w=3 needs 12"),
+     # e = 20 (first byte 0b10100_000), w and length unchanged
+     ("val_payload", "concat(unhex('A0'), substring(val_payload, 2))",
+      r"header e=20 w=3 is out of range")],
 )
 def test_decode_chunks_rejects_tampered_rows(spark, column, value, match):
     import datetime as dt
@@ -204,7 +230,7 @@ def test_spark_chunk_round_trip(spark):
     rollup = spark.createDataFrame(rows)
     chunks = C.encode_chunks(rollup, "1m", "text_len_avg", chunk_points=64)
     cl = chunks.collect()
-    assert all(r.ts_codec == "bitmap" and r.val_codec == "gorilla-s" for r in cl)
+    assert all(r.ts_codec == "bitmap" and r.val_codec == "decimal-for" for r in cl)
     assert sum(r.n_points for r in cl) == len(rows)
     decoded = C.decode_chunks(chunks)
     got = {
@@ -219,25 +245,19 @@ def test_spark_chunk_round_trip(spark):
 
 
 def test_split_codecs_batch_round_trip_property():
-    """gorilla-s / bitmap: many mixed-shape chunks decode in ONE vectorized
-    pass and round-trip exactly (incl. single-point, constant, huge-gap)."""
-    from symtseries_spark.operators.codecs import (
-        _codes_values_split,
-        _pack_groups,
-        decode_values_split_batch,
-    )
-
+    """decimal-for / bitmap: many mixed-shape chunks decode in ONE vectorized
+    pass and round-trip exactly (incl. single-point, constant, huge-gap,
+    and raw chunks next to decimal ones)."""
     rng = np.random.RandomState(7)
     vchunks = []
     for n in [1, 2, 3, 17, 256, 1440]:
         v = rng.normal(size=n) * rng.choice([1.0, 1e7, 1e-7])
-        v[rng.rand(n) < 0.4] = v[0]  # repeats exercise the xor==0 path
+        v[rng.rand(n) < 0.4] = v[0]
         vchunks.append(v)
+        vchunks.append(np.round(v * 100, rng.randint(0, 4)))
     vchunks.append(np.full(64, -2.5))
     vchunks.append(np.array([0.0]))
-    vp = _pack_groups([_codes_values_split(v) for v in vchunks])
-    ns = np.array([len(v) for v in vchunks])
-    got = decode_values_split_batch(vp, ns)
+    _, got = _values_round_trip(vchunks)
     assert np.array_equal(got, np.concatenate(vchunks))
 
     tchunks = []
@@ -250,20 +270,21 @@ def test_split_codecs_batch_round_trip_property():
 
 
 def test_split_codec_roundtrip_hypothesis():
-    """Fuzz the codecs: decode∘encode must be the identity for arbitrary
-    float64 bit patterns (NaN payloads, ±inf, subnormals, ±0.0, huge
-    magnitudes, long equal runs) and for any sorted set of unique grid
-    slots of any tier."""
+    """Fuzz the codecs: decode∘encode must be the identity, bit for bit,
+    for arbitrary float64 bit patterns (NaN payloads, ±inf, subnormals,
+    ±0.0, huge magnitudes, long equal runs), for decimals k/10^j, for
+    chunks that mix exponents, and for any sorted set of unique grid slots
+    of any tier."""
     from hypothesis import given, settings, strategies as st
 
     from symtseries_spark.config import TIERS
-    from symtseries_spark.operators.codecs import (
-        _codes_values_split,
-        _pack_groups,
-        decode_values_split_batch,
-    )
 
+    kj = st.tuples(
+        st.integers(min_value=-(10**15), max_value=10**15),
+        st.integers(min_value=0, max_value=C.E_MAX),
+    )
     floats = st.one_of(
+        kj.map(lambda t: t[0] / 10 ** t[1]),
         st.floats(width=64),
         st.just(0.0),
         st.just(-0.0),
@@ -274,12 +295,22 @@ def test_split_codec_roundtrip_hypothesis():
     )
 
     @settings(max_examples=200, deadline=None)
-    @given(st.lists(floats, min_size=1, max_size=130))
-    def check_values(vals):
-        v = np.array(vals, dtype=np.float64)
-        blob = _pack_groups([_codes_values_split(v)])[0]
-        out = decode_values_split_batch([blob], np.array([len(v)]))
-        assert v.view(np.uint64).tolist() == np.asarray(out).view(np.uint64).tolist()
+    @given(st.lists(st.lists(floats, min_size=1, max_size=130), min_size=1, max_size=4))
+    def check_values(chunks):
+        _, out = _values_round_trip(chunks)
+        want = np.concatenate([np.array(c, dtype=np.float64) for c in chunks])
+        assert want.view(np.uint64).tolist() == out.view(np.uint64).tolist()
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(kj, min_size=1, max_size=130))
+    def check_decimals(pairs):
+        vals = [k / 10**j for k, j in pairs]
+        (blob,), out = _values_round_trip([vals])
+        assert np.array(vals).view(np.uint64).tolist() == out.view(np.uint64).tolist()
+        # below 2^51 the scaled product rounds back to k·10^(J−j) exactly
+        J = max(j for _, j in pairs)
+        if max(abs(k) * 10 ** (J - j) for k, j in pairs) < 2**51:
+            assert _header(blob)[0] <= J
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -295,19 +326,14 @@ def test_split_codec_roundtrip_hypothesis():
         assert len(blob.as_py()) == (ts[-1] - ts[0]) // step_us // 8 + 1
 
     check_values()
+    check_decimals()
     check_ts()
 
 
-def test_batch_split_encoders_match_per_group():
-    """The cross-group batch value encoder must be BIT-IDENTICAL to mapping
-    the per-group encoder over every (start, end) slice — randomized group
-    layouts, equal-run-heavy values."""
-    from symtseries_spark.operators.codecs import (
-        _codes_values_split,
-        _codes_values_split_batch,
-        _pack_groups,
-    )
-
+def test_batch_value_encoder_is_group_independent():
+    """Encoding many chunks in one batch gives, chunk for chunk, the same
+    bytes as encoding each chunk alone — randomized group layouts, with
+    whole, decimal, raw and constant chunks side by side."""
     rng = np.random.RandomState(42)
     for _ in range(15):
         G = rng.randint(1, 40)
@@ -315,12 +341,15 @@ def test_batch_split_encoders_match_per_group():
         starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
         ends = np.cumsum(lens)
         n = int(ends[-1])
-        v = rng.randn(n)
+        scale = 10.0 ** rng.randint(0, 4, size=n)
+        v = np.rint(rng.randn(n) * 100 * scale) / scale
+        v[rng.rand(n) < 0.05] = rng.randn()  # makes its chunk raw
         v[rng.rand(n) < 0.3] = 1.5
-        ref_v = _pack_groups(
-            [_codes_values_split(v[s:e]) for s, e in zip(starts, ends)]
-        )
-        assert ref_v == _codes_values_split_batch(v, starts, ends)
+        alone = [
+            C._codes_values_decimal_batch(v[s:e], np.array([0]), np.array([e - s]))[0]
+            for s, e in zip(starts, ends)
+        ]
+        assert C._codes_values_decimal_batch(v, starts, ends) == alone
 
 
 def test_decode_chunks_zero_rows(spark):
@@ -379,3 +408,23 @@ def test_perfbench_1m_tier_timestamps_cost_under_a_quarter_byte(monkeypatch):
     payloads, dec = _ts_round_trip(np.split(ts, np.flatnonzero(np.diff(chunk)) + 1))
     assert np.array_equal(dec, ts)
     assert len(payloads.buffers()[2]) / len(ts) <= 0.25
+
+
+def test_perfbench_1m_tier_values_cost_at_most_1_25_bytes(monkeypatch):
+    """Size guard without Spark: perfbench's seed-1 1m tier values, chunked
+    one (url, day) per chunk as run_pipeline does, cost at most 1.25 value
+    bytes per point and round-trip exactly through the batch coders."""
+    import os
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+    import gen
+    import ingest
+
+    from symtseries_spark.config import EngineConfig
+
+    crawl = gen.Crawl(1, ingest.SIZE)
+    tier = gen.Reference(crawl, crawl.mask([-1])).tiers["1m"]
+    chunk = tier["url_idx"] * (1 << 32) + tier["bucket"] // EngineConfig().chunk_points
+    blobs, dec = _values_round_trip(np.split(tier["avg"], np.flatnonzero(np.diff(chunk)) + 1))
+    assert np.array_equal(dec.view(np.uint64), tier["avg"].view(np.uint64))
+    assert sum(map(len, blobs)) / len(dec) <= 1.25

@@ -151,13 +151,7 @@ def test_local_checkpoint_only_at_allowed_sites():
 # with the reason each stays. The list may only shrink: a name leaves it
 # when it gains a caller or is deleted.
 UNREFERENCED_ALLOWED = {
-    "_pack_groups": "codec building block the codec round-trip tests call",
-    "_codes_values_split": "codec building block the codec round-trip tests call",
-    "pair_sums_by_key": "pair-sum operator, called by test_round5_fixes",
-    "mindist_pair_udf": "pairwise mindist UDF, called by test_round4/5_fixes",
-    "lsh_topk": "LSH similarity search, called by test_textops",
-    "ivf_topk": "IVF similarity search, called by test_textops",
-    "train_centroids": "IVF centroid training, called by test_textops/round4_fixes",
+    "pair_sums_by_key": "pair-sum operator, called by test_round4/5_fixes",
     "TableIO": "public table I/O API, covered by test_io",
     "assert_plan": "public plan-shape assertion, used by test_plans",
     "exact_candidates": "public exact-candidate API, covered by test_index",

@@ -1,6 +1,6 @@
 """Round-4 regression tests: ADVICE fixes (as-of NULL keys, connected-
 components endpoint coverage, mixed-width pair mindist, checkpoint
-exception narrowing) and VERDICT items (bounded centroid sample)."""
+exception narrowing)."""
 
 import datetime as dt
 
@@ -61,63 +61,38 @@ def test_connected_components_endpoints_outside_nodes(spark):
 
 
 # ---------------------------------------------------------------------------
-# mindist_pair_udf: mixed-width words → NaN (sts_mindist_ab width rule)
+# pair mindist: mixed-width words are incomparable (sts_mindist_ab width rule)
 # ---------------------------------------------------------------------------
 
 
-def test_mindist_pair_udf_mixed_width_nan(spark):
-    from symtseries_spark.operators.symbolize import mindist_pair_udf
+def test_pair_sums_mixed_width_pairs_add_nothing(spark):
+    """Words of different widths are incomparable (reference
+    sts_mindist_ab, symtseries.c:582-586): in pair_sums_by_key such a pair
+    adds nothing to either word's sum, whichever side is wider."""
+    from symtseries_spark.operators.symbolize import pair_sums_by_key
 
     c = 4
-    rows = [
-        Row(i=0, wa="ABCD", wb="DCBA", na=8, nb=8),   # equal width 4
-        Row(i=1, wa="ABCD", wb="ABC", na=8, nb=8),    # width mismatch → NaN
-        Row(i=2, wa="AB", wb="CD", na=8, nb=8),       # equal width 2
-        Row(i=3, wa="ABC", wb="ABCD", na=8, nb=8),    # mismatch (other way)
-    ]
-    df = spark.createDataFrame(rows).repartition(1)
-    got = {
-        r["i"]: r["d"]
-        for r in df.withColumn(
-            "d", mindist_pair_udf(c)("wa", "wb", "na", "nb")
-        ).collect()
-    }
-    # NaN may surface as null after the Arrow transfer — both mean
-    # "incomparable", same as the Lua surface's NaN→nil mapping
-    assert got[1] is None or np.isnan(got[1])
-    assert got[3] is None or np.isnan(got[3])
-    for i, wa, wb in ((0, "ABCD", "DCBA"), (2, "AB", "CD")):
+    hist = spark.createDataFrame(
+        [(1, "ABCD", 8, 1), (1, "DCBA", 8, 2), (1, "ABC", 8, 5),
+         (1, "AB", 8, 1), (1, "CD", 8, 3)],
+        "key int, word string, n int, m int",
+    )
+    got = {r["word"]: r["sum_d"] for r in pair_sums_by_key(hist, c).collect()}
+
+    def d(wa, wb):
         A = K.string_to_symbols_batch(np.array([wa]), c)
         B = K.string_to_symbols_batch(np.array([wb]), c)
-        want = K.mindist_pairs(A, B, c, np.array([8]), np.array([8]))[0]
-        assert got[i] == pytest.approx(want, rel=1e-12)
+        return K.mindist_pairs(A, B, c, np.array([8]), np.array([8]))[0]
 
-
-# ---------------------------------------------------------------------------
-# train_centroids: driver sample hard-capped by row count
-# ---------------------------------------------------------------------------
-
-
-def test_train_centroids_sample_capped(spark):
-    import symtseries_spark.operators.similarity as S
-
-    rng = np.random.RandomState(3)
-    X = rng.normal(size=(50, 8))
-    df = spark.createDataFrame(
-        [(row.tolist(),) for row in X], "embedding array<double>"
-    ).coalesce(1)
-    # uncapped path (cap >> corpus) == direct np training on the corpus
-    full = S.train_centroids(df, n_centroids=4, sample=1.0, max_rows=10**6)
-    want = S.train_centroids_np(X, n_centroids=4)
-    np.testing.assert_allclose(full, want, rtol=1e-12)
-    # capped path: the fraction is SHRUNK toward the cap (uniform sample,
-    # not a first-partition limit); deterministic for a fixed seed, valid
-    # shape, and never identical to training on the whole corpus
-    capped = S.train_centroids(df, n_centroids=4, sample=1.0, max_rows=7)
-    capped2 = S.train_centroids(df, n_centroids=4, sample=1.0, max_rows=7)
-    np.testing.assert_allclose(capped, capped2, rtol=0)
-    assert capped.shape == (4, 8)
-    assert not np.allclose(capped, want)
+    assert d("ABCD", "DCBA") > 0 and d("AB", "CD") > 0
+    want = {
+        "ABCD": d("ABCD", "ABCD") + 2 * d("ABCD", "DCBA"),
+        "DCBA": d("DCBA", "ABCD") + 2 * d("DCBA", "DCBA"),
+        "ABC": 5 * d("ABC", "ABC"),
+        "AB": d("AB", "AB") + 3 * d("AB", "CD"),
+        "CD": d("CD", "AB") + 3 * d("CD", "CD"),
+    }
+    assert got == pytest.approx(want, rel=1e-12)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Round-5 regression tests: the histogram-matrix discord formulation
-(`pair_sums_by_key`) must equal the materialized pair-join algebra it
+(`pair_sums_by_key`) must equal the pair-by-pair kernel algebra it
 replaced; the gapfill "next non-null" DESC running frame must equal the
 old unbounded-following frame; the stored daily-words index must be
 content-identical to the live derivation; the upsert merge/write split
@@ -7,35 +7,40 @@ must preserve upsert semantics."""
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from symtseries_spark import kernel as K
+
 
 # ---------------------------------------------------------------------------
-# pair_sums_by_key == materialized pair join + mindist_pair_udf algebra
+# pair_sums_by_key == pair-by-pair kernel algebra
 # ---------------------------------------------------------------------------
 
 
-def _pair_join_sums(hist, c):
-    """The round-4 formulation this round replaces: materialize the per-key
-    histogram self-join and run the pair UDF row-wise."""
-    from symtseries_spark.operators.symbolize import mindist_pair_udf
+def _pair_join_sums(rows, c):
+    """numpy reference: score every (a, b) word pair of a key on its own
+    with the kernel; words of different widths (or empty) are incomparable
+    (NaN) and, like any NaN distance, add nothing. Returns (key, word, n) →
+    (Σ m_b·d(a, b), d(a, a)), None where no distance is defined."""
+    def d(a, b):
+        if len(a.word) != len(b.word) or not a.word:
+            return float("nan")
+        A = K.string_to_symbols_batch(np.array([a.word]), c)
+        B = K.string_to_symbols_batch(np.array([b.word]), c)
+        return float(K.mindist_pairs(A, B, c, np.array([a.n]), np.array([b.n]))[0])
 
-    a, b = hist.alias("a"), hist.alias("b")
-    hp = a.join(b, "key").select(
-        "key",
-        F.col("a.word").alias("wa"), F.col("a.n").alias("na"),
-        F.col("b.word").alias("wb"), F.col("b.n").alias("nb"),
-        F.col("b.m").alias("mb"),
-    )
-    d_raw = mindist_pair_udf(c)("wa", "wb", "na", "nb")
-    hd = hp.withColumn("d", F.when(F.isnan(d_raw), None).otherwise(d_raw))
-    return hd.groupBy("key", F.col("wa").alias("word"), F.col("na").alias("n")).agg(
-        F.sum(F.col("mb") * F.col("d")).alias("sum_d"),
-        F.max(F.when((F.col("wa") == F.col("wb")) & (F.col("na") == F.col("nb")),
-                     F.col("d"))).alias("d_self"),
-    )
+    out = {}
+    for a in rows:
+        ds = [(b, d(a, b)) for b in rows if b.key == a.key]
+        sums = [b.m * x for b, x in ds if not np.isnan(x)]
+        selfs = [x for b, x in ds if (b.word, b.n) == (a.word, a.n) and not np.isnan(x)]
+        out[(a.key, a.word, a.n)] = (
+            sum(sums) if sums else None, max(selfs) if selfs else None
+        )
+    return out
 
 
 def test_pair_sums_by_key_matches_pair_join(spark):
@@ -71,10 +76,7 @@ def test_pair_sums_by_key_matches_pair_join(spark):
         (r["key"], r["word"], r["n"]): (r["sum_d"], r["d_self"])
         for r in pair_sums_by_key(hist, 8).collect()
     }
-    want = {
-        (r["key"], r["word"], r["n"]): (r["sum_d"], r["d_self"])
-        for r in _pair_join_sums(hist, 8).collect()
-    }
+    want = _pair_join_sums(rows, 8)
     assert set(got) == set(want)
     for k in want:
         gs, gd = got[k]

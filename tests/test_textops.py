@@ -196,7 +196,7 @@ def test_stored_ann_recall_on_clustered_data(spark, tmp_path):
     }
     assert len(got_lsh & want) / 10 >= 0.9
 
-    cents = S.train_centroids(df, n_centroids=10, sample=1.0)
+    cents = S.train_centroids_np(np.array([r.embedding for r in rows]), n_centroids=10)
     ivf = str(tmp_path / "ivf")
     S.build_ivf_index(df, ivf, cents)
     got_ivf = {
@@ -233,7 +233,8 @@ def test_stored_ann_plans_prune_partitions(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters: [(((" in plan or "PartitionFilters: [((" in plan
-    cents = S.train_centroids(emb, n_centroids=4, sample=1.0)
+    X = np.array([r.embedding for r in emb.select("embedding").collect()])
+    cents = S.train_centroids_np(X, n_centroids=4)
     ivf = str(tmp_path / "ivf")
     S.build_ivf_index(emb, ivf, cents)
     plan2 = (
@@ -253,7 +254,7 @@ def test_brute_force_topk_matches_numpy(spark, emb):
         assert g[1] == pytest.approx(w[1], abs=1e-9)
 
 
-def test_lsh_topk_recall(spark, emb):
+def test_lsh_topk_recall(spark, emb, tmp_path):
     # The synthetic embeddings are near-random (true top-10 at cosine ≈0.3),
     # where bucketed ANN is not meaningful. Plant a genuine neighborhood:
     # 10 noisy copies of one vector (cosine ≈0.99) — LSH must recover them.
@@ -271,18 +272,22 @@ def test_lsh_topk_recall(spark, emb):
     both = emb.select("vec_id", "embedding", "label").unionByName(
         spark.createDataFrame(planted)
     )
-    got = {r.vec_id for r in S.lsh_topk(both, list(base), 11, bits=8).collect()}
+    srp = str(tmp_path / "srp")
+    S.build_srp_index(both, srp, bits=8)
+    got = {r.vec_id for r in S.lsh_topk_indexed(spark, srp, list(base), 11, bits=8).collect()}
     assert rows[3].vec_id in got
     planted_found = len({20000 + i for i in range(10)} & got)
     assert planted_found >= 8, got
 
 
-def test_ivf_topk_recall(spark, emb):
+def test_ivf_topk_recall(spark, emb, tmp_path):
     rows = emb.collect()
     q = rows[11].embedding
-    cents = S.train_centroids(emb, n_centroids=8, sample=1.0)
+    cents = S.train_centroids_np(np.array([r.embedding for r in rows]), n_centroids=8)
     exact = {i for i, _ in _brute_topk_py(rows, q, 10)}
-    got = {r.vec_id for r in S.ivf_topk(emb, q, 10, cents, nprobe=3).collect()}
+    ivf = str(tmp_path / "ivf")
+    S.build_ivf_index(emb, ivf, cents)
+    got = {r.vec_id for r in S.ivf_topk_indexed(spark, ivf, q, 10, cents, nprobe=3).collect()}
     assert rows[11].vec_id in got
     assert len(exact & got) >= 5
 
