@@ -41,6 +41,5 @@ class SaxConfig:
 @dataclass(frozen=True)
 class EngineConfig:
     sax: SaxConfig = field(default_factory=SaxConfig)
-    salt_buckets: int = 16
     #: points per compressed chunk (one day of 1m buckets)
     chunk_points: int = 1440

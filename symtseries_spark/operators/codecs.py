@@ -61,6 +61,14 @@ _HEADER_BITS = 5 + 7 + 64
 _POW10 = np.array([float(10**e) for e in range(E_MAX + 1)])
 
 
+class ChunkError(ValueError):
+    """A malformed chunk, by its index ``chunk`` in the decoded batch."""
+
+    def __init__(self, chunk: int, msg: str):
+        super().__init__(msg)
+        self.chunk = chunk
+
+
 # ---------------------------------------------------------------------------
 # bit packing helpers (numpy, vectorized over codes)
 # ---------------------------------------------------------------------------
@@ -256,7 +264,7 @@ def _payload_bits(payloads) -> tuple[np.ndarray, np.ndarray]:
 def decode_values_decimal_batch(payloads, n_points: np.ndarray) -> np.ndarray:
     """Decode MANY decimal-for chunks in one vectorized pass → float64
     (Σ n_points). ``payloads``: see :func:`_payload_bits`. Raises
-    ValueError naming the chunk (its index in ``payloads``) whose length
+    ChunkError naming the chunk (its index in ``payloads``) whose length
     is not ceil((76 + n_points·w) / 8) bytes, whose e is neither in
     0..E_MAX nor RAW_E, or whose w exceeds 64."""
     n = np.asarray(n_points, dtype=np.int64)
@@ -277,14 +285,16 @@ def decode_values_decimal_batch(payloads, n_points: np.ndarray) -> np.ndarray:
     bad = np.flatnonzero(nbytes != want)
     if len(bad):
         g = int(bad[0])
-        raise ValueError(
+        raise ChunkError(
+            g,
             f"decimal-for chunk {g}: val_payload is {nbytes[g]} bytes but "
             f"n_points={n[g]} at w={w[g]} needs {want[g]}"
         )
     bad = np.flatnonzero(((e > E_MAX) & (e != RAW_E)) | (w > 64))
     if len(bad):
         g = int(bad[0])
-        raise ValueError(
+        raise ChunkError(
+            g,
             f"decimal-for chunk {g}: header e={e[g]} w={w[g]} is out of range "
             f"(e in 0..{E_MAX} or {RAW_E}, w at most 64)"
         )
@@ -302,7 +312,7 @@ def decode_timestamps_bitmap_batch(
     """Decode MANY bitmap chunks in one pass → int64 µs array (Σ n_points).
     ``payloads``: see :func:`_payload_bits`; ``start_us``/``step_us``: each
     chunk's chunk_start_ts and tier step. Each set bit maps back to its chunk
-    by the chunk's bit offset. Raises ValueError when a chunk's set-bit
+    by the chunk's bit offset. Raises ChunkError when a chunk's set-bit
     count differs from its ``n_points``."""
     bits, bit_off = _payload_bits(payloads)
     pos = np.flatnonzero(bits)
@@ -310,7 +320,7 @@ def decode_timestamps_bitmap_batch(
     got = np.bincount(chunk, minlength=len(n_points))
     if not np.array_equal(got, n_points):
         g = int(np.argmax(got != n_points))
-        raise ValueError(f"bitmap chunk {g} has {got[g]} points set but n_points={n_points[g]}")
+        raise ChunkError(g, f"bitmap chunk {g} has {got[g]} points set but n_points={n_points[g]}")
     return start_us[chunk] + (pos - bit_off[chunk]) * step_us[chunk]
 
 
@@ -470,10 +480,10 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     every chunk of the batch in one numpy pass (one flatnonzero for the
     timestamps; one header gather + ≤64 bit-position gathers of the
     fixed-width offsets for the values). No per-chunk Python object and
-    no pandas frame. A row whose codecs are not "bitmap"/"decimal-for"
-    (the formats encode_chunks writes) raises ValueError naming the
-    codec, as does a row whose tier is not in ``TIERS``, whose
-    ``n_points`` disagrees with its timestamp bitmap, or whose
+    no pandas frame. A row raises ValueError naming its key, tier and
+    chunk_start_ts when its codecs are not "bitmap"/"decimal-for" (the
+    formats encode_chunks writes), its tier is not in ``TIERS``, its
+    ``n_points`` disagrees with its timestamp bitmap, or its
     ``val_payload`` header or length is malformed.
     """
     import pyarrow as pa
@@ -483,42 +493,55 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     tier_names = pa.array(list(TIERS))
     tier_step_us = np.array(list(TIERS.values()), dtype=np.int64) * 1_000_000
 
+    def _decode_batch(b):
+        ts_codec, val_codec = b.column("ts_codec"), b.column("val_codec")
+        ok = pc.and_(pc.equal(ts_codec, "bitmap"), pc.equal(val_codec, "decimal-for"))
+        bad = np.flatnonzero(~pc.fill_null(ok, False).to_numpy(zero_copy_only=False))
+        if len(bad):
+            i = int(bad[0])
+            raise ChunkError(
+                i,
+                f"decode_chunks: unsupported codec ts_codec="
+                f"{ts_codec[i].as_py()!r} val_codec={val_codec[i].as_py()!r} "
+                "(only 'bitmap'/'decimal-for' chunks decode)",
+            )
+        tier_idx = pc.index_in(b.column("tier"), value_set=tier_names)
+        if tier_idx.null_count:
+            i = pc.index(tier_idx.is_null(), True).as_py()
+            raise ChunkError(
+                i,
+                f"decode_chunks: unknown tier {b.column('tier')[i].as_py()!r}; "
+                f"valid tiers: {sorted(TIERS)}",
+            )
+        ns = b.column("n_points").to_numpy(zero_copy_only=False).astype(np.int64)
+        start_us = (
+            b.column("chunk_start_ts").to_numpy(zero_copy_only=False)
+            .astype("datetime64[us]").astype(np.int64)
+        )
+        step_us = tier_step_us[tier_idx.to_numpy()]
+        ts = decode_timestamps_bitmap_batch(b.column("ts_payload"), ns, start_us, step_us)
+        rows = pa.array(np.repeat(np.arange(b.num_rows), ns))
+        return pa.RecordBatch.from_arrays(
+            [
+                b.column("key").take(rows),
+                b.column("tier").take(rows),
+                pa.array(ts, pa.timestamp("us")),
+                pa.array(decode_values_decimal_batch(b.column("val_payload"), ns)),
+            ],
+            names=schema.fieldNames(),
+        )
+
     def _decode(batches):
         for b in batches:
             if not b.num_rows:
                 continue
-            ts_codec, val_codec = b.column("ts_codec"), b.column("val_codec")
-            ok = pc.and_(pc.equal(ts_codec, "bitmap"), pc.equal(val_codec, "decimal-for"))
-            bad = np.flatnonzero(~pc.fill_null(ok, False).to_numpy(zero_copy_only=False))
-            if len(bad):
-                i = int(bad[0])
+            try:
+                yield _decode_batch(b)
+            except ChunkError as err:
+                row = b.slice(err.chunk, 1).to_pylist()[0]
                 raise ValueError(
-                    f"decode_chunks: unsupported codec ts_codec="
-                    f"{ts_codec[i].as_py()!r} val_codec={val_codec[i].as_py()!r} "
-                    "(only 'bitmap'/'decimal-for' chunks decode)"
-                )
-            tier_idx = pc.index_in(b.column("tier"), value_set=tier_names)
-            if tier_idx.null_count:
-                unknown = pc.filter(b.column("tier"), tier_idx.is_null())[0].as_py()
-                raise ValueError(
-                    f"decode_chunks: unknown tier {unknown!r}; valid tiers: {sorted(TIERS)}"
-                )
-            ns = b.column("n_points").to_numpy(zero_copy_only=False).astype(np.int64)
-            start_us = (
-                b.column("chunk_start_ts").to_numpy(zero_copy_only=False)
-                .astype("datetime64[us]").astype(np.int64)
-            )
-            step_us = tier_step_us[tier_idx.to_numpy()]
-            ts = decode_timestamps_bitmap_batch(b.column("ts_payload"), ns, start_us, step_us)
-            rows = pa.array(np.repeat(np.arange(b.num_rows), ns))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("key").take(rows),
-                    b.column("tier").take(rows),
-                    pa.array(ts, pa.timestamp("us")),
-                    pa.array(decode_values_decimal_batch(b.column("val_payload"), ns)),
-                ],
-                names=schema.fieldNames(),
-            )
+                    f"{err} (row key={row['key']!r}, tier={row['tier']!r}, "
+                    f"chunk_start_ts={row['chunk_start_ts']})"
+                ) from None
 
     return chunks.mapInArrow(_decode, schema)

@@ -44,9 +44,7 @@ def salted_rollup(
     hash-partitioning by ``key`` already satisfies the phase-2
     ``groupBy(key, bucket)`` clustering requirement, so Catalyst plans the
     final agg WITHOUT its own exchange — the whole rollup + key-clustered
-    layout costs two shuffles of partial rows instead of three. Callers
-    that need key-clustered output (the tier writer) should use this and
-    drop their own ``repartition("key")``.
+    layout costs two shuffles of partial rows instead of three.
 
     EVERY key is salted (per-task salt, see below): phase 2 merges the
     ≤S partials per bucket exactly, so the result equals the unsalted

@@ -6,7 +6,7 @@ three tiers) and the scaling-efficiency evidence runs at two parallelism
 levels. Stage layout (one shuffle each, all else map-side):
 
   raw scan (column-pruned: url, warc_ts, text-length only)
-    → salted 1m rollup  (shuffle on (url, bucket, salt))
+    → 1m rollup_raw  (one shuffle on url; aggregated post-shuffle)
     → key-clustered, time-sorted 1m tier, materialized ONCE by its write
     → THREE concurrent jobs over it (FAIR pools):
         1h→1d cascades ∥ symbolize+index ∥ compressed chunks
@@ -24,11 +24,6 @@ the cache. The 1m tier of one ingest epoch is ~1/60 of the epoch's raw
 rows × a few numeric columns, so it fits cluster storage memory by
 construction; if it ever didn't, MEMORY_AND_DISK spills instead of
 silently recomputing.
-
-Output-point counts for the metrics run as ONE metadata-only Spark job
-per store (zero-column parquet scans answer count(*) from footer row
-counts inside tasks — no column chunks decoded, no driver-side file
-walk, O(files) work distributed across executors).
 """
 
 from __future__ import annotations
@@ -44,7 +39,7 @@ from symtseries_spark import checkpoint as CP
 from symtseries_spark.config import EngineConfig
 from symtseries_spark.operators.codecs import encode_chunks
 from symtseries_spark.operators.index import build_index
-from symtseries_spark.operators.skew import salted_rollup
+from symtseries_spark.operators.rollup import rollup_raw
 from symtseries_spark.operators.symbolize import symbolize_windows
 
 
@@ -83,7 +78,7 @@ def _store_counts(spark: SparkSession, path: str, by: str | None = None) -> dict
 def _warn_if_partial_cache(spark: SparkSession, df) -> None:
     """After the materializing action, verify the 1m tier cache is fully
     resident (memory or disk). A partially-cached tier silently
-    recomputes the salted rollup CONCURRENTLY in every consumer that
+    recomputes the 1m rollup CONCURRENTLY in every consumer that
     first-touches an evicted partition — the exact duplicate-work failure
     the materializing write exists to prevent — so make it loud."""
     try:
@@ -144,29 +139,18 @@ def run_pipeline(
         src = CP.filter_new_input(src, "warc_ts", wm, "1m")
 
     rollup_path = f"{out_dir}/rollup"
-    # cluster_by_key: the key repartition rides BETWEEN the two salted agg
-    # phases, so the final agg is exchange-free and the tier comes out
-    # key-clustered for two shuffles total (salted partials + key) — not
-    # three. The explicit (key, bucket_ts) in-partition sort makes every
-    # (key, window/chunk) run contiguous AND time-ordered — the contract
-    # both clustered=True consumers rely on. On a real warehouse this is
-    # the table's bucket/sort spec.
-    t1m = salted_rollup(
-        src,
-        "url",
-        "warc_ts",
-        F.col("text_len"),
-        "1m",
-        salt_buckets=cfg.salt_buckets,
-        cluster_by_key=True,
-    ).sortWithinPartitions("key", "bucket_ts")
+    # rollup_raw's one repartition("key") leaves the tier key-clustered,
+    # and the (key, bucket_ts) in-partition sort makes every (key,
+    # window/chunk) run contiguous AND time-ordered — the contract both
+    # clustered=True consumers rely on. On a real warehouse this is the
+    # table's bucket/sort spec. A key's 1m rows are bounded by retention;
+    # sources with hot keys go through operators.skew.salted_rollup.
+    t1m = rollup_raw(src, "url", "warc_ts", F.col("text_len"), "1m")
+    t1m = t1m.sortWithinPartitions("key", "bucket_ts")
     _t = _mark("plan_rollup", t0)
 
-    # The 1m tier WRITE is the materializing action: one pass computes the
-    # salted rollup, fills the cache (MEMORY_AND_DISK pinned — eviction
-    # must spill, not silently trigger concurrent recompute of the
-    # heaviest stage under the three consumers), and commits the tier
-    # files. The consumers below then share fully-cached partitions
+    # The 1m tier WRITE is the materializing action (see the module
+    # docstring): the consumers below then share fully-cached partitions
     # instead of racing to compute them (concurrent first-touch of an
     # uncached RDD duplicates work).
     from pyspark import StorageLevel
@@ -181,10 +165,8 @@ def run_pipeline(
     # Spark jobs (threads share the SparkSession; the scheduler
     # interleaves their stages). This overlaps each job's serial phases
     # (planning, commit) with the others' compute, exactly like a
-    # multi-tenant cluster keeps executors busy across jobs.
-    # each consumer thread also runs its own store's metrics count right
-    # after its write — a metadata-only Spark job (see _store_counts) that
-    # overlaps the other consumers instead of forming a serial tail phase
+    # multi-tenant cluster keeps executors busy across jobs. Each thread
+    # counts its own store right after its write.
     counts: dict[str, int] = {}
 
     def _cascades():
@@ -237,11 +219,7 @@ def run_pipeline(
         t1m.unpersist()
     _t = _mark("consumers_concurrent", _t)
 
-    # counts already ran inside the consumer threads (metadata-only Spark
-    # jobs — zero-column parquet scans answer count(*) from row-group
-    # metadata inside tasks: O(1) driver work no matter how many files
-    # the stores grow to, unlike a driver glob — overlapped with the
-    # other consumers' compute instead of forming a serial tail phase)
+    # the consumer threads already ran the counts (see _store_counts)
     n1m = counts.get("1m", 0)
     n1h = counts.get("1h", 0)
     n1d = counts.get("1d", 0)

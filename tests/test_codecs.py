@@ -168,6 +168,8 @@ def test_decode_chunks_rejects_unknown_codec(spark):
       r"header e=20 w=3 is out of range")],
 )
 def test_decode_chunks_rejects_tampered_rows(spark, column, value, match):
+    """Each error keeps its message and names the bad row by key, tier and
+    chunk_start_ts."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -176,7 +178,9 @@ def test_decode_chunks_rejects_tampered_rows(spark, column, value, match):
          for m in range(5)]
     )
     chunks = C.encode_chunks(rollup, "1m").withColumn(column, F.expr(value))
-    with pytest.raises(Exception, match=match):
+    tier = "5m" if column == "tier" else "1m"
+    row = rf"\(row key='a', tier='{tier}', chunk_start_ts=2024-01-01 00:00:00"
+    with pytest.raises(Exception, match=match + ".*" + row):
         C.decode_chunks(chunks).collect()
 
 

@@ -44,10 +44,26 @@ def test_retention_filter_pushed(spark, sf_dir):
     assert "IsNotNull(ts)" in plan
 
 
+def test_base_rollup_costs_one_exchange(spark):
+    """The pipeline's 1m tier expression (rollup_raw, then the (key,
+    bucket_ts) in-partition sort) plans exactly ONE exchange, on key: the
+    aggregate and the sort both reuse its clustering."""
+    from symtseries_spark.operators.rollup import rollup_raw
+
+    df = spark.createDataFrame(
+        [("a", "2024-01-01 00:00:05", 3.0), ("b", "2024-01-01 00:01:07", 4.0)],
+        "url string, ts string, v double",
+    ).select("url", F.to_timestamp("ts").alias("ts"), "v")
+    out = rollup_raw(df, "url", "ts", F.col("v"), "1m").sortWithinPartitions("key", "bucket_ts")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"Exchange (\w+)\((\w+)", plan) == [("hashpartitioning", "key")], plan
+
+
 def test_clustered_rollup_costs_two_exchanges(spark):
-    """cluster_by_key fuses the key repartition into the salted agg: the
-    executed plan must contain exactly TWO exchanges (salted partials +
-    key), never a third for the final agg."""
+    """The skew operator's clustered shape: salted_rollup(cluster_by_key)
+    puts the key repartition between its two agg phases, so the executed
+    plan holds exactly TWO exchanges (salted partials + key), never a
+    third for the final agg."""
     from symtseries_spark.operators.skew import salted_rollup
 
     df = spark.createDataFrame(

@@ -165,14 +165,16 @@ def test_pipeline_end_to_end(spark, crawl, tmp_path):
     assert filt.count() == 0
 
 
-def test_pipeline_coarse_tiers_equal_rollup_all_tiers(spark, crawl, tmp_path):
-    """run_pipeline's stored 1h and 1d rows equal rollup_all_tiers on the
-    same crawl: counts exactly, sum and sumsq within 1e-9 relative."""
+def test_pipeline_tiers_equal_rollup_all_tiers(spark, crawl, tmp_path):
+    """run_pipeline's stored 1m, 1h and 1d rows equal rollup_all_tiers on
+    the same skewed crawl (a hot host holds ~30% of the rows, hot urls ~5×
+    the rows of the rest): counts exactly, sum and sumsq within 1e-9
+    relative."""
     out = str(tmp_path / "out_coarse")
     run_pipeline(spark, crawl, out_dir=out)
     stored = spark.read.parquet(f"{out}/rollup")
     want = rollup_all_tiers(crawl, "url", "warc_ts", F.length("text"))
-    for tier in ("1h", "1d"):
+    for tier in ("1m", "1h", "1d"):
         got = {
             (r.key, r.bucket_ts): r
             for r in stored.filter(F.col("tier") == tier).collect()
