@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from symtseries_spark.config import TIERS
+from symtseries_spark.plans import fits_one_task
 
 #: largest decimal exponent: 10**18 < 2**62 and is exact in float64
 E_MAX = 18
@@ -475,12 +476,15 @@ def decoded_schema(key_type) -> StructType:
 def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Inverse of encode_chunks: blob rows → (key, tier, bucket_ts, value).
 
-    One mapInArrow pass: each Arrow batch's payload columns feed their
-    offsets and data buffers straight to the batch decoders, which decode
-    every chunk of the batch in one numpy pass (one flatnonzero for the
-    timestamps; one header gather + ≤64 bit-position gathers of the
-    fixed-width offsets for the values). No per-chunk Python object and
-    no pandas frame. A row raises ValueError naming its key, tier and
+    One mapInArrow pass, run as ONE task over ``chunks.coalesce(1)`` when
+    ``plans.fits_one_task(chunks)`` holds (a key-filtered read of a small
+    store, which would otherwise start one Python task per chunk file) and
+    as one task per input partition otherwise. Each Arrow batch's payload
+    columns feed their offsets and data buffers straight to the batch
+    decoders, which decode every chunk of the batch in one numpy pass
+    (one flatnonzero for the timestamps; one header gather + ≤64
+    bit-position gathers of the fixed-width offsets for the values). No
+    per-chunk Python object and no pandas frame. A row raises ValueError naming its key, tier and
     chunk_start_ts when its codecs are not "bitmap"/"decimal-for" (the
     formats encode_chunks writes), its tier is not in ``TIERS``, its
     ``n_points`` disagrees with its timestamp bitmap, or its
@@ -544,4 +548,5 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
                     f"chunk_start_ts={row['chunk_start_ts']})"
                 ) from None
 
-    return chunks.mapInArrow(_decode, schema)
+    src = chunks.coalesce(1) if fits_one_task(chunks) else chunks
+    return src.mapInArrow(_decode, schema)

@@ -1,6 +1,9 @@
 """Gap-fill for rollup series: dense bucket spine + locf + linear interp.
 
-All built-in window/generate functions (JVM-side, whole-stage codegen).
+All built-in window/generate functions (JVM-side, whole-stage codegen),
+written as SQL text: one gateway call per expression, where each pyspark
+Column function costs about ten (the value column's name is quoted by
+``plans.quote_ident``).
 
 Round-6 formulation (one derivation, no join, windows over PRESENT rows):
 the old shape built a per-key min/max spine (one extra derivation of the
@@ -15,8 +18,9 @@ sf1.0). Here instead:
     DESC running ``last(pair, ignorenulls)`` = first non-null at-or-after,
     ASC running ``last(pair, ignorenulls)`` = last non-null at-or-before,
     plus ``lead(bucket_ts)`` / ``lead(_nxt)`` on the same ASC sort;
-    each struct is materialized ONCE via withColumn (attributes, not
-    re-extracted window expressions),
+    each struct is materialized ONCE in its own projection, one per
+    window step (``_nxt``, then ``_prev``/``_lead_ts``/``_lead_nxt``), so
+    later uses are attributes, not re-extracted window expressions,
   * each present row then EXPLODES into itself + the gap buckets before
     the next present bucket — the same dense lo..hi spine (lo/hi are the
     key's first/last present buckets, so every generated gap row sits
@@ -28,23 +32,35 @@ sf1.0). Here instead:
 
 Scale note: windows are partitioned by key — each per-key series is tiny
 (bounded by the tier's retention horizon), so no single window frame grows
-with total data volume, only with series length. The explode emits rows
-proportional to key-count × horizon/bucket, the same order as before, but
-they now flow through one codegen project instead of a join + three
-window sorts.
+with total data volume, only with series length. A small input
+(``plans.fits_one_task``: a key-filtered read of a small store) is
+coalesced to ONE partition, which already holds every key's window, so
+the plan has no exchange; a larger one is hash-partitioned on key. The
+explode emits rows proportional to key-count × horizon/bucket, the same
+order as before, but they now flow through one codegen project instead
+of a join + three window sorts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from symtseries_spark.config import TIERS
+from symtseries_spark.plans import fits_one_task, quote_ident
+
+METHODS = ("locf", "linear")
+
+
+def _tier_step(tier: str) -> int:
+    if tier not in TIERS:
+        raise ValueError(f"gapfill: unknown tier {tier!r}; valid tiers: {list(TIERS)}")
+    return TIERS[tier]
 
 
 def dense_spine(rollup: DataFrame, tier: str) -> DataFrame:
     """One row per (key, bucket) between each key's min and max bucket_ts."""
-    step = TIERS[tier]
+    step = _tier_step(tier)
     spine = (
         rollup.groupBy("key")
         .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
@@ -69,87 +85,76 @@ def gapfill(
     Result-identical to the spine-join formulation (including the
     null-value corner cases: a PRESENT bucket whose value is null is a
     gap, carried over by locf and interpolated across by linear), pinned
-    by tests/test_round5_fixes.py and the gapfill_1h oracle.
+    by tests/test_round5_fixes.py and the gapfill_1h oracle. Raises
+    ValueError for a ``tier`` outside ``TIERS`` or a ``methods`` entry
+    outside {"locf", "linear"}.
     """
-    step = TIERS[tier]
-    r = rollup.select("key", "bucket_ts", F.col(value_col).alias("value"))
+    bad = set(methods) - set(METHODS)
+    if bad:
+        raise ValueError(
+            f"gapfill: unknown methods {sorted(bad)}; valid methods: {list(METHODS)}"
+        )
+    step = f"INTERVAL {_tier_step(tier)} SECOND"
     need_linear = "linear" in methods
     need_locf = "locf" in methods
 
-    w_asc = Window.partitionBy("key").orderBy("bucket_ts")
-    w_past = w_asc.rowsBetween(Window.unboundedPreceding, 0)
+    r = rollup.selectExpr("key", "bucket_ts", f"{quote_ident(value_col)} AS value")
+    if fits_one_task(r):
+        r = r.coalesce(1)  # every key window in one partition: no exchange
+    pair = (
+        "CASE WHEN value IS NOT NULL THEN named_struct("
+        "'t', CAST(unix_timestamp(bucket_ts) AS DOUBLE), 'v', value) END"
+    )
     # "next non-null" as last-non-null over a DESC-ordered RUNNING frame:
     # Spark streams growing frames in O(rows) but re-evaluates an
     # unbounded-following frame per row — O(rows²) per key partition.
-    w_future = (
-        Window.partitionBy("key")
-        .orderBy(F.col("bucket_ts").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    pair = F.when(
-        F.col("value").isNotNull(),
-        F.struct(
-            F.unix_timestamp("bucket_ts").cast("double").alias("t"),
-            F.col("value").alias("v"),
-        ),
-    )
-    # materialize each window result ONCE as a column — composing them
-    # into one big expression makes the analyzer extract every field-use
-    # as a separate window expression (no CSE across window extracts)
+    w_asc = "PARTITION BY key ORDER BY bucket_ts"
+    running = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    w_future = f"{w_asc} DESC {running}"
+    w_past = f"{w_asc} {running}"
+    # materialize each window result ONCE as a column, one projection per
+    # window step — composing them into one big expression makes the
+    # analyzer extract every field-use as a separate window expression
+    # (no CSE across window extracts)
     if need_linear:
-        r = r.withColumn("_nxt", F.last(pair, ignorenulls=True).over(w_future))
-    r = r.withColumn("_prev", F.last(pair, ignorenulls=True).over(w_past))
-    r = r.withColumn("_lead_ts", F.lead("bucket_ts").over(w_asc))
-    if need_linear:
-        r = r.withColumn("_lead_nxt", F.lead("_nxt").over(w_asc))
+        r = r.selectExpr("*", f"last({pair}, true) OVER ({w_future}) AS _nxt")
+    r = r.selectExpr(
+        "*",
+        f"last({pair}, true) OVER ({w_past}) AS _prev",
+        f"lead(bucket_ts) OVER ({w_asc}) AS _lead_ts",
+        *([f"lead(_nxt) OVER ({w_asc}) AS _lead_nxt"] if need_linear else []),
+    )
 
     # dense spine by generation: each present bucket emits itself plus
     # the gap buckets strictly before the next present bucket (the last
     # present bucket emits only itself) — union over keys = lo..hi grid.
     # greatest() skips the null lead of the last row, and clamps a
     # duplicate (key, bucket_ts) row, whose lead is its own bucket, to
-    # itself: F.sequence rejects an upper bound below its start
-    gen_hi = F.greatest(
-        F.col("bucket_ts"),
-        F.col("_lead_ts") - F.expr(f"INTERVAL {step} SECOND"),
-    )
+    # itself: sequence() rejects an upper bound below its start
+    gen_hi = f"greatest(bucket_ts, _lead_ts - {step})"
     carry = ["_prev"] + (["_nxt", "_lead_nxt"] if need_linear else [])
-    e = r.select(
+    e = r.selectExpr(
         "key",
-        F.col("bucket_ts").alias("_src_ts"),
+        "bucket_ts AS _src_ts",
         "value",
         *carry,
-        F.explode(
-            F.sequence(
-                F.col("bucket_ts"), gen_hi, F.expr(f"INTERVAL {step} SECOND")
-            )
-        ).alias("bucket_ts"),
+        f"explode(sequence(bucket_ts, {gen_hi}, {step})) AS bucket_ts",
     )
 
-    is_src = F.col("bucket_ts") == F.col("_src_ts")
-    val = F.when(is_src, F.col("value"))
-    sel = [
-        F.col("key"),
-        F.col("bucket_ts"),
-        val.alias("value"),
-        val.isNull().alias("is_gap"),
-    ]
+    val = "CASE WHEN bucket_ts = _src_ts THEN value END"
+    sel = ["key", "bucket_ts", f"{val} AS value", f"({val}) IS NULL AS is_gap"]
     if need_locf:
-        sel.append(F.col("_prev")["v"].alias("value_locf"))
+        sel.append("_prev.v AS value_locf")
     if need_linear:
-        ts_s = F.unix_timestamp("bucket_ts").cast("double")
-        prev = F.col("_prev")
         # first non-null at-or-after: the source row's own _nxt at the
         # source bucket; past it (generated gap rows) the NEXT present
         # row's _nxt, carried via lead()
-        nxt = F.when(is_src, F.col("_nxt")).otherwise(F.col("_lead_nxt"))
-        frac = (ts_s - prev["t"]) / (nxt["t"] - prev["t"])
-        interp = prev["v"] + (nxt["v"] - prev["v"]) * frac
+        nxt = "(CASE WHEN bucket_ts = _src_ts THEN _nxt ELSE _lead_nxt END)"
+        frac = f"((CAST(unix_timestamp(bucket_ts) AS DOUBLE) - _prev.t) / ({nxt}.t - _prev.t))"
         sel.append(
-            F.when(val.isNotNull(), val)
-            .when(prev.isNull(), nxt["v"])
-            .when(nxt.isNull(), prev["v"])
-            .otherwise(interp)
-            .alias("value_linear")
+            f"CASE WHEN ({val}) IS NOT NULL THEN {val} "
+            f"WHEN _prev IS NULL THEN {nxt}.v "
+            f"WHEN {nxt} IS NULL THEN _prev.v "
+            f"ELSE _prev.v + ({nxt}.v - _prev.v) * {frac} END AS value_linear"
         )
-    return e.select(*sel)
+    return e.selectExpr(*sel)

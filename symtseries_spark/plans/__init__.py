@@ -5,8 +5,19 @@ every optimization is either expressed declaratively (so Catalyst applies
 predicate pushdown, column pruning, partition pruning, broadcast selection,
 AQE) or is a physical-layout decision (key-clustered tier files, salted
 aggregation, Arrow partition passes). docs/PLANS.md records the audited
-physical plans. This module offers small helpers for asserting plan
-properties in tests and notebooks.
+physical plans.
+
+One size rule picks between two plan shapes, and it is the only one:
+:func:`fits_one_task`. An input whose analyzed size estimate is at most
+``spark.sql.autoBroadcastJoinThreshold`` (the size Spark already ships
+whole to one task) is coalesced to ONE partition by ``decode_chunks``,
+``gapfill`` and ``m4_downsample``, so a small key-filtered query runs as
+one task with no exchange; a larger input, or a threshold of -1, keeps
+the operator's parallel shape. The rule adds no option of its own.
+
+The module also offers :func:`quote_ident` for operators that build
+their plans as SQL text, and small helpers for asserting plan properties
+in tests and notebooks.
 """
 
 from __future__ import annotations
@@ -15,6 +26,19 @@ import contextlib
 import io
 
 from pyspark.sql import DataFrame
+
+
+def fits_one_task(df: DataFrame) -> bool:
+    """True when ``df``'s analyzed size estimate is within the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (a threshold of -1: never)."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    return 0 <= size <= limit
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, inner backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def formatted_plan(df: DataFrame) -> str:

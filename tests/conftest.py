@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -23,3 +24,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def parallel_shape(spark):
+    """A context manager under which no input fits one task
+    (``plans.fits_one_task`` is False), so decode, gapfill and m4 build
+    their large-input, parallel plans; the threshold is restored after."""
+
+    @contextlib.contextmanager
+    def parallel():
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return parallel

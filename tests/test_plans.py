@@ -3,6 +3,7 @@ at scale must not silently regress (docs/PLANS.md is the audit record)."""
 
 import datetime as dt
 import re
+import threading
 
 import numpy as np
 import pytest
@@ -11,6 +12,9 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from symtseries_spark import kernel as K
+from symtseries_spark.operators.codecs import decode_chunks, encode_chunks
+from symtseries_spark.operators.downsample import m4_downsample
+from symtseries_spark.operators.gapfill import gapfill
 from symtseries_spark.plans import assert_plan
 
 
@@ -95,21 +99,23 @@ def test_asof_join_is_single_window_shuffle(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_m4_downsample_is_partial_agg_no_window(spark, sf_dir):
-    """M4 compiles to a partial+final aggregate over packed structs.
-    Spark lowers struct min/max to SortAggregate (structs aren't mutable
-    hash-buffer types). Round 6 moves the whole aggregate POST-shuffle
-    (repartition on the group keys first): pixel buckets hold few points,
-    so the map-side partial reduced nothing and only ran a serial sort
-    inside the scan tasks. The scale property that matters still holds —
-    exactly ONE exchange, carrying rows of the same width as the output
-    cardinality — where the row_number window formulation would sort the
-    shuffled rows under three different orderings."""
-    plan = assert_plan(
-        E.q_m4_downsample_1h(spark, sf_dir),
-        contains=("partial_min", "partial_max"),
-        absent=("Window",),
-    )
+def test_m4_downsample_is_partial_agg_no_window(spark, sf_dir, parallel_shape):
+    """M4's large-input shape compiles to a partial+final aggregate over
+    packed structs. Spark lowers struct min/max to SortAggregate (structs
+    aren't mutable hash-buffer types). Round 6 moves the whole aggregate
+    POST-shuffle (repartition on the group keys first): pixel buckets hold
+    few points, so the map-side partial reduced nothing and only ran a
+    serial sort inside the scan tasks. The scale property that matters
+    still holds — exactly ONE exchange, carrying rows of the same width as
+    the output cardinality — where the row_number window formulation would
+    sort the shuffled rows under three different orderings. (The oracle's
+    input fits one task, so the parallel shape is forced here.)"""
+    with parallel_shape():
+        plan = assert_plan(
+            E.q_m4_downsample_1h(spark, sf_dir),
+            contains=("partial_min", "partial_max"),
+            absent=("Window",),
+        )
     # exactly one exchange node in the plan tree: the partial->final
     # boundary (formatted plans repeat the node name in the detail block,
     # so count tree entries only)
@@ -210,3 +216,96 @@ def test_approx_queries_are_one_arrow_eval(stored_words):
             assert node not in plan, plan
     root = _root(_final_plan(knn_query(words, qword, c, 5, 24)))
     assert root.startswith("TakeOrderedAndProject"), root
+
+
+@pytest.fixture(scope="module")
+def small_store(spark, tmp_path_factory):
+    """A small stored 1h rollup tier and its chunk table, each read back
+    from 4 parquet files: (rollup, chunks)."""
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        Row(key=f"k{k}", tier="1h", bucket_ts=base + dt.timedelta(hours=h),
+            text_len_avg=float(100 * k + h))
+        for k in range(4)
+        for h in range(0, 48, 1 + k)
+    ]
+    root = tmp_path_factory.mktemp("small_store")
+    rollup = spark.createDataFrame(rows)
+    rollup.repartition(4).write.parquet(str(root / "rollup"))
+    encode_chunks(rollup, "1h", chunk_points=16).repartition(4).write.parquet(
+        str(root / "chunks")
+    )
+    return spark.read.parquet(str(root / "rollup")), spark.read.parquet(str(root / "chunks"))
+
+
+def _key_queries(rollup, chunks) -> dict:
+    """decode, gapfill and m4 over a key-filtered read, as query_mix runs them."""
+    keys = F.col("key").isin("k0", "k2")
+    return {
+        "decode": decode_chunks(chunks.filter(keys)),
+        "gapfill": gapfill(rollup.filter(keys), "1h"),
+        "m4": m4_downsample(rollup.filter(keys), ts_col="bucket_ts",
+                            value_col="text_len_avg", bucket_s=4 * 3600),
+    }
+
+
+def test_small_queries_run_one_task_without_exchange(small_store):
+    """A key-filtered query over a small store fits one task: decode,
+    gapfill and m4 plan no exchange and run as one partition."""
+    for name, out in _key_queries(*small_store).items():
+        plan = _final_plan(out)
+        assert "Exchange" not in plan, (name, plan)
+        assert out.rdd.getNumPartitions() == 1, name
+
+
+def test_large_queries_keep_the_parallel_shape(small_store, parallel_shape):
+    """When the input does not fit one task, each operator keeps its
+    parallel shape: m4 and gapfill one hash exchange on key (m4's on
+    (key, bucket)), decode one task per chunk file and no exchange."""
+    rollup, chunks = small_store
+    with parallel_shape():
+        q = _key_queries(rollup, chunks)
+        for name in ("gapfill", "m4"):
+            plan = _final_plan(q[name])
+            assert re.findall(r"Exchange (\w+)\((\w+)", plan) == [("hashpartitioning", "key")], (
+                name, plan)
+        assert "Exchange" not in _final_plan(q["decode"])
+        assert q["decode"].rdd.getNumPartitions() == len(chunks.inputFiles()) == 4
+
+
+def _gateway_commands(spark, monkeypatch, build) -> int:
+    """py4j commands this thread sends while ``build`` runs. py4j's
+    finalizer thread sends the deletes of freed JVM proxies through the
+    same client at any time; those are not the build's, so other threads'
+    commands are not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent, me = client.send_command, [], threading.get_ident()
+
+    def counted(*args, **kwargs):
+        sent.append(threading.get_ident() == me)
+        return send(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counted)
+        build()
+    return sum(sent)
+
+
+@pytest.mark.parametrize(
+    "op, ceiling",
+    [
+        ("gapfill", 65),
+        ("m4", 85),
+    ],
+)
+def test_plan_builds_stay_few_gateway_calls(spark, small_store, monkeypatch, op, ceiling):
+    """Building (not running) gapfill and m4 sends few py4j commands: their
+    expressions are SQL text, about one command per expression, where
+    every pyspark Column function costs about ten."""
+    rollup, _ = small_store
+    build = {
+        "gapfill": lambda: gapfill(rollup, "1h"),
+        "m4": lambda: m4_downsample(rollup, ts_col="bucket_ts", value_col="text_len_avg"),
+    }[op]
+    build()  # first build resolves the JVM classes it calls
+    assert _gateway_commands(spark, monkeypatch, build) <= ceiling
