@@ -9,11 +9,11 @@ physical plans.
 
 One size rule picks between two plan shapes, and it is the only one:
 :func:`fits_one_task`. An input whose analyzed size estimate is at most
-``spark.sql.autoBroadcastJoinThreshold`` (the size Spark already ships
-whole to one task) is coalesced to ONE partition by ``decode_chunks``,
-``gapfill`` and ``m4_downsample``, so a small key-filtered query runs as
-one task with no exchange; a larger input, or a threshold of -1, keeps
-the operator's parallel shape. The rule adds no option of its own.
+:data:`ONE_TASK_MAX_BYTES` is coalesced to ONE partition by
+``decode_chunks``, ``gapfill`` and ``m4_downsample``, so a small
+key-filtered query runs as one task with no exchange; a larger input
+keeps the operator's parallel shape. The bound is a constant of this
+module, not a Spark setting, and the rule adds no option of its own.
 
 The module also offers :func:`quote_ident` for operators that build
 their plans as SQL text, and small helpers for asserting plan properties
@@ -28,12 +28,21 @@ import io
 from pyspark.sql import DataFrame
 
 
+#: Largest analyzed size estimate that one task takes whole. Measured at
+#: local[4] on a 4-vCPU host (one task vs the parallel shape, same JVM,
+#: alternating): gapfill and M4 over whole event tables ran as fast or
+#: faster in one task up to estimates of 494 KB and 617 KB, and M4 lost
+#: at sf0.1's 1.02 MB (0.85 s vs 0.59 s wall); perfbench's key-filtered
+#: query inputs estimate 97-192 KB. Without CBO a ``Filter`` keeps its
+#: child's estimate, so a key-filtered read counts as its whole table.
+ONE_TASK_MAX_BYTES = 512 * 1024
+
+
 def fits_one_task(df: DataFrame) -> bool:
-    """True when ``df``'s analyzed size estimate is within the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` (a threshold of -1: never)."""
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    """True when ``df``'s analyzed size estimate is at most
+    :data:`ONE_TASK_MAX_BYTES`."""
     size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
-    return 0 <= size <= limit
+    return size <= ONE_TASK_MAX_BYTES
 
 
 def quote_ident(name: str) -> str:

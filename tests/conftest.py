@@ -27,19 +27,16 @@ def sf_dir():
 
 
 @pytest.fixture
-def parallel_shape(spark):
+def parallel_shape(monkeypatch):
     """A context manager under which no input fits one task
     (``plans.fits_one_task`` is False), so decode, gapfill and m4 build
-    their large-input, parallel plans; the threshold is restored after."""
+    their large-input, parallel plans; the size bound is restored after."""
+    from symtseries_spark import plans
 
     @contextlib.contextmanager
     def parallel():
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        old = spark.conf.get(key)
-        spark.conf.set(key, "-1")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(plans, "ONE_TASK_MAX_BYTES", -1)
             yield
-        finally:
-            spark.conf.set(key, old)
 
     return parallel

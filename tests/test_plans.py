@@ -12,10 +12,11 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from symtseries_spark import kernel as K
+from symtseries_spark import plans
 from symtseries_spark.operators.codecs import decode_chunks, encode_chunks
 from symtseries_spark.operators.downsample import m4_downsample
 from symtseries_spark.operators.gapfill import gapfill
-from symtseries_spark.plans import assert_plan
+from symtseries_spark.plans import assert_plan, fits_one_task
 
 
 def test_rollup_plan_properties(spark, sf_dir):
@@ -272,6 +273,29 @@ def test_large_queries_keep_the_parallel_shape(small_store, parallel_shape):
         assert "Exchange" not in _final_plan(q["decode"])
         assert q["decode"].rdd.getNumPartitions() == len(chunks.inputFiles()) == 4
 
+
+
+@pytest.mark.parametrize("threshold", ["-1", str(1 << 30)])
+def test_one_task_bound_is_not_the_broadcast_threshold(spark, threshold):
+    """The one-task bound is ``plans.ONE_TASK_MAX_BYTES``, not a join
+    setting: turning broadcasts off or raising their threshold leaves the
+    choice as it was, and an input above the bound keeps m4's exchange."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        # a Range is estimated at 8 bytes per row
+        rows = plans.ONE_TASK_MAX_BYTES // 8
+        assert fits_one_task(spark.range(rows))
+        large = spark.range(rows + 1)
+        assert not fits_one_task(large)
+        points = large.selectExpr(
+            "id % 7 AS key", "timestamp_seconds(id) AS ts", "CAST(id AS DOUBLE) AS value"
+        )
+        plan = _final_plan(m4_downsample(points))
+        assert re.findall(r"Exchange (\w+)\((\w+)", plan) == [("hashpartitioning", "key")], plan
+    finally:
+        spark.conf.set(key, old)
 
 def _gateway_commands(spark, monkeypatch, build) -> int:
     """py4j commands this thread sends while ``build`` runs. py4j's
