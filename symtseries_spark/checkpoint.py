@@ -8,10 +8,14 @@ The distributed analogue is a small checkpoint *table*:
      rows_in long, rows_out long, run_id string, updated_at timestamp)
 
 Semantics:
-  * Each rollup run reads the checkpoint, processes only input with
-    ts > high_watermark (per time-partition), and overwrites exactly the
-    output partitions it touched (idempotent overwrite-by-partition), then
-    appends a new checkpoint generation.
+  * Each rollup run reads the checkpoint, processes only input from the
+    start of the high watermark's date on — the date partition is the
+    unit of overwrite, so the watermark's date is re-read whole and every
+    partition the run overwrites is rebuilt from all of its rows — and
+    overwrites exactly the output partitions it touched (idempotent
+    overwrite-by-partition), then appends a new checkpoint generation.
+    Outputs that span every date (the word index, the chunks) are rebuilt
+    from the stored 1m tier, not from the increment.
   * ``latest_watermarks`` reduces the log to current state, so the log
     doubles as lineage/metrics history (rows_in/rows_out per run per tier).
   * A rerun with the same run_id is a no-op-equivalent: it recomputes the
@@ -73,19 +77,24 @@ def latest_watermarks(cp: DataFrame) -> DataFrame:
 def filter_new_input(
     df: DataFrame, ts_col: str, watermarks: DataFrame, tier: str
 ) -> DataFrame:
-    """Keep only rows strictly after the tier's global high watermark.
+    """Keep the rows from the start of the tier's high-watermark date on.
 
-    The watermark table is tiny → collected to the driver and pushed down
-    as a literal predicate so the scan itself prunes (partition pruning on
-    a date-partitioned table; rowgroup stats pruning on plain parquet).
+    The (tier, bucket_date) partition is the unit of overwrite, so the
+    watermark's whole date is read again: each partition the rerun
+    overwrites is rebuilt from all of its rows, not only the rows after
+    the watermark. The watermark table is tiny → collected to the driver
+    and pushed down as a literal predicate so the scan itself prunes
+    (partition pruning on a date-partitioned table; rowgroup stats
+    pruning on plain parquet).
     """
-    rows = watermarks.filter(F.col("tier") == tier).agg(
-        F.min("high_watermark_ts")
-    ).first()
-    hw = rows[0] if rows else None
-    if hw is None:
+    day = (
+        watermarks.filter(F.col("tier") == tier)
+        .agg(F.min(F.to_date("high_watermark_ts")))
+        .first()[0]
+    )
+    if day is None:
         return df
-    return df.filter(F.col(ts_col) > F.lit(hw))
+    return df.filter(F.col(ts_col) >= F.lit(day).cast("timestamp"))
 
 
 def append_checkpoint(
@@ -141,7 +150,7 @@ def write_partitioned(
     )
 
 
-def _path_exists(spark, path: str) -> bool:
+def path_exists(spark, path: str) -> bool:
     """Filesystem-truth existence probe via the Hadoop FS API (works for
     local paths, HDFS, and object stores alike)."""
     jvm = spark._jvm
@@ -177,7 +186,7 @@ def _merge_tier(spark, updates: DataFrame, path: str, tier: str):
         .distinct()
         .collect()
     ]
-    if not dates or not _path_exists(spark, path):
+    if not dates or not path_exists(spark, path):
         return dates, up
     existing = (
         spark.read.parquet(path)

@@ -319,130 +319,61 @@ class Word:
 # ---------------------------------------------------------------------------
 
 
-def _resolve_n(n_a: int, n_b: int) -> float:
-    """mindist n-compatibility: equal, or wildcard(0) inherits; both 0 → w."""
-    if n_a != n_b and n_a != 0 and n_b != 0:
-        return math.nan
-    return float(n_a if n_a > 0 else n_b)
-
-
-def mindist_batch(
-    qa: np.ndarray,
-    cands: np.ndarray,
-    c: int,
-    n_a: int,
-    n_b: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized mindist of one query word against a batch of candidates.
-
-    qa: (w,) uint8 query symbols; cands: (B, w) uint8; n_b: (B,) int.
-    Returns (d, above, below) float64 arrays of shape (B,). Incompatible
-    n-pairs yield NaN. Sentinel positions substitute the extreme symbol
-    farthest from the other side (tie → c-1, the lowest sector).
-    """
-    qa = np.asarray(qa, dtype=np.int64)
-    cands = np.asarray(cands, dtype=np.int64)
-    B, w = cands.shape
-    dist = _DIST[int(c)]
-
-    a = np.broadcast_to(qa, (B, w)).copy()
-    b = cands.copy()
-    # sentinel substitution: use the extreme farthest from the other symbol
-    a_nan = a == c
-    b_nan = b == c
-    # when a is sentinel: a = 0 if b > c-1-b else c-1 (evaluated with real b)
-    b_real = np.where(b_nan, 0, b)
-    a_sub = np.where(b_real > (c - 1 - b_real), 0, c - 1)
-    a = np.where(a_nan & ~b_nan, a_sub, a)
-    a_real = np.where(a_nan, 0, np.asarray(np.broadcast_to(qa, (B, w))))
-    b_sub = np.where(a_real > (c - 1 - a_real), 0, c - 1)
-    b = np.where(b_nan & ~a_nan, b_sub, b)
-    # both sentinel: position contributes 0 (symbols equal)
-    both = a_nan & b_nan
-    a = np.where(both, 0, a)
-    b = np.where(both, 0, b)
-
-    neq = a != b
-    cells = dist[a, b]
-    sq = np.where(neq, cells * cells, 0.0)
-    above = np.where(neq & (a < b), sq, 0.0).sum(axis=1)
-    below = np.where(neq & (a > b), sq, 0.0).sum(axis=1)
-
-    n_b = np.asarray(n_b, dtype=np.int64)
-    n_eff = np.where(n_a > 0, float(n_a), n_b.astype(np.float64))
-    n_eff = np.where(n_eff == 0, float(w), n_eff)
-    compat = (n_a == n_b) | (n_a == 0) | (n_b == 0)
-    comp = np.sqrt(n_eff / float(w))
-    d = comp * np.sqrt(above + below)
-    above = comp * np.sqrt(above)
-    below = comp * np.sqrt(below)
-    bad = ~compat
-    d[bad] = np.nan
-    above[bad] = np.nan
-    below[bad] = np.nan
-    return d, above, below
-
-
-_PAIR_CELLSQ: dict[int, np.ndarray] = {}
-
-
-def pair_cellsq_matrix(c: int) -> np.ndarray:
-    """(c+1)×(c+1) SQUARED per-position mindist cells indexed by symbol
-    VALUE (0..c-1 real, c = '#' sentinel), with the reference's pair
-    substitution semantics baked in (sts_mindist_ab,
-    /root/reference/src/symtseries.c:578-636): a sentinel position
-    substitutes the extreme farthest from the OTHER side's real symbol;
-    both-sentinel positions contribute 0. Folding the substitution into a
-    table turns the whole per-position pair distance into one gather —
-    the branch-free form every pair-batch caller wants."""
-    c = int(c)
-    t = _PAIR_CELLSQ.get(c)
-    if t is None:
-        dist = _DIST[c]
-        t = np.zeros((c + 1, c + 1), dtype=np.float64)
-        t[:c, :c] = dist * dist
-        for s in range(c):
-            sub = 0 if s > (c - 1 - s) else c - 1
-            t[c, s] = dist[sub, s] ** 2  # '#' on side a
-            t[s, c] = dist[s, sub] ** 2  # '#' on side b
-        # t[c, c] stays 0 (both-sentinel)
-        _PAIR_CELLSQ[c] = t
+def _signed_cellsq(c: int) -> np.ndarray:
+    """(c+1)×(c+1) signed squared cells indexed by symbol (0..c-1 real,
+    c = '#'), with the reference's '#' substitution built in: a '#'
+    position takes the extreme farthest from the other side's real symbol
+    (tie → c-1, the lowest sector) and a '#'-'#' position is 0. The sign
+    is the side after substitution: + where the left symbol is below the
+    right one (it counts to ``above``), − where it is above (``below``)."""
+    dist = _DIST[c]
+    t = np.zeros((c + 1, c + 1))
+    for x in range(c + 1):
+        for y in range(c + 1):
+            a = (0 if y > c - 1 - y else c - 1) if x == c and y < c else x
+            b = (0 if x > c - 1 - x else c - 1) if y == c and x < c else y
+            sq = dist[a, b] * dist[a, b] if a < c and b < c else 0.0
+            if sq:
+                t[x, y] = sq if a < b else -sq
     return t
+
+
+_SIGNED_CELLSQ = {c: _signed_cellsq(c) for c in _DIST}
 
 
 def mindist_pairs(
     A: np.ndarray,
     B: np.ndarray,
     c: int,
-    n_a: np.ndarray,
-    n_b: np.ndarray,
-) -> np.ndarray:
-    """Row-wise mindist between two batches of words: d[i] = mindist(A[i],
-    B[i]) with the reference's exact pair semantics (sentinel positions
-    substitute the extreme farthest from the OTHER side's real symbol,
-    both-sentinel positions contribute 0, incompatible n pairs -> NaN;
-    /root/reference/src/symtseries.c:578-636). The pairwise twin of
-    :func:`mindist_batch` (which broadcasts one query) -- used by discord
-    discovery, where both sides of every pair vary.
+    n_a,
+    n_b,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Row-wise reference mindist (``sts_mindist_ab``, the reference's
+    src/symtseries.c:585-636) of two batches of words of one width: the
+    only mindist of the engine.
 
-    The substitution ladder lives in :func:`pair_cellsq_matrix`, so the
-    hot path is a single (P, w) table gather + row sum — no per-pair
-    branch temporaries (the previous np.where ladder allocated ~15
-    pair-block-sized intermediates and dominated discord discovery's
-    pair pass)."""
-    A = np.asarray(A, dtype=np.int64)
-    B = np.asarray(B, dtype=np.int64)
-    w = A.shape[1]
-    sq = pair_cellsq_matrix(c)[A, B].sum(axis=1)
+    A: (P, w) symbols, or one (w,) query that broadcasts against B: (P, w).
+    n_a / n_b: scalars or (P,). Returns (d, above, below), each (P,):
+    ``above``/``below`` sum the squared cells where the left symbol is
+    below/above the right one, d = √(n/w)·√(above + below) and the parts
+    are scaled alike. The n values must be equal or 0 (the wildcard); n is
+    the non-zero one, or w when both are 0. Incompatible pairs give NaN.
 
+    One gather of the signed cell table per pair block, no per-position
+    branch: the '#' rule lives in the table (:func:`_signed_cellsq`).
+    """
+    g = _SIGNED_CELLSQ[int(c)][A, B]
+    w = g.shape[-1]
+    above = np.maximum(g, 0.0).sum(axis=-1)
+    below = np.maximum(-g, 0.0).sum(axis=-1)
     n_a = np.asarray(n_a, dtype=np.int64)
     n_b = np.asarray(n_b, dtype=np.int64)
-    n_eff = np.where(n_a > 0, n_a.astype(np.float64), n_b.astype(np.float64))
-    n_eff = np.where(n_eff == 0, float(w), n_eff)
-    compat = (n_a == n_b) | (n_a == 0) | (n_b == 0)
-    d = np.sqrt(n_eff / float(w)) * np.sqrt(sq)
-    d[~compat] = np.nan
-    return d
+    n = np.where(n_a > 0, n_a, n_b).astype(np.float64)
+    comp = np.sqrt(np.where(n == 0, float(w), n) / float(w))
+    ok = (n_a == n_b) | (n_a == 0) | (n_b == 0)
+    return tuple(
+        np.where(ok, comp * np.sqrt(s), np.nan) for s in (above + below, above, below)
+    )
 
 
 def frame_full_batch(X: np.ndarray, w: int) -> np.ndarray:
@@ -473,7 +404,7 @@ def mindist_lb_batch(
 ) -> np.ndarray:
     """TRUE lower bound of the z-normalized Euclidean refine distance.
 
-    The reference-compatible :func:`mindist_batch` substitutes the FARTHEST
+    The reference-compatible :func:`mindist_pairs` substitutes the FARTHEST
     extreme for '#' sentinels (a *query* semantic, symtseries.h:120-124) —
     that makes it an over-estimate whenever a word contains '#', so it must
     never be used for pruning. This variant is bound-safe:
@@ -555,11 +486,7 @@ def mindist(a: Word, b: Word) -> tuple[float, float, float]:
         return (math.nan, math.nan, math.nan)
     if not (MIN_CARDINALITY <= a.c <= MAX_CARDINALITY):
         return (math.nan, math.nan, math.nan)
-    if math.isnan(_resolve_n(a.n_values, b.n_values)):
-        return (math.nan, math.nan, math.nan)
-    d, ab, be = mindist_batch(
-        a.symbols, b.symbols[None, :], a.c, a.n_values, np.array([b.n_values])
-    )
+    d, ab, be = mindist_pairs(a.symbols, b.symbols[None, :], a.c, a.n_values, b.n_values)
     return (float(d[0]), float(ab[0]), float(be[0]))
 
 

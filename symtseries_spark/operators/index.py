@@ -35,6 +35,10 @@ from symtseries_spark import kernel as K
 from symtseries_spark.operators.symbolize import mindist_udf
 
 
+#: exact kNN refines its lowest-bound rows in blocks of PROBE_FACTOR·k
+PROBE_FACTOR = 4
+
+
 def _checked_k(k) -> int:
     if not isinstance(k, (int, np.integer)) or k < 1:
         raise ValueError(f"k must be an integer >= 1, got {k!r}")
@@ -154,7 +158,6 @@ def _word_table_pass(
     mode: str,
     k: int = 0,
     radius: float = 0.0,
-    probe_factor: int = 4,
 ) -> DataFrame:
     """One mapInArrow pass over the (w, c) slice of a word table: the SAX
     multi-step search with no join, distinct or driver round-trip.
@@ -180,6 +183,7 @@ def _word_table_pass(
         raise ValueError("the word table needs its series column")
     has_ff = "frame_full" in compat.columns
     col = "mindist_lb" if mode == "lb" else "euclid"
+    step = k * PROBE_FACTOR
     schema = StructType(compat.schema.fields + [StructField(col, DoubleType())])
 
     def bound(b):
@@ -215,9 +219,9 @@ def _word_table_pass(
                 if (d <= radius).any():
                     yield with_col(b, rows[d <= radius], d[d <= radius])
                 continue
-            # refine in lowest-bound-first blocks of probe_factor·k rows,
+            # refine in lowest-bound-first blocks of PROBE_FACTOR·k rows,
             # tightening τ after each, until the next bound exceeds τ
-            order, step = np.argsort(lb, kind="stable"), max(k * probe_factor, k)
+            order = np.argsort(lb, kind="stable")
             rows, d = np.empty(0, np.int64), np.empty(0)
             for lo in range(0, len(order), step):
                 blk = order[lo : lo + step]
@@ -254,7 +258,6 @@ def exact_knn(
     w: int,
     c: int,
     k: int,
-    probe_factor: int = 4,
 ) -> DataFrame:
     """Exact k-NN with no false dismissals: the classic SAX multi-step
     search, pruned with a VALID lower bound (the reference-parity mindist
@@ -268,9 +271,7 @@ def exact_knn(
     """
     k = _checked_k(k)
     return (
-        _word_table_pass(
-            index_with_series, query_series, w, c, "knn", k=k, probe_factor=probe_factor
-        )
+        _word_table_pass(index_with_series, query_series, w, c, "knn", k=k)
         .orderBy(F.col("euclid").asc(), F.col("key").asc(), F.col("window_ts").asc())
         .limit(k)
     )

@@ -55,12 +55,12 @@ MINDIST_SCHEMA = StructType(
 )
 
 
-def mindist_udf(query_word: str, c: int, n_query: int = 0, n_cand: int | None = None):
+def mindist_udf(query_word: str, c: int, n_query: int = 0):
     """pandas UDF: word-string column → struct(d, above, below) vs the query.
 
     The query word is captured in the UDF closure → shipped once per task
-    (broadcast semantics). n_cand defaults to the wildcard rule (candidates'
-    n taken as the query's, or w when both 0) unless given.
+    (broadcast semantics). Candidates take the wildcard n (0): n is the
+    query's, or w when both are 0.
     """
     q = K.string_to_symbols(query_word, c)
 
@@ -69,8 +69,7 @@ def mindist_udf(query_word: str, c: int, n_query: int = 0, n_cand: int | None = 
         if len(words) == 0:
             return pd.DataFrame({"d": [], "above": [], "below": []})
         cands = K.string_to_symbols_batch(words.to_numpy(), c)
-        nb = np.full(len(words), n_cand if n_cand is not None else 0, dtype=np.int64)
-        d, above, below = K.mindist_batch(q, cands, c, n_query, nb)
+        d, above, below = K.mindist_pairs(q, cands, c, n_query, 0)
         return pd.DataFrame({"d": d, "above": above, "below": below})
 
     return _mind
@@ -198,6 +197,24 @@ def symbolize_windows(
     return df.mapInArrow(_symbolize_partition, out_schema)
 
 
+def _pair_dists(words: np.ndarray, n: np.ndarray, ii, jj, c: int) -> np.ndarray:
+    """d[p] = mindist(words[ii[p]], words[jj[p]]) for every pair p, one
+    kernel call per word width. Words of different widths are incomparable
+    (reference sts_mindist_ab): those pairs stay NaN."""
+    lens = np.char.str_len(words)
+    d = np.full(len(ii), np.nan)
+    same = lens[ii] == lens[jj]
+    for wlen in np.unique(lens):
+        sel = same & (lens[ii] == wlen)
+        grp = np.flatnonzero(lens == wlen)
+        pos = np.zeros(len(words), dtype=np.int64)
+        pos[grp] = np.arange(len(grp))
+        S = K.string_to_symbols_batch(words[grp], c)
+        si, sj = ii[sel], jj[sel]
+        d[sel] = K.mindist_pairs(S[pos[si]], S[pos[sj]], c, n[si], n[sj])[0]
+    return d
+
+
 def pair_sums_by_key(hist: DataFrame, c: int) -> DataFrame:
     """Discord partner sums straight from a per-key word histogram: for
     each (key, word, n) row i return
@@ -205,7 +222,7 @@ def pair_sums_by_key(hist: DataFrame, c: int) -> DataFrame:
         sum_d_i  = Σ_j m_j · d(word_i, word_j)   (NaN pairs contribute 0,
         d_self_i = d(word_i, word_i)              matching null-skip sums)
 
-    with d = the reference pairwise mindist (kernel.mindist_pairs).
+    with d = the reference pairwise mindist (:func:`_pair_dists`).
 
     This replaces the materialized |vocab_k|²-row self-join + pair UDF:
     the Σ|vocab_k|² pair space is never shuffled or even emitted as rows —
@@ -218,7 +235,7 @@ def pair_sums_by_key(hist: DataFrame, c: int) -> DataFrame:
     NOT applyInPandas, whose per-group pandas materialization costs ~ms ×
     key-count), so one Arrow batch carries hundreds of keys and ONE numpy
     pass computes every key's pair block: global (ii, jj) index vectors
-    address the concatenated word table, `kernel.mindist_pairs` runs once
+    address the concatenated word table, :func:`_pair_dists` runs once
     over all Σ V_k² pairs, and segment sums (`np.add.reduceat`) recover
     the per-word partner totals. Strings are decoded once per WORD, not
     once per pair side — the r4 pair-join UDF paid the decode ~2·ΣV_k²
@@ -260,21 +277,8 @@ def pair_sums_by_key(hist: DataFrame, c: int) -> DataFrame:
         jj = np.concatenate(
             [wo[k] + np.tile(np.arange(V[k]), V[k]) for k in range(nk)]
         )
-        lens = np.char.str_len(words)
-        d = np.full(len(ii), np.nan)
-        # distances are defined within one word width; cross-width pairs
-        # stay NaN (incomparable → contribute 0 to the sums below)
-        same = lens[ii] == lens[jj]
-        for wlen in np.unique(lens):
-            sel = same & (lens[ii] == wlen)
-            if not sel.any():
-                continue
-            si, sj = ii[sel], jj[sel]
-            uniq, inv = np.unique(np.concatenate([si, sj]), return_inverse=True)
-            A = K.string_to_symbols_batch(words[uniq], c)
-            ai = A[inv[: len(si)]]
-            bj = A[inv[len(si):]]
-            d[sel] = K.mindist_pairs(ai, bj, c, n[si], n[sj])
+        # cross-width pairs stay NaN: they contribute 0 to the sums below
+        d = _pair_dists(words, n, ii, jj, c)
         dz = np.where(np.isnan(d), 0.0, d)
         contrib = dz * m[jj]
         # row r of key k occupies pair slots [po[k]+r·V_k, po[k]+(r+1)·V_k)
@@ -376,23 +380,9 @@ def daily_discords(words: DataFrame, c: int) -> DataFrame:
                 comp, return_index=True, return_inverse=True, return_counts=True
             )
             vw, vn, V = wk[first], nk[first], len(uv)
-            lens = np.char.str_len(vw)
             ii = np.repeat(np.arange(V), V)
             jj = np.tile(np.arange(V), V)
-            d = np.full(V * V, np.nan)
-            same = lens[ii] == lens[jj]
-            for wlen in np.unique(lens):
-                sel = same & (lens[ii] == wlen)
-                if not sel.any():
-                    continue
-                grp = np.where(lens == wlen)[0]
-                A = K.string_to_symbols_batch(vw[grp], c)
-                pos = np.full(V, -1, dtype=np.int64)
-                pos[grp] = np.arange(len(grp))
-                si, sj = ii[sel], jj[sel]
-                d[sel] = K.mindist_pairs(
-                    A[pos[si]], A[pos[sj]], c, vn[si], vn[sj]
-                )
+            d = _pair_dists(vw, vn, ii, jj, c)
             dz = np.where(np.isnan(d), 0.0, d).reshape(V, V)
             sum_d = dz @ m.astype(np.float64)
             # diagonal pairs share width and n → always defined; non-zero

@@ -139,6 +139,10 @@ def run_pipeline(
         src = CP.filter_new_input(src, "warc_ts", wm, "1m")
 
     rollup_path = f"{out_dir}/rollup"
+    # a store that already holds a 1m tier has only the increment's dates
+    # rewritten below; the index and chunks span every date, so they are
+    # then rebuilt from the stored tier rather than from the increment
+    resume = CP.path_exists(spark, f"{rollup_path}/tier=1m")
     # rollup_raw's one repartition("key") leaves the tier key-clustered,
     # and the (key, bucket_ts) in-partition sort makes every (key,
     # window/chunk) run contiguous AND time-ordered — the contract both
@@ -159,6 +163,10 @@ def run_pipeline(
     CP.write_partitioned(t1m, rollup_path, "1m", sort_within=("key", "bucket_ts"))
     _t = _mark("write_materialize_1m", _t)
     _warn_if_partial_cache(spark, t1m)
+    whole_1m, clustered = t1m, True
+    if resume:
+        whole_1m = spark.read.parquet(f"{rollup_path}/tier=1m").drop("bucket_date")
+        clustered = False
 
     # The 1h→1d cascades, symbolization, and chunk encoding are independent
     # consumers of the materialized 1m tier — submit them as CONCURRENT
@@ -177,7 +185,7 @@ def run_pipeline(
 
     def _index():
         sym = symbolize_windows(
-            t1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c, clustered=True
+            whole_1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c, clustered=clustered
         )
         build_index(sym, tier="1h").write.mode("overwrite").parquet(
             f"{out_dir}/index"
@@ -186,7 +194,7 @@ def run_pipeline(
 
     def _chunks():
         encode_chunks(
-            t1m, "1m", "text_len_avg", cfg.chunk_points, clustered=True
+            whole_1m, "1m", "text_len_avg", cfg.chunk_points, clustered=clustered
         ).write.mode("overwrite").parquet(f"{out_dir}/chunks")
         counts["chunks"] = _store_counts(spark, f"{out_dir}/chunks")[""]
 

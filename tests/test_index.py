@@ -666,11 +666,15 @@ def _brute_order(series, q, k=None):
     return [(key, wts) for _, key, wts in ranked], [d for d, _, _ in ranked]
 
 
-def test_exact_knn_multi_partition_ties(spark):
+def test_exact_knn_multi_partition_ties(spark, monkeypatch):
     """Copies of one series spread over 4 partitions tie at the k-th
     distance; the per-partition top-k + driver merge must still return the
-    brute-force answer in (euclid, key, window_ts) order."""
+    brute-force answer in (euclid, key, window_ts) order. A probe factor of
+    1 makes the refinement run over several blocks."""
+    from symtseries_spark.operators import index as I
     from symtseries_spark.operators.index import exact_knn
+
+    monkeypatch.setattr(I, "PROBE_FACTOR", 1)
 
     n, w, c = 24, 12, 8
     rng = np.random.RandomState(17)
@@ -692,7 +696,7 @@ def test_exact_knn_multi_partition_ties(spark):
     assert df.rdd.getNumPartitions() >= 4
     for k in (1, 3, 5, 8):
         want, want_d = _brute_order(series, q, k)
-        got = exact_knn(df, q, w=w, c=c, k=k, probe_factor=1).collect()
+        got = exact_knn(df, q, w=w, c=c, k=k).collect()
         assert [(r.key, r.window_ts) for r in got] == want, k
         assert [r.euclid for r in got] == pytest.approx(want_d, abs=1e-12)
     # the tie really sits at the k-th answer

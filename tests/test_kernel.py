@@ -343,32 +343,68 @@ def test_empty_append_is_noop_law():
     assert w1 == w2
 
 
-def test_mindist_pairs_matches_batch_and_sentinel_rules():
-    """mindist_pairs (both sides vary) must agree with mindist_batch
-    (one broadcast query) whenever the left side is held constant, and
-    apply the same sentinel-substitution rules pairwise."""
-    import numpy as np
+def _ref_mindist(a, b, n_a, n_b, c):
+    """Plain per-position transcription of the reference sts_mindist_ab
+    (symtseries.c:585-636) for two words of one width and cardinality."""
+    w = len(a)
+    if n_a != n_b and n_a != 0 and n_b != 0:
+        return (NAN, NAN, NAN)
+    n = n_a if n_a > 0 else (n_b if n_b > 0 else w)
+    dist = K.dist_matrix(c)
+    above = below = 0.0
+    for x, y in zip(map(int, a), map(int, b)):
+        if x == c and y == c:
+            continue
+        if x == c:
+            x = 0 if y > c - 1 - y else c - 1
+        elif y == c:
+            y = 0 if x > c - 1 - x else c - 1
+        if x < y:
+            above += float(dist[x, y]) ** 2
+        elif x > y:
+            below += float(dist[x, y]) ** 2
+    comp = math.sqrt(n / w)
+    return (comp * math.sqrt(above + below), comp * math.sqrt(above), comp * math.sqrt(below))
 
-    from symtseries_spark import kernel as K
 
-    rng = np.random.RandomState(11)
-    c, w, B = 8, 12, 200
-    A = rng.randint(0, c + 1, size=(B, w))  # includes sentinels (== c)
-    Bm = rng.randint(0, c + 1, size=(B, w))
-    n = np.full(B, 24)
+def test_mindist_pairs_matches_reference_loop():
+    """kernel.mindist_pairs equals the reference's per-position loop on
+    random word pairs: c in 2..16, w in 2..24, '#' on either side or both,
+    n of 0 (the wildcard), equal or unequal; both the row-wise form and the
+    broadcast (w,)-query form."""
+    from hypothesis import given, settings, strategies as st
 
-    # row-wise pairs vs per-row batch calls
-    d_pairs = K.mindist_pairs(A, Bm, c, n, n)
-    for i in rng.choice(B, 25, replace=False):
-        d_batch, _, _ = K.mindist_batch(A[i], Bm[i : i + 1], c, 24, n[i : i + 1])
-        assert d_pairs[i] == d_batch[0]
+    @st.composite
+    def pairs(draw):
+        c = draw(st.integers(2, 16))
+        w = draw(st.integers(2, 24))
+        # sentinel-heavy symbols: '#' (== c) is one of three draws
+        sym = st.one_of(st.just(c), st.integers(0, c - 1), st.integers(0, c - 1))
+        word = st.lists(sym, min_size=w, max_size=w)
+        nv = st.sampled_from([0, w, 2 * w, 4 * w])
+        side = st.tuples(word, nv)
+        return c, draw(st.lists(st.tuples(side, side), min_size=1, max_size=6))
 
-    # incompatible n -> NaN
-    d_bad = K.mindist_pairs(A[:1], Bm[:1], c, np.array([24]), np.array([12]))
-    assert np.isnan(d_bad[0])
-    # n == 0 on one side is the wildcard: compatible
-    d_wild = K.mindist_pairs(A[:1], Bm[:1], c, np.array([0]), np.array([24]))
-    assert np.isfinite(d_wild[0])
-    # identical words (incl. sentinels at same spots) -> 0
-    d_same = K.mindist_pairs(A[:5], A[:5], c, n[:5], n[:5])
-    assert (d_same == 0).all()
+    def agree(got, i, want):
+        for g, x in zip(got, want):
+            if math.isnan(x):
+                assert math.isnan(g[i])
+            else:
+                assert g[i] == pytest.approx(x, rel=1e-12, abs=0)
+
+    @settings(max_examples=400, deadline=None)
+    @given(pairs())
+    def check(case):
+        c, rows = case
+        A = np.array([a for (a, _), _ in rows], dtype=np.uint8)
+        n_a = np.array([na for (_, na), _ in rows])
+        B = np.array([b for _, (b, _) in rows], dtype=np.uint8)
+        n_b = np.array([nb for _, (_, nb) in rows])
+        got_rows = K.mindist_pairs(A, B, c, n_a, n_b)
+        # one (w,) query broadcast against every right-hand word
+        got_bcast = K.mindist_pairs(A[0], B, c, n_a[0], n_b)
+        for i in range(len(rows)):
+            agree(got_rows, i, _ref_mindist(A[i], B[i], n_a[i], n_b[i], c))
+            agree(got_bcast, i, _ref_mindist(A[0], B[i], n_a[0], n_b[i], c))
+
+    check()

@@ -157,12 +157,54 @@ def test_pipeline_end_to_end(spark, crawl, tmp_path):
     wm = CP.latest_watermarks(CP.read_checkpoints(spark, cp)).collect()
     assert len(wm) == 1 and wm[0].high_watermark_ts is not None
 
-    # resume: nothing new after the watermark → no new 1m points
+    # resume: the rerun reads the watermark's whole date again (the date
+    # partition is the unit of overwrite) and nothing before it
     src = crawl.select("url", "warc_ts", F.length("text").alias("text_len"))
     filt = CP.filter_new_input(
         src, "warc_ts", CP.latest_watermarks(CP.read_checkpoints(spark, cp)), "1m"
     )
-    assert filt.count() == 0
+    last_day = crawl.agg(F.max(F.to_date("warc_ts"))).first()[0]
+    assert 0 < filt.count() == crawl.filter(F.to_date("warc_ts") == last_day).count()
+
+
+def test_pipeline_resume_equals_one_run(spark, tmp_path):
+    """A checkpointed rerun over a grown input stores what one run over
+    all rows stores: every tier row, every word and every decoded chunk
+    point. The input spans two dates and the first run stops inside the
+    later one, so the rerun must rebuild that date's partitions whole and
+    the index and chunks over both dates."""
+    from symtseries_spark.operators.codecs import decode_chunks
+
+    rows = [
+        (f"http://h{u}.test/p", 120 * i, "x" * ((7 * i + 3 * u) % 50 + 1))
+        for u in range(5)
+        for i in range(300)  # every 2 min for 10 h from 20:00
+    ]
+    crawl = spark.createDataFrame(rows, "url string, sec int, text string").select(
+        "url",
+        (F.to_timestamp(F.lit("2024-01-01 20:00:00")) + F.make_interval(secs=F.col("sec")))
+        .alias("warc_ts"),
+        "text",
+    )
+    first = crawl.filter(F.col("warc_ts") < F.to_timestamp(F.lit("2024-01-02 02:00:00")))
+
+    def stored(out):
+        tiers = spark.read.parquet(f"{out}/rollup")
+        words = spark.read.parquet(f"{out}/index").select(
+            "key", "window_ts", "word", "n", "frame_full"
+        )
+        points = decode_chunks(spark.read.parquet(f"{out}/chunks"))
+        return [sorted(map(tuple, df.collect())) for df in (tiers, words, points)]
+
+    out, cp = str(tmp_path / "resumed"), str(tmp_path / "cp")
+    run_pipeline(spark, first, out_dir=out, checkpoint_path=cp)
+    m = run_pipeline(spark, crawl, out_dir=out, checkpoint_path=cp)
+    once = str(tmp_path / "once")
+    want = run_pipeline(spark, crawl, out_dir=once)
+    assert (m["points_1m"], m["words"]) == (want["points_1m"], want["words"]) == (1500, 50)
+    got, exp = stored(out), stored(once)
+    for name, g, e in zip(("tiers", "words", "points"), got, exp):
+        assert g == e, name
 
 
 def test_pipeline_tiers_equal_rollup_all_tiers(spark, crawl, tmp_path):

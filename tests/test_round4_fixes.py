@@ -82,7 +82,7 @@ def test_pair_sums_mixed_width_pairs_add_nothing(spark):
     def d(wa, wb):
         A = K.string_to_symbols_batch(np.array([wa]), c)
         B = K.string_to_symbols_batch(np.array([wb]), c)
-        return K.mindist_pairs(A, B, c, np.array([8]), np.array([8]))[0]
+        return K.mindist_pairs(A, B, c, 8, 8)[0][0]
 
     assert d("ABCD", "DCBA") > 0 and d("AB", "CD") > 0
     want = {

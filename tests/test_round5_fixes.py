@@ -30,7 +30,7 @@ def _pair_join_sums(rows, c):
             return float("nan")
         A = K.string_to_symbols_batch(np.array([a.word]), c)
         B = K.string_to_symbols_batch(np.array([b.word]), c)
-        return float(K.mindist_pairs(A, B, c, np.array([a.n]), np.array([b.n]))[0])
+        return float(K.mindist_pairs(A, B, c, a.n, b.n)[0][0])
 
     out = {}
     for a in rows:

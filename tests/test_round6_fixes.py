@@ -123,10 +123,14 @@ def test_gapfill_spine_density_unchanged(spark):
     assert per_key["B"] == [base]
 
 
-def test_gapfill_duplicate_buckets(spark):
+def test_gapfill_duplicate_buckets(spark, tmp_path, parallel_shape):
     """Duplicate (key, bucket_ts) rows: no F.sequence boundary error, every
     input row comes out as a present row, and the gap grid equals the one
-    of the de-duplicated input."""
+    of the de-duplicated input — in both plan shapes. The input is read
+    back from parquet so its size estimate is real: small enough for the
+    one-task shape, and the parallel one is forced."""
+    from symtseries_spark.plans import fits_one_task
+
     base = dt.datetime(2024, 1, 1)
     rows = [
         Row(key="A", bucket_ts=base, v=0.0),
@@ -137,7 +141,9 @@ def test_gapfill_duplicate_buckets(spark):
         Row(key="B", bucket_ts=base, v=2.0),
     ]
     schema = "key string, bucket_ts timestamp, v double"
-    df = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "dups")
+    spark.createDataFrame(rows, schema).write.parquet(path)
+    df = spark.read.parquet(path)
     dedup = df.dropDuplicates(["key", "bucket_ts"])
 
     def split(d):
@@ -146,12 +152,17 @@ def test_gapfill_duplicate_buckets(spark):
         gaps = sorted((r.key, r.bucket_ts) for r in got if r.is_gap)
         return present, gaps
 
-    present, gaps = split(df)
-    assert present == sorted((r.key, r.bucket_ts, r.v) for r in rows)
-    assert gaps == split(dedup)[1]
-    assert gaps == [
-        ("A", base + dt.timedelta(hours=h)) for h in (1, 2, 4, 5)
-    ]
+    def check():
+        present, gaps = split(df)
+        assert present == sorted((r.key, r.bucket_ts, r.v) for r in rows)
+        assert gaps == split(dedup)[1]
+        assert gaps == [("A", base + dt.timedelta(hours=h)) for h in (1, 2, 4, 5)]
+
+    assert fits_one_task(df)
+    check()
+    with parallel_shape():
+        assert not fits_one_task(df)
+        check()
 
 
 # ---------------------------------------------------------------------------
