@@ -5,7 +5,7 @@ in round 1), and compare value hashes.
 
 Usage: python scripts/verify_drive.py [query_name ...]  (default: all)"""
 import sys, os, math
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession

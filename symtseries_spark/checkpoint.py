@@ -123,27 +123,16 @@ def append_checkpoint(
     return run_id
 
 
-def write_partitioned(
-    df: DataFrame, path: str, tier: str, sort_within: tuple = ()
-) -> None:
+def write_partitioned(df: DataFrame, path: str, tier: str) -> None:
     """Idempotent overwrite-by-partition write of a rollup tier.
 
     Dynamic partition overwrite replaces exactly the (tier, bucket_date)
     partitions present in df — a rerun of the same input slice rewrites
     the same partitions with the same bytes and nothing else.
-
-    ``sort_within``: extra within-partition sort columns appended after
-    bucket_date. The writer itself requires a within-task sort by the
-    partition columns; issuing (bucket_date, *sort_within) explicitly makes
-    that requirement a satisfied prefix (no second, order-destroying sort)
-    and guarantees written files are clustered/sorted by ``sort_within`` —
-    the property downstream clustered=True readers rely on.
     """
-    out = df.withColumn("bucket_date", F.to_date("bucket_ts"))
-    if sort_within:
-        out = out.sortWithinPartitions("bucket_date", *sort_within)
     (
-        out.write.mode("overwrite")
+        df.withColumn("bucket_date", F.to_date("bucket_ts"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("tier", "bucket_date")
         .parquet(path)

@@ -349,14 +349,17 @@ def encode_chunks(
     tier: str,
     value_col: str = "text_len_avg",
     chunk_points: int = 1440,
-    clustered: bool = False,
 ) -> DataFrame:
     """Pack each (key, tier, chunk) run of rollup points into one blob row.
 
-    Execution shape (scale-critical): one hash repartition on key + an
-    in-partition sort, then ONE mapInArrow pass per partition — Spark never
-    dispatches per group (a (key, chunk) group is ~10²-10³ rows; per-group
-    dispatch costs more than the encoding). Inside the pass, group
+    Execution shape (scale-critical): one hash repartition on key + a
+    (key, bucket_ts) sort within partitions, then ONE mapInArrow pass per
+    partition. Spark drops the exchange and the sort when the input
+    already has them (the pipeline's cached 1m tier); the chunk id is
+    monotone in ``bucket_ts``, so that order keeps each (key, chunk) run
+    contiguous. Spark never dispatches per group (a (key, chunk) group is
+    ~10²-10³ rows; per-group dispatch costs more than the encoding).
+    Inside the pass, group
     boundaries come from the sorted (key, chunk_id) columns and every
     group is encoded by the batch coders above.
 
@@ -374,7 +377,7 @@ def encode_chunks(
             f"encode_chunks: chunk_points must be an integer >= 1, got {chunk_points!r}"
         )
     step = TIERS[tier]
-    df = rollup.select(
+    df = rollup.repartition("key").sortWithinPartitions("key", "bucket_ts").select(
         "key",
         "bucket_ts",
         F.col(value_col).cast("double").alias("v"),
@@ -382,15 +385,6 @@ def encode_chunks(
         .cast("long")
         .alias("chunk_id"),
     )
-    # clustered=True: caller guarantees the input is already key-clustered
-    # and time-sorted per key within each read split (e.g. a tier table
-    # written via repartition(key)+sortWithinPartitions, or a bucketed
-    # table) — group contiguity is all the encoder needs, so the shuffle
-    # and sort are skipped entirely.
-    if not clustered:
-        df = df.repartition("key").sortWithinPartitions(
-            "key", "chunk_id", "bucket_ts"
-        )
 
     import pyarrow as pa
     import pyarrow.compute as pc

@@ -2,8 +2,10 @@
 
 Pipeline shape (batch engine):
   rollup tier rows (key, bucket_ts, value)
-    → symbolize_windows: one key repartition + in-partition sort, then one
-      mapInArrow pass per partition. Window assembly is one numpy scatter
+    → symbolize_windows: one key repartition + (key, bucket_ts) sort, then
+      one mapInArrow pass per partition. Spark drops the exchange and the
+      sort when the input is already hash-partitioned on key and sorted
+      (the pipeline's cached 1m tier). Window assembly is one numpy scatter
       into a (windows, n) matrix, so missing buckets stay NaN and the
       kernel's '#' semantics apply exactly as the reference's unfilled ring
       slots do; kernel.symbolize_batch then turns every window of the
@@ -82,13 +84,16 @@ def symbolize_windows(
     w: int,
     c: int,
     value_col: str = "text_len_avg",
-    clustered: bool = False,
 ) -> DataFrame:
     """rollup tier → (key, window_ts, series, word, n, w, c).
 
-    Scale path: one hash repartition on key + in-partition sort, then a
-    single mapInArrow pass per partition — window assembly is ONE numpy
-    scatter (matrix[window_idx, offset] = value) and symbolization is one
+    Scale path: one hash repartition on key + a (key, bucket_ts) sort
+    within partitions, then a single mapInArrow pass per partition. Spark
+    drops the exchange and the sort when the input already has them (the
+    pipeline's cached 1m tier); the sort is on the input's own
+    ``bucket_ts``, not on the window and slot derived from it, so Spark
+    can see that. Window assembly is ONE numpy scatter
+    (matrix[window_idx, offset] = value) and symbolization is one
     kernel.symbolize_batch call over every window in the partition. No
     collect_list allocation, no wide-agg codegen, no per-group dispatch,
     and key strings never materialize as Python objects.
@@ -108,16 +113,12 @@ def symbolize_windows(
     K.validate_nwc(n, w, c)
     ts_type = rollup.schema["bucket_ts"].dataType.simpleString()
     wnd_sec, off = _window_exprs(tier, window_tier)
-    df = rollup.select(
+    df = rollup.repartition("key").sortWithinPartitions("key", "bucket_ts").select(
         "key",
         F.timestamp_seconds(wnd_sec).cast(ts_type).alias("window_ts"),
         off.alias("off"),
         F.col(value_col).cast("double").alias("v"),
     )
-    # clustered=True: input already key-clustered + time-sorted per read
-    # split (see encode_chunks) — windows stay contiguous, skip the shuffle.
-    if not clustered:
-        df = df.repartition("key").sortWithinPartitions("key", "window_ts", "off")
 
     from pyspark.sql.types import LongType
 

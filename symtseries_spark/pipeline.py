@@ -143,12 +143,10 @@ def run_pipeline(
     # rewritten below; the index and chunks span every date, so they are
     # then rebuilt from the stored tier rather than from the increment
     resume = CP.path_exists(spark, f"{rollup_path}/tier=1m")
-    # rollup_raw's one repartition("key") leaves the tier key-clustered,
-    # and the (key, bucket_ts) in-partition sort makes every (key,
-    # window/chunk) run contiguous AND time-ordered — the contract both
-    # clustered=True consumers rely on. On a real warehouse this is the
-    # table's bucket/sort spec. A key's 1m rows are bounded by retention;
-    # sources with hot keys go through operators.skew.salted_rollup.
+    # rollup_raw's one repartition("key") leaves the tier hash-partitioned
+    # on key, and the (key, bucket_ts) in-partition sort orders each key's
+    # rows in time: the layout the index and chunk consumers ask for, so
+    # Spark plans them over this cache with no exchange and no sort.
     t1m = rollup_raw(src, "url", "warc_ts", F.col("text_len"), "1m")
     t1m = t1m.sortWithinPartitions("key", "bucket_ts")
     _t = _mark("plan_rollup", t0)
@@ -160,13 +158,12 @@ def run_pipeline(
     from pyspark import StorageLevel
 
     t1m.persist(StorageLevel.MEMORY_AND_DISK)
-    CP.write_partitioned(t1m, rollup_path, "1m", sort_within=("key", "bucket_ts"))
+    CP.write_partitioned(t1m, rollup_path, "1m")
     _t = _mark("write_materialize_1m", _t)
     _warn_if_partial_cache(spark, t1m)
-    whole_1m, clustered = t1m, True
+    whole_1m = t1m
     if resume:
         whole_1m = spark.read.parquet(f"{rollup_path}/tier=1m").drop("bucket_date")
-        clustered = False
 
     # The 1h→1d cascades, symbolization, and chunk encoding are independent
     # consumers of the materialized 1m tier — submit them as CONCURRENT
@@ -184,18 +181,15 @@ def run_pipeline(
         counts.update(_store_counts(spark, rollup_path, by="tier"))
 
     def _index():
-        sym = symbolize_windows(
-            whole_1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c, clustered=clustered
-        )
+        sym = symbolize_windows(whole_1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c)
         build_index(sym, tier="1h").write.mode("overwrite").parquet(
             f"{out_dir}/index"
         )
         counts["words"] = _store_counts(spark, f"{out_dir}/index")[""]
 
     def _chunks():
-        encode_chunks(
-            whole_1m, "1m", "text_len_avg", cfg.chunk_points, clustered=clustered
-        ).write.mode("overwrite").parquet(f"{out_dir}/chunks")
+        chunks = encode_chunks(whole_1m, "1m", "text_len_avg", cfg.chunk_points)
+        chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks")
         counts["chunks"] = _store_counts(spark, f"{out_dir}/chunks")[""]
 
     from concurrent.futures import ThreadPoolExecutor
@@ -223,6 +217,12 @@ def run_pipeline(
             futures = [pool.submit(_in_pool, name, f) for name, f in jobs]
             for fut in futures:
                 fut.result()
+        if checkpoint_path:
+            # this run's lineage, from the cache: the raw rows it rolled up
+            # and the 1m rows it wrote
+            rows_in, rows_out = t1m.agg(
+                F.coalesce(F.sum("crawl_cnt"), F.lit(0)), F.count(F.lit(1))
+            ).first()
     finally:
         t1m.unpersist()
     _t = _mark("consumers_concurrent", _t)
@@ -246,7 +246,7 @@ def run_pipeline(
             .first()[0]
         )
         CP.append_checkpoint(
-            spark, checkpoint_path, "1m", hw, n1m, n1m, run_id=run_id
+            spark, checkpoint_path, "1m", hw, rows_in, rows_out, run_id=run_id
         )
 
     if tmp:

@@ -274,6 +274,51 @@ def test_large_queries_keep_the_parallel_shape(small_store, parallel_shape):
         assert q["decode"].rdd.getNumPartitions() == len(chunks.inputFiles()) == 4
 
 
+def test_consumers_plan_over_the_layout_spark_derives(spark, tmp_path):
+    """symbolize_windows and encode_chunks ask for a key exchange and a
+    (key, bucket_ts) sort. Over the 1m tier cached the way run_pipeline
+    builds it (rollup_raw, the in-partition sort, persist, the tier write)
+    Spark plans neither; over an unsorted tier read from parquet it plans
+    one of each. Both inputs give the same words and chunks."""
+    from pyspark import StorageLevel
+
+    from symtseries_spark import checkpoint as CP
+    from symtseries_spark.datagen import gen_crawl
+    from symtseries_spark.operators.rollup import rollup_raw
+    from symtseries_spark.operators.symbolize import symbolize_windows
+
+    crawl = gen_crawl(spark, n_urls=40, revisits=240)
+    raw = rollup_raw(crawl, "url", "warc_ts", F.length("text"), "1m")
+    cached = raw.sortWithinPartitions("key", "bucket_ts")
+    cached.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        CP.write_partitioned(cached, str(tmp_path / "sorted"), "1m")
+        CP.write_partitioned(raw, str(tmp_path / "unsorted"), "1m")
+        stored = spark.read.parquet(str(tmp_path / "unsorted" / "tier=1m"))
+
+        def consumers(tier):
+            # series as text: NaN slots compare equal that way
+            words = symbolize_windows(tier, "1m", "1h", w=12, c=8)
+            return {
+                "words": words.withColumn("series", F.col("series").cast("string")),
+                "chunks": encode_chunks(tier, "1m"),
+            }
+
+        over_cache, over_read = consumers(cached), consumers(stored.drop("bucket_date"))
+        for name, want in (("words", 160), ("chunks", 40)):
+            # the cached relation prints its own plan below the scan
+            plan = _final_plan(over_cache[name]).split("InMemoryRelation")[0]
+            assert "InMemoryTableScan" in plan, (name, plan)
+            assert not re.search(r"\b(Exchange|Sort)\b", plan), (name, plan)
+            plan = _final_plan(over_read[name])
+            assert len(re.findall(r"Exchange hashpartitioning\(key", plan)) == 1, (name, plan)
+            assert len(re.findall(r"\bSort \[", plan)) == 1, (name, plan)
+            got = sorted(map(tuple, over_cache[name].collect()))
+            assert len(got) == want, name
+            assert got == sorted(map(tuple, over_read[name].collect())), name
+    finally:
+        cached.unpersist()
+
 
 @pytest.mark.parametrize("threshold", ["-1", str(1 << 30)])
 def test_one_task_bound_is_not_the_broadcast_threshold(spark, threshold):

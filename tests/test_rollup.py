@@ -207,6 +207,36 @@ def test_pipeline_resume_equals_one_run(spark, tmp_path):
         assert g == e, name
 
 
+def test_checkpoint_rows_count_raw_rows_in_and_1m_rows_out(spark, tmp_path):
+    """Each checkpoint row of a two-run resume records the raw rows that
+    run rolled up (rows_in) and the 1m rows it wrote (rows_out). Rows come
+    every 40 s, so some minutes hold two raw rows and the counts differ.
+    The second run re-reads the watermark's whole date."""
+    start = dt.datetime(2024, 1, 1, 22, 0)
+    rows = [
+        (f"http://h{u}.test/p", start + dt.timedelta(seconds=40 * i), "x" * (i % 9 + 1))
+        for u in range(3)
+        for i in range(360)  # 4 h from 22:00, across two dates
+    ]
+    crawl = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
+    cut = dt.datetime(2024, 1, 2, 1, 0)
+
+    def counts(since, until):
+        kept = [(u, ts) for u, ts, _ in rows if since <= ts < until]
+        return len(kept), len({(u, ts.replace(second=0)) for u, ts in kept})
+
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    run_pipeline(spark, crawl.filter(F.col("warc_ts") < cut), out_dir=out,
+                 checkpoint_path=cp, run_id="r1")
+    run_pipeline(spark, crawl, out_dir=out, checkpoint_path=cp, run_id="r2")
+    got = {r.run_id: (r.rows_in, r.rows_out)
+           for r in CP.read_checkpoints(spark, cp).collect()}
+    end = dt.datetime(2024, 1, 3)
+    want = {"r1": counts(start, cut), "r2": counts(dt.datetime(2024, 1, 2), end)}
+    assert want == {"r1": (810, 540), "r2": (540, 360)}
+    assert got == want
+
+
 def test_pipeline_tiers_equal_rollup_all_tiers(spark, crawl, tmp_path):
     """run_pipeline's stored 1m, 1h and 1d rows equal rollup_all_tiers on
     the same skewed crawl (a hot host holds ~30% of the rows, hot urls ~5×
@@ -247,9 +277,9 @@ def test_pipeline_rerun_idempotent(spark, crawl, tmp_path):
 
 
 def test_pipeline_chunks_decode_to_tier_and_index_is_complete(spark, crawl, tmp_path):
-    """Clustered-write contract: chunks written via the clustered=True fast
-    path must decode to exactly the 1m tier, and the index must hold one
-    word per (key, hour) — catches any within-file ordering loss."""
+    """Chunks written over the cached 1m tier (no exchange, no sort: Spark
+    reuses the tier's layout) decode to exactly the stored 1m tier, and
+    the index holds one word per (key, hour) — catches any lost order."""
     from pyspark.sql import functions as F2
 
     from symtseries_spark.operators.codecs import decode_chunks
