@@ -14,8 +14,9 @@ Semantics:
     partition the run overwrites is rebuilt from all of its rows — and
     overwrites exactly the output partitions it touched (idempotent
     overwrite-by-partition), then appends a new checkpoint generation.
-    Outputs that span every date (the word index, the chunks) are rebuilt
-    from the stored 1m tier, not from the increment.
+    The word index and the chunks share that layout (an index window is
+    1h, a chunk one UTC day), so there too a rerun rebuilds only the
+    dates it touched, from the same rows.
   * ``latest_watermarks`` reduces the log to current state, so the log
     doubles as lineage/metrics history (rows_in/rows_out per run per tier).
   * A rerun with the same run_id is a no-op-equivalent: it recomputes the
@@ -23,8 +24,9 @@ Semantics:
     pipeline), which is the idempotence property tests pin.
 
 Partitioning note: "partition_id" here is the *time bucket partition*
-(date of bucket_ts) — the unit of overwrite — not a shuffle partition id,
-so the checkpoint stays valid across cluster sizes.
+(the UTC date of the row's timestamp, :func:`utc_date`) — the unit of
+overwrite — not a shuffle partition id, so the checkpoint stays valid
+across cluster sizes and session time zones.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ import time
 import uuid
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -74,27 +76,33 @@ def latest_watermarks(cp: DataFrame) -> DataFrame:
     )
 
 
+def utc_date(ts) -> Column:
+    """The UTC date of a timestamp column, whatever
+    ``spark.sql.session.timeZone`` says: the store's ``bucket_date``."""
+    return F.date_from_unix_date(F.floor(F.unix_timestamp(ts) / 86400).cast("int"))
+
+
 def filter_new_input(
     df: DataFrame, ts_col: str, watermarks: DataFrame, tier: str
 ) -> DataFrame:
-    """Keep the rows from the start of the tier's high-watermark date on.
+    """Keep the rows from the start of the tier's high-watermark UTC date on.
 
     The (tier, bucket_date) partition is the unit of overwrite, so the
     watermark's whole date is read again: each partition the rerun
     overwrites is rebuilt from all of its rows, not only the rows after
     the watermark. The watermark table is tiny → collected to the driver
-    and pushed down as a literal predicate so the scan itself prunes
-    (partition pruning on a date-partitioned table; rowgroup stats
-    pruning on plain parquet).
+    and pushed down as a literal predicate on ``ts_col`` so the scan itself
+    prunes (rowgroup stats pruning on plain parquet).
     """
     day = (
         watermarks.filter(F.col("tier") == tier)
-        .agg(F.min(F.to_date("high_watermark_ts")))
+        .agg(F.min(utc_date("high_watermark_ts")))
         .first()[0]
     )
     if day is None:
         return df
-    return df.filter(F.col(ts_col) >= F.lit(day).cast("timestamp"))
+    start = dt.datetime(day.year, day.month, day.day, tzinfo=dt.timezone.utc)
+    return df.filter(F.col(ts_col) >= F.lit(start))
 
 
 def append_checkpoint(
@@ -123,15 +131,17 @@ def append_checkpoint(
     return run_id
 
 
-def write_partitioned(df: DataFrame, path: str, tier: str) -> None:
-    """Idempotent overwrite-by-partition write of a rollup tier.
+def write_partitioned(df: DataFrame, path: str, tier: str, ts: str = "bucket_ts") -> None:
+    """Idempotent overwrite-by-partition write of a store: a rollup tier,
+    the word index (``ts="window_ts"``) or the chunks
+    (``ts="chunk_start_ts"``). ``df`` carries its ``tier`` column.
 
     Dynamic partition overwrite replaces exactly the (tier, bucket_date)
     partitions present in df — a rerun of the same input slice rewrites
     the same partitions with the same bytes and nothing else.
     """
     (
-        df.withColumn("bucket_date", F.to_date("bucket_ts"))
+        df.withColumn("bucket_date", utc_date(ts))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("tier", "bucket_date")
@@ -139,7 +149,7 @@ def write_partitioned(df: DataFrame, path: str, tier: str) -> None:
     )
 
 
-def path_exists(spark, path: str) -> bool:
+def _path_exists(spark, path: str) -> bool:
     """Filesystem-truth existence probe via the Hadoop FS API (works for
     local paths, HDFS, and object stores alike)."""
     jvm = spark._jvm
@@ -171,11 +181,11 @@ def _merge_tier(spark, updates: DataFrame, path: str, tier: str):
     up = updates.localCheckpoint(eager=True)
     dates = [
         r["bucket_date"]
-        for r in up.select(F.to_date("bucket_ts").alias("bucket_date"))
+        for r in up.select(utc_date("bucket_ts").alias("bucket_date"))
         .distinct()
         .collect()
     ]
-    if not dates or not path_exists(spark, path):
+    if not dates or not _path_exists(spark, path):
         return dates, up
     existing = (
         spark.read.parquet(path)

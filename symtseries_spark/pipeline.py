@@ -139,10 +139,6 @@ def run_pipeline(
         src = CP.filter_new_input(src, "warc_ts", wm, "1m")
 
     rollup_path = f"{out_dir}/rollup"
-    # a store that already holds a 1m tier has only the increment's dates
-    # rewritten below; the index and chunks span every date, so they are
-    # then rebuilt from the stored tier rather than from the increment
-    resume = CP.path_exists(spark, f"{rollup_path}/tier=1m")
     # rollup_raw's one repartition("key") leaves the tier hash-partitioned
     # on key, and the (key, bucket_ts) in-partition sort orders each key's
     # rows in time: the layout the index and chunk consumers ask for, so
@@ -161,9 +157,6 @@ def run_pipeline(
     CP.write_partitioned(t1m, rollup_path, "1m")
     _t = _mark("write_materialize_1m", _t)
     _warn_if_partial_cache(spark, t1m)
-    whole_1m = t1m
-    if resume:
-        whole_1m = spark.read.parquet(f"{rollup_path}/tier=1m").drop("bucket_date")
 
     # The 1h→1d cascades, symbolization, and chunk encoding are independent
     # consumers of the materialized 1m tier — submit them as CONCURRENT
@@ -171,7 +164,10 @@ def run_pipeline(
     # interleaves their stages). This overlaps each job's serial phases
     # (planning, commit) with the others' compute, exactly like a
     # multi-tenant cluster keeps executors busy across jobs. Each thread
-    # counts its own store right after its write.
+    # counts its own store right after its write. All three stores are
+    # overwritten by (tier, UTC date); an index window or a chunk never
+    # spans two dates, and on a resume the cache holds every row of each
+    # date it touches (filter_new_input), so no other date is rewritten.
     counts: dict[str, int] = {}
 
     def _cascades():
@@ -181,15 +177,13 @@ def run_pipeline(
         counts.update(_store_counts(spark, rollup_path, by="tier"))
 
     def _index():
-        sym = symbolize_windows(whole_1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c)
-        build_index(sym, tier="1h").write.mode("overwrite").parquet(
-            f"{out_dir}/index"
-        )
+        sym = symbolize_windows(t1m, "1m", "1h", w=cfg.sax.w, c=cfg.sax.c)
+        CP.write_partitioned(build_index(sym), f"{out_dir}/index", "1h", "window_ts")
         counts["words"] = _store_counts(spark, f"{out_dir}/index")[""]
 
     def _chunks():
-        chunks = encode_chunks(whole_1m, "1m", "text_len_avg", cfg.chunk_points)
-        chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks")
+        chunks = encode_chunks(t1m, "1m", "text_len_avg", cfg.chunk_points)
+        CP.write_partitioned(chunks, f"{out_dir}/chunks", "1m", "chunk_start_ts")
         counts["chunks"] = _store_counts(spark, f"{out_dir}/chunks")[""]
 
     from concurrent.futures import ThreadPoolExecutor
@@ -218,10 +212,12 @@ def run_pipeline(
             for fut in futures:
                 fut.result()
         if checkpoint_path:
-            # this run's lineage, from the cache: the raw rows it rolled up
-            # and the 1m rows it wrote
-            rows_in, rows_out = t1m.agg(
-                F.coalesce(F.sum("crawl_cnt"), F.lit(0)), F.count(F.lit(1))
+            # this run's lineage, from the cache: the raw rows it rolled up,
+            # the 1m rows it wrote and its high watermark
+            rows_in, rows_out, hw = t1m.agg(
+                F.coalesce(F.sum("crawl_cnt"), F.lit(0)),
+                F.count(F.lit(1)),
+                F.max("bucket_ts"),
             ).first()
     finally:
         t1m.unpersist()
@@ -236,15 +232,6 @@ def run_pipeline(
     _t = _mark("counts", _t)
 
     if checkpoint_path:
-        # read the watermark from the WRITTEN tier (column-pruned scan of
-        # one timestamp column) — t1m may be an already-unpersisted cache
-        # whose recompute would replay the whole rollup
-        hw = (
-            spark.read.parquet(rollup_path)
-            .filter(F.col("tier") == "1m")
-            .agg(F.max("bucket_ts"))
-            .first()[0]
-        )
         CP.append_checkpoint(
             spark, checkpoint_path, "1m", hw, rows_in, rows_out, run_id=run_id
         )

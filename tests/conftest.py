@@ -40,3 +40,24 @@ def parallel_shape(monkeypatch):
             yield
 
     return parallel
+
+
+@pytest.fixture
+def both_shapes(spark, tmp_path, parallel_shape):
+    """``run(df, check)``: write ``df`` to parquet and read it back, so its
+    size estimate is real (a ``createDataFrame`` input estimates
+    ``defaultSizeInBytes`` and reaches only the parallel shape), then call
+    ``check(read_back)`` in the one-task shape and under parallel_shape."""
+    from symtseries_spark.plans import fits_one_task
+
+    def run(df, check):
+        path = str(tmp_path / "both_shapes")
+        df.write.parquet(path)
+        back = spark.read.parquet(path)
+        assert fits_one_task(back)
+        check(back)
+        with parallel_shape():
+            assert not fits_one_task(back)
+            check(back)
+
+    return run

@@ -144,17 +144,26 @@ def test_values_exponent_choice():
     assert np.array_equal(dec.view(np.uint64), want.view(np.uint64))
 
 
-def test_decode_chunks_rejects_unknown_codec(spark):
+def _five_points(spark):
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
-    rollup = spark.createDataFrame(
+    return spark.createDataFrame(
         [Row(key="a", bucket_ts=base + dt.timedelta(minutes=m), text_len_avg=1.0 * m)
          for m in range(5)]
     )
-    chunks = C.encode_chunks(rollup, "1m").withColumn("val_codec", F.lit("gorilla"))
-    with pytest.raises(Exception, match=r"unsupported codec .*val_codec='gorilla'"):
-        C.decode_chunks(chunks).collect()
+
+
+def test_decode_chunks_rejects_unknown_codec(spark, both_shapes):
+    chunks = C.encode_chunks(_five_points(spark), "1m").withColumn(
+        "val_codec", F.lit("gorilla")
+    )
+
+    def check(chunks):
+        with pytest.raises(Exception, match=r"unsupported codec .*val_codec='gorilla'"):
+            C.decode_chunks(chunks).collect()
+
+    both_shapes(chunks, check)
 
 
 @pytest.mark.parametrize(
@@ -167,21 +176,18 @@ def test_decode_chunks_rejects_unknown_codec(spark):
      ("val_payload", "concat(unhex('A0'), substring(val_payload, 2))",
       r"header e=20 w=3 is out of range")],
 )
-def test_decode_chunks_rejects_tampered_rows(spark, column, value, match):
+def test_decode_chunks_rejects_tampered_rows(spark, both_shapes, column, value, match):
     """Each error keeps its message and names the bad row by key, tier and
-    chunk_start_ts."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    rollup = spark.createDataFrame(
-        [Row(key="a", bucket_ts=base + dt.timedelta(minutes=m), text_len_avg=1.0 * m)
-         for m in range(5)]
-    )
-    chunks = C.encode_chunks(rollup, "1m").withColumn(column, F.expr(value))
+    chunk_start_ts, in both plan shapes."""
+    chunks = C.encode_chunks(_five_points(spark), "1m").withColumn(column, F.expr(value))
     tier = "5m" if column == "tier" else "1m"
     row = rf"\(row key='a', tier='{tier}', chunk_start_ts=2024-01-01 00:00:00"
-    with pytest.raises(Exception, match=match + ".*" + row):
-        C.decode_chunks(chunks).collect()
+
+    def check(chunks):
+        with pytest.raises(Exception, match=match + ".*" + row):
+            C.decode_chunks(chunks).collect()
+
+    both_shapes(chunks, check)
 
 
 @pytest.mark.parametrize(
@@ -368,9 +374,10 @@ def test_decode_chunks_zero_rows(spark):
     assert out.collect() == []
 
 
-def test_decode_chunks_batch_of_keys_and_tiers(spark):
+def test_decode_chunks_batch_of_keys_and_tiers(spark, both_shapes):
     """One Arrow batch holding chunks of several keys and two tiers (with
-    1-point chunks) decodes every point back to its own key and tier."""
+    1-point chunks) decodes every point back to its own key and tier, in
+    both plan shapes."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -386,10 +393,14 @@ def test_decode_chunks_batch_of_keys_and_tiers(spark):
                 want[(key, tier, base + int(m) * step)] = v
         rollup = spark.createDataFrame(rows)
         parts.append(C.encode_chunks(rollup, tier, chunk_points=16))
-    chunks = parts[0].unionByName(parts[1]).coalesce(1)
-    got = C.decode_chunks(chunks).collect()
-    assert len(got) == len(want)
-    assert {(r.key, r.tier, r.bucket_ts): r.value for r in got} == want
+
+    def check(chunks):
+        got = C.decode_chunks(chunks).collect()
+        assert len(got) == len(want)
+        assert {(r.key, r.tier, r.bucket_ts): r.value for r in got} == want
+
+    # one file, so one input partition and one Arrow batch in either shape
+    both_shapes(parts[0].unionByName(parts[1]).coalesce(1), check)
 
 
 def test_perfbench_1m_tier_timestamps_cost_under_a_quarter_byte(monkeypatch):

@@ -82,22 +82,15 @@ def test_sessionize_gap_boundary_and_stats(spark):
     assert st[1] == (1, 0.0, 3.0)
 
 
-def test_m4_ties_resolve_deterministically(spark, tmp_path, parallel_shape):
-    """Value ties resolve the same way in both plan shapes. The input is
-    read back from parquet so its size estimate is real: small enough for
-    the one-task shape, and the parallel one is forced."""
-    from symtseries_spark.plans import fits_one_task
-
+def test_m4_ties_resolve_deterministically(spark, both_shapes):
+    """Value ties resolve the same way in both plan shapes."""
     rows = [
         Row(key=1, ts=_ts(1), value=5.0, event_id=1),
         Row(key=1, ts=_ts(2), value=5.0, event_id=2),  # tie on value
         Row(key=1, ts=_ts(3), value=1.0, event_id=3),
     ]
-    path = str(tmp_path / "ties")
-    spark.createDataFrame(rows).write.parquet(path)
-    df = spark.read.parquet(path)
 
-    def check():
+    def check(df):
         m4 = m4_downsample(
             df, "key", "ts", "value", tiebreak_col="event_id", bucket_s=3600,
         ).collect()[0]
@@ -108,11 +101,7 @@ def test_m4_ties_resolve_deterministically(spark, tmp_path, parallel_shape):
         # min is unique → its own timestamp
         assert m4["t_min"] == m4["t_last"]
 
-    assert fits_one_task(df)
-    check()
-    with parallel_shape():
-        assert not fits_one_task(df)
-        check()
+    both_shapes(spark.createDataFrame(rows), check)
 
 
 def test_quantile_sketch_rank_error_bounded(spark):

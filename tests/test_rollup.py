@@ -167,44 +167,95 @@ def test_pipeline_end_to_end(spark, crawl, tmp_path):
     assert 0 < filt.count() == crawl.filter(F.to_date("warc_ts") == last_day).count()
 
 
+def _stored(spark, out):
+    """Every tier row, word and decoded chunk point of a pipeline store."""
+    from symtseries_spark.operators.codecs import decode_chunks
+
+    tiers = spark.read.parquet(f"{out}/rollup")
+    words = spark.read.parquet(f"{out}/index").select(
+        "key", "window_ts", "word", "n", "frame_full"
+    )
+    points = decode_chunks(spark.read.parquet(f"{out}/chunks"))
+    return [sorted(map(tuple, df.collect())) for df in (tiers, words, points)]
+
+
+def _resume_equals_one_run(spark, tmp_path, crawl, cut_s, between=lambda: None):
+    """Run the pipeline over the rows before epoch second ``cut_s`` into
+    ``tmp_path/resumed``, call ``between()``, resume over all rows into
+    the same store, then run once over all rows into a fresh store.
+    Asserts both stores hold the same tier rows, words and decoded chunk
+    points; returns the (resumed, once) metrics."""
+    out, once, cp = (str(tmp_path / d) for d in ("resumed", "once", "cp"))
+    first = crawl.filter(F.col("warc_ts") < F.timestamp_seconds(F.lit(cut_s)))
+    run_pipeline(spark, first, out_dir=out, checkpoint_path=cp)
+    between()
+    m = run_pipeline(spark, crawl, out_dir=out, checkpoint_path=cp)
+    want = run_pipeline(spark, crawl, out_dir=once)
+    for name, g, e in zip(("tiers", "words", "points"), _stored(spark, out),
+                          _stored(spark, once)):
+        assert g == e, name
+    return m, want
+
+
+def _crawl_every_2_min(spark, start_s, hours):
+    """5 urls, one row every 2 min for ``hours`` from epoch second ``start_s``."""
+    rows = [
+        (f"http://h{u}.test/p", 120 * i, "x" * ((7 * i + 3 * u) % 50 + 1))
+        for u in range(5)
+        for i in range(30 * hours)
+    ]
+    return spark.createDataFrame(rows, "url string, sec int, text string").select(
+        "url", F.timestamp_seconds(F.lit(start_s) + F.col("sec")).alias("warc_ts"), "text"
+    )
+
+
 def test_pipeline_resume_equals_one_run(spark, tmp_path):
     """A checkpointed rerun over a grown input stores what one run over
     all rows stores: every tier row, every word and every decoded chunk
     point. The input spans two dates and the first run stops inside the
-    later one, so the rerun must rebuild that date's partitions whole and
-    the index and chunks over both dates."""
-    from symtseries_spark.operators.codecs import decode_chunks
+    later one, so the rerun must rebuild that date's partitions whole, and
+    it leaves every file of the earlier date in the tiers, the index and
+    the chunks as the first run wrote it."""
+    import glob
+    import os
 
-    rows = [
-        (f"http://h{u}.test/p", 120 * i, "x" * ((7 * i + 3 * u) % 50 + 1))
-        for u in range(5)
-        for i in range(300)  # every 2 min for 10 h from 20:00
-    ]
-    crawl = spark.createDataFrame(rows, "url string, sec int, text string").select(
-        "url",
-        (F.to_timestamp(F.lit("2024-01-01 20:00:00")) + F.make_interval(secs=F.col("sec")))
-        .alias("warc_ts"),
-        "text",
+    out = str(tmp_path / "resumed")
+
+    def first_date():
+        pattern = f"{out}/*/tier=*/bucket_date=2024-01-01/*.parquet"
+        return {p: os.path.getmtime(p) for p in glob.glob(pattern)}
+
+    before = {}
+    crawl = _crawl_every_2_min(spark, 1704139200, 10)  # from 2024-01-01 20:00 UTC
+    m, want = _resume_equals_one_run(
+        spark, tmp_path, crawl, 1704160800, lambda: before.update(first_date())
     )
-    first = crawl.filter(F.col("warc_ts") < F.to_timestamp(F.lit("2024-01-02 02:00:00")))
-
-    def stored(out):
-        tiers = spark.read.parquet(f"{out}/rollup")
-        words = spark.read.parquet(f"{out}/index").select(
-            "key", "window_ts", "word", "n", "frame_full"
-        )
-        points = decode_chunks(spark.read.parquet(f"{out}/chunks"))
-        return [sorted(map(tuple, df.collect())) for df in (tiers, words, points)]
-
-    out, cp = str(tmp_path / "resumed"), str(tmp_path / "cp")
-    run_pipeline(spark, first, out_dir=out, checkpoint_path=cp)
-    m = run_pipeline(spark, crawl, out_dir=out, checkpoint_path=cp)
-    once = str(tmp_path / "once")
-    want = run_pipeline(spark, crawl, out_dir=once)
     assert (m["points_1m"], m["words"]) == (want["points_1m"], want["words"]) == (1500, 50)
-    got, exp = stored(out), stored(once)
-    for name, g, e in zip(("tiers", "words", "points"), got, exp):
-        assert g == e, name
+    assert {os.path.relpath(os.path.dirname(p), out) for p in before} == {
+        f"{store}/tier={tier}/bucket_date=2024-01-01"
+        for store, tier in [("rollup", "1m"), ("rollup", "1h"), ("rollup", "1d"),
+                            ("index", "1h"), ("chunks", "1m")]
+    }
+    assert first_date() == before
+
+
+def test_pipeline_resume_equals_one_run_in_a_non_utc_session(spark, tmp_path):
+    """Stores are partitioned by UTC date whatever the session time zone:
+    under America/New_York a resume cut at 10:00 UTC, inside a UTC date
+    whose 1d bucket and chunks start on the previous local date, still
+    stores what one run stores."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        crawl = _crawl_every_2_min(spark, 1704067200, 36)  # from 2024-01-01 00:00 UTC
+        m, want = _resume_equals_one_run(
+            spark, tmp_path, crawl, 1704067200 + 34 * 3600  # 2024-01-02 10:00 UTC
+        )
+        counts = ("points_1m", "points_1d", "chunks")
+        assert [m[c] for c in counts] == [want[c] for c in counts] == [5400, 10, 10]
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_checkpoint_rows_count_raw_rows_in_and_1m_rows_out(spark, tmp_path):

@@ -62,13 +62,22 @@ def _spine_join_reference(spark, rollup, tier, value_col):
     )
 
 
-def test_gapfill_rewrite_matches_spine_join_with_null_values(spark):
+def _gapfill_rows(df):
+    return {
+        (r["key"], r["bucket_ts"]): (
+            r["value"], r["is_gap"], r["value_locf"], r["value_linear"]
+        )
+        for r in df.collect()
+    }
+
+
+def test_gapfill_rewrite_matches_spine_join_with_null_values(spark, both_shapes):
     """The round-6 rewrite's trickiest equivalence: a PRESENT bucket whose
     value is NULL is a gap (locf carries over it, linear interpolates
     across it), and it bounds the spine like any present bucket. Includes
     a leading null (prev undefined -> linear = next), a trailing null
     (next undefined -> linear = prev), and an interior null between
-    real gaps."""
+    real gaps. Checked in both plan shapes."""
     base = dt.datetime(2024, 1, 1)
     rows = []
     # key A: h0 null, h1=10, h4 null, h6=60, h8 null  (spine h0..h8)
@@ -80,57 +89,49 @@ def test_gapfill_rewrite_matches_spine_join_with_null_values(spark):
     for h, v in [(0, 1.0), (3, 4.0)]:
         rows.append(Row(key="C", bucket_ts=base + dt.timedelta(hours=h), v=v))
     df = spark.createDataFrame(rows, "key string, bucket_ts timestamp, v double")
+    want = _gapfill_rows(_spine_join_reference(spark, df, "1h", "v"))
 
-    got = {
-        (r["key"], r["bucket_ts"]): (
-            r["value"], r["is_gap"], r["value_locf"], r["value_linear"]
-        )
-        for r in gapfill(df, "1h", value_col="v").collect()
-    }
-    want = {
-        (r["key"], r["bucket_ts"]): (
-            r["value"], r["is_gap"], r["value_locf"], r["value_linear"]
-        )
-        for r in _spine_join_reference(spark, df, "1h", "v").collect()
-    }
-    assert got == want
-    # spot-check the semantics themselves, not just cross-implementation
-    a2 = got[("A", base + dt.timedelta(hours=2))]
-    # interp 10@h1 -> 60@h6 at h2: 10 + 50*(1/5) = 20
-    assert a2 == (None, True, 10.0, pytest.approx(20.0))
-    a0 = got[("A", base)]
-    assert a0 == (None, True, None, 10.0)  # leading null: no prev -> next
-    a8 = got[("A", base + dt.timedelta(hours=8))]
-    assert a8 == (None, True, 60.0, 60.0)  # trailing null: no next -> prev
-    assert got[("B", base)] == (None, True, None, None)
+    def check(df):
+        got = _gapfill_rows(gapfill(df, "1h", value_col="v"))
+        assert got == want
+        # spot-check the semantics themselves, not just cross-implementation
+        a2 = got[("A", base + dt.timedelta(hours=2))]
+        # interp 10@h1 -> 60@h6 at h2: 10 + 50*(1/5) = 20
+        assert a2 == (None, True, 10.0, pytest.approx(20.0))
+        a0 = got[("A", base)]
+        assert a0 == (None, True, None, 10.0)  # leading null: no prev -> next
+        a8 = got[("A", base + dt.timedelta(hours=8))]
+        assert a8 == (None, True, 60.0, 60.0)  # trailing null: no next -> prev
+        assert got[("B", base)] == (None, True, None, None)
+
+    both_shapes(df, check)
 
 
-def test_gapfill_spine_density_unchanged(spark):
+def test_gapfill_spine_density_unchanged(spark, both_shapes):
     """Generated spine == per-key dense lo..hi grid (same rows as the old
-    spine join), including single-bucket keys."""
+    spine join), including single-bucket keys, in both plan shapes."""
     base = dt.datetime(2024, 1, 1)
     rows = [
         Row(key="A", bucket_ts=base + dt.timedelta(hours=h), v=float(h))
         for h in (0, 5)
     ] + [Row(key="B", bucket_ts=base, v=9.9)]
-    df = spark.createDataFrame(rows, "key string, bucket_ts timestamp, v double")
-    out = gapfill(df, "1h", value_col="v")
-    per_key = {
-        k: sorted(r["bucket_ts"] for r in out.filter(F.col("key") == k).collect())
-        for k in ("A", "B")
-    }
-    assert per_key["A"] == [base + dt.timedelta(hours=h) for h in range(6)]
-    assert per_key["B"] == [base]
+
+    def check(df):
+        out = gapfill(df, "1h", value_col="v")
+        per_key = {
+            k: sorted(r["bucket_ts"] for r in out.filter(F.col("key") == k).collect())
+            for k in ("A", "B")
+        }
+        assert per_key["A"] == [base + dt.timedelta(hours=h) for h in range(6)]
+        assert per_key["B"] == [base]
+
+    both_shapes(spark.createDataFrame(rows, "key string, bucket_ts timestamp, v double"), check)
 
 
-def test_gapfill_duplicate_buckets(spark, tmp_path, parallel_shape):
+def test_gapfill_duplicate_buckets(spark, both_shapes):
     """Duplicate (key, bucket_ts) rows: no F.sequence boundary error, every
     input row comes out as a present row, and the gap grid equals the one
-    of the de-duplicated input — in both plan shapes. The input is read
-    back from parquet so its size estimate is real: small enough for the
-    one-task shape, and the parallel one is forced."""
-    from symtseries_spark.plans import fits_one_task
-
+    of the de-duplicated input — in both plan shapes."""
     base = dt.datetime(2024, 1, 1)
     rows = [
         Row(key="A", bucket_ts=base, v=0.0),
@@ -140,11 +141,6 @@ def test_gapfill_duplicate_buckets(spark, tmp_path, parallel_shape):
         Row(key="B", bucket_ts=base, v=1.0),
         Row(key="B", bucket_ts=base, v=2.0),
     ]
-    schema = "key string, bucket_ts timestamp, v double"
-    path = str(tmp_path / "dups")
-    spark.createDataFrame(rows, schema).write.parquet(path)
-    df = spark.read.parquet(path)
-    dedup = df.dropDuplicates(["key", "bucket_ts"])
 
     def split(d):
         got = gapfill(d, "1h", value_col="v").collect()
@@ -152,17 +148,13 @@ def test_gapfill_duplicate_buckets(spark, tmp_path, parallel_shape):
         gaps = sorted((r.key, r.bucket_ts) for r in got if r.is_gap)
         return present, gaps
 
-    def check():
+    def check(df):
         present, gaps = split(df)
         assert present == sorted((r.key, r.bucket_ts, r.v) for r in rows)
-        assert gaps == split(dedup)[1]
+        assert gaps == split(df.dropDuplicates(["key", "bucket_ts"]))[1]
         assert gaps == [("A", base + dt.timedelta(hours=h)) for h in (1, 2, 4, 5)]
 
-    assert fits_one_task(df)
-    check()
-    with parallel_shape():
-        assert not fits_one_task(df)
-        check()
+    both_shapes(spark.createDataFrame(rows, "key string, bucket_ts timestamp, v double"), check)
 
 
 # ---------------------------------------------------------------------------
